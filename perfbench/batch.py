@@ -19,11 +19,11 @@ import numpy as np
 from perfbench import common, gen
 
 # Scan, join and aggregate heavy entries of bench.py's headline set, one
-# call of each per pass. Their calls take a similar time (about 1-1.5 s on
-# a 4-core host), so the median and tail fall inside one dense group of
+# call of each per pass. Their calls take a similar time (about 0.8-1.2 s
+# on a 4-core host), so the median and tail fall inside one dense group of
 # samples instead of on the edge between fast and slow queries.
 ANALYTICS = (
-    "pipeline_disposition_summary",
+    "pipeline_disposition_ledger",
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_region_revenue",

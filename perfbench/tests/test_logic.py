@@ -6,6 +6,7 @@
 from __future__ import annotations
 
 import json
+import subprocess
 import sys
 import time
 from pathlib import Path
@@ -17,7 +18,7 @@ ROOT = Path(__file__).resolve().parents[2]
 if str(ROOT) not in sys.path:
     sys.path.insert(0, str(ROOT))
 
-from perfbench import common, compare, gen, stream  # noqa: E402
+from perfbench import common, compare, gen, run, stream  # noqa: E402
 
 
 def test_tail_is_highest_percentile_with_ten_samples_beyond():
@@ -194,3 +195,25 @@ def test_compare_refuses_records_from_another_core_count():
         ("latency_p50_s", 1.0, 1.5, 1.5)]
     with pytest.raises(ValueError, match="cpus"):
         compare.compare(_record(4, 1.0), _record(8, 1.0))
+
+
+def _alive(pid: int) -> bool:
+    try:
+        stat = Path(f"/proc/{pid}/stat").read_text()
+    except OSError:
+        return False
+    return stat[stat.rfind(")") + 2] != "Z"
+
+
+@pytest.mark.skipif(not Path("/proc/self/stat").exists(), reason="needs /proc")
+def test_end_processes_waits_for_children_and_grandchildren():
+    run.adopt_orphans()  # as run.main does
+    shell = subprocess.Popen(["sh", "-c", "sleep 60 & exec sleep 60"])
+    deadline = time.time() + 10
+    while not run.descendants(shell.pid) and time.time() < deadline:
+        time.sleep(0.02)
+    below = [shell.pid] + run.descendants(shell.pid)
+    assert len(below) == 2
+    run.end_processes(grace_s=5)
+    assert not any(_alive(pid) for pid in below)
+    assert run.descendants(shell.pid) == []
