@@ -22,15 +22,47 @@ decimals), cast to DOUBLE only at the output boundary (both engines
 cast the identical exact decimal, so the doubles are bit-equal; a raw
 decimal output would decay to float64 on the DuckDB->pandas side but
 stay Decimal on the Spark side and fail the driver's stringify).
+
+Run contract of the 16 streaming queries (``streaming_*``): each runs a
+real availableNow Structured Streaming query through
+``streaming.runner.run_available_now`` and returns what landed in its
+sink.
+- Conf scope: the run's overrides are set on the caller's session and
+  every key's prior value (or unset state) is restored in a ``finally``.
+  ``spark.sql.shuffle.partitions`` is capped at 32 when the session is
+  wider: stateful streaming runs without AQE coalescing, so each shuffle
+  partition is a state-store task per micro-batch, and per-key results
+  do not depend on the width. Per query the scope also pins UTC, the
+  RocksDB state-store provider or the JSON-path optimizer switch. One
+  set/restore scope, not a ``spark.newSession()`` child: a child
+  session cannot see Python data sources registered on the parent.
+- The streaming DataFrame is built inside the scope, because casts bind
+  the session time zone when the DataFrame is built, not at ``start()``.
+- No partial results: a query that has not drained within its timeout
+  (180 s; 240 s for the outer join, 300 s for near-dup arrival) is
+  stopped and ``TimeoutError`` is raised instead of reading its sink.
+- ``streaming_window_agg_e2e``, ``streaming_chained_window_agg_e2e`` and
+  ``streaming_late_data_audit_e2e`` pin UTC: the replay source casts
+  TIMESTAMP_NTZ to an instant (watermarks reject NTZ) and ``F.window``
+  aligns to UTC epoch days, so a non-UTC session would shift both the
+  cast and the rendered day label. Their outputs are strings and longs,
+  so nothing time-zone sensitive outlives the scope.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans.registry import register
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 from dynamodb_stream_processor_2_0_spark.sources.formats import staged_tmpdir
+from dynamodb_stream_processor_2_0_spark.streaming.runner import (
+    ROCKSDB,
+    UTC,
+    run_available_now,
+)
 
 
 def _dec(col: str) -> F.Column:
@@ -187,45 +219,22 @@ def streaming_delivery_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the materialized dispositions. Because replay chunks are exact
     (ts, event_id) slices, the streaming winner per key equals the
     batch first-occurrence — which is what the oracle asserts."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay, sinks
     from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
         apply_delivery_state,
     )
 
-    # Stateful streaming runs without AQE coalescing; a default 200
-    # shuffle partitions means 200 near-empty state tasks per
-    # micro-batch at test scale. Result is partitioning-independent
-    # (per-key state), so cap the width for the streaming run only —
-    # the prior value is restored so this query doesn't silently
-    # reshape every later plan in the shared session.
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        stream = replay.read_event_stream(spark, staged, schema)
-        qname = f"delivery_e2e_{uuid.uuid4().hex[:8]}"
-        q = (
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+
+    def build():
+        stream = replay.read_event_stream(spark, staged)
+        return (
             sinks.observed(apply_delivery_state(stream))
             .writeStream.format("memory")
-            .queryName(qname)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_delivery_e2e: availableNow query did not "
-                "terminate within 180s — refusing to return a partial "
-                "memory table"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(qname)
+
+    return spark.table(run_available_now(spark, "delivery_e2e", build).name)
 
 
 @register(
@@ -433,6 +442,40 @@ def hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _purchase_click_join_writer(spark: SparkSession, staged: str, how: str):
+    """Memory-sink writer of two replays of the staged events joined on
+    user: each purchase with the clicks in the hour up to it, both sides
+    under a 10-minute watermark."""
+    from dynamodb_stream_processor_2_0_spark.streaming import replay
+
+    def side(event_type: str, user: str, event_id: str, ts: str) -> DataFrame:
+        return (
+            replay.read_event_stream(spark, staged)
+            .filter(F.col("event_type") == event_type)
+            .withWatermark("ts", "10 minutes")
+            .select(
+                F.col("user_id").alias(user),
+                F.col("event_id").alias(event_id),
+                F.col("ts").alias(ts),
+            )
+        )
+
+    joined = side("purchase", "p_user", "purchase_id", "purchase_ts").join(
+        side("click", "c_user", "click_id", "click_ts"),
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("click_ts") <= F.col("purchase_ts")),
+        how,
+    ).select(
+        F.col("p_user").alias("user_id"),
+        "purchase_id",
+        "click_id",
+        "purchase_ts",
+        "click_ts",
+    )
+    return joined.writeStream.format("memory").outputMode("append")
+
+
 @register(
     "streaming_stream_join_e2e",
     oracle="""
@@ -462,65 +505,11 @@ def streaming_stream_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded stream — the batch equivalent would need the full history
     on both sides. Replay chunks are exact ts slices, so nothing is
     late and the availableNow result equals the batch theta join."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        purchases = (
-            replay.read_event_stream(spark, staged, schema)
-            .filter(F.col("event_type") == "purchase")
-            .withWatermark("ts", "10 minutes")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-            )
-        )
-        clicks = (
-            replay.read_event_stream(spark, staged, schema)
-            .filter(F.col("event_type") == "click")
-            .withWatermark("ts", "10 minutes")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"),
-            )
-        )
-        joined = purchases.join(
-            clicks,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("click_ts") <= F.col("purchase_ts")),
-        ).select(
-            F.col("p_user").alias("user_id"),
-            "purchase_id",
-            "click_id",
-            "purchase_ts",
-            "click_ts",
-        )
-        qname = f"stream_join_e2e_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_stream_join_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(qname)
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+    build = partial(_purchase_click_join_writer, spark, staged, "inner")
+    return spark.table(run_available_now(spark, "stream_join_e2e", build).name)
 
 
 @register(
@@ -545,39 +534,21 @@ def streaming_dedup_watermark_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     at O(live keys within horizon) instead of O(all keys ever). Only
     the key columns are projected: within a micro-batch the kept row
     for a key is arrival-order dependent, the key itself is not."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        deduped = (
-            replay.read_event_stream(spark, staged, schema)
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+
+    def build():
+        return (
+            replay.read_event_stream(spark, staged)
             .withWatermark("ts", "3650 days")
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
             .select("user_id", "event_type")
-        )
-        qname = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(qname)
+            .writeStream.format("memory")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_dedup_watermark_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(qname)
+
+    return spark.table(run_available_now(spark, "stream_dedup", build).name)
 
 
 @register(
@@ -603,28 +574,18 @@ def streaming_dedup_watermark_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     "watermark is max(ts) - delay).",
 )
 def streaming_window_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The session timezone is pinned to UTC for the duration of the
-    run: the replay source casts TIMESTAMP_NTZ to an instant (watermarks
-    reject NTZ) and F.window aligns to UTC epoch days, so a non-UTC
-    driver session would shift both the cast and the rendered window
-    label. All output columns are strings/longs computed inside the
-    pinned scope — nothing timezone-sensitive escapes to the gate.
-    Append + watermark is the scale contract: per-key state is one
-    partial aggregate per open window, closed windows leave the store."""
-    import uuid
+    """UTC-pinned (module docstring): all output columns are
+    strings/longs computed inside the pinned scope — nothing
+    timezone-sensitive escapes to the gate. Append + watermark is the
+    scale contract: per-key state is one partial aggregate per open
+    window, closed windows leave the store."""
+    from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        if int(prior_parts) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        from dynamodb_stream_processor_2_0_spark.streaming import replay
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
 
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        agg = (
-            replay.read_event_stream(spark, staged, schema)
+    def build():
+        return (
+            replay.read_event_stream(spark, staged)
             .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
             .agg(
@@ -639,25 +600,12 @@ def streaming_window_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
                 "sum_cents",
             )
-        )
-        qname = f"stream_wagg_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
+            .writeStream.format("memory")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_window_agg_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
-    return spark.table(qname)
+
+    q = run_available_now(spark, "stream_wagg", build, conf=UTC)
+    return spark.table(q.name)
 
 
 @register(
@@ -697,38 +645,23 @@ def streaming_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks are exact (ts, event_id) slices, so streaming arrival order
     per key is event-time order and the labels equal the batch
     computation."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
     from dynamodb_stream_processor_2_0_spark.streaming.sessionize import (
         apply_sessionize,
     )
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        stream = replay.read_event_stream(spark, staged, schema)
-        qname = f"sessionize_e2e_{uuid.uuid4().hex[:8]}"
-        q = (
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+
+    def build():
+        stream = replay.read_event_stream(spark, staged)
+        return (
             apply_sessionize(stream, gap_seconds=3600)
             .writeStream.format("memory")
-            .queryName(qname)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_sessionize_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(qname).select(
+
+    q = run_available_now(spark, "sessionize_e2e", build)
+    return spark.table(q.name).select(
         "user_id", "event_id", "session_no", "event_in_session"
     )
 
@@ -761,47 +694,30 @@ def streaming_static_enrich_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim is broadcast: the stream side never shuffles, which at 100 TB/day
     stream rates is the difference between an enrichment map stage and a
     continuous shuffle."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        stream = replay.read_event_stream(spark, staged, schema)
-        dim = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(
-                F.date_format(F.min("ts"), "yyyy-MM-dd'T'HH:mm:ss").alias(
-                    "first_ts_iso"
-                ),
-                F.count(F.lit(1)).alias("lifetime_events"),
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+    events = load_table(spark, sf_dir, "events")
+
+    def build():
+        dim = events.groupBy("user_id").agg(
+            F.date_format(F.min("ts"), "yyyy-MM-dd'T'HH:mm:ss").alias(
+                "first_ts_iso"
+            ),
+            F.count(F.lit(1)).alias("lifetime_events"),
+        )
+        return (
+            replay.read_event_stream(spark, staged)
+            .join(F.broadcast(dim), "user_id")
+            .select(
+                "event_id", "user_id", "event_type", "first_ts_iso",
+                "lifetime_events",
             )
-        )
-        enriched = stream.join(F.broadcast(dim), "user_id").select(
-            "event_id", "user_id", "event_type", "first_ts_iso", "lifetime_events"
-        )
-        qname = f"static_enrich_{uuid.uuid4().hex[:8]}"
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(qname)
+            .writeStream.format("memory")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_static_enrich_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(qname)
+
+    return spark.table(run_available_now(spark, "static_enrich", build).name)
 
 
 @register(
@@ -836,43 +752,27 @@ def streaming_foreachbatch_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFra
     to_json and back). Epoch-keyed overwrite directories make a retried
     epoch rewrite the same path: at-least-once delivery + idempotent
     sink = exactly-once observed output, the E2 contract."""
-    import tempfile
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay, sinks
     from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
         apply_delivery_state,
     )
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
     out_dir = staged_tmpdir(prefix="envelope_sink_")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        stream = replay.read_event_stream(spark, staged, schema)
-        write = sinks.write_envelopes(out_dir)
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+    write = sinks.write_envelopes(out_dir)
 
-        def sink_triggered(batch_df, epoch_id):
-            write(batch_df.filter(F.col("action") == "email_triggered"), epoch_id)
+    def sink_triggered(batch_df, epoch_id):
+        write(batch_df.filter(F.col("action") == "email_triggered"), epoch_id)
 
-        q = (
+    def build():
+        stream = replay.read_event_stream(spark, staged)
+        return (
             apply_delivery_state(stream)
             .writeStream.foreachBatch(sink_triggered)
-            .queryName(f"envelope_sink_{uuid.uuid4().hex[:8]}")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_foreachbatch_sink_e2e: availableNow query did "
-                "not terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+    run_available_now(spark, "envelope_sink", build)
     landed = spark.read.schema("dedup_id string, message_body string").json(
         f"{out_dir}/epoch=*"
     )
@@ -919,62 +819,48 @@ def streaming_incremental_rollup_e2e(spark: SparkSession, sf_dir: str) -> DataFr
     statefulOperator.checkCorrectness flags exactly this). Cents as
     BIGINT keeps the cumulative sum order-independent across
     micro-batches."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
     snapshot: dict[str, tuple] = {}
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        stream = replay.read_event_stream(spark, staged, schema)
-        rollup = stream.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
-            F.count("value").alias("n_valued"),
-        )
 
-        def upsert(batch_df, epoch_id):
-            # Changed groups only; cumulative values -> last write wins.
-            # PRECONDITION: the rollup key (event_type) is bounded-
-            # cardinality (single digits here), which is what makes a
-            # driver-side collect of the update-mode delta safe. Do NOT
-            # copy this pattern for a high-cardinality rollup key —
-            # write the delta to a keyed sink (foreachBatch MERGE /
-            # partitioned parquet) instead. The guard makes the
-            # precondition loud if the key set ever grows.
-            rows = batch_df.collect()
-            if len(rows) > 10_000:
-                raise AssertionError(
-                    "incremental-rollup upsert collected "
-                    f"{len(rows)} delta rows; the driver-side snapshot "
-                    "pattern requires a bounded-cardinality rollup key"
-                )
-            for row in rows:
-                snapshot[row["event_type"]] = (
-                    row["n_events"],
-                    row["sum_cents"],
-                    row["n_valued"],
-                )
-
-        q = (
-            rollup.writeStream.foreachBatch(upsert)
-            .queryName(f"incr_rollup_{uuid.uuid4().hex[:8]}")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_incremental_rollup_e2e: availableNow query "
-                "did not terminate within 180s"
+    def upsert(batch_df, epoch_id):
+        # Changed groups only; cumulative values -> last write wins.
+        # PRECONDITION: the rollup key (event_type) is bounded-
+        # cardinality (single digits here), which is what makes a
+        # driver-side collect of the update-mode delta safe. Do NOT
+        # copy this pattern for a high-cardinality rollup key —
+        # write the delta to a keyed sink (foreachBatch MERGE /
+        # partitioned parquet) instead. The guard makes the
+        # precondition loud if the key set ever grows.
+        rows = batch_df.collect()
+        if len(rows) > 10_000:
+            raise AssertionError(
+                "incremental-rollup upsert collected "
+                f"{len(rows)} delta rows; the driver-side snapshot "
+                "pattern requires a bounded-cardinality rollup key"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+        for row in rows:
+            snapshot[row["event_type"]] = (
+                row["n_events"],
+                row["sum_cents"],
+                row["n_valued"],
+            )
+
+    def build():
+        return (
+            replay.read_event_stream(spark, staged)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
+                F.count("value").alias("n_valued"),
+            )
+            .writeStream.foreachBatch(upsert)
+            .outputMode("update")
+        )
+
+    run_available_now(spark, "incr_rollup", build)
     return (
         spark.createDataFrame(
             [(k, *v) for k, v in snapshot.items()],
@@ -1021,54 +907,34 @@ def streaming_python_source_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateless pipe (no watermark/state), so the memory-sink append
     across micro-batches is exactly the union of chunk parses;
     availableNow polls latestOffset once and drains every staged
-    chunk, each as its own reader partition."""
-    import uuid
-
-    from pyspark.sql import functions as FN
-
+    chunk, each as its own reader partition. The run turns off the
+    JSON-path optimizer so parse_new_image parses each record once."""
     from dynamodb_stream_processor_2_0_spark.sources import (
         dynamodb_stream as DS,
         python_datasource as PDS,
     )
 
-    spark.conf.set("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
     PDS.register_wire_datasource(spark)
     path = PDS.staged_wire_chunks_jsonl(spark, sf_dir, chunks=4)
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
+
+    def build():
         wire = (
             spark.readStream.format("dynamodb_stream_wire_replay")
             .option("path", path)
             .load()
         )
-        typed = DS.parse_new_image(
-            DS.decode_records(wire), extra_cols=("chunk",)
-        ).select(
-            "chunk",
-            "record_id",
-            "event_name",
-            "guest_id",
-            "total_matches",
-        )
-        qname = f"py_source_{uuid.uuid4().hex[:8]}"
-        q = (
-            typed.writeStream.format("memory")
-            .queryName(qname)
+        return (
+            DS.parse_new_image(DS.decode_records(wire), extra_cols=("chunk",))
+            .select("chunk", "record_id", "event_name", "guest_id", "total_matches")
+            .writeStream.format("memory")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_python_source_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(qname)
+
+    q = run_available_now(
+        spark, "py_source", build,
+        conf={"spark.sql.optimizer.enableJsonExpressionOptimization": "false"},
+    )
+    return spark.table(q.name)
 
 
 @register(
@@ -1097,9 +963,6 @@ def streaming_python_source_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "foreachBatch envelope sink (index.js:570-611).",
 )
 def streaming_python_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.sources import (
         python_datasource as PDS,
     )
@@ -1109,38 +972,24 @@ def streaming_python_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     PDS.register_wire_datasource(spark)
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
     out_dir = staged_tmpdir(prefix="envelope_pysink_")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        stream = replay.read_event_stream(spark, staged, schema)
-        triggered = sinks.envelope(
-            apply_delivery_state(stream).filter(
-                F.col("action") == "email_triggered"
-            )
+    ckpt = staged_tmpdir(prefix="pysink_ckpt_")
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+
+    def build():
+        stream = replay.read_event_stream(spark, staged)
+        triggered = apply_delivery_state(stream).filter(
+            F.col("action") == "email_triggered"
         )
-        q = (
-            triggered.writeStream.format("dynamodb_envelope_sink")
+        return (
+            sinks.envelope(triggered)
+            .writeStream.format("dynamodb_envelope_sink")
             .option("path", out_dir)
-            .option(
-                "checkpointLocation", staged_tmpdir(prefix="pysink_ckpt_")
-            )
-            .queryName(f"py_sink_{uuid.uuid4().hex[:8]}")
+            .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_python_sink_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+    run_available_now(spark, "py_sink", build)
     landed = PDS.read_committed_envelopes(
         spark, out_dir, "dedup_id string, message_body string"
     )
@@ -1210,67 +1059,12 @@ def streaming_outer_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-padded rows are exactly the left rows whose join window closed
     below the final watermark — deterministic because replay chunks are
     exact ts slices and availableNow runs a terminal no-data batch."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        purchases = (
-            replay.read_event_stream(spark, staged, schema)
-            .filter(F.col("event_type") == "purchase")
-            .withWatermark("ts", "10 minutes")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-            )
-        )
-        clicks = (
-            replay.read_event_stream(spark, staged, schema)
-            .filter(F.col("event_type") == "click")
-            .withWatermark("ts", "10 minutes")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"),
-            )
-        )
-        joined = purchases.join(
-            clicks,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("click_ts") <= F.col("purchase_ts")),
-            "left_outer",
-        ).select(
-            F.col("p_user").alias("user_id"),
-            "purchase_id",
-            "click_id",
-            "purchase_ts",
-            "click_ts",
-        )
-        qname = f"outer_join_e2e_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "streaming_outer_join_e2e: availableNow query did not "
-                "terminate within 240s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return spark.table(qname)
-
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+    build = partial(_purchase_click_join_writer, spark, staged, "left_outer")
+    q = run_available_now(spark, "outer_join_e2e", build, timeout_s=240)
+    return spark.table(q.name)
 
 
 @register(
@@ -1301,23 +1095,14 @@ def streaming_outer_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_chained_window_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both aggs share one watermark (10 min); the daily window's
     n_6h_windows proves the roll really consumed pre-aggregated rows
-    (4 per full day), not raw events. UTC pinning as in
-    streaming_window_agg_e2e: window alignment and the rendered day
-    label are timezone-scoped."""
-    import uuid
+    (4 per full day), not raw events. UTC-pinned (module docstring)."""
+    from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        if int(prior_parts) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        from dynamodb_stream_processor_2_0_spark.streaming import replay
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
 
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
+    def build():
         six_hourly = (
-            replay.read_event_stream(spark, staged, schema)
+            replay.read_event_stream(spark, staged)
             .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "6 hours").alias("w6"))
             .agg(
@@ -1327,7 +1112,7 @@ def streaming_chained_window_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFr
                 ),
             )
         )
-        daily = (
+        return (
             six_hourly.groupBy(F.window(F.col("w6"), "1 day").alias("wd"))
             .agg(
                 F.count(F.lit(1)).alias("n_6h_windows"),
@@ -1340,25 +1125,12 @@ def streaming_chained_window_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFr
                 "n_events",
                 "sum_cents",
             )
-        )
-        qname = f"stream_chained_{uuid.uuid4().hex[:8]}"
-        q = (
-            daily.writeStream.format("memory")
-            .queryName(qname)
+            .writeStream.format("memory")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_chained_window_agg_e2e: availableNow query "
-                "did not terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
-    return spark.table(qname).orderBy("day")
+
+    q = run_available_now(spark, "stream_chained", build, conf=UTC)
+    return spark.table(q.name).orderBy("day")
 
 
 @register(
@@ -1415,21 +1187,14 @@ def streaming_chained_window_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFr
 def streaming_late_data_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk boundaries are md5-deterministic and batch order is the
     file-write order, so the drop set is reproducible run-to-run and
-    engine-to-engine; UTC pinning as in the other window e2e runs."""
-    import uuid
+    engine-to-engine; UTC-pinned (module docstring)."""
+    from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        if int(prior_parts) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        from dynamodb_stream_processor_2_0_spark.streaming import replay
+    staged = replay.stage_event_chunks_hashed(spark, sf_dir, chunks=4)
 
-        staged = replay.stage_event_chunks_hashed(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        agg = (
-            replay.read_event_stream(spark, staged, schema)
+    def build():
+        return (
+            replay.read_event_stream(spark, staged)
             .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 day").alias("w"))
             .agg(
@@ -1443,25 +1208,12 @@ def streaming_late_data_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
                 "n_events",
                 "sum_cents",
             )
-        )
-        qname = f"stream_late_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
+            .writeStream.format("memory")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_late_data_audit_e2e: availableNow query did "
-                "not terminate within 180s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
-    return spark.table(qname).orderBy("day")
+
+    q = run_available_now(spark, "stream_late", build, conf=UTC)
+    return spark.table(q.name).orderBy("day")
 
 
 @register(
@@ -1488,78 +1240,45 @@ def streaming_late_data_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     "nothing semantically.",
 )
 def streaming_rocksdb_state_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Provider is a per-query binding read from the session conf at
-    start; prior value is restored either way. Complete-mode memory
+    """The provider is a per-query binding read from the session conf
+    at start, so the run scopes it. Complete-mode memory
     sink keeps the result table driver-side (test harness only — a
     production complete-mode sink would be a keyed upsert store); the
     state itself stays in RocksDB on the executors, which is the part
     that must scale."""
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prior_prov = spark.conf.get(prov_key, None)
-    try:
-        if int(prior_parts) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.set(prov_key, rocks)
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        rollup = (
-            replay.read_event_stream(spark, staged, schema)
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+
+    def build():
+        cents = F.round(F.col("value") * 100).cast("long")
+        return (
+            replay.read_event_stream(spark, staged)
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                    "sum_cents"
-                ),
-                F.min(F.round(F.col("value") * 100).cast("long")).alias(
-                    "min_cents"
-                ),
-                F.max(F.round(F.col("value") * 100).cast("long")).alias(
-                    "max_cents"
-                ),
+                F.sum(cents).alias("sum_cents"),
+                F.min(cents).alias("min_cents"),
+                F.max(cents).alias("max_cents"),
             )
-        )
-        qname = f"rocks_state_{uuid.uuid4().hex[:8]}"
-        q = (
-            rollup.writeStream.format("memory")
-            .queryName(qname)
+            .writeStream.format("memory")
             .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_rocksdb_state_e2e: availableNow query did not "
-                "terminate within 180s"
-            )
-        used_rocksdb = any(
-            "rocksdb" in key.lower()
-            for p in q.recentProgress
-            for op in p.get("stateOperators", [])
-            for key in (op.get("customMetrics") or {})
+
+    q = run_available_now(spark, "rocks_state", build, conf=ROCKSDB)
+    used_rocksdb = any(
+        "rocksdb" in key.lower()
+        for p in q.recentProgress
+        for op in p.get("stateOperators", [])
+        for key in (op.get("customMetrics") or {})
+    )
+    if not used_rocksdb:
+        raise AssertionError(
+            "streaming_rocksdb_state_e2e: no rocksdb state-store "
+            "metrics in query progress — the provider binding did "
+            "not take effect"
         )
-        if not used_rocksdb:
-            raise AssertionError(
-                "streaming_rocksdb_state_e2e: no rocksdb state-store "
-                "metrics in query progress — the provider binding did "
-                "not take effect"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        if prior_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prior_prov)
-    return spark.table(qname)
+    return spark.table(q.name)
 
 
 @register(
@@ -1588,19 +1307,14 @@ def streaming_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame
     state-store shard); key/value structs are flattened positionally
     (state value fields carry internal names like 'count'/'sum', in
     aggregate-declaration order)."""
-    import tempfile
-    import uuid
-
     from dynamodb_stream_processor_2_0_spark.streaming import replay
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        rollup = (
-            replay.read_event_stream(spark, staged, schema)
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+    ckpt = staged_tmpdir(prefix="state_introspect_ckpt_")
+
+    def build():
+        return (
+            replay.read_event_stream(spark, staged)
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -1608,37 +1322,20 @@ def streaming_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame
                     "sum_cents"
                 ),
             )
-        )
-        import atexit
-        import shutil
-
-        ckpt = tempfile.mkdtemp(prefix="state_introspect_ckpt_")
-        atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-        qname = f"state_introspect_{uuid.uuid4().hex[:8]}"
-        q = (
-            rollup.writeStream.format("memory")
-            .queryName(qname)
+            .writeStream.format("memory")
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError(
-                "streaming_state_introspection: availableNow query did "
-                "not terminate within 180s"
-            )
-        state = spark.read.format("statestore").load(ckpt)
-        key_cols = state.select("key.*").columns
-        val_cols = state.select("value.*").columns
-        return state.select(
-            F.col(f"key.{key_cols[0]}").alias("user_id"),
-            F.col(f"value.{val_cols[0]}").alias("n_events"),
-            F.col(f"value.{val_cols[1]}").alias("sum_cents"),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+    run_available_now(spark, "state_introspect", build)
+    state = spark.read.format("statestore").load(ckpt)
+    key_cols = state.select("key.*").columns
+    val_cols = state.select("value.*").columns
+    return state.select(
+        F.col(f"key.{key_cols[0]}").alias("user_id"),
+        F.col(f"value.{val_cols[0]}").alias("n_events"),
+        F.col(f"value.{val_cols[1]}").alias("sum_cents"),
+    )
 
 
 from dynamodb_stream_processor_2_0_spark.operators.dedup import (
@@ -1680,97 +1377,69 @@ def streaming_neardup_arrival_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     bucketed table or the state-store API, same key). Batch order is
     deterministic: chunks are contiguous doc_id ranges written in
     order, maxFilesPerTrigger=1 drains them oldest-first."""
-    import tempfile
-    import uuid
-
     from pyspark.sql.utils import AnalysisException
 
     from dynamodb_stream_processor_2_0_spark.operators import dedup
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if int(prior) > 32:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-        docs = load_table(spark, sf_dir, "documents")
-        n = docs.count()
-        per = -(-n // 4)
-        import atexit
-        import shutil
-
-        src = tempfile.mkdtemp(prefix="neardup_src_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        for k in range(4):
-            (
-                docs.filter(
-                    (F.col("doc_id") >= k * per) & (F.col("doc_id") < (k + 1) * per)
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{src}/chunk={k}")
+    docs = load_table(spark, sf_dir, "documents")
+    n = docs.count()
+    per = -(-n // 4)
+    src = staged_tmpdir(prefix="neardup_src_")
+    for k in range(4):
+        (
+            docs.filter(
+                (F.col("doc_id") >= k * per) & (F.col("doc_id") < (k + 1) * per)
             )
-        schema = spark.read.parquet(f"{src}/chunk=0").schema
-        state_dir = tempfile.mkdtemp(prefix="neardup_state_")
-        atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-        out_dir = tempfile.mkdtemp(prefix="neardup_out_")
-        # interpreter-exit cleanup only: the returned DataFrame reads
-        # out_dir lazily after this function returns, so an eager
-        # try/finally rmtree would break the caller's action.
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{src}/chunk={k}")
+        )
+    state_dir = staged_tmpdir(prefix="neardup_state_")
+    out_dir = staged_tmpdir(prefix="neardup_out_")
 
-        def process(batch_df, epoch_id):
-            bspark = batch_df.sparkSession
-            bands = dedup.minhash_band_signatures(batch_df).localCheckpoint()
-            try:
-                state = bspark.read.parquet(state_dir)
-                seen = state.select("band", "sig").distinct()
-            except AnalysisException:
-                seen = None
-            from pyspark.sql import Window as W
+    def process(batch_df, epoch_id):
+        bspark = batch_df.sparkSession
+        bands = dedup.minhash_band_signatures(batch_df).localCheckpoint()
+        try:
+            state = bspark.read.parquet(state_dir)
+            seen = state.select("band", "sig").distinct()
+        except AnalysisException:
+            seen = None
+        from pyspark.sql import Window as W
 
-            internal_first = F.min("doc_id").over(W.partitionBy("band", "sig"))
-            flagged_internal = (
-                bands.withColumn("first_id", internal_first)
-                .filter(F.col("first_id") < F.col("doc_id"))
-                .select("doc_id")
-            )
-            if seen is not None:
-                flagged_external = bands.join(
-                    seen, ["band", "sig"], "left_semi"
-                ).select("doc_id")
-                flagged = flagged_internal.union(flagged_external).distinct()
-            else:
-                flagged = flagged_internal.distinct()
-            result = batch_df.select("doc_id").join(
-                flagged.withColumn("is_neardup", F.lit(True)), "doc_id", "left"
-            ).select(
-                "doc_id", F.coalesce("is_neardup", F.lit(False)).alias("is_neardup")
-            )
-            result.write.mode("append").parquet(out_dir)
-            bands.select("doc_id", "band", "sig").write.mode("append").parquet(
-                state_dir
-            )
+        internal_first = F.min("doc_id").over(W.partitionBy("band", "sig"))
+        flagged_internal = (
+            bands.withColumn("first_id", internal_first)
+            .filter(F.col("first_id") < F.col("doc_id"))
+            .select("doc_id")
+        )
+        if seen is not None:
+            flagged_external = bands.join(
+                seen, ["band", "sig"], "left_semi"
+            ).select("doc_id")
+            flagged = flagged_internal.union(flagged_external).distinct()
+        else:
+            flagged = flagged_internal.distinct()
+        result = batch_df.select("doc_id").join(
+            flagged.withColumn("is_neardup", F.lit(True)), "doc_id", "left"
+        ).select(
+            "doc_id", F.coalesce("is_neardup", F.lit(False)).alias("is_neardup")
+        )
+        result.write.mode("append").parquet(out_dir)
+        bands.select("doc_id", "band", "sig").write.mode("append").parquet(
+            state_dir
+        )
 
-        stream = (
-            spark.readStream.schema(schema)
+    def build():
+        return (
+            spark.readStream.schema(spark.read.parquet(f"{src}/chunk=0").schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/chunk=*")
+            .writeStream.foreachBatch(process)
         )
-        qname = f"neardup_arrival_{uuid.uuid4().hex[:8]}"
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .queryName(qname)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_neardup_arrival_e2e: availableNow query did "
-                "not terminate within 300s"
-            )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+    run_available_now(spark, "neardup_arrival", build, timeout_s=300)
+    return spark.read.parquet(out_dir)
 
 
 @register(

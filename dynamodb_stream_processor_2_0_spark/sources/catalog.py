@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 TABLES = (
@@ -30,10 +31,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 # Columns that MAY be written as parquet TIMESTAMP(NANOS) — Spark
-# rejects those by default; we read them as raw nanos (legacy conf) and
-# rebuild a timestamp ourselves. Datasets written with TIMESTAMP(MICROS)
-# read natively as TIMESTAMP_NTZ and need no conversion; the check is on
-# the actual read-back type, not the dataset generation vintage.
+# rejects those by default (PARQUET_TYPE_ILLEGAL when the read is set
+# up); only then we read them as raw nanos (legacy conf) and rebuild a
+# timestamp ourselves. Datasets written with TIMESTAMP(MICROS) read
+# natively as TIMESTAMP_NTZ and leave the session conf untouched; the
+# check is on the actual read-back type, not the dataset vintage.
 _NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
@@ -57,10 +59,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     nanos_cols = _NANOS_TS_COLUMNS.get(name, ())
-    if nanos_cols:
-        # Runtime SQL conf: applies to the driver-passed session too.
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as exc:
+        if not nanos_cols or exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        # Stays set: the scan reads the conf again when it executes,
+        # after this function has returned the lazy DataFrame.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.parquet(path)
     for col in nanos_cols:
         # Only nanos columns surface as BIGINT under nanosAsLong; a
         # micros file already reads as TIMESTAMP_NTZ and passes through.

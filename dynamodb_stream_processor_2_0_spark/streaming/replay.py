@@ -11,11 +11,10 @@ source; this module only swaps the source.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
+from dynamodb_stream_processor_2_0_spark.sources.formats import staged_tmpdir
 
 
 def stage_event_chunks(
@@ -24,7 +23,7 @@ def stage_event_chunks(
     """Write events into ``chunks`` single-file parquet slices in ts
     order (slice i = rows with ntile i) so arrival order == event-time
     order during replay."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="events_replay_")
+    out_dir = out_dir or staged_tmpdir("events_replay_")
     events = load_table(spark, sf_dir, "events")
     total = events.count()
     per = (total + chunks - 1) // chunks
@@ -47,11 +46,14 @@ def stage_event_chunks(
 
 
 def read_event_stream(
-    spark: SparkSession, staged_dir: str, schema
+    spark: SparkSession, staged_dir: str, schema=None
 ) -> DataFrame:
     """One staged chunk per micro-batch. ``ts`` is cast to TIMESTAMP
     (instant) because watermarks reject TIMESTAMP_NTZ; the engine
-    session pins UTC so the wall-clock value is unchanged."""
+    session pins UTC so the wall-clock value is unchanged. ``schema``
+    defaults to the one every staged chunk shares, read from chunk 0."""
+    if schema is None:
+        schema = spark.read.parquet(f"{staged_dir}/chunk=0").schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -69,7 +71,7 @@ def stage_event_chunks_hashed(
     late-data drops (the ts-ordered staging never produces late rows).
     The same md5-derived assignment is expressible in the DuckDB oracle,
     which makes the drop accounting itself oracle-checkable."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="events_hashed_")
+    out_dir = out_dir or staged_tmpdir("events_hashed_")
     events = load_table(spark, sf_dir, "events")
     chunk = (
         F.conv(F.substring(F.md5(F.concat(F.lit("late:"), F.col("event_id"))), 1, 8), 16, 10)

@@ -51,3 +51,38 @@ def test_schema_required_for_json(spark):
 def test_unknown_format_rejected(spark):
     with pytest.raises(ValueError, match="unsupported format"):
         read_batch(spark, "/nonexistent", fmt="avro")
+
+
+def test_load_table_nanos_ts_round_trip(spark, sf_dir, tmp_path):
+    """A TIMESTAMP(NANOS) ``events.ts`` reads back as the same instant
+    truncated to micros; only that file sets nanosAsLong, a micros file
+    leaves the session conf untouched."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        load_table(spark, sf_dir, "events").limit(1).collect()
+        assert spark.conf.get(key, None) is None
+        nanos = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+            }),
+            tmp_path / "events.parquet",
+        )
+        got = load_table(spark, str(tmp_path), "events").orderBy("event_id")
+        assert [r.ts for r in got.collect()] == [
+            dt.datetime(2023, 11, 14, 22, 13, 20, 123456),
+            dt.datetime(2023, 11, 14, 22, 13, 21),
+        ]
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

@@ -203,14 +203,31 @@ def _medium_specs():
     ]
 
 
+# Conf keys a query may override for its own run only (the streaming
+# runner's scope); every query must leave them as it found them.
+_RUN_SCOPED = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.session.timeZone",
+    "spark.sql.streaming.stateStore.providerClass",
+)
+
+
+def _compare_keeping_conf(spark, spec, sf_dir):
+    before = {k: spark.conf.get(k, None) for k in _RUN_SCOPED}
+    compare_query(spark, spec, sf_dir)
+    assert {k: spark.conf.get(k, None) for k in _RUN_SCOPED} == before, (
+        f"{spec.name} left run-scoped session conf changed"
+    )
+
+
 @pytest.mark.parametrize("spec", _specs(), ids=lambda s: s.name)
 def test_parity_small(spark, sf_dir, spec):
-    compare_query(spark, spec, sf_dir)
+    _compare_keeping_conf(spark, spec, sf_dir)
 
 
 @pytest.mark.parametrize("spec", _medium_specs(), ids=lambda s: s.name)
 def test_parity_medium(spark, sf_dir_medium, spec):
-    compare_query(spark, spec, sf_dir_medium)
+    _compare_keeping_conf(spark, spec, sf_dir_medium)
 
 
 def test_rows_only_queries_run(spark, sf_dir):

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.sources import dynamodb_stream as DS
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
+from dynamodb_stream_processor_2_0_spark.streaming.runner import run_available_now
 
 
 @pytest.fixture(scope="module")
@@ -54,22 +55,26 @@ def test_wire_to_envelope_stream(spark, sf_dir, wire_dir):
             .json(f"{out_dir}/epoch={epoch_id}")
         )
 
-    q = stream.writeStream.foreachBatch(
-        lambda df, eid: sink(
-            DS.parse_new_image(DS.decode_records(df)).select(
-                "record_id",
-                "event_id_s",
-                F.when(F.col("total_matches") <= 0, "skipped_below_threshold")
-                .otherwise("email_triggered")
-                .alias("action"),
-                F.when(F.col("best_similarity") >= 100.0, "high")
-                .otherwise("normal")
-                .alias("priority"),
-            ),
-            eid,
-        )
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
+    run_available_now(
+        spark,
+        "wire_to_envelope",
+        lambda: stream.writeStream.foreachBatch(
+            lambda df, eid: sink(
+                DS.parse_new_image(DS.decode_records(df)).select(
+                    "record_id",
+                    "event_id_s",
+                    F.when(F.col("total_matches") <= 0, "skipped_below_threshold")
+                    .otherwise("email_triggered")
+                    .alias("action"),
+                    F.when(F.col("best_similarity") >= 100.0, "high")
+                    .otherwise("normal")
+                    .alias("priority"),
+                ),
+                eid,
+            )
+        ),
+        timeout_s=120,
+    )
 
     bodies = []
     for f in glob.glob(f"{out_dir}/epoch=*/part-*.json"):

@@ -17,15 +17,16 @@ from dynamodb_stream_processor_2_0_spark.streaming import replay, sinks
 from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
     apply_delivery_state,
 )
+from dynamodb_stream_processor_2_0_spark.streaming.runner import (
+    ROCKSDB,
+    conf_scope,
+    run_available_now,
+)
 
 
 @pytest.fixture(scope="module")
 def staged(spark, sf_dir):
     return replay.stage_event_chunks(spark, sf_dir, chunks=4)
-
-
-def _batch_schema(spark, staged):
-    return spark.read.parquet(f"{staged}/chunk=0").schema
 
 
 def test_replay_preserves_all_events(spark, sf_dir, staged):
@@ -39,17 +40,15 @@ def test_delivery_state_machine_exactly_once(spark, sf_dir, staged):
     each (user_id, event_type) key triggers exactly one email — the
     event-time-first one — and every other attempt is
     duplicate_prevented."""
-    stream = replay.read_event_stream(spark, staged, _batch_schema(spark, staged))
-    q = (
-        apply_delivery_state(stream)
+    q = run_available_now(
+        spark,
+        "dispositions",
+        lambda: apply_delivery_state(replay.read_event_stream(spark, staged))
         .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dispositions")
-        .trigger(availableNow=True)
-        .start()
+        .format("memory"),
+        timeout_s=120,
     )
-    q.awaitTermination(120)
-    out = spark.table("dispositions")
+    out = spark.table(q.name)
 
     events = load_table(spark, sf_dir, "events")
     n_events = events.count()
@@ -131,24 +130,16 @@ def test_delivery_state_exactly_once_tiny_arrow_batches(spark, sf_dir, staged):
     """E2E variant of the multi-chunk case: force 2-row Arrow batches so
     every real group spans chunks, and require streaming winners to
     still equal the batch first-occurrence oracle."""
-    prior = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        stream = replay.read_event_stream(
-            spark, staged, _batch_schema(spark, staged)
-        )
-        q = (
-            apply_delivery_state(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dispositions_tiny_chunks")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prior)
-    out = spark.table("dispositions_tiny_chunks")
+    q = run_available_now(
+        spark,
+        "dispositions_tiny_chunks",
+        lambda: apply_delivery_state(replay.read_event_stream(spark, staged))
+        .writeStream.outputMode("append")
+        .format("memory"),
+        conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "2"},
+        timeout_s=120,
+    )
+    out = spark.table(q.name)
     events = load_table(spark, sf_dir, "events")
     assert out.count() == events.count()
     triggered = out.filter(F.col("action") == "email_triggered")
@@ -166,18 +157,19 @@ def test_delivery_state_exactly_once_tiny_arrow_batches(spark, sf_dir, staged):
 def test_delivery_state_sink_failure_compensation(spark, sf_dir, staged):
     """S7: a failing sink send must not mark the key delivered — the
     next attempt for that key must still be able to trigger."""
-    stream = replay.read_event_stream(spark, staged, _batch_schema(spark, staged))
     # every odd event_id fails at the sink
-    q = (
-        apply_delivery_state(stream, sink_ok=lambda eid: eid % 2 == 0)
+    q = run_available_now(
+        spark,
+        "dispositions_fail",
+        lambda: apply_delivery_state(
+            replay.read_event_stream(spark, staged),
+            sink_ok=lambda eid: eid % 2 == 0,
+        )
         .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dispositions_fail")
-        .trigger(availableNow=True)
-        .start()
+        .format("memory"),
+        timeout_s=120,
     )
-    q.awaitTermination(120)
-    out = spark.table("dispositions_fail")
+    out = spark.table(q.name)
     per_key = (
         out.groupBy("user_id", "event_type")
         .agg(
@@ -196,21 +188,17 @@ def test_delivery_state_sink_failure_compensation(spark, sf_dir, staged):
 def test_watermark_dedup_stream(spark, staged):
     """dropDuplicatesWithinWatermark on the dedup key: no key is ever
     emitted twice across micro-batches (D5 at the sink boundary)."""
-    schema = _batch_schema(spark, staged)
-    stream = (
-        replay.read_event_stream(spark, staged, schema)
+    q = run_available_now(
+        spark,
+        "deduped",
+        lambda: replay.read_event_stream(spark, staged)
         .withWatermark("ts", "10 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .writeStream.outputMode("append")
+        .format("memory"),
+        timeout_s=120,
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("deduped")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.table("deduped")
+    out = spark.table(q.name)
     dupes = out.groupBy("user_id", "event_type").count().filter("count > 1").count()
     assert dupes == 0
 
@@ -218,24 +206,20 @@ def test_watermark_dedup_stream(spark, staged):
 def test_windowed_agg_stream_matches_batch(spark, sf_dir, staged):
     """Tumbling 1-day event-time windows with watermark == batch
     date_trunc aggregation."""
-    schema = _batch_schema(spark, staged)
-    stream = (
-        replay.read_event_stream(spark, staged, schema)
+    q = run_available_now(
+        spark,
+        "windowed",
+        lambda: replay.read_event_stream(spark, staged)
         .withWatermark("ts", "2 days")
         .groupBy(F.window("ts", "1 day"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.outputMode("append")
+        .format("memory"),
+        timeout_s=120,
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("windowed")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["window"]["start"], r.event_type): r.n
-        for r in spark.table("windowed").selectExpr("window", "event_type", "n").collect()
+        for r in spark.table(q.name).selectExpr("window", "event_type", "n").collect()
     }
     batch = {
         (r.day, r.event_type): r.n
@@ -254,17 +238,14 @@ def test_windowed_agg_stream_matches_batch(spark, sf_dir, staged):
 def test_envelope_sink_idempotent_and_observed(spark, sf_dir, staged):
     """S3 envelope sink via foreachBatch + S4 observe metrics."""
     out_dir = tempfile.mkdtemp(prefix="envelopes_")
-    schema = _batch_schema(spark, staged)
-    stream = apply_delivery_state(
-        replay.read_event_stream(spark, staged, schema)
+    q = run_available_now(
+        spark,
+        "envelopes",
+        lambda: sinks.observed(
+            apply_delivery_state(replay.read_event_stream(spark, staged))
+        ).writeStream.foreachBatch(sinks.write_envelopes(out_dir)),
+        timeout_s=120,
     )
-    q = (
-        sinks.observed(stream)
-        .writeStream.foreachBatch(sinks.write_envelopes(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     # recentProgress is synchronous (unlike StreamingQueryListener, whose
     # events are delivered async and can miss the final batch)
     metrics = [
@@ -305,24 +286,20 @@ def test_session_window_stream_matches_batch(spark, sf_dir, staged):
     """Streaming session windows (watermark-closed) must agree with the
     batch session_window operator — the golden twin of the registered
     session_window_12h query."""
-    schema = _batch_schema(spark, staged)
-    stream = (
-        replay.read_event_stream(spark, staged, schema)
+    q = run_available_now(
+        spark,
+        "sessions",
+        lambda: replay.read_event_stream(spark, staged)
         .withWatermark("ts", "1 day")
         .groupBy("user_id", F.session_window("ts", "12 hours").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.outputMode("append")
+        .format("memory"),
+        timeout_s=120,
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r.user_id, r["w"]["start"]): r.n
-        for r in spark.table("sessions").selectExpr("user_id", "w", "n").collect()
+        for r in spark.table(q.name).selectExpr("user_id", "w", "n").collect()
     }
     assert got, "expected at least one closed session"
     # compare against the REGISTERED batch query itself (not an inline
@@ -338,6 +315,25 @@ def test_session_window_stream_matches_batch(spark, sf_dir, staged):
     # append mode only emits watermark-closed sessions; each must match
     for key, n in got.items():
         assert batch.get(key) == n, f"session {key}: stream {n} != batch {batch.get(key)}"
+
+
+def test_streaming_e2e_parity_in_a_wide_non_utc_session(spark, sf_dir):
+    """A plain SparkSession is 200 wide and not UTC (as in
+    tools/gate_sim.py --plain): the runner caps the width and pins UTC
+    for the run only, so parity holds and the caller's conf is unchanged
+    afterwards."""
+    from dynamodb_stream_processor_2_0_spark.plans import registry
+    from tests.oracle_harness import compare_query
+
+    plain_session = {
+        "spark.sql.shuffle.partitions": "200",
+        "spark.sql.session.timeZone": "America/New_York",
+    }
+    with conf_scope(spark, plain_session):
+        before = dict(spark.conf.getAll)
+        for name in ("streaming_window_agg_e2e", "streaming_stream_join_e2e"):
+            compare_query(spark, registry.get(name), sf_dir)
+            assert dict(spark.conf.getAll) == before, name
 
 
 def test_sessionize_fn_chunk_spanning_and_state_carry():
@@ -458,39 +454,23 @@ def test_first_touch_transform_with_state_e2e(spark, sf_dir):
     """Full transformWithStateInPandas run — requires google.protobuf
     (the new API's state-server protocol), absent in this container."""
     pytest.importorskip("google.protobuf")
-    import uuid
-
-    from dynamodb_stream_processor_2_0_spark.streaming import replay
     from dynamodb_stream_processor_2_0_spark.streaming.first_touch import (
         apply_first_touch,
     )
 
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
+    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
+    q = run_available_now(
+        spark,
+        "first_touch",
+        lambda: apply_first_touch(replay.read_event_stream(spark, staged))
+        .writeStream.format("memory")
+        .outputMode("append"),
+        conf=ROCKSDB,
+        timeout_s=240,
     )
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    try:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-        staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-        schema = spark.read.parquet(f"{staged}/chunk=0").schema
-        stream = replay.read_event_stream(spark, staged, schema)
-        qname = f"first_touch_{uuid.uuid4().hex[:8]}"
-        q = (
-            apply_first_touch(stream)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(240)
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-
     got = {
         (r.user_id, r.event_type): r.first_event_id
-        for r in spark.table(qname).collect()
+        for r in spark.table(q.name).collect()
     }
     from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
     from pyspark.sql import Window, functions as F

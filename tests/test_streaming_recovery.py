@@ -16,53 +16,40 @@ from dynamodb_stream_processor_2_0_spark.streaming import replay
 from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
     apply_delivery_state,
 )
-
-
-@pytest.mark.parametrize(
-    "provider",
-    [
-        None,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    ],
-    ids=["default-hdfs", "rocksdb"],
+from dynamodb_stream_processor_2_0_spark.streaming.runner import (
+    ROCKSDB,
+    conf_scope,
+    run_available_now,
 )
+
+
+@pytest.mark.parametrize("provider", [{}, ROCKSDB], ids=["default-hdfs", "rocksdb"])
 def test_exactly_once_across_restart(spark, sf_dir, provider):
     """Restart recovery must hold on BOTH state backends: checkpoint
     offsets/commits are backend-independent, but RocksDB additionally
     restores keyed state from its own changelog/snapshot files — the
     path a 100 TB job exercises on every executor loss."""
-    prior_prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    if provider is not None:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    try:
+    with conf_scope(spark, provider):
         _run_restart_scenario(spark, sf_dir)
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", prior_prov
-        )
 
 
 def _run_restart_scenario(spark, sf_dir):
     staged = replay.stage_event_chunks(spark, sf_dir, chunks=6)
-    schema = spark.read.parquet(f"{staged}/chunk=0").schema
     checkpoint = tempfile.mkdtemp(prefix="ckpt_")
     out_dir = tempfile.mkdtemp(prefix="recovery_out_")
 
-    def start():
-        stream = replay.read_event_stream(spark, staged, schema)
+    def writer():
+        stream = replay.read_event_stream(spark, staged)
         return (
             apply_delivery_state(stream)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )
 
     # Phase 1: process at least one micro-batch, then stop mid-replay.
-    q = start()
+    q = writer().trigger(availableNow=True).start()
     while not q.recentProgress:
         q.awaitTermination(1)
     q.stop()
@@ -70,8 +57,7 @@ def _run_restart_scenario(spark, sf_dir):
     first_phase = spark.read.parquet(out_dir).count()
 
     # Phase 2: restart from the checkpoint and drain.
-    q = start()
-    q.awaitTermination(120)
+    run_available_now(spark, "recovery_restart", writer, timeout_s=120)
 
     out = spark.read.parquet(out_dir)
     events = load_table(spark, sf_dir, "events")
@@ -112,21 +98,13 @@ def test_delivery_e2e_on_rocksdb_state_store(spark, sf_dir):
     outcome on it as on the default HDFS-backed in-memory provider."""
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    try:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+    with conf_scope(spark, ROCKSDB):
         rocks = {
             (r.user_id, r.event_type, r.event_id): r.action
             for r in registry.get("streaming_delivery_e2e")
             .fn(spark, sf_dir)
             .collect()
         }
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
     default = {
         (r.user_id, r.event_type, r.event_id): r.action
         for r in registry.get("streaming_delivery_e2e").fn(spark, sf_dir).collect()
