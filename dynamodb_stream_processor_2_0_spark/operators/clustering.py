@@ -115,7 +115,7 @@ def kmeans_assignments(
     move k x dim integers — bounded by construction (k is the
     clustering knob, dim is the model's embedding width), the same
     gated-smallness argument as connected_components' union-find
-    fast path (operators/dedup.py).
+    arm (operators/dedup.py).
     """
     # q feeds the seed pick, every Lloyd round, and the final
     # assignment — materialize once instead of re-quantizing per

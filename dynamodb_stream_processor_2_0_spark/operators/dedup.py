@@ -386,141 +386,49 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iterations: int = 20,
+    max_rounds: int = 12,
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Cluster assignment for dedup: connected components of the
-    candidate-pair graph via min-label propagation. Every node ends up
-    labeled with the smallest id reachable from it — the deterministic
-    cluster representative ('keep the lowest doc_id, drop the rest').
+    candidate-pair graph. Every node ends up labeled with the smallest
+    id reachable from it — the deterministic cluster representative
+    ('keep the lowest doc_id, drop the rest'). Self-pairs carry no
+    connectivity and are dropped, so a node appears only if it has an
+    edge to another node.
 
-    Iterative DataFrame algorithm (the class the reference cannot
-    express at all): the loop is driver-side CONTROL only — no data
-    ever collects. Rounds needed = ceil(diameter / 2): each round
-    propagates TWO hops before materializing (propagation toward the
-    min-label fixpoint is idempotent, so extra hops are free
-    correctness-wise and halve the number of checkpoints — on small
-    diameters the per-round job overhead dominates, on 100 TB graphs it
-    halves the number of lineage truncations). Each round's result is
-    localCheckpointed to truncate lineage; convergence is detected with
-    ``DataFrame.observe`` DURING the checkpoint action (labels are
-    monotonically non-increasing, so sum(label) strictly decreases
-    until the fixpoint) — no separate convergence job per round. At
-    100 TB this is the standard large-graph CC recipe (hash-partitioned
-    by node, no vertex ever holds more state than one label).
+    Two arms, one answer, split on the MEASURED directed edge count
+    (the symmetric edge set is pinned first, so the count is one cheap
+    job):
 
-    The loop's shuffle width is sized from the MEASURED edge count
-    (sym is already materialized, so the count is free): a candidate
-    graph that survived LSH banding is usually orders of magnitude
-    smaller than the corpus, and running each round at the session's
-    full shuffle width means paying task-scheduling + checkpoint
-    overhead for mostly-empty partitions — at sf0.1 that overhead was
-    ~2.5s of a 4.5s query. Large graphs keep the session width; the
-    per-round shuffles (the iteration's real cost at scale) are
-    untouched. sym is hash-partitioned on the probe key BEFORE its
-    checkpoint so the per-round join never re-shuffles the edge side
-    (localCheckpoint preserves outputPartitioning).
+    - at or below ``small_graph_threshold``: one driver-side union-find
+      (``_union_find_labels``). A candidate graph that survived LSH
+      banding is usually broadcast-scale (58 directed edges at sf0.01,
+      2,218 at sf0.1), and a single collect replaces several rounds of
+      shuffles + checkpoints — the same move GraphFrames makes.
+    - above it: alternating large-star / small-star contraction
+      (Kiveris et al., "Connected Components in MapReduce and Beyond"),
+      O(log n) rounds even on long-chain graphs whose diameter is O(n)
+      (CDC chunk adjacency, temporal follows). See ``_star_loop``.
+
+    Both arms label every node with its min reachable id, so they are
+    interchangeable; ``small_graph_threshold=0`` forces the distributed
+    arm (the tests pin their agreement that way). The loop runs at the
+    session's shuffle width, which AQE coalesces for small shuffles;
+    no session conf is read or written here.
     """
-    from pyspark.sql import Observation, functions as F
-
-    spark = pairs.sparkSession
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    edges = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-    n_edges = sym.count()
-    # Small-graph fast path: a candidate graph that survived LSH banding
-    # is usually broadcast-scale. Below ~1M (directed) edges, one
-    # driver-side union-find replaces 2-4 full propagate/checkpoint
-    # rounds — the same move every production CC implementation makes
-    # (GraphFrames included). Labels are identical: min reachable id
-    # per component. The iterative path below remains the >threshold
-    # route and is covered by tests at a forced-low threshold.
-    if n_edges <= small_graph_threshold:
-        return _union_find_labels(spark, sym)
-    # Each flood round below is two propagate() steps, and each step is
-    # an edge-label join followed by a min-aggregate, so a round runs a
-    # few dependent shuffle stages whose tasks all execute at
-    # loop_width. A floor of 8 keeps those stages parallel on graphs
-    # just over the union-find threshold without paying full session
-    # width in per-task overhead for tiny shuffles. (The 6.3 s vs 5.0 s
-    # width experiment cited in star_contraction_components was run on
-    # THAT loop; this floor is a conservative sizing choice, not that
-    # measurement.)
-    loop_width = max(
-        1, min(session_width, max(8, n_edges // 500_000 + 1))
-    )
-    if loop_width < session_width:
-        sym = sym.repartition(loop_width, "v").localCheckpoint(eager=True)
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_width))
-
-    def propagate(lbls):
-        nbr_min = (
-            sym.join(lbls, sym.v == lbls.node)
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        return (
-            lbls.join(nbr_min, lbls.node == nbr_min.u, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-
-    try:
-        # Round 0 folded into initialization: label = min(self, neighbors).
-        labels = (
-            sym.groupBy("u")
-            .agg(F.least(F.first("u"), F.min("v")).alias("label"))
-            .select(F.col("u").alias("node"), "label")
-            .localCheckpoint(eager=True)
-        )
-        prev_sum = None
-        converged = False
-        for _ in range(max_iterations):
-            obs = Observation()
-            labels = (
-                propagate(propagate(labels))
-                .observe(obs, F.sum("label").alias("s"))
-                .localCheckpoint(eager=True)  # the action that fills obs
-            )
-            new_sum = obs.get["s"]
-            if new_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = new_sum
-        # r13 loud-fail (found by the star-contraction cross-check test
-        # run at a forced-zero threshold): a graph whose diameter
-        # exceeds 2 * max_iterations used to exit this loop silently
-        # with NON-converged (wrong) labels. The small-graph union-find
-        # absorbs every such graph at the default gate today, so this
-        # is a latent >threshold hazard, but wrong-silently is the one
-        # failure mode a gate can't see — mirror star_contraction's
-        # fixpoint check and refuse instead.
-        if not converged:
-            raise RuntimeError(
-                "min-label flood did not converge within "
-                f"max_iterations={max_iterations} (graph diameter > "
-                f"{2 * max_iterations}); raise max_iterations or use "
-                "star_contraction_components for long-chain graphs"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    edges = pairs.select(
+        F.col(a_col).alias("u"), F.col(b_col).alias("v")
+    ).filter(F.col("u") != F.col("v"))
+    sym = _symmetric(edges).localCheckpoint(eager=True)
+    if sym.count() <= small_graph_threshold:
+        return _union_find_labels(pairs.sparkSession, sym)
+    return _star_loop(sym, max_rounds)
 
 
 def _union_find_labels(spark, sym: DataFrame) -> DataFrame:
     """Driver-side union-find over a (u, v) edge relation — the
-    small-graph fast path shared by ``connected_components`` and
-    ``star_contraction_components`` (both label every node with the
-    min reachable id, so one implementation serves both). The collect
-    is the documented bounded-coordination read: callers gate it on a
+    small-graph arm of ``connected_components``. The collect is the
+    documented bounded-coordination read: the caller gates it on a
     measured edge count."""
     parent: dict = {}
 
@@ -543,6 +451,107 @@ def _union_find_labels(spark, sym: DataFrame) -> DataFrame:
             parent[hi] = lo
     labels_local = [(n, find(n)) for n in parent]
     return spark.createDataFrame(labels_local, "doc_id long, cluster_id long")
+
+
+def _symmetric(e: DataFrame) -> DataFrame:
+    return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _star_loop(sym: DataFrame, max_rounds: int) -> DataFrame:
+    """The distributed arm of ``connected_components`` over a symmetric
+    (u, v) edge relation: alternating large-star / small-star
+    contraction. Both star ops only ever link nodes to the MINIMUM of a
+    neighborhood, and the minimum node of a component is never linked
+    upward, so the fixpoint is every component contracted to a star
+    centered on its minimum id — the same labels the union-find arm
+    returns.
+
+    Per round: large-star (neighborhood-min rollup + one join) then
+    small-star (same shape on the smaller-neighbor side) — 4 node-id
+    shuffles; state is the current edge set, which only shrinks toward
+    the star forest (distinct-ed each half-round to keep it tight).
+    Convergence is detected from a 1-row (count, sum(u), sum(v))
+    signature per round — a bounded driver action; rounds are
+    localCheckpointed to truncate lineage, and the result is verified
+    to be a star forest (raises otherwise). Deterministic: every
+    operation is a min or a set union.
+    """
+    prev_sig = None
+    for _ in range(max_rounds):
+        # Large-star: every neighbor v > u links to m = min(N(u) + {u}).
+        mins = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("mv"))
+            .select("u", F.least("mv", F.col("u")).alias("m"))
+        )
+        large = (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+        )
+        symd = _symmetric(large).distinct()
+        # Small-star: every neighbor v < u (and u itself) links to
+        # m = min of the smaller-neighbor side.
+        mins_s = (
+            symd.filter(F.col("v") < F.col("u"))
+            .groupBy("u")
+            .agg(F.min("v").alias("m"))
+        )
+        small = (
+            symd.join(mins_s, "u")
+            .filter(F.col("v") < F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(mins_s.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+        )
+        sym = _symmetric(small).distinct().localCheckpoint(eager=True)
+        sig = sym.agg(
+            F.count(F.lit(1)), F.sum("u"), F.sum("v")
+        ).collect()[0]
+        sig = tuple(sig)
+        if sig == prev_sig:
+            break
+        prev_sig = sig
+    labels = (
+        sym.groupBy("u")
+        .agg(F.min("v").alias("mv"))
+        .select("u", F.least("mv", F.col("u")).alias("m"))
+        .localCheckpoint(eager=True)
+    )
+    # Fixpoint verification. The signature above is a heuristic: on a
+    # symmetric edge set sum(u) == sum(v), so it degenerates to
+    # (count, sum) and a collision could break the loop early; and
+    # exhausting max_rounds would otherwise return non-converged (wrong)
+    # labels silently. A converged star forest satisfies two local
+    # conditions, each one bounded aggregate: (1) every smaller-neighbor
+    # of u IS u's minimum m (no node retains two distinct smaller
+    # neighbors), and (2) every label m is itself a root (m maps to m).
+    # Together these hold iff sym is a star forest rooted at component
+    # minima — the loop's postcondition.
+    non_star = (
+        sym.filter(F.col("v") < F.col("u"))
+        .join(labels, "u")
+        .filter(F.col("v") != F.col("m"))
+        .count()
+    )
+    non_root = (
+        labels.select(F.col("m").alias("u"))
+        .distinct()
+        .join(labels, "u")
+        .filter(F.col("m") != F.col("u"))
+        .count()
+    )
+    if non_star or non_root:
+        raise RuntimeError(
+            "star-contraction did not reach a star-forest fixpoint "
+            f"within max_rounds={max_rounds} (or the convergence "
+            f"signature collided): {non_star} non-star edges and "
+            f"{non_root} non-root labels remain"
+        )
+    return labels.select(
+        F.col("u").alias("doc_id"), F.col("m").alias("cluster_id")
+    )
 
 
 def count_min_estimates(
@@ -592,155 +601,3 @@ def count_min_estimates(
     )
     truth = df.groupBy(item_col).agg(F.count(F.lit(1)).alias("true_count"))
     return estimates.join(truth, item_col)
-
-
-def star_contraction_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_rounds: int = 12,
-    small_graph_threshold: int = 1_000_000,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the O(log n)-ROUND scale path beside
-    ``connected_components``'s min-label flood, whose round count is
-    bound by the graph DIAMETER instead. On an LSH candidate graph the
-    diameter is small and min-label wins; on a long-chain graph (CDC
-    chunk adjacency, temporal follows) diameter can be O(n) and star
-    contraction is the algorithm production systems switch to.
-
-    Both star ops only ever link nodes to the MINIMUM of a
-    neighborhood, and the minimum node of a component is never linked
-    upward, so the fixpoint is every component contracted to a star
-    centered on its minimum id — labels therefore EQUAL
-    ``connected_components``'s (min reachable id), letting both share
-    one oracle.
-
-    Per round: large-star (neighborhood-min rollup + one join) then
-    small-star (same shape on the smaller-neighbor side) — 4 node-id
-    shuffles; state is the current edge set, which only shrinks toward
-    the star forest (distinct-ed each half-round to keep it tight).
-    Convergence is detected from a 1-row (count, sum(u), sum(v))
-    signature per round — a bounded driver action, same class as the
-    CC loop's observe; rounds are localCheckpointed to truncate
-    lineage. Deterministic: every operation is a min or a set union.
-    """
-    spark = pairs.sparkSession
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-
-    edges = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    sym = _sym(edges).localCheckpoint(eager=True)
-    # Same measured-width sizing as connected_components: the loop's
-    # 4 shuffles/round on a post-LSH candidate graph pay mostly task
-    # overhead at full session width (5.0 -> ~2.5 s at sf0.1).
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_edges = sym.count()
-    # Small-graph fast path (r13): same gate and same union-find as
-    # connected_components — both operators label every node with the
-    # min reachable id, so the shared helper provably returns the same
-    # labels the star loop converges to. Below the gate the star loop's
-    # 3-5 rounds x (4 shuffles + eager checkpoint + 1-row signature
-    # collect) are pure round-trip overhead; the distributed star arm
-    # stays the >threshold route and is pinned by
-    # tests/test_ml_ops.py::test_star_contraction_matches_min_label_on_long_chain
-    # at a forced-zero threshold.
-    if n_edges <= small_graph_threshold:
-        return _union_find_labels(spark, sym)
-    # Unlike the flood's 1-shuffle rounds, star rounds run 4 parallel
-    # stages; width 1 serializes them (6.3 s vs 5.0 measured), so keep
-    # a floor of 8 tasks until the edge count justifies full width.
-    loop_width = max(
-        1, min(session_width, max(8, n_edges // 500_000 + 1))
-    )
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_width))
-    try:
-        return _star_loop(sym, _sym, max_rounds)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-
-
-def _star_loop(sym: DataFrame, _sym, max_rounds: int) -> DataFrame:
-    prev_sig = None
-    for _ in range(max_rounds):
-        # Large-star: every neighbor v > u links to m = min(N(u) + {u}).
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", F.col("u")).alias("m"))
-        )
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        symd = _sym(large)
-        # Small-star: every neighbor v < u (and u itself) links to
-        # m = min of the smaller-neighbor side.
-        mins_s = (
-            symd.filter(F.col("v") < F.col("u"))
-            .groupBy("u")
-            .agg(F.min("v").alias("m"))
-        )
-        small = (
-            symd.join(mins_s, "u")
-            .filter(F.col("v") < F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins_s.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-        )
-        sym = _sym(small).localCheckpoint(eager=True)
-        sig = sym.agg(
-            F.count(F.lit(1)), F.sum("u"), F.sum("v")
-        ).collect()[0]
-        sig = tuple(sig)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    labels = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mv"))
-        .select("u", F.least("mv", F.col("u")).alias("m"))
-        .localCheckpoint(eager=True)
-    )
-    # Fixpoint verification. The signature above is a heuristic: on a
-    # symmetric edge set sum(u) == sum(v), so it degenerates to
-    # (count, sum) and a collision could break the loop early; and
-    # exhausting max_rounds would otherwise return non-converged (wrong)
-    # labels silently. A converged star forest satisfies two local
-    # conditions, each one bounded aggregate: (1) every smaller-neighbor
-    # of u IS u's minimum m (no node retains two distinct smaller
-    # neighbors), and (2) every label m is itself a root (m maps to m).
-    # Together these hold iff sym is a star forest rooted at component
-    # minima — the loop's postcondition.
-    non_star = (
-        sym.filter(F.col("v") < F.col("u"))
-        .join(labels, "u")
-        .filter(F.col("v") != F.col("m"))
-        .count()
-    )
-    non_root = (
-        labels.select(F.col("m").alias("u"))
-        .distinct()
-        .join(labels, "u")
-        .filter(F.col("m") != F.col("u"))
-        .count()
-    )
-    if non_star or non_root:
-        raise RuntimeError(
-            "star-contraction did not reach a star-forest fixpoint "
-            f"within max_rounds={max_rounds} (or the convergence "
-            f"signature collided): {non_star} non-star edges and "
-            f"{non_root} non-root labels remain"
-        )
-    return labels.select(
-        F.col("u").alias("doc_id"), F.col("m").alias("cluster_id")
-    )

@@ -393,9 +393,9 @@ def data_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "independent of corpus size (an earlier version re-counted the "
     "full table per iteration: 19 scans, 6.3 s at sf0.1 and a "
     "non-starter at 100 TB). The oracle proves bisection-exit == "
-    "min-k because cumulative coverage is monotone in k. The "
-    "scripting conf is scoped set-and-restore around the eager script "
-    "execution.",
+    "min-k because cumulative coverage is monotone in k. SQL "
+    "scripting is on by default in Spark 4.1, so no session conf is "
+    "touched.",
 )
 def sql_scripting_coverage_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -414,37 +414,32 @@ def sql_scripting_coverage_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.createDataFrame(hist, "b int, c long").createOrReplaceTempView(
         "order_price_hist"
     )
-    prior = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql(
-            """
-            BEGIN
-              DECLARE lo INT DEFAULT 1;
-              DECLARE hi INT DEFAULT 63;
-              DECLARE mid INT;
-              DECLARE total BIGINT;
-              DECLARE cov BIGINT DEFAULT 0;
-              SET total = (SELECT sum(c) FROM order_price_hist);
-              WHILE lo < hi DO
-                SET mid = (lo + hi) DIV 2;
-                SET cov = (SELECT COALESCE(sum(c), 0)
-                           FROM order_price_hist WHERE b <= mid);
-                IF cov * 100 >= total * 95 THEN
-                  SET hi = mid;
-                ELSE
-                  SET lo = mid + 1;
-                END IF;
-              END WHILE;
-              SET cov = (SELECT COALESCE(sum(c), 0)
-                         FROM order_price_hist WHERE b <= lo);
-              SELECT lo AS k, CAST(power(2, lo) AS DOUBLE) AS threshold,
-                     CAST(cov AS DOUBLE) / total AS coverage;
-            END
-            """
-        )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prior)
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE lo INT DEFAULT 1;
+          DECLARE hi INT DEFAULT 63;
+          DECLARE mid INT;
+          DECLARE total BIGINT;
+          DECLARE cov BIGINT DEFAULT 0;
+          SET total = (SELECT sum(c) FROM order_price_hist);
+          WHILE lo < hi DO
+            SET mid = (lo + hi) DIV 2;
+            SET cov = (SELECT COALESCE(sum(c), 0)
+                       FROM order_price_hist WHERE b <= mid);
+            IF cov * 100 >= total * 95 THEN
+              SET hi = mid;
+            ELSE
+              SET lo = mid + 1;
+            END IF;
+          END WHILE;
+          SET cov = (SELECT COALESCE(sum(c), 0)
+                     FROM order_price_hist WHERE b <= lo);
+          SELECT lo AS k, CAST(power(2, lo) AS DOUBLE) AS threshold,
+                 CAST(cov AS DOUBLE) / total AS coverage;
+        END
+        """
+    )
 
 
 def _interleave_sql(x: str, y: str, bits: int = 16) -> str:

@@ -9,6 +9,12 @@ from dynamodb_stream_processor_2_0_spark.operators import cdc, dedup
 from dynamodb_stream_processor_2_0_spark.plans.registry import register
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 
+# Exact-copy collapse gate of dedup_shingle_containment and
+# dedup_prefix_filter_jaccard: byte-identical texts are collapsed before
+# the inverted-index self-join once docs exceed this many per distinct
+# text (the candidate-pair term is quadratic in the duplication factor).
+_COLLAPSE_FACTOR = 1.05
+
 
 @register(
     "d5_first_occurrence_dedup",
@@ -192,12 +198,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(df, shingle_k=3, min_jaccard=0.01)
 
 
-# Shared by dedup_cluster_assign AND dedup_cluster_assign_star: the two
-# operators implement different distributed CC algorithms (min-label
-# flood vs large-star/small-star contraction) whose labels provably
-# agree, and the gate enforces that agreement by checking both against
-# this ONE oracle. A single constant keeps the twins from drifting —
-# the cross-check argument depends on the SQL staying identical.
+# Shared by dedup_cluster_assign AND dedup_cluster_assign_star: both
+# names run dedup.connected_components, whose union-find and star-loop
+# arms label every node with its min reachable id — the recursive
+# closure below computes exactly that labeling.
 _RECURSIVE_CC_ORACLE = f"""
         WITH RECURSIVE edges AS (
             SELECT doc_a, doc_b FROM ({dedup.minhash_lsh_oracle_sql()}) pairs
@@ -220,8 +224,10 @@ _RECURSIVE_CC_ORACLE = f"""
     oracle=_RECURSIVE_CC_ORACLE,
     tags=("dedup", "llm", "iterative", "graph"),
     doc="Near-dup cluster assignment: connected components of the MinHash-LSH "
-    "candidate graph via min-label propagation (iterative DataFrame loop); "
-    "oracle is DuckDB's recursive transitive closure.",
+    "candidate graph, every doc labeled with its min reachable id "
+    "(driver union-find at or below 1M directed edges, large-star/"
+    "small-star contraction above); oracle is DuckDB's recursive "
+    "transitive closure.",
 )
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -233,23 +239,18 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_cluster_assign_star",
     oracle=_RECURSIVE_CC_ORACLE,
     tags=("dedup", "llm", "iterative", "graph", "scale"),
-    doc="Connected components by alternating large-star / small-star "
-    "contraction (Kiveris et al.) over the same MinHash-LSH candidate "
-    "graph as dedup_cluster_assign — the O(log n)-ROUND algorithm "
-    "production systems switch to when component DIAMETER is large "
-    "(long CDC chunk chains, temporal follows), where min-label "
-    "propagation needs O(diameter) rounds. Both star ops link nodes "
-    "only to neighborhood minima, so the fixpoint is every component "
-    "contracted to a star on its minimum id: labels EQUAL the "
-    "min-label flood's and the two operators share one recursive-SQL "
-    "oracle — an algebraic cross-check that two different distributed "
-    "algorithms agree, gate-enforced. 4 node-id shuffles per round, "
-    "edge state only shrinks, per-round 1-row convergence signature.",
+    doc="The same connected-components operator as dedup_cluster_assign, "
+    "registered under the name of its distributed arm: alternating "
+    "large-star / small-star contraction (Kiveris et al.), O(log n) "
+    "rounds even when component DIAMETER is large (long CDC chunk "
+    "chains, temporal follows). Graphs at or below 1M directed edges "
+    "take the driver union-find arm; both arms label every node with "
+    "its min reachable id, so both names share one recursive-SQL oracle.",
 )
 def dedup_cluster_assign_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_candidate_pairs(docs)
-    return dedup.star_contraction_components(pairs)
+    return dedup.connected_components(pairs)
 
 
 @register(
@@ -440,7 +441,7 @@ def graph_triangle_enumerate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and the collapse makes that term linear while the emitted result "
     "is provably identical (containment depends only on text). The "
     "collapse engages only when the MEASURED duplication factor "
-    "crosses spark_graft.containment.collapse_factor (default 1.05) — "
+    "exceeds 1.05 (docs per distinct text) — "
     "on a near-dup-free corpus the direct inverted index is cheaper "
     "than collapse+expand, the same measured-size gating the chain "
     "walk and connected components use. At 100 TB the shingle key "
@@ -504,10 +505,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold the collapse pays for itself immediately.
     n_docs = docs.count()
     n_texts = docs.agg(F.countDistinct(F.md5("text")).alias("n")).first()["n"]
-    factor = float(
-        spark.conf.get("spark_graft.containment.collapse_factor", "1.05")
-    )
-    if n_docs <= factor * n_texts:
+    if n_docs <= _COLLAPSE_FACTOR * n_texts:
         qual, _ = shingle_pairs(docs.select("doc_id", "text"), "doc_id")
         return qual.select(
             F.col("key_a").alias("doc_a"),
@@ -838,7 +836,7 @@ def dedup_token_window_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_survivorship_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plan shape: the candidate/component stages reuse the banded
-    minhash + min-label-propagation operators (no new shuffles); the
+    minhash + connected-components operators (no new shuffles); the
     election is one window over cluster_id. Cluster sizes are near-dup
     group sizes (tiny, bounded by dedup quality), so the window
     partition can never be the 100 TB bottleneck."""
@@ -1474,10 +1472,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_docs = docs.count()
     n_texts = docs.agg(F.countDistinct(F.md5("text")).alias("n")).first()["n"]
-    factor = float(
-        spark.conf.get("spark_graft.containment.collapse_factor", "1.05")
-    )
-    if n_docs <= factor * n_texts:
+    if n_docs <= _COLLAPSE_FACTOR * n_texts:
         qual, _ = prefix_pairs(docs.select("doc_id", "text"), "doc_id")
         return qual.select(
             F.col("key_a").alias("doc_a"), F.col("key_b").alias("doc_b"), *out_cols[2:]

@@ -258,9 +258,10 @@ def _lpa_labels(edges: DataFrame) -> DataFrame:
     "purchase graph: each node adopts its neighbors' most frequent "
     "label, ties broken by smallest label — fully deterministic, "
     "unlike classic randomized LPA. Distinct from connected components "
-    "(dedup_cluster_assign's min-label flood): mode-voting finds DENSE "
-    "communities inside one giant component — the spam-cluster / "
-    "topic-cluster triage step. Per round: one edges||labels join + "
+    "(dedup_cluster_assign's min-reachable-id labels): mode-voting "
+    "finds DENSE communities inside one giant component — the "
+    "spam-cluster / topic-cluster triage step. Per round: one "
+    "edges||labels join + "
     "one (node,label) count + one per-node argmax window — 3 shuffles "
     "on node id, co-partitionable by bucketing edges on src at 100 TB.",
 )

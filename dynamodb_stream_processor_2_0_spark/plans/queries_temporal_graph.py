@@ -150,7 +150,7 @@ def recursive_order_chain_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle keeps the single-CTE form.
 
     The physical layout is size-gated (same pattern as
-    connected_components' small-graph fast path, operators/dedup.py):
+    connected_components' union-find arm, operators/dedup.py):
 
     - small (<= spark_graft.chainwalk.broadcast_row_cap orders): a
       single parquet file + BROADCAST hint makes every recursion level
@@ -536,8 +536,8 @@ def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
 def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per iteration: ONE edges||rank join + one groupBy(dst) (both
     shuffle on node ids — co-partitionable at scale by pre-bucketing
-    edges on src, as connected_components does), plus a 1-row dangling
-    aggregate kept IN-PLAN as a broadcast cross join — no driver
+    edges on src), plus a 1-row dangling aggregate kept IN-PLAN as a
+    broadcast cross join — no driver
     round-trip per iteration. The static out-degree travels inside the
     rank relation, so neither the dangling mass nor the contribution
     divisor needs its own join. localCheckpoint per round keeps the

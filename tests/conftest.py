@@ -19,7 +19,8 @@ SF_DIR_MEDIUM = os.environ.get("SPARK_GRAFT_TEST_SF_MEDIUM", "/root/testdata/sf0
 # failures). These node ids measured >= ~13 s each in the r13 full-suite
 # durations run (together ~40% of total suite runtime in 27 of 1353 tests);
 # pytest.ini excludes marker `slow` by default, and `-m slow` runs this lane
-# explicitly. Keep entries as nodeid suffixes relative to this directory.
+# explicitly. Keep entries as nodeid suffixes relative to this directory;
+# test_slow_lane.py fails on an entry the suite does not collect.
 # ---------------------------------------------------------------------------
 SLOW_TESTS = {
     "test_plan_shapes.py::test_engine_wide_plan_lint",
@@ -36,12 +37,11 @@ SLOW_TESTS = {
     "test_oracle_parity.py::test_parity_small[bpe_merge_induction]",
     "test_partition_independence.py::test_width_invariant[dedup_simhash_threshold_sweep0]",
     "test_partition_independence.py::test_width_invariant[dedup_simhash_threshold_sweep1]",
-    "test_ml_ops.py::test_star_contraction_matches_min_label_on_long_chain",
     "test_oracle_parity.py::test_parity_small[dedup_cluster_size_report]",
     "test_oracle_parity.py::test_parity_small[dedup_prefix_filter_jaccard]",
     "test_oracle_parity.py::test_parity_small[graph_clustering_coefficient]",
-    "test_connected_components.py::test_small_and_iterative_paths_agree",
-    "test_connected_components.py::test_long_path_converges_on_iterative_route",
+    "test_connected_components.py::test_union_find_and_star_loop_agree[mixed_shapes]",
+    "test_connected_components.py::test_union_find_and_star_loop_agree[long_chain]",
     "test_oracle_parity.py::test_parity_small[eval_rouge_near_dup_pairs]",
     "test_oracle_parity.py::test_parity_small[customer_kaplan_meier_survival]",
     "test_clustering.py::test_two_blob_geometry_clusters_together",

@@ -1,11 +1,10 @@
 """Behavior tests for the ML-primitive and round-6-continuation
 operators: the algorithmic GUARANTEES (OLS recovers a planted linear
 model exactly; Shapley satisfies the dummy/efficiency axioms with
-exact integer credits; star contraction agrees with min-label
-propagation on a diameter-stress graph; Allen census classifies a
-hand-built day exactly; Mann-Kendall computes the closed-form S/Var
-on a monotone series; the pattern miner tolerates its promised gap;
-Fellegi-Sunter's decision thresholds) on hand-constructed inputs —
+exact integer credits; Allen census classifies a hand-built day
+exactly; Mann-Kendall computes the closed-form S/Var on a monotone
+series; the pattern miner tolerates its promised gap; Fellegi-Sunter's
+decision thresholds) on hand-constructed inputs —
 properties the sf-parity differential suite can't state, per the
 SURVEY §5 unit+differential test model."""
 
@@ -135,47 +134,6 @@ def test_shapley_dummy_and_efficiency_axioms(spark, sf_dir):
         compare_query(spark, registry.get("attribution_shapley_exact"), d)
     finally:
         _cleanup(d, tmp)
-
-
-# --- star contraction vs min-label flood on a diameter stress graph --------
-
-
-def test_star_contraction_matches_min_label_on_long_chain(spark):
-    """A 200-node chain (diameter 199 — the min-label flood's worst
-    case), two 5-cliques, and one separate edge: star contraction must
-    produce the identical min-reachable-id labeling."""
-    from dynamodb_stream_processor_2_0_spark.operators import dedup
-
-    edges = [(i, i + 1) for i in range(1000, 1199)]
-    edges += [(a, b) for a in range(7000, 7005) for b in range(a + 1, 7005)]
-    edges += [(c, d) for c in range(8000, 8005) for d in range(c + 1, 8005)]
-    edges += [(9000, 9001)]
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    # threshold 0 forces the DISTRIBUTED star loop (the r13 union-find
-    # fast path would otherwise absorb this graph)
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.star_contraction_components(
-            pairs, small_graph_threshold=0
-        ).collect()
-    }
-    # flood keeps the DEFAULT threshold (union-find) as the reference:
-    # at threshold 0 the distributed flood needs ceil(199/2) = 100
-    # propagate rounds for this chain — past its max_iterations — and
-    # now raises (the r13 loud-fail) instead of returning silently
-    # non-converged labels.
-    flood = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.connected_components(pairs).collect()
-    }
-    assert star == flood
-    assert star[1198] == 1000 and star[7004] == 7000 and star[9001] == 9000
-    # the r13 fast path (default threshold) must agree with both arms
-    fast = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.star_contraction_components(pairs).collect()
-    }
-    assert fast == star
 
 
 # --- Allen census on a hand-built day --------------------------------------

@@ -128,7 +128,7 @@ def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
 
 
-# --- connected components: two algorithms, one planted answer -------------------
+# --- connected components: both registered names, one planted answer -------------
 
 
 def test_cc_flood_and_star_agree_on_planted_clusters(spark, tmp_path):
@@ -137,13 +137,13 @@ def test_cc_flood_and_star_agree_on_planted_clusters(spark, tmp_path):
         + [(i, "zeta eta theta iota kappa", "en", "s") for i in (2, 8)]
     )
     _write_documents(tmp_path, docs)
-    flood = {r["doc_id"]: r["cluster_id"]
-             for r in _run(spark, "dedup_cluster_assign", tmp_path)}
+    assign = {r["doc_id"]: r["cluster_id"]
+              for r in _run(spark, "dedup_cluster_assign", tmp_path)}
     star = {r["doc_id"]: r["cluster_id"]
             for r in _run(spark, "dedup_cluster_assign_star", tmp_path)}
     expected = {3: 3, 5: 3, 9: 3, 2: 2, 8: 2}  # min doc_id per cluster
-    assert flood == expected
-    assert star == expected  # two different algorithms, identical labels
+    assert assign == expected
+    assert star == expected
 
 
 # --- token-window exact dedup -----------------------------------------------------

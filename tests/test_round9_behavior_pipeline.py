@@ -433,7 +433,11 @@ def test_sql_group_by_all_dialect_planted(spark, world):
 
 
 def test_sql_scripting_coverage_walk_planted(spark, world):
+    conf_before = dict(spark.conf.getAll)
     got = _run(spark, "sql_scripting_coverage_walk", world)
+    # scripting is on by default: the query must not set (or leave
+    # behind) any session conf
+    assert dict(spark.conf.getAll) == conf_before
     assert len(got) == 1
     bits = sorted(int(o[3]).bit_length() for o in ORDERS)
     total = len(bits)
