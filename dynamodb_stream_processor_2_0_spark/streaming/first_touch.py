@@ -13,7 +13,8 @@ replay determinism).
 Scale posture: state per user is one boolean per distinct event_type
 (~5 entries) in RocksDB — bounded executor memory and incremental
 checkpointing; the shuffle is one hash exchange on user_id per
-micro-batch, identical to the legacy operator.
+micro-batch. The legacy operator (``delivery_state.apply_delivery_state``)
+groups by (user_id, event_type), so its exchange is on both keys.
 
 ENVIRONMENT GATE: transformWithStateInPandas talks to a driver-side
 state server over a protobuf protocol; ``google.protobuf`` is not
