@@ -210,8 +210,9 @@ def session_window_12h(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "S1", "S4", "S5", "S6", "S7", "D4", "E5"),
     doc="End-to-end Structured Streaming run under the differential gate: "
     "availableNow file replay -> per-key delivery state machine "
-    "(applyInPandasWithState) -> memory sink; the exactly-once outcome is "
-    "SQL-expressible so the oracle checks the streaming execution itself.",
+    "(applyInPandasWithState over 64 hash buckets of the key) -> memory "
+    "sink; the exactly-once outcome is SQL-expressible so the oracle "
+    "checks the streaming execution itself.",
 )
 def streaming_delivery_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runs the actual streaming query synchronously (availableNow over

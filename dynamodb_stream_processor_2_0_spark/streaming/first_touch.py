@@ -14,7 +14,8 @@ Scale posture: state per user is one boolean per distinct event_type
 (~5 entries) in RocksDB — bounded executor memory and incremental
 checkpointing; the shuffle is one hash exchange on user_id per
 micro-batch. The legacy operator (``delivery_state.apply_delivery_state``)
-groups by (user_id, event_type), so its exchange is on both keys.
+groups by a 64-way hash of (user_id, event_type), so its exchange is on
+that bucket and each Python call rewrites a whole bucket's state.
 
 ENVIRONMENT GATE: transformWithStateInPandas talks to a driver-side
 state server over a protobuf protocol; ``google.protobuf`` is not

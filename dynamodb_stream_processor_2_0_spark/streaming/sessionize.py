@@ -57,9 +57,9 @@ def make_sessionize_fn(gap_seconds: int):
         else:
             last_ts_us, session_no, n_in_session = None, 0, 0
 
-        # Same Arrow-chunk rule as delivery_state.py: a key's batch
-        # slice may span chunks and chunk order is not ts order —
-        # materialize, then one deterministic sort.
+        # Same Arrow-chunk rule as delivery_state.py's bucket slice: a
+        # group's batch slice may span chunks and chunk order is not ts
+        # order — materialize, then one deterministic sort.
         chunks = [pdf for pdf in pdfs if len(pdf)]
         out_event, out_sess, out_idx = [], [], []
         if chunks:

@@ -39,13 +39,17 @@ def test_delivery_state_machine_exactly_once(spark, sf_dir, staged):
     """The heart of the reference (D4 CAS): across all micro-batches,
     each (user_id, event_type) key triggers exactly one email — the
     event-time-first one — and every other attempt is
-    duplicate_prevented."""
+    duplicate_prevented. The checkpointed state, read back through the
+    statestore source, holds one row per hash bucket whose arrays carry
+    exactly one entry per key, delivered to that key's winner."""
+    checkpoint = tempfile.mkdtemp(prefix="dispositions_ckpt_")
     q = run_available_now(
         spark,
         "dispositions",
         lambda: apply_delivery_state(replay.read_event_stream(spark, staged))
         .writeStream.outputMode("append")
-        .format("memory"),
+        .format("memory")
+        .option("checkpointLocation", checkpoint),
         timeout_s=120,
     )
     out = spark.table(q.name)
@@ -75,6 +79,25 @@ def test_delivery_state_machine_exactly_once(spark, sf_dir, staged):
     )
     assert mismatches == 0, "streaming winners must match batch first-occurrence"
 
+    state = spark.read.format("statestore").load(checkpoint)
+    assert state.count() <= 64, "one state row per hash bucket"
+    entries = state.select(
+        F.explode(
+            F.arrays_zip(
+                *(F.col(f"value.groupState.{c}").alias(c)
+                  for c in ("user_id", "event_type", "delivery_status",
+                            "delivered_event_id"))
+            )
+        ).alias("e")
+    ).select("e.*")
+    assert entries.count() == keys, "exactly one state entry per key"
+    assert entries.filter(F.col("delivery_status") != "delivered").count() == 0
+    stored = entries.select(
+        "user_id", "event_type", F.col("delivered_event_id").alias("event_id")
+    )
+    assert stored.exceptAll(expected).count() == 0
+    assert expected.exceptAll(stored).count() == 0
+
 
 class _FakeGroupState:
     """Minimal GroupState stand-in for unit-testing the stateful fn."""
@@ -95,35 +118,88 @@ class _FakeGroupState:
 
 
 def test_delivery_fn_multi_chunk_global_order():
-    """A key's micro-batch slice can span multiple Arrow chunks
+    """A bucket's micro-batch slice can span multiple Arrow chunks
     (> arrow.maxRecordsPerBatch rows per group), and chunk order is not
-    ts-ordered after the shuffle. The winner must still be the global
-    (ts, event_id) minimum — a per-chunk sort would deliver whatever
-    the first chunk happens to hold (the round-1 bug: hidden at test
-    scale because groups fit in one chunk)."""
+    ts-ordered after the shuffle. Each key's winner must still be its
+    global (ts, event_id) minimum — a per-chunk sort would deliver
+    whatever the first chunk happens to hold (the round-1 bug: hidden at
+    test scale because groups fit in one chunk). Two keys share the
+    bucket; neither's status may leak into the other's."""
     import pandas as pd
 
     from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
-        make_delivery_fn,
+        make_bucket_fn,
     )
 
-    fn = make_delivery_fn()
-    # Adversarial arrival: the event-time-first event (id=10) is in the
-    # LAST chunk; chunk 0 holds later events.
+    def frame(rows):
+        user_id, event_type, event_id, ts = zip(*rows)
+        return pd.DataFrame(
+            {"user_id": list(user_id), "event_type": list(event_type),
+             "event_id": list(event_id),
+             "ts": pd.to_datetime(list(ts), format="ISO8601")}
+        )
+
+    a, b = (1, "click"), (2, "view")
+    # Adversarial arrival: both keys interleave across three chunks, and
+    # each key's event-time-first event (10 and 11) is in the LAST chunk.
     chunks = [
-        pd.DataFrame(
-            {"ts": pd.to_datetime(["2026-01-03", "2026-01-04"]),
-             "event_id": [30, 40]}
-        ),
-        pd.DataFrame({"ts": pd.to_datetime(["2026-01-02"]), "event_id": [20]}),
-        pd.DataFrame({"ts": pd.to_datetime(["2026-01-01"]), "event_id": [10]}),
+        frame([(*a, 30, "2026-01-03"), (*b, 31, "2026-01-03 12:00"),
+               (*a, 40, "2026-01-04")]),
+        frame([(*b, 21, "2026-01-02 12:00"), (*a, 20, "2026-01-02")]),
+        frame([(*b, 11, "2026-01-01 12:00"), (*a, 10, "2026-01-01")]),
     ]
+
+    def run(fn, batch, state):
+        [out] = list(fn((7,), iter(batch), state))
+        got = {}
+        for r in out.itertuples():
+            got.setdefault((r.user_id, r.event_type), []).append(
+                (r.event_id, r.action, r.status_after)
+            )
+        users, types, statuses, delivered, attempts = state.get
+        per_key = {
+            (u, t): (s, d, n)
+            for u, t, s, d, n in zip(users, types, statuses, delivered, attempts)
+        }
+        return got, per_key
+
     state = _FakeGroupState()
-    [out] = list(fn((1, "click"), iter(chunks), state))
-    assert list(out[out.action == "email_triggered"].event_id) == [10]
-    assert list(out.event_id) == [10, 20, 30, 40], "emitted in global ts order"
-    status, delivered_id, attempts = state.get
-    assert (status, delivered_id, attempts) == ("delivered", 10, 4)
+    got, per_key = run(make_bucket_fn(), chunks, state)
+    dup, trig = "duplicate_prevented", "email_triggered"
+    assert got == {
+        a: [(10, trig, "delivered"), (20, dup, "delivered"),
+            (30, dup, "delivered"), (40, dup, "delivered")],
+        b: [(11, trig, "delivered"), (21, dup, "delivered"),
+            (31, dup, "delivered")],
+    }, "each key's rows emitted in its global ts order, earliest one wins"
+    assert per_key == {a: ("delivered", 10, 4), b: ("delivered", 11, 3)}
+
+    # The next micro-batch with that state: every row is a duplicate.
+    later = [frame([(*b, 51, "2026-01-05"), (*a, 50, "2026-01-05")])]
+    got, per_key = run(make_bucket_fn(), later, state)
+    assert got == {a: [(50, dup, "delivered")], b: [(51, dup, "delivered")]}
+    assert per_key == {a: ("delivered", 10, 5), b: ("delivered", 11, 4)}
+
+    # S7: key b's first send fails after key a has delivered, so b's next
+    # event delivers; key a, in the same bucket, is untouched by b's
+    # revert to pending.
+    state = _FakeGroupState()
+    got, per_key = run(make_bucket_fn(lambda eid: eid != 11), chunks, state)
+    assert got[a] == [(10, trig, "delivered"), (20, dup, "delivered"),
+                      (30, dup, "delivered"), (40, dup, "delivered")]
+    assert got[b] == [(11, "sink_failed", "delivered"), (21, trig, "delivered"),
+                      (31, dup, "delivered")]
+    assert per_key == {a: ("delivered", 10, 4), b: ("delivered", 21, 3)}
+
+    # Arrow hands a user_id column holding a null to pandas as float64
+    # (tools/hostile_sweep.py's nulls world); the null key keeps its own
+    # entry and the others stay integers.
+    state = _FakeGroupState()
+    nulls = frame([(None, "click", 1, "2026-01-01"), (3, "click", 2, "2026-01-01")])
+    _, per_key = run(make_bucket_fn(), [nulls], state)
+    assert per_key == {(None, "click"): ("delivered", 1, 1),
+                       (3, "click"): ("delivered", 2, 1)}
+    assert type(state.get[0][1]) is int
 
 
 def test_delivery_state_exactly_once_tiny_arrow_batches(spark, sf_dir, staged):
@@ -156,8 +232,10 @@ def test_delivery_state_exactly_once_tiny_arrow_batches(spark, sf_dir, staged):
 
 def test_delivery_state_sink_failure_compensation(spark, sf_dir, staged):
     """S7: a failing sink send must not mark the key delivered — the
-    next attempt for that key must still be able to trigger."""
-    # every odd event_id fails at the sink
+    next attempt for that key must still be able to trigger. The whole
+    disposition multiset must equal a sequential model of the reference
+    (events in (ts, event_id) order, every odd event_id failing at the
+    sink), so no key's status leaks into another key of its bucket."""
     q = run_available_now(
         spark,
         "dispositions_fail",
@@ -169,20 +247,31 @@ def test_delivery_state_sink_failure_compensation(spark, sf_dir, staged):
         .format("memory"),
         timeout_s=120,
     )
-    out = spark.table(q.name)
-    per_key = (
-        out.groupBy("user_id", "event_type")
-        .agg(
-            F.count_if(F.col("action") == "email_triggered").alias("n_trig"),
-            F.count_if(F.col("action") == "sink_failed").alias("n_fail"),
-        )
+    got = sorted(
+        tuple(r)
+        for r in spark.table(q.name)
+        .select("user_id", "event_type", "event_id", "action")
         .collect()
     )
-    assert all(r.n_trig <= 1 for r in per_key), "at most one delivery per key"
-    # a key that eventually triggered must have its failures BEFORE the
-    # trigger; keys with only odd events never trigger
-    only_failed = [r for r in per_key if r.n_trig == 0]
-    assert all(r.n_fail > 0 for r in only_failed)
+
+    events = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "event_id", "ts"
+    )
+    status: dict[tuple, str] = {}
+    want = []
+    for r in sorted(events.collect(), key=lambda r: (r.ts, r.event_id)):
+        key = (r.user_id, r.event_type)
+        if status.get(key) == "delivered":
+            action = "duplicate_prevented"
+        elif r.event_id % 2 == 0:
+            status[key], action = "delivered", "email_triggered"
+        else:
+            action = "sink_failed"
+        want.append((*key, r.event_id, action))
+    assert {a for *_, a in want} == {
+        "email_triggered", "duplicate_prevented", "sink_failed"
+    }, "the model must exercise every transition"
+    assert got == sorted(want)
 
 
 def test_watermark_dedup_stream(spark, staged):
