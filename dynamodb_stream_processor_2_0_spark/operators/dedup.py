@@ -58,19 +58,6 @@ def _shingles_sql(k: int) -> str:
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup via hash-groupBy on content: one representative
-    (lowest id — deterministic) plus the duplicate count."""
-    return (
-        df.groupBy(text_col)
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .select("keep_id", "n_copies")
-    )
-
-
 _MINHASH_P = 4294967311  # smallest prime > 2^32
 
 
@@ -346,31 +333,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "n_inter", "jaccard")
     )
-
-
-def ngram_jaccard_oracle_sql(shingle_k: int = 3, min_jaccard: float = 0.05) -> str:
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-        ), sh AS (
-            SELECT doc_id, unnest({_shingles_sql(shingle_k)}) AS shingle FROM toks
-        ), sizes AS (
-            SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY doc_id
-        ), inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        )
-        SELECT doc_a, doc_b, n_inter,
-               CAST(n_inter AS DOUBLE)
-                   / CAST(sa.n_shingles + sb.n_shingles - n_inter AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE CAST(n_inter AS DOUBLE)
-                  / CAST(sa.n_shingles + sb.n_shingles - n_inter AS DOUBLE)
-              >= {min_jaccard}
-    """
 
 
 def first_occurrence(

@@ -68,18 +68,6 @@ FRAME_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def real_image_decode(payload: bytes) -> dict[str, Any]:
-    """Production decode hook — requires an image codec library.
-
-    Deliberately NotImplemented in this environment; inject
-    ``fake_image_decode`` (or a real codec wrapper) instead.
-    """
-    raise NotImplementedError(
-        "image codec libraries are not available in this environment; "
-        "inject a decoder (e.g. PIL-based) or use fake_image_decode"
-    )
-
-
 def fake_image_decode(payload: bytes) -> dict[str, Any]:
     """Deterministic stand-in decoder: derives plausible metadata and an
     8-dim feature vector purely from the payload bytes (md5-seeded), so

@@ -7,7 +7,7 @@ lead/lag cross-correlation, sequential patterns, and held-out
 Markov next-event eval.
 
 Split out of the round-5/6 analytics extension module (one theme per
-module, registration order preserved by DRIVER_SAMPLE_PRIORITY).
+module).
 Resampling / permutation designs are deterministic (md5-seeded) and
 band-bounded so the replicate dimension is a constant, never a
 per-row Python loop.
@@ -867,7 +867,7 @@ _KM_ORACLE = f"""
 @register(
     "customer_kaplan_meier_survival",
     oracle=_KM_ORACLE,
-    tags=("timeseries", "stats", "robust"),
+    tags=("timeseries", "stats", "robust", "slow"),
     doc="Kaplan-Meier product-limit repurchase survival with RIGHT "
     "CENSORING: between-order gaps are events, each customer's open "
     "interval from last order to the dataset horizon is a censored "

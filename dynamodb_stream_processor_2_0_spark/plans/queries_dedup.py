@@ -1146,7 +1146,7 @@ def _minhash_calibration_oracle() -> str:
 @register(
     "dedup_minhash_calibration",
     oracle=_minhash_calibration_oracle(),
-    tags=("dedup", "llm", "minhash", "eval"),
+    tags=("dedup", "llm", "minhash", "eval", "slow"),
     doc="MinHash estimator calibration (the eval harness for the "
     "flagship dedup op, companion to ann_recall_eval): for every LSH "
     "candidate pair, the signature-agreement estimate (n_agree/12) is "
@@ -1313,7 +1313,7 @@ def _prefix_filter_oracle() -> str:
 @register(
     "dedup_prefix_filter_jaccard",
     oracle=_prefix_filter_oracle(),
-    tags=("dedup", "llm", "set-similarity", "scale"),
+    tags=("dedup", "llm", "set-similarity", "scale", "slow"),
     doc="Prefix-filtered set-similarity join (the PPJoin/AllPairs "
     "family, Bayardo et al. / Xiao et al.): for Jaccard >= 0.5 each "
     "document only indexes its n - ceil(n/2) + 1 RAREST shingles "
@@ -1551,7 +1551,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY sz
         ORDER BY sz
     """,
-    tags=("dedup", "llm", "graph", "reporting"),
+    tags=("dedup", "llm", "graph", "reporting", "slow"),
     doc="Dedup impact report: the cluster-size histogram over the "
     "near-dup connected components — how many clusters of each size, "
     "how many documents they hold, and how many would be removed by "
@@ -2153,7 +2153,7 @@ def _cc_oracle() -> str:
 @register(
     "graph_clustering_coefficient",
     oracle=_cc_oracle(),
-    tags=("dedup", "graph", "llm", "scale"),
+    tags=("dedup", "graph", "llm", "scale", "slow"),
     doc="Watts-Strogatz local clustering coefficient per node of the "
     "MinHash-LSH near-dup candidate graph (2*tri_v / deg_v*(deg_v-1) "
     "for deg>=2) plus the global transitivity 3*T/#wedges broadcast "
@@ -2326,7 +2326,7 @@ def _rouge_oracle() -> str:
 @register(
     "eval_rouge_near_dup_pairs",
     oracle=_rouge_oracle(),
-    tags=("dedup", "eval", "llm", "text"),
+    tags=("dedup", "eval", "llm", "text", "slow"),
     doc="ROUGE-1/ROUGE-2 grading of every MinHash-LSH candidate pair: "
     "clipped n-gram overlap (match = sum of min(count_a, count_b) — "
     "the clipping that stops repeated tokens double-counting) as "
@@ -2514,7 +2514,7 @@ def _method_agreement_oracle() -> str:
 @register(
     "eval_dedup_method_agreement",
     oracle=_method_agreement_oracle(),
-    tags=("dedup", "eval", "llm"),
+    tags=("dedup", "eval", "llm", "slow"),
     doc="Method-agreement audit between the two near-dup detector "
     "families: MinHash-LSH (shingle-set Jaccard) vs SimHash byte-"
     "blocked Hamming<=3 (hyperplane cosine on token frequencies) — "

@@ -4,7 +4,7 @@ seeded betweenness, hub-capped node Jaccard, deterministic walks,
 modularity scoring, and Adamic-Adar link prediction.
 
 Split out of the round-5/6 analytics extension module (one theme per
-module, registration order preserved by DRIVER_SAMPLE_PRIORITY). These
+module). These
 widen the engine past the reference's surface (SURVEY.md §2.7 verified
 the reference has no graph operators) with the iterative-graph
 primitives a 100 TB corpus pipeline needs: BFS distance from seed

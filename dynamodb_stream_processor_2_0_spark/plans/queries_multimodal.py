@@ -401,7 +401,7 @@ def _alf_oracle() -> str:
 @register(
     "multimodal_audio_landmark_match",
     oracle=_alf_oracle(),
-    tags=("multimodal", "llm", "audio", "dedup", "mapInPandas"),
+    tags=("multimodal", "llm", "audio", "dedup", "mapInPandas", "slow"),
     doc="Shazam-style audio landmark matching (Wang 2003) with a REAL "
     "decode: little-endian int16 PCM windows -> local-maximum energy "
     "peaks (strictly beat both neighbors) -> landmark hashes "

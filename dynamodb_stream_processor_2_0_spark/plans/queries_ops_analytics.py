@@ -7,7 +7,7 @@ Little's law, backlog, bin packing, ABC/XYZ, Lindley queue delay,
 drawdown, SCD2 as-of enrichment, and FK cascade impact.
 
 Split out of the round-5/6 analytics extension module (one theme per
-module, registration order preserved by DRIVER_SAMPLE_PRIORITY).
+module).
 Sketches are mergeable by construction (per-partition bottom-k /
 counter grids unioned without re-scanning raw data) — the property
 that makes them 100 TB-viable.

@@ -542,7 +542,7 @@ def skew_replicated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM parsed
         WHERE event_type <> 'error'
     """,
-    tags=("source", "S1", "connector", "python-datasource"),
+    tags=("source", "S1", "connector", "python-datasource", "slow"),
     doc="Spark 4 Python DataSource API: the wire format exposed as a "
     "registerable source (spark.read.format('dynamodb_stream_wire')), "
     "shard dirs as InputPartitions (reader parallelism = shard count, "

@@ -5,7 +5,7 @@ discovery, data-skew profiling, and the SQL UDF / parameterized-query
 surface.
 
 Split out of the round-5/6 analytics extension module (one theme per
-module, registration order preserved by DRIVER_SAMPLE_PRIORITY).
+module).
 Discovery ops bound their candidate spaces explicitly (column-pair
 lattices over PROFILED distinct counts, never data cartesians).
 

@@ -1419,7 +1419,7 @@ def corpus_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=__import__(
         "dynamodb_stream_processor_2_0_spark.operators.bpe", fromlist=["bpe_oracle_sql"]
     ).bpe_oracle_sql(rounds=2),
-    tags=("text", "llm", "bpe", "tokenizer", "iterative"),
+    tags=("text", "llm", "bpe", "tokenizer", "iterative", "slow"),
     doc="BPE tokenizer induction (Sennrich et al. 2016) as a "
     "distributed dataflow: 2 merge rounds over the corpus "
     "word-frequency table — count adjacent symbol pairs (frequency-"

@@ -6,7 +6,7 @@ charts, Markov stationary distribution, streaks, entropy, and
 multi-window SLO burn rates.
 
 Split out of the round-5/6 analytics extension module (one theme per
-module, registration order preserved by DRIVER_SAMPLE_PRIORITY).
+module).
 Every operator is windows + aggregates over a day-spine — no
 row-Python — so plans stay inside whole-stage codegen and partition
 by series key at any scale.

@@ -9,6 +9,7 @@ check from the driver). The registry is the single source of truth that
 from __future__ import annotations
 
 import importlib
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -22,6 +23,8 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None
+    # SURVEY §2 op tags (S1-E5) order the driver sample; ``slow`` puts
+    # the query's sf0.001 parity cell in the slow test lane.
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
 
@@ -56,498 +59,33 @@ _loaded = False
 # ---------------------------------------------------------------------------
 # Driver sample ordering.
 #
-# The correctness driver checks the FIRST 50 entries of ``queries()`` in dict
-# order (observed: CORRECTNESS_r02/r03 are exactly the registry prefix).  With
-# 366 registered queries that prefix would never reach the LLM-pipeline /
-# streaming families, so we order the dict explicitly:
-#
-#   1. a minimal covering set for every SURVEY.md §2 operator (S1-E5), so each
-#      op keeps a current-round green row (the judge's correct_pct metric);
-#   2. queries that have NEVER appeared in any CORRECTNESS_r*.json, highest
-#      value first (streaming state machine, dedup/ANN/text/multimodal/UDF);
-#   3. everything else, oldest green row first, so rotation over later rounds
-#      eventually re-confirms every query.
-#
-# Rotate per round: once a query earns a green row, move it below the
-# still-unchecked ones (keep the §2 covering set pinned at the top). After
-# each CORRECTNESS file lands, re-run `python tools/rotate_registry.py`.
-#
-# ROTATION LEDGER (authoritative; one row per round):
-#   r1-r3: registry prefix (TPC-H battery, sources, function batteries,
-#          relational closure) — 120 distinct queries ever checked by r6.
-#   r4:    (driver skipped bench/correctness this round; no new rows)
-#   r5:    covering set + dedup/ANN/text/multimodal/UDF core — all green.
-#   r6:    covering set + the three r1 decimal FAILs (q6/q18/cube, fixed by
-#          22e9080, re-gated green) + round-5 additions (graph family,
-#          PQ-ADC/Matryoshka/MMR/hard-negative/Hamming, SimHash sweep, KMV,
-#          skew profile, DSIR, CCNet, media dedup, k-means) — 50/50 green.
-#   r7:    covering set + approx_stats_scale_path (the only query whose
-#          latest driver row was a FAIL — r1 canonicalizer crash, since
-#          fixed + oracled) + all 13 never-checked streaming e2e queries
-#          (the reference's S6/S7/E5 heart) + the r6 retrieval/ML ops with
-#          the most novel arithmetic (BM25, RRF, OLS, ECE, Gini stump,
-#          kNN-OOD, kNN label eval) + corpus-curation capstone + remainder.
-#          Never-checked backlog on rotation: 247 -> 218.
-#   r8:    covering set + the relational-closure remainder (TPC-H
-#          q2/q9/q11/q12/q13/q15/q16/q19/q20/q21/q22 + bucketed join),
-#          the queries_advanced sketch/AQP block (bitmap runtime-filter
-#          semi join, exact percentiles, pinned HLL, Bloom prefilter,
-#          AQP sampled sum, sketch rollup, DQ profile, null-safe join,
-#          integrity checksum), the dedup remainder (sorted-neighborhood,
-#          Fellegi-Sunter, prefix-filter Jaccard, simhash Hamming pairs,
-#          B-cubed, star assign, minhash calibration) + asof join.
-#          Never-checked backlog on rotation: 218 -> 189.
-#   r9:    covering set + the STALE-GREEN refresh the r8 verdict ordered
-#          (rotate_registry.py --stale, oldest row first): the five r1
-#          rows (q14/q17/q4/q8/sketch_count_min), the r2 row
-#          (sql_api_shared_dialect), then the r3 block (function
-#          batteries, TPC-H core q1/q3/q5/q7/q10, set ops, skew
-#          salting/replication, all source/sink format roundtrips,
-#          partition pruning, topk window) — 29 slots against the 40
-#          r1-r3 stale rows; ~11 r3 rows remain for r10 (the verdict's
-#          restated target: stale=0 by r10). Never-checked backlog
-#          unchanged at 189 this round by design (alternation rule);
-#          the never-checked block resumes at position 51, relational/
-#          text/advanced first.
-#   r10:   covering set + the LAST 11 stale-r3 rows (stale=0 when they
-#          land: skew salting, sort/topk, every source roundtrip +
-#          pruning, the rewritten variant_json_shred, window_running_sum)
-#          + the first 18 never-checked queries_relational rows (incl.
-#          market_basket_lift, one of the two bench tripwires — a
-#          driver-measured row settles it). Never-checked backlog on
-#          rotation: 189 -> 171. Relational remainder (3), text (21),
-#          advanced (19) queue next.
-#   r11:   covering set + the relational remainder (sql_group_by_all_dialect,
-#          sql_correlated_subquery_battery, orders_price_volume_mix) + the
-#          full 21-row queries_text/corpus block (the largest never-checked
-#          module block: langid confusion, token packing, TF-IDF, KN bigram
-#          LM, contamination, curation capstones, mixture/shard/split plans)
-#          + the first 5 queries_advanced rows (zorder_layout_stats,
-#          drift_chisquare_by_type, zorder_vs_linear_skipping,
-#          agg_winsorized_stats, timeseries_twap_per_user). Never-checked
-#          backlog on rotation: 171 -> 142 (unlocks the <150 freeze-exit
-#          rule). Next stale frontier once never-checked clears (~r13):
-#          the r5 block (oldest remaining greens), per the r10 verdict.
-#   r12:   covering set + the next 29 never-checked rows per the r11
-#          verdict: the queries_advanced remainder (14: pii pseudonymize,
-#          data contract, rolling DAU/WAU family, CUSUM/KS/Benford/
-#          Pareto/seasonality/bot-regularity), the full queries_graph_ops
-#          block (4: assortativity, seeded betweenness, modularity,
-#          Adamic-Adar), the full queries_ml block (5: hashed linear
-#          scorer, conformal coverage, Brier-Murphy, NB langid, feature
-#          MI), and the complete queries_streaming_batch block (6:
-#          session/tumbling/sliding windows, range join, hypertable
-#          rollup, funnel). Never-checked backlog on rotation:
-#          142 -> 113. STALE-FRONTIER SUCCESSION (per the r10/r11
-#          verdicts): once never-checked clears (~r16), the refresh
-#          target is the r5 block — the oldest remaining greens (29
-#          rows: covering-set debut + dedup/ANN/text/multimodal/UDF
-#          core, e.g. dedup_exact_hash, dedup_minhash_lsh, ann_*,
-#          text_quality_score, multimodal plumbing) — oldest row first
-#          via `rotate_registry.py --stale`.
-#   r13:   covering set + the 26 queries changed by the r12/r13
-#          optimization rounds (the r12 VERDICT's item 3 rotation: both
-#          interval rewrites, gini, markov_removal, ood/knn split-fold
-#          pair, simhash sweep, minhash calibration, markov_stationary,
-#          signflip, conformal, abc_xyz, clustering_coefficient,
-#          schema_ind, kaplan_meier, token_window; plus r13's star/flood
-#          union-find fastpath pair, corpus_curation_v2, and the
-#          shared-edge-build + LPA-argmax graph consumers) + 3
-#          never-checked queue heads. The 26 r12-sample rows that
-#          rotated out (all green in CORRECTNESS_r12) moved to the
-#          back; never-checked backlog 113 -> 110.
-#
-# The ~100 round-6 additions (retrieval, ML/eval, graph extensions, text
-# statistics, temporal/causal analytics — see git history for the batch
-# breakdown) all carry sf0.001+sf0.01 DuckDB parity, a two-width partition
-# sweep, and behavior tests; they queue for driver rotation in the
-# never-checked block below, highest value first.
+# The correctness driver checks the first DRIVER_SAMPLE_SIZE entries of
+# ``queries()`` in dict order. Registration order alone would fill that
+# prefix with the pipeline and scalar modules, so each SURVEY.md §2
+# operator (tag ``[A-Z]\d+``, S1-E5) is pinned to the front by the first
+# registered query that carries it; every other query keeps registration
+# order behind the pinned ones.
 # ---------------------------------------------------------------------------
-DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
-    # --- SURVEY §2 covering set (pinned) ---
-    "pipeline_disposition_summary",
-    "pipeline_disposition_ledger",
-    "s1_stream_record_parse",
-    "streaming_delivery_e2e",
-    "cdc_upsert_compaction",
-    "a2_existence_per_key",
-    "p10_priority_routing",
-    "p11_envelope_json",
-    "f1_change_type_filter",
-    "f3_null_pass_filter",
-    "d2_cdc_old_new_diff",
-    "d3_state_lookup_routing",
-    "d5_first_occurrence_dedup",
-    "first_touch_attribution",
-    "f8_email_validation",
-    "p5_key_building",
-    "p7_nested_document_build",
-    "p8_array_transform_slice",
-    "a3_failure_list",
-    "e1_error_isolation",
-    "datetime_function_battery",
-    # --- r13 sample block (positions 22-50): every query whose code
-    #     path changed in the r12 or r13 optimization rounds, so the
-    #     independent oracle certifies the rewrites (r12 VERDICT item 3:
-    #     16 r12-changed + 10 r13-changed incl. the shared-edge-build /
-    #     LPA-argmax / union-find-fastpath consumers) + 3 never-checked
-    #     queue heads ---
-    "interval_overlap_join",
-    "interval_allen_algebra_census",
-    "ml_gini_decision_stump",
-    "attribution_markov_removal",
-    "embedding_ood_knn_distance",
-    "ml_knn_label_eval",
-    "dedup_simhash_threshold_sweep",
-    "dedup_minhash_calibration",
-    "events_markov_stationary",
-    "events_signflip_fdr",
-    "ml_conformal_interval_coverage",
-    "lineitem_abc_xyz_classification",
-    "graph_clustering_coefficient",
-    "schema_ind_discovery",
-    "customer_kaplan_meier_survival",
-    "dedup_token_window_exact",
-    "dedup_cluster_assign_star",
-    "dedup_cluster_assign",
-    "corpus_curation_pipeline_v2",
-    "graph_label_propagation",
-    "graph_modularity_score",
-    "graph_personalized_pagerank",
-    "graph_shortest_path_bfs",
-    "graph_betweenness_seeded",
-    "graph_degree_assortativity",
-    "graph_deterministic_walks",
-    "pii_pseudonymize_consistent",
-    "data_contract_check",
-    "rolling_7d_active_users",
-    # --- never-checked queue (old relative order), then previously
-    #     green rows oldest-first; the 26 r12-block rows that rotated
-    #     out this round (all green in CORRECTNESS_r12) sit at the
-    #     back ---
-    "events_streak_islands",
-    "supplier_delay_control_chart",
-    "events_theil_sen_trend",
-    "timeseries_rolling_median_7d",
-    "timeseries_seasonal_decompose",
-    "events_anomaly_mad",
-    "timeseries_croston_forecast",
-    "events_psi_drift",
-    "forecast_mase_eval",
-    "events_changepoint_binary_seg",
-    "events_mann_kendall_test",
-    "events_periodogram_fixed",
-    "events_seasonal_residual_anomaly",
-    "events_slo_burn_rate",
-    "customer_gap_survival_curve",
-    "attribution_time_decay",
-    "events_ab_proportion_test",
-    "eval_auc_mann_whitney",
-    "events_pattern_vshape_match",
-    "attribution_shapley_exact",
-    "events_sequential_patterns",
-    "events_poisson_bootstrap_ci",
-    "events_diff_in_diff",
-    "events_cuped_variance_reduction",
-    "events_cross_correlation_leadlag",
-    "events_markov_next_event_eval",
-    "rfm_migration_matrix",
-    "sketch_kmv_intersection",
-    "sketch_kmv_difference",
-    "orders_littles_law_identity",
-    "scd2_asof_enrich",
-    "orders_open_backlog_daily",
-    "sketch_histogram_quantiles",
-    "fk_cascade_impact_analysis",
-    "sketch_cm_join_size_estimate",
-    "storage_compaction_bin_packing",
-    "supplier_queue_delay_lindley",
-    "events_value_drawdown",
-    "snapshot_diff_audit",
-    "trending_decay_topk",
-    "events_sessionized_funnel",
-    "events_cohort_ltv",
-    "events_interarrival_histogram",
-    "events_time_to_convert",
-    "timeseries_similarity_topk",
-    "scd2_user_state_build",
-    "timeseries_gapfill_daily",
-    "events_transition_matrix",
-    "fk_integrity_audit",
-    "graph_hits_hubs_authorities",
-    "semantic_search_hydrated",
-    "embedding_covariance_stats",
-    "embedding_label_centroids",
-    "embedding_vector_hygiene",
-    "embedding_pca_power_iteration",
-    "embedding_ann_ivf_nprobe_sweep",
-    "embedding_centroid_drift",
-    "eval_ndcg_ranking",
-    "eval_clustering_calinski_harabasz",
-    "quality_text_embedding_alignment",
-    "embedding_isotropy_audit",
-    "embedding_kcenter_coreset",
-    "sql_udf_temp_function",
-    "sql_parameterized_query",
-    "privacy_k_anonymity_audit",
-    "privacy_l_diversity_audit",
-    "schema_fd_discovery",
-    "privacy_t_closeness_audit",
-    "privacy_dp_sensitivity_report",
-    "schema_key_discovery",
-    "privacy_synthetic_fidelity_audit",
-    "text_rake_keywords",
-    "text_vocab_oov_rate",
-    "text_pmi_collocations",
-    "text_term_burstiness",
-    "text_zipf_fit",
-    "text_winnowing_fingerprints",
-    "text_heaps_law_fit",
-    "text_quantile_normalize_sources",
-    "text_chao1_vocab_richness",
-    "text_js_divergence_sources",
-    "contrastive_pair_sample",
-    "dedup_ttl_within_window",
-    "dedup_cluster_size_report",
-    "dedup_cdc_chunks",
-    "eval_rouge_near_dup_pairs",
-    "eval_dedup_method_agreement",
-    "graph_ktruss_edges",
-    "corpus_dup_rate_by_source",
-    "multimodal_pcm_window_energy",
-    "multimodal_image_decode",
-    "multimodal_frame_sample",
-    "multimodal_resize_digest",
-    "multimodal_scene_cut_detect",
-    "multimodal_audio_vad_segments",
-    "multimodal_audio_landmark_match",
-    "multimodal_shot_keyframes",
-    "cdc_retraction_aggregate",
-    "source_schema_evolution_merge",
-    "source_python_pushdown_pruning",
-    "udtf_token_positions",
-    "timeseries_dtw_weekly_similarity",
-    "events_haar_energy",
-    "sample_neyman_allocation",
-    "ann_recall_eval",
-    "dedup_embedding_near",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_paragraph_exact",
-    "dedup_shingle_containment",
-    "dedup_simhash",
-    "doc_fingerprint",
-    "embedding_ann_ivf",
-    "embedding_ann_lsh",
-    "embedding_ann_multiprobe",
-    "embedding_cosine_topk",
-    "embedding_int8_quant_topk",
-    "fuzzy_match_blocked_levenshtein",
-    "grouped_pandas_robust_outliers",
-    "multimodal_arrow_digest",
-    "multimodal_binary_meta",
-    "recursive_order_chain_walk",
-    "streaming_dedup_watermark_e2e",
-    "streaming_window_agg_e2e",
-    "text_bpe_token_count",
-    "text_gopher_repetition",
-    "text_langid_heuristic",
-    "text_pii_redaction",
-    "text_quality_score",
-    "text_token_stats",
-    "udaf_weighted_value",
-    "cube_priority_status",
-    "data_skew_profile",
-    "embedding_binary_hamming_topk",
-    "embedding_hard_negative_mine",
-    "embedding_matryoshka_recall",
-    "embedding_mmr_diverse_topk",
-    "embedding_pq_adc_topk",
-    "events_autocorrelation_lags",
-    "events_entropy_by_user",
-    "graph_kcore_membership",
-    "graph_node_jaccard_similarity",
-    "graph_pagerank_fixpoint",
-    "graph_triangle_enumerate",
-    "multimodal_dedup_by_digest",
-    "multimodal_phash_near_dup",
-    "q18_large_volume_customer",
-    "q6_forecast_revenue",
-    "semantic_dedup_kmeans",
-    "sketch_kmv_distinct",
-    "source_union_schema_harmonize",
-    "text_ccnet_bucket_mix",
-    "text_dsir_importance",
-    "timeseries_ewma_halflife",
-    "timeseries_holt_forecast",
-    "approx_stats_scale_path",
-    "bpe_merge_induction",
-    "dedup_survivorship_canonical",
-    "embedding_random_projection",
-    "eval_calibration_curve_ece",
-    "ml_ols_regression_closed_form",
-    "quality_classifier_score",
-    "search_rrf_hybrid",
-    "session_window_12h",
-    "sql_lateral_topk_per_customer",
-    "streaming_chained_window_agg_e2e",
-    "streaming_foreachbatch_sink_e2e",
-    "streaming_incremental_rollup_e2e",
-    "streaming_late_data_audit_e2e",
-    "streaming_neardup_arrival_e2e",
-    "streaming_outer_join_e2e",
-    "streaming_python_sink_e2e",
-    "streaming_python_source_e2e",
-    "streaming_rocksdb_state_e2e",
-    "streaming_sessionize_e2e",
-    "streaming_state_introspection",
-    "streaming_static_enrich_e2e",
-    "streaming_stream_join_e2e",
-    "text_bm25_topk",
-    "agg_exact_percentiles",
-    "agg_hll_accuracy_pinned",
-    "aqp_sampled_sum_estimate",
-    "asof_join_last_order",
-    "bitmap_semi_join_runtime_filter",
-    "bloom_filter_dedup_prefilter",
-    "bucketed_colocated_join",
-    "data_quality_profile",
-    "dedup_fellegi_sunter_linkage",
-    "dedup_prefix_filter_jaccard",
-    "dedup_simhash_hamming_pairs",
-    "dedup_sorted_neighborhood",
-    "eval_dedup_bcubed",
-    "nullsafe_join_dispositions",
-    "q11_important_balance",
-    "q12_ship_delay_priority",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q19_disjunctive_revenue",
-    "q20_dominant_supplier",
-    "q21_last_supplier_wait",
-    "q22_idle_rich_customers",
-    "q2_min_cost_supplier",
-    "q9_profit_by_nation_year",
-    "sketch_reaggregate_rollup",
-    "table_integrity_checksum",
-    "agg_having_priorities",
-    "agg_value_percentiles",
-    "anti_join_customers_without_orders",
-    "array_function_battery",
-    "conditional_bitwise_battery",
-    "e2_corrupt_record_routing",
-    "events_retention_cohort",
-    "json_function_battery",
-    "map_struct_function_battery",
-    "p1_typed_parse_projection",
-    "pivot_status_by_priority",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_region_revenue",
-    "q7_volume_shipping",
-    "q8_national_market_share",
-    "regex_function_battery",
-    "rollup_returnflag_status",
-    "scalar_function_battery",
-    "semi_join_customers_with_orders",
-    "set_ops_customer_segments",
-    "sink_python_datasource_roundtrip",
-    "sketch_count_min",
-    "skew_replicated_join",
-    "sql_api_shared_dialect",
-    "agg_moment_stats",
-    "customer_revenue_gini",
-    "events_replay_pair_detect",
-    "full_outer_nation_balance",
-    "grouping_sets_priority_status",
-    "lineitem_fifo_allocation",
-    "market_basket_lift",
-    "market_basket_pairs",
-    "part_sourcing_hhi",
-    "relational_division_all_quarters",
-    "rfm_customer_segments",
-    "right_outer_supplier_lines",
-    "skew_salted_agg",
-    "sort_limit_top_orders",
-    "source_csv_roundtrip",
-    "source_dynamic_partition_pruning",
-    "source_jsonl_roundtrip",
-    "source_orc_roundtrip",
-    "source_partitioned_pruning",
-    "source_python_datasource",
-    "sql_pipe_syntax_rollup",
-    "supplier_pareto_analysis",
-    "topk_orders_per_customer",
-    "unpivot_nation_metrics",
-    "variant_json_shred",
-    "window_function_battery",
-    "window_range_frame_moving_sum",
-    "window_running_sum",
-    "yoy_revenue_growth",
-    "sql_group_by_all_dialect",
-    "sql_correlated_subquery_battery",
-    "orders_price_volume_mix",
-    "corpus_shard_manifest",
-    "text_langid_confusion_matrix",
-    "sample_priority_weighted",
-    "dataset_split_assign",
-    "text_line_dedup_clean",
-    "text_ngram_topk",
-    "text_length_histogram",
-    "text_tfidf_topk",
-    "text_token_packing",
-    "text_benchmark_contamination",
-    "doc_chunk_tokens",
-    "corpus_curation_pipeline",
-    "corpus_mixture_sample",
-    "corpus_shuffle_interleave",
-    "sample_stratified_documents",
-    "sample_quota_per_source",
-    "text_lm_surprisal_score",
-    "text_filter_ensemble_agreement",
-    "corpus_mixture_rebalance_plan",
-    "corpus_temperature_mixture_plan",
-    "text_kneser_ney_bigram_lm",
-    "zorder_layout_stats",
-    "drift_chisquare_by_type",
-    "zorder_vs_linear_skipping",
-    "agg_winsorized_stats",
-    "timeseries_twap_per_user",
-    "events_dau_wau_stickiness",
-    "events_error_spike_detection",
-    "sql_scripting_coverage_walk",
-    "events_trend_slope_by_type",
-    "events_cusum_shift_detect",
-    "orders_benford_digit_audit",
-    "customer_weighted_median_balance",
-    "events_ks_distribution_shift",
-    "orders_pareto_skyline",
-    "orders_seasonality_index",
-    "events_bot_regularity_score",
-    "graph_adamic_adar_linkpred",
-    "ml_hashed_linear_scorer",
-    "eval_brier_murphy_decomposition",
-    "ml_naive_bayes_langid",
-    "ml_feature_mutual_information",
-    "session_window_dynamic_gap",
-    "window_tumbling_daily",
-    "window_sliding_2d_1d",
-    "range_join_event_neighbors",
-    "hypertable_rollup",
-    "events_funnel",
-)
+DRIVER_SAMPLE_SIZE = 50
+
+_SURVEY_OP = re.compile(r"[A-Z]\d+")
+
+
+def survey_ops(spec: QuerySpec) -> set[str]:
+    """The SURVEY §2 operator tags (S1-E5) ``spec`` carries."""
+    return {t for t in spec.tags if _SURVEY_OP.fullmatch(t)}
 
 
 def _ordered_names() -> list[str]:
-    prio = [n for n in DRIVER_SAMPLE_PRIORITY if n in REGISTRY]
-    rest = [n for n in REGISTRY if n not in set(prio)]
-    return prio + rest
+    covered: set[str] = set()
+    pinned: list[str] = []
+    for name, spec in REGISTRY.items():
+        ops = survey_ops(spec)
+        if ops - covered:
+            pinned.append(name)
+            covered |= ops
+    pinned_set = set(pinned)
+    return pinned + [n for n in REGISTRY if n not in pinned_set]
 
 
 def register(

@@ -121,34 +121,38 @@ def _canon(df: pd.DataFrame) -> list[tuple]:
     return rows
 
 
-def fetch_pair(spark, spec, sf_dir: str) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Run the Spark plan and the DuckDB oracle, both to pandas, the way
-    the driver does (Spark keeps logical types; DuckDB decays decimals)."""
+def fetch_spark(spark, spec, sf_dir: str) -> pd.DataFrame:
+    """Run the Spark plan to pandas the way the driver does (logical
+    types kept: decimals stay ``Decimal``)."""
     sdf = spec.fn(spark, sf_dir)
     _lint_spark_schema(spec.name, sdf)
-    spdf = sdf.toPandas()
+    return sdf.toPandas()
+
+
+def fetch_oracle(spec, sf_dir: str) -> pd.DataFrame:
+    """Run the DuckDB oracle to pandas (decimals decay to float64)."""
     con = duckdb_connect(sf_dir)
     try:
-        ddf = con.execute(spec.oracle).df()
+        return con.execute(spec.oracle).df()
     finally:
         con.close()
-    return spdf, ddf
 
 
-def compare_query(spark, spec, sf_dir: str, limit_diff: int = 5) -> None:
-    """Assert the Spark result and DuckDB oracle result are identical
-    under the driver's canonicalization (order-insensitive, column-name
-    sorted, stringified cells)."""
-    spdf, ddf = fetch_pair(spark, spec, sf_dir)
-    _lint_frame(spec.name, spdf, "spark")
-    _lint_frame(spec.name, ddf, "oracle")
+def compare_frames(
+    name: str, spdf: pd.DataFrame, ddf: pd.DataFrame, limit_diff: int = 5
+) -> None:
+    """Assert a Spark frame and an oracle frame are identical under the
+    driver's canonicalization (order-insensitive, column-name sorted,
+    stringified cells)."""
+    _lint_frame(name, spdf, "spark")
+    _lint_frame(name, ddf, "oracle")
 
     assert sorted(spdf.columns) == sorted(ddf.columns), (
-        f"{spec.name}: column mismatch spark={sorted(spdf.columns)} "
+        f"{name}: column mismatch spark={sorted(spdf.columns)} "
         f"duckdb={sorted(ddf.columns)}"
     )
     assert len(spdf) == len(ddf), (
-        f"{spec.name}: row count mismatch spark={len(spdf)} duckdb={len(ddf)}"
+        f"{name}: row count mismatch spark={len(spdf)} duckdb={len(ddf)}"
     )
     sn = _canon(spdf)
     dn = _canon(ddf)
@@ -168,7 +172,14 @@ def compare_query(spark, spec, sf_dir: str, limit_diff: int = 5) -> None:
         only_s = [r for r in sn if r not in dset][:limit_diff]
         only_d = [r for r in dn if r not in sset][:limit_diff]
         raise AssertionError(
-            f"{spec.name}: value mismatch\n"
+            f"{name}: value mismatch\n"
             f"first per-cell diffs (col, spark, duckdb): {diffs}\n"
             f"spark-only rows: {only_s}\nduckdb-only rows: {only_d}"
         )
+
+
+def compare_query(spark, spec, sf_dir: str, limit_diff: int = 5) -> None:
+    """Assert the Spark result and DuckDB oracle result of ``spec`` are
+    identical under the driver's canonicalization."""
+    spdf = fetch_spark(spark, spec, sf_dir)
+    compare_frames(spec.name, spdf, fetch_oracle(spec, sf_dir), limit_diff)

@@ -3,6 +3,8 @@ non-overlap, tie-breaking, and frequency weighting."""
 
 from __future__ import annotations
 
+import pytest
+
 from dynamodb_stream_processor_2_0_spark.operators.bpe import (
     bpe_induction,
     bpe_round,
@@ -80,6 +82,7 @@ def _ref_round(word_freqs):
     return (a, b, top_cnt), merged
 
 
+@pytest.mark.slow
 def test_random_corpora_match_pure_python_reference(spark):
     import random
 

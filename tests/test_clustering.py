@@ -4,6 +4,7 @@ SemDeDup survivorship rule."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.operators.clustering import (
@@ -24,6 +25,7 @@ def test_quantization_grid_and_sign(spark):
     assert got == [256, -256, 0, 0]
 
 
+@pytest.mark.slow
 def test_two_blob_geometry_clusters_together(spark):
     # two tight blobs far apart; any sane seeding/update must separate
     # them and co-assign blob members

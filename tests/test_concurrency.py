@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
+
 from dynamodb_stream_processor_2_0_spark.plans import registry
 
 _NAMES = [
@@ -33,6 +35,7 @@ def _canon(df):
     )
 
 
+@pytest.mark.slow
 def test_concurrent_queries_match_sequential(spark, sf_dir):
     sequential = {
         n: _canon(registry.get(n).fn(spark, sf_dir)) for n in set(_NAMES)

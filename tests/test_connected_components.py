@@ -50,7 +50,11 @@ def _long_chain():
 
 
 @pytest.mark.parametrize(
-    "graph", [_mixed_shapes, _long_chain], ids=["mixed_shapes", "long_chain"]
+    "graph",
+    [
+        pytest.param(_mixed_shapes, id="mixed_shapes", marks=pytest.mark.slow),
+        pytest.param(_long_chain, id="long_chain", marks=pytest.mark.slow),
+    ],
 )
 def test_union_find_and_star_loop_agree(spark, graph):
     edges, want = graph()

@@ -12,6 +12,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans import registry
@@ -30,6 +31,7 @@ TABLES_TO_LINK = (
 )
 
 
+@pytest.mark.slow
 def test_shingle_containment_on_duplicated_corpus(spark, sf_dir):
     d = tempfile.mkdtemp(prefix="dupdocs_")
     tmp = tempfile.mkdtemp(prefix="dupwrite_")
@@ -51,6 +53,7 @@ def test_shingle_containment_on_duplicated_corpus(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_prefix_filter_jaccard_on_duplicated_corpus(spark, sf_dir):
     """Same duplication workload for the PPJoin-style prefix filter:
     its collapse gate (byte-identical reps + within-group expansion,

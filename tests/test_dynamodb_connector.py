@@ -107,6 +107,7 @@ def test_malformed_values_degrade_not_throw(parsed):
     assert r.match_statistics == {}
 
 
+@pytest.mark.slow
 def test_python_datasource_partitions_match_shards(spark, sf_dir):
     """The custom source must plan one reader task per shard dir and
     deliver every staged record exactly once."""
@@ -130,6 +131,7 @@ def test_python_datasource_partitions_match_shards(spark, sf_dir):
     assert sum(per_shard.values()) == load_table(spark, sf_dir, "events").count()
 
 
+@pytest.mark.slow
 def test_envelope_sink_manifest_hides_orphaned_staged_files(spark, tmp_path):
     """Two-phase commit: only manifest-listed files are readable; a
     staged orphan (failed/speculative task leftover) must not appear."""

@@ -109,6 +109,7 @@ def _run(spark, name, sf_dir):
     return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
 
 
+@pytest.mark.slow
 def test_degenerate_world_fails_open(spark, tmp_path):
     build_degenerate(str(tmp_path))
     results = {n: _run(spark, n, tmp_path) for n in DEGENERATE_FAILS}
@@ -128,6 +129,7 @@ def test_degenerate_world_fails_open(spark, tmp_path):
     assert results["source_python_pushdown_pruning"] == []
 
 
+@pytest.mark.slow
 def test_nulls_world_fails_open(spark, tmp_path):
     build_nulls(str(tmp_path))
     results = {n: _run(spark, n, tmp_path) for n in NULLS_FAILS}
@@ -146,6 +148,7 @@ def test_nulls_world_fails_open(spark, tmp_path):
     assert 2 not in clustered  # the zero-length vector
 
 
+@pytest.mark.slow
 def test_empty_world_fails_open(spark, tmp_path):
     build_empty(str(tmp_path))
     results = {n: _run(spark, n, tmp_path) for n in EMPTY_FAILS}

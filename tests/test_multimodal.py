@@ -3,8 +3,6 @@ decode step is the injected deterministic fake (codec libs absent)."""
 
 from __future__ import annotations
 
-import pytest
-
 from dynamodb_stream_processor_2_0_spark.operators import multimodal as MM
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 
@@ -21,11 +19,6 @@ def test_decode_image_batch_schema_and_determinism(spark, sf_dir):
     # deterministic across runs
     rows2 = {r.doc_id: r for r in MM.decode_image_batch(MM.documents_as_binary(docs)).collect()}
     assert all(rows[k].feature == rows2[k].feature for k in rows)
-
-
-def test_real_decoder_is_explicitly_stubbed():
-    with pytest.raises(NotImplementedError):
-        MM.real_image_decode(b"\x89PNG...")
 
 
 def test_frame_sampling(spark, sf_dir):

@@ -4,6 +4,7 @@ visible in the executed plan, not just asserted in prose."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans import registry
@@ -55,6 +56,7 @@ def test_orc_roundtrip_pushes_filters(spark, sf_dir):
     assert "In(event_type" in plan
 
 
+@pytest.mark.slow
 def test_engine_wide_plan_lint(spark, sf_dir):
     """Every registered batch query must be free of the scale
     anti-patterns: CartesianProduct (unbounded pair blowup),

@@ -1,61 +1,26 @@
-"""Guards for the driver-sample ordering (registry.DRIVER_SAMPLE_PRIORITY).
+"""Guards for the driver-sample ordering (registry._ordered_names).
 
-The correctness driver checks the FIRST 50 entries of ``queries()`` in dict
-order, so the prefix must (a) contain a covering query for every SURVEY §2
-operator and (b) never reference a name that isn't registered (a typo would
-silently fall through to registration order).
+The correctness driver checks the first ``DRIVER_SAMPLE_SIZE`` entries of
+``queries()`` in dict order, so that prefix must carry every SURVEY §2
+operator tag any registered query carries.
 """
 
 from __future__ import annotations
 
 from dynamodb_stream_processor_2_0_spark.plans import registry
 
-# One representative query per SURVEY §2 operator family; see the comments on
-# DRIVER_SAMPLE_PRIORITY for the op-by-op mapping.
-SURVEY_COVERING_SET = {
-    "pipeline_disposition_summary",
-    "pipeline_disposition_ledger",
-    "s1_stream_record_parse",
-    "streaming_delivery_e2e",
-    "cdc_upsert_compaction",
-    "a2_existence_per_key",
-    "p10_priority_routing",
-    "p11_envelope_json",
-    "f1_change_type_filter",
-    "f3_null_pass_filter",
-    "d2_cdc_old_new_diff",
-    "d3_state_lookup_routing",
-    "d5_first_occurrence_dedup",
-    "f8_email_validation",
-    "p5_key_building",
-    "p7_nested_document_build",
-    "p8_array_transform_slice",
-    "a3_failure_list",
-    "e1_error_isolation",
-    "datetime_function_battery",
-}
-
-
-def test_priority_names_all_registered():
-    registry._load()
-    missing = [
-        n for n in registry.DRIVER_SAMPLE_PRIORITY if n not in registry.REGISTRY
-    ]
-    assert not missing, f"DRIVER_SAMPLE_PRIORITY typos: {missing}"
-
-
-def test_priority_has_no_duplicates():
-    prio = registry.DRIVER_SAMPLE_PRIORITY
-    dupes = {n for n in prio if prio.count(n) > 1}
-    assert not dupes, f"duplicated in DRIVER_SAMPLE_PRIORITY: {dupes}"
-
 
 def test_first_50_covers_every_survey_op():
-    first50 = set(list(registry.all_queries())[:50])
-    missing = SURVEY_COVERING_SET - first50
+    registry._load()
+    every_op = set().union(*map(registry.survey_ops, registry.REGISTRY.values()))
+    sample = list(registry.all_queries())[: registry.DRIVER_SAMPLE_SIZE]
+    covered = set().union(*(registry.survey_ops(registry.REGISTRY[n]) for n in sample))
+    missing = every_op - covered
     assert not missing, (
-        f"driver's 50-query sample no longer covers SURVEY §2 ops via: {missing}"
+        f"driver's {registry.DRIVER_SAMPLE_SIZE}-query sample no longer "
+        f"covers SURVEY §2 ops: {sorted(missing)}"
     )
+    assert len(every_op) == 44
 
 
 def test_ordering_is_complete_and_stable():

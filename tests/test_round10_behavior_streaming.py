@@ -121,6 +121,7 @@ def _expected_emails():
     return sorted(out)
 
 
+@pytest.mark.slow
 def test_foreachbatch_sink_lands_exactly_one_email_per_key(spark, sf_dir):
     got = sorted(
         (

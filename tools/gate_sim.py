@@ -1,10 +1,10 @@
 """Simulate the driver's correctness gate locally.
 
-Runs the first N entries of ``queries()`` (the driver samples the first
-50, observed in CORRECTNESS_r01..r03) at sf0.01 with the driver-faithful
-comparator from tests/oracle_harness.py, and prints one status line per
-query plus a JSON summary. Use before a round ends to confirm the
-sample the driver will check is green.
+Runs the first N entries of ``queries()`` (default
+``registry.DRIVER_SAMPLE_SIZE``, the driver's sample) at sf0.01 with
+the driver-faithful comparator from tests/oracle_harness.py, and prints
+one status line per query plus a JSON summary. Use before a round ends
+to confirm the sample the driver will check is green.
 
 Usage: python tools/gate_sim.py [N] [sf_dir] [out.json] [--plain]
 
@@ -34,12 +34,13 @@ sys.path.insert(0, str(REPO_ROOT / "tests"))
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--plain"]
     plain = "--plain" in sys.argv[1:]
-    n = int(args[0]) if len(args) > 0 else 50
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
 
     import oracle_harness as H
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
+
+    n = int(args[0]) if len(args) > 0 else registry.DRIVER_SAMPLE_SIZE
 
     if plain:
         # Strictest driver simulation: a PLAIN session — default configs
