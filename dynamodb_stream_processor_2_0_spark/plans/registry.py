@@ -76,7 +76,10 @@ def survey_ops(spec: QuerySpec) -> set[str]:
     return {t for t in spec.tags if _SURVEY_OP.fullmatch(t)}
 
 
-def _ordered_names() -> list[str]:
+def pinned_names() -> list[str]:
+    """The queries pinned to the front of ``queries()``, in registration
+    order: each is the first to carry a §2 op tag no earlier pin carries."""
+    _load()
     covered: set[str] = set()
     pinned: list[str] = []
     for name, spec in REGISTRY.items():
@@ -84,6 +87,11 @@ def _ordered_names() -> list[str]:
         if ops - covered:
             pinned.append(name)
             covered |= ops
+    return pinned
+
+
+def _ordered_names() -> list[str]:
+    pinned = pinned_names()
     pinned_set = set(pinned)
     return pinned + [n for n in REGISTRY if n not in pinned_set]
 

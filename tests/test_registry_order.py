@@ -10,6 +10,25 @@ from __future__ import annotations
 from dynamodb_stream_processor_2_0_spark.plans import registry
 
 
+def test_priority_names_all_registered():
+    """``queries()`` is the pinned queries, then every other registered
+    query in registration order."""
+    pinned = registry.pinned_names()
+    assert pinned and all(registry.survey_ops(registry.REGISTRY[n]) for n in pinned)
+    rest = [n for n in registry.REGISTRY if n not in pinned]
+    assert list(registry.all_queries()) == pinned + rest
+
+
+def test_priority_has_no_duplicates():
+    """No pin is redundant: each pinned query brings an op tag no earlier
+    pin carries, so no pin holds a sample slot for ops already covered."""
+    covered: set[str] = set()
+    for name in registry.pinned_names():
+        ops = registry.survey_ops(registry.REGISTRY[name])
+        assert ops - covered, f"{name} pins no op beyond {sorted(covered)}"
+        covered |= ops
+
+
 def test_first_50_covers_every_survey_op():
     registry._load()
     every_op = set().union(*map(registry.survey_ops, registry.REGISTRY.values()))

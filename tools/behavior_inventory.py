@@ -52,6 +52,7 @@ NON_BEHAVIOR_TESTS = {
     "test_coverage_doc.py",
     "test_registry_order.py",
     "__init__.py",
+    "test_partition_independence.py",
     # robustness (fail-open on hostile worlds), not answer verification:
     # quoting a query there must not promote it to behavior-tested
     "test_hostile_worlds.py",
