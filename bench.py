@@ -1,6 +1,11 @@
 """Benchmark runner: times the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+JSON line: {"metric", "value", "unit", "queries", "sf", ...}.
+
+The full per-query map goes to the git-ignored
+.bench/bench_sf{sf}_c{cpus}.json, or to $SPARK_GRAFT_BENCH_FULL_OUT. A
+sweep is compared with nothing: a speed claim comes from a same-session
+A/B of the two trees (tools/ab.py).
 """
 
 from __future__ import annotations
@@ -30,94 +35,25 @@ HEADLINE = [
 ]
 
 
+def artifact_path(sf: str, cpus: int) -> Path:
+    """Default path of the per-query artifact, keyed by scale and width."""
+    return REPO_ROOT / ".bench" / f"bench_sf{sf}_c{cpus}.json"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from dynamodb_stream_processor_2_0_spark.plans import registry
     from dynamodb_stream_processor_2_0_spark.session import get_spark
+    from perfbench.common import Conf
 
     registry._load()
     spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
+    master = spark.sparkContext.master
 
     # Warm the JVM + parquet footers with a trivial action, so the
     # numbers measure the queries, not session startup.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    # Machine-state calibration: a fixed, data-independent workload
-    # (sum over spark.range — no IO, trivial codegen) timed at sweep
-    # start AND end. Round 8 measured three same-code sweeps drifting
-    # 365 -> 390 -> 424 s with per-query ratios inside the noise band —
-    # a uniform machine-state level shift. The calibration pair lets a
-    # cross-round reader NORMALIZE totals for that shift instead of
-    # guessing: if calibration moved, the machine moved.
-    def calibrate() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(200_000_000).selectExpr("sum(id)").collect()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    # Second probe: MEMORY BANDWIDTH. The spark.range probe is a tight
-    # codegen loop (CPU/JIT-shaped); the r10 and r11 pca adjudications
-    # both dead-ended at "a memory-bandwidth-shaped machine-state shift
-    # the CPU-loop calibration cannot see" — this probe sees it. One
-    # 400 MB numpy array summed 3x, min kept: pure streaming reads, no
-    # JVM, no allocator churn after the first rep. Sized at 400 MB (r12,
-    # was 1.6 GB through r11): still far past L3 so the reduce stays
-    # bandwidth-bound, but small enough that the END probe — which runs
-    # right after the sweep while the 32-thread JVM heap is still
-    # resident — cannot swap on a memory-tight machine and distort the
-    # very machine-state signal it measures (r11 ADVICE). A guard skips
-    # the probe entirely (returns -1.0) if MemAvailable can't cover the
-    # allocation 3x over; a sentinel beats a swap-poisoned reading.
-    # Cross-round note: r12+ membw values are on the 400 MB scale —
-    # healthy band re-baselined in SCALE.md §11 (r11's 1.6 GB healthy
-    # band was ~0.200 s; the probe is linear in bytes).
-    def calibrate_membw() -> float:
-        import numpy as np
-
-        n = 50_000_000  # float64 -> 400 MB
-        try:
-            with open("/proc/meminfo") as f:
-                avail_kb = next(
-                    int(line.split()[1]) for line in f if line.startswith("MemAvailable")
-                )
-            if avail_kb * 1024 < 3 * n * 8:
-                return -1.0
-        except (OSError, StopIteration):
-            pass
-        arr = np.ones(n, dtype=np.float64)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            float(np.add.reduce(arr))
-            best = min(best, time.perf_counter() - t0)
-        del arr
-        return round(best, 4)
-
-    # Third probe: PAGE-FAULT LATENCY (r13). This round caught the host
-    # serving first-touch anonymous pages at 736 us/page (healthy ~1-3)
-    # while CPU loops and resident-memory reads stayed fast — Spark
-    # executors (allocation-heavy) degraded 10-70x, invisible to BOTH
-    # probes above. First-touch of 256 MB of fresh anonymous pages, one
-    # rep (faulting is the thing measured; a min-of-N would hide it).
-    def calibrate_fault() -> float:
-        import mmap
-
-        try:
-            m = mmap.mmap(-1, 256 << 20)
-        except (OSError, ValueError):
-            return -1.0
-        t0 = time.perf_counter()
-        for off in range(0, 256 << 20, 4096):
-            m[off] = 1
-        dt = time.perf_counter() - t0
-        m.close()
-        return round(dt, 3)
-
-    calibration_start = calibrate()
-    calibration_membw_start = calibrate_membw()
-    calibration_fault_start = calibrate_fault()
 
     # Sweep order: headline first (fresh JVM — the driver's protocol),
     # then everything else ALPHABETICALLY. Registry dict order rotates
@@ -135,7 +71,15 @@ def main() -> None:
     # driver but excluded from the throughput bench.
     names = [n for n in names if "streaming" not in registry.REGISTRY[n].tags]
 
+    # Sweep hygiene: a query must not inherit another query's session
+    # state. Every call starts from the start-up conf (a query that sets
+    # a key and leaves it would otherwise change every query swept after
+    # it) and with no cached relations.
+    conf = Conf(spark)
+
     def run_once(name: str) -> float:
+        conf.restore()
+        spark.catalog.clearCache()
         # `noop` sink: forces full materialization of every column
         # (a bare .count() would let Catalyst prune the computed ones)
         # without driver-side result transfer.
@@ -145,18 +89,10 @@ def main() -> None:
         ).save()
         return time.perf_counter() - t0
 
-    # Sweep hygiene: a query must not inherit another query's session
-    # state. Some operators tune spark.sql.shuffle.partitions for their
-    # own loop (and restore it), and cached relations from an earlier
-    # query can shift a later query's GC profile — reset both per query.
-    session_width = spark.conf.get("spark.sql.shuffle.partitions")
-
     timings: dict[str, float] = {}
     cold_timings: dict[str, float] = {}
     total = 0.0
     for name in names:
-        spark.conf.set("spark.sql.shuffle.partitions", session_width)
-        spark.catalog.clearCache()
         cold = run_once(name)  # warm-up: JIT + codegen compile
         # Steady state is the MIN of two post-warm-up runs: profile-
         # guided JIT keeps compiling past run 2 for the heavier plans
@@ -178,9 +114,7 @@ def main() -> None:
     # value_cold_position = the pre-re-measure sweep-position number)
     # so round-over-round comparisons can stay protocol-consistent.
     cold_position = {n: timings[n] for n in HEADLINE if n in timings}
-    for name in [n for n in HEADLINE if n in timings]:
-        spark.conf.set("spark.sql.shuffle.partitions", session_width)
-        spark.catalog.clearCache()
+    for name in cold_position:
         dt = min(run_once(name), run_once(name))
         if dt < timings[name]:
             total -= timings[name] - round(dt, 3)
@@ -191,167 +125,48 @@ def main() -> None:
     # JSON line; round 1's line carried every per-query timing (~3 KB)
     # and was truncated past parseability ("parsed": null in
     # BENCH_r01.json). Keep the parsed line compact: headline timings
-    # inline, the full per-query map on stderr.
+    # inline, the full per-query map on stderr and in the artifact.
     print("# full timings: " + json.dumps(timings), file=sys.stderr)
     headline_total = sum(timings[n] for n in HEADLINE if n in timings)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Persist the FULL per-query map (cold first-run AND steady min) to a
-    # committed-able artifact so non-headline regressions are diffable
-    # across rounds (stderr alone is lost once the round closes).
-    full_out = os.environ.get(
-        "SPARK_GRAFT_BENCH_FULL_OUT", str(REPO_ROOT / "BENCH_full_latest.json")
+    sf_value = float(sf) if sf.replace(".", "").isdigit() else sf
+    full_out = Path(
+        os.environ.get("SPARK_GRAFT_BENCH_FULL_OUT") or artifact_path(sf, cpus)
     )
-    calibration_end = calibrate()  # sweep over; pair persisted for normalization
-    calibration_membw_end = calibrate_membw()
-    calibration_fault_end = calibrate_fault()
-    with open(full_out, "w") as fh:
-        json.dump(
+    full_out.parent.mkdir(parents=True, exist_ok=True)
+    full_out.write_text(
+        json.dumps(
             {
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "sf": sf_value,
+                "cpus": cpus,
+                "master": master,
                 "n_queries": len(timings),
                 "steady_sec": timings,
                 "cold_first_run_sec": cold_timings,
                 "headline_cold_position_sec": cold_position,
-                "calibration_start_sec": calibration_start,
-                "calibration_end_sec": calibration_end,
-                "calibration_membw_start_sec": calibration_membw_start,
-                "calibration_membw_end_sec": calibration_membw_end,
-                "calibration_fault_start_sec": calibration_fault_start,
-                "calibration_fault_end_sec": calibration_fault_end,
             },
-            fh,
             indent=1,
             sort_keys=True,
         )
+    )
     print(f"# full timing artifact: {full_out}", file=sys.stderr)
-
-    # Regression tripwire: compare steady per-query times against the
-    # PREVIOUS COMMITTED BENCH_full artifact (git HEAD, not the working
-    # tree — the working tree copy is this run's own output). Sweep
-    # order has been pinned alphabetical since round 7, so per-query
-    # ratios are position-comparable across rounds. Measured run-to-run
-    # noise at sf0.1 is p10-p90 = 0.89-1.30x (SCALE.md §6), so the
-    # tripwire only flags >1.5x AND >0.5s absolute — anything inside
-    # ±30% is protocol noise, not a regression. Disable (e.g. for
-    # scratch runs at another SF) with SPARK_GRAFT_BENCH_NO_TRIPWIRE=1.
-    regressions: dict[str, list[float]] = {}
-    tripwire_compared = False  # distinguish "checked, none" from "not checked"
-    steady_ratio: float | None = None
-    normalized_ratio: float | None = None
-    if not os.environ.get("SPARK_GRAFT_BENCH_NO_TRIPWIRE"):
-        import subprocess
-
-        try:
-            prev_raw = subprocess.run(
-                ["git", "-C", str(REPO_ROOT), "show", "HEAD:BENCH_full_latest.json"],
-                capture_output=True,
-                text=True,
-                check=True,
-            ).stdout
-            prev = json.loads(prev_raw)
-        except Exception as exc:  # no git / artifact not yet committed
-            print(f"# tripwire: no committed baseline ({exc})", file=sys.stderr)
-            prev = None
-        if prev and prev.get("sf") == (
-            float(sf) if sf.replace(".", "").isdigit() else sf
-        ):
-            prev_steady = prev.get("steady_sec", {})
-            tripwire_compared = True
-            # Calibration-normalized total ratio (r8 VERDICT item 6):
-            # raw_ratio = this sweep's steady total vs the committed one
-            # over the INTERSECTION of query names (so an added query
-            # doesn't read as a regression); calib_ratio = this machine's
-            # calibration pair vs the committed pair. normalized =
-            # raw / calib — a value near 1.0 means "same code speed, the
-            # level moved with the machine"; null when the committed
-            # artifact predates the calibration fields.
-            common = sorted(set(timings) & set(prev_steady))
-            if common:
-                raw_ratio = sum(timings[n] for n in common) / max(
-                    sum(prev_steady[n] for n in common), 1e-9
-                )
-                steady_ratio = round(raw_ratio, 3)
-                prev_cal = (
-                    prev.get("calibration_start_sec"),
-                    prev.get("calibration_end_sec"),
-                )
-                if all(prev_cal):
-                    calib_ratio = ((calibration_start + calibration_end) / 2) / (
-                        (prev_cal[0] + prev_cal[1]) / 2
-                    )
-                    normalized_ratio = round(raw_ratio / max(calib_ratio, 1e-9), 3)
-                    print(
-                        f"# steady total vs committed: {raw_ratio:.3f}x raw, "
-                        f"{normalized_ratio:.3f}x calibration-normalized "
-                        f"(machine ratio {calib_ratio:.3f}x)",
-                        file=sys.stderr,
-                    )
-                else:
-                    print(
-                        f"# steady total vs committed: {raw_ratio:.3f}x raw "
-                        "(committed artifact has no calibration pair; "
-                        "normalized ratio unavailable)",
-                        file=sys.stderr,
-                    )
-            for name, dt in sorted(timings.items()):
-                base = prev_steady.get(name)
-                if base and dt > 1.5 * base and dt - base > 0.5:
-                    regressions[name] = [base, dt]
-                    print(
-                        f"# REGRESSION {name}: {base:.3f}s -> {dt:.3f}s "
-                        f"({dt / base:.2f}x vs committed baseline)",
-                        file=sys.stderr,
-                    )
-            print(
-                f"# tripwire: {len(regressions)} quer{'y' if len(regressions) == 1 else 'ies'} "
-                f">1.5x (+0.5s) vs committed baseline of {len(prev_steady)}",
-                file=sys.stderr,
-            )
-        elif prev:
-            print(
-                f"# tripwire: baseline sf={prev.get('sf')} != run sf={sf}; skipped",
-                file=sys.stderr,
-            )
 
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total_time",
                 "value": round(headline_total, 3),
-                "value_cold_position": round(
-                    sum(cold_position.values()), 3
-                ),
+                "value_cold_position": round(sum(cold_position.values()), 3),
                 "unit": "sec",
                 "queries": {n: timings[n] for n in HEADLINE if n in timings},
                 "queries_cold_position": cold_position,
                 "all_queries_total_sec": round(total, 3),
                 "n_queries": len(timings),
-                # null when the tripwire did not actually compare against a
-                # committed baseline (disabled / no artifact / sf mismatch),
-                # so a cross-round reader can tell "checked, none" from
-                # "not checked" (r8 ADVICE item 2).
-                "n_regressions_vs_committed": (
-                    len(regressions) if tripwire_compared else None
-                ),
-                # Scaling-contract legibility (r12 VERDICT item 2): the
-                # RESOLVED core count and master string, so a cross-round
-                # reader can verify $SPARK_GRAFT_CPUS was honored instead
-                # of inferring it from per-query core ratios (which fixed
-                # per-job overhead flattens for sub-second queries).
-                "cpus": spark.sparkContext.defaultParallelism,
-                "master": spark.sparkContext.master,
-                "calibration_start_sec": calibration_start,
-                "calibration_end_sec": calibration_end,
-                "calibration_membw_start_sec": calibration_membw_start,
-                "calibration_membw_end_sec": calibration_membw_end,
-                "calibration_fault_start_sec": calibration_fault_start,
-                "calibration_fault_end_sec": calibration_fault_end,
-                # total-steady ratio vs the committed artifact, raw and
-                # divided by the machine-state calibration ratio; null
-                # when no comparison happened (same rule as the tripwire)
-                "steady_total_ratio_vs_committed": steady_ratio,
-                "calibration_normalized_ratio_vs_committed": normalized_ratio,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                # The resolved core count and master string, so a reader
+                # can check that $SPARK_GRAFT_CPUS was honored.
+                "cpus": cpus,
+                "master": master,
+                "sf": sf_value,
             }
         )
     )

@@ -56,6 +56,7 @@ NON_BEHAVIOR_TESTS = {
     # robustness (fail-open on hostile worlds), not answer verification:
     # quoting a query there must not promote it to behavior-tested
     "test_hostile_worlds.py",
+    "test_ab.py",  # uses a query to exercise tools/ab.py
 }
 
 # Direct transcriptions of a declarative spec (see module docstring).

@@ -12,9 +12,10 @@ Usage: python tools/gate_sim.py [N] [sf_dir] [out.json] [--plain]
 instead of the engine's get_spark — the strictest driver simulation;
 combine with a /tmp cwd so worker-importability bugs surface too.
 
-The per-query result map is written to tools/gate_sim_last.json by
-default; pass a third argument to write elsewhere (e.g.
-tools/gate_sim_full.json for the committed full-depth run).
+The per-query result map is written to the git-ignored
+.bench/gate_sim_last.json by default; pass a third argument to write
+elsewhere (e.g. tools/gate_sim_full.json for the committed full-depth
+run).
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ REPO_ROOT = Path(__file__).resolve().parent.parent
 if str(REPO_ROOT) not in sys.path:
     sys.path.insert(0, str(REPO_ROOT))
 sys.path.insert(0, str(REPO_ROOT / "tests"))
+DEFAULT_OUT = REPO_ROOT / ".bench" / "gate_sim_last.json"
 
 
 def main() -> None:
@@ -87,11 +89,7 @@ def main() -> None:
 
     n_fail = sum(1 for r in results.values() if r["status"] == "FAIL")
     print(json.dumps({"checked": len(results), "failed": n_fail}))
-    out = (
-        Path(args[2])
-        if len(args) > 2
-        else REPO_ROOT / "tools" / "gate_sim_last.json"
-    )
+    out = Path(args[2]) if len(args) > 2 else DEFAULT_OUT
     # parent may not exist for a custom out-path; never lose the
     # per-query map after a full (expensive) run (r8 ADVICE item 3)
     out.parent.mkdir(parents=True, exist_ok=True)

@@ -25,7 +25,7 @@ results on empty/NULL/degenerate input). Results print one line per
 failure plus a JSON summary; exit code 1 if any query crashed.
 
 Usage: python tools/hostile_sweep.py [--streaming] [world ...]
-       (default worlds: all three)
+       (default worlds: all three); statuses go to .bench/hostile_sweep_last.json
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ import pyarrow.parquet as pq
 REPO_ROOT = Path(__file__).resolve().parent.parent
 if str(REPO_ROOT) not in sys.path:
     sys.path.insert(0, str(REPO_ROOT))
+OUT = REPO_ROOT / ".bench" / "hostile_sweep_last.json"
 
 
 def _write(tmp: str, name: str, cols: dict) -> None:
@@ -246,7 +247,7 @@ def main() -> None:
     spark = get_spark("hostile-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Positive per-query evidence, not just failures: the committed
+    # Positive per-query evidence, not just failures: the
     # artifact records EVERY probed query's status per world ("pass",
     # or row count "pass:<n>", or the crash message), so "N/N x 3
     # worlds" is verifiable from the file rather than asserted (r9
@@ -272,8 +273,8 @@ def main() -> None:
         done = len(statuses[world])
         n_fail = len(failures.get(world, {}))
         print(f"# world={world}: {done - n_fail}/{done} pass, {n_fail} crash")
-    out = REPO_ROOT / "tools" / "hostile_sweep_last.json"
-    out.write_text(json.dumps(statuses, indent=1, sort_keys=True))
+    OUT.parent.mkdir(parents=True, exist_ok=True)
+    OUT.write_text(json.dumps(statuses, indent=1, sort_keys=True))
     print(json.dumps({w: len(f) for w, f in failures.items()}))
     if failures:
         sys.exit(1)
