@@ -13,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO_ROOT = Path(__file__).resolve().parent
@@ -44,7 +43,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from dynamodb_stream_processor_2_0_spark.plans import registry
     from dynamodb_stream_processor_2_0_spark.session import get_spark
-    from perfbench.common import Conf
+    from perfbench.batch import Runner
 
     registry._load()
     spark = get_spark("bench")
@@ -72,33 +71,23 @@ def main() -> None:
     names = [n for n in names if "streaming" not in registry.REGISTRY[n].tags]
 
     # Sweep hygiene: a query must not inherit another query's session
-    # state. Every call starts from the start-up conf (a query that sets
-    # a key and leaves it would otherwise change every query swept after
-    # it) and with no cached relations.
-    conf = Conf(spark)
-
-    def run_once(name: str) -> float:
-        conf.restore()
-        spark.catalog.clearCache()
-        # `noop` sink: forces full materialization of every column
-        # (a bare .count() would let Catalyst prune the computed ones)
-        # without driver-side result transfer.
-        t0 = time.perf_counter()
-        registry.REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        return time.perf_counter() - t0
+    # state. Runner.call starts every call from the start-up conf (a
+    # query that sets a key and leaves it would otherwise change every
+    # query swept after it) with no cached relations, and times it to
+    # the end of a `noop` write, which materializes every column without
+    # driver-side result transfer.
+    runner = Runner(spark, sf_dir)
 
     timings: dict[str, float] = {}
     cold_timings: dict[str, float] = {}
     total = 0.0
     for name in names:
-        cold = run_once(name)  # warm-up: JIT + codegen compile
+        cold = runner.call(name, False)  # warm-up: JIT + codegen compile
         # Steady state is the MIN of two post-warm-up runs: profile-
         # guided JIT keeps compiling past run 2 for the heavier plans
         # (dedup_minhash_lsh measured 2.4s on run 2 vs 1.66s settled),
         # and min-of-N is the standard noise-robust point estimate.
-        dt = min(run_once(name), run_once(name))
+        dt = min(runner.call(name, False), runner.call(name, False))
         timings[name] = round(dt, 3)
         cold_timings[name] = round(cold, 3)
         total += dt
@@ -115,7 +104,7 @@ def main() -> None:
     # so round-over-round comparisons can stay protocol-consistent.
     cold_position = {n: timings[n] for n in HEADLINE if n in timings}
     for name in cold_position:
-        dt = min(run_once(name), run_once(name))
+        dt = min(runner.call(name, False), runner.call(name, False))
         if dt < timings[name]:
             total -= timings[name] - round(dt, 3)
             timings[name] = round(dt, 3)
@@ -127,6 +116,7 @@ def main() -> None:
     # BENCH_r01.json). Keep the parsed line compact: headline timings
     # inline, the full per-query map on stderr and in the artifact.
     print("# full timings: " + json.dumps(timings), file=sys.stderr)
+    print(f"# conf leaks (restored before each call): {sorted(runner.leaks)}", file=sys.stderr)
     headline_total = sum(timings[n] for n in HEADLINE if n in timings)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_value = float(sf) if sf.replace(".", "").isdigit() else sf

@@ -78,18 +78,22 @@ def load(label: str, root: Path) -> Side:
     return Side(label, modules)
 
 
-def install(side: Side) -> None:
-    """Leave ``side``'s package in ``sys.modules``, as before :func:`load`."""
-    _pop_package()
+def install(side: Side) -> dict:
+    """Put ``side``'s package in ``sys.modules``; return the one it replaces."""
+    previous = _pop_package()
     sys.modules.update(side.modules)
+    return previous
 
 
 @contextlib.contextmanager
 def swapped(side: Side):
-    """``side``'s package in ``sys.modules`` for the block. Modules it
-    imports lazily meanwhile stay with it; the previous ones come back."""
-    previous = _pop_package()
-    sys.modules.update(side.modules)
+    """``side``'s package in ``sys.modules`` for the block; modules it
+    imports lazily meanwhile stay with it. The session keeps one wire
+    DataSource class per name, so the side's once-per-session memo is
+    cleared: its calls register its own classes again."""
+    previous = install(side)
+    if (wire := side.modules.get(f"{PKG}.sources.python_datasource")) is not None:
+        wire._REGISTERED.clear()
     try:
         yield
     finally:
@@ -111,8 +115,6 @@ def compare(spark, a: Side, b: Side, names: list[str], pairs: int, sf_dir: str) 
     for side in (a, b):
         with swapped(side):
             side.runner = Runner(spark, sf_dir)
-    for side in (a, b):
-        with swapped(side):
             side.failures = gate(spark, names, sf_dir, side.runner.conf)
             if not side.failures:
                 side.operators = {n: operators(side.runner, n) for n in names}
@@ -160,8 +162,7 @@ def report(result: dict, a: Side, b: Side, pairs: int) -> None:
         print(name)
         for side in (a, b):
             s = q.get(side.label)
-            print(f"  {side.label} min {s['min']:.3f} s  median {s['median']:.3f} s"
-                  if s else f"  {side.label} not timed")
+            print(f"  {side.label} " + (f"min {s['min']:.3f} s  median {s['median']:.3f} s" if s else "not timed"))
         if "min_ratio" in q:
             print(f"  min ratio B/A {q['min_ratio']:.3f}; B faster in {q['b_wins']}/{pairs} pairs")
         sides = [side.label for side in (a, b) if side.label in q]
@@ -182,7 +183,6 @@ def main() -> None:
     p.add_argument("--sf", default="/root/testdata/sf0.1")
     args = p.parse_args()
     from dynamodb_stream_processor_2_0_spark.session import get_spark
-
     spark = get_spark("ab")
     env = dict(cpus=spark.sparkContext.defaultParallelism, master=spark.sparkContext.master)
     b = load("B", REPO_ROOT)
