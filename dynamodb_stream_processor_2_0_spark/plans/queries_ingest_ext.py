@@ -15,53 +15,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans.registry import register
+from dynamodb_stream_processor_2_0_spark.sources import formats
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 
 # --- heterogeneous-shard schema harmonization ------------------------------
 
-# Staged once per process per sf_dir (same pattern as the format
-# round-trip queries): three shard generations of the events table —
+# Staged once per process per sf_dir (sources/formats.staged): three
+# shard generations of the events table under one directory —
 #   v0: parquet, PRE-migration (no value column)
 #   v1: CSV, adds value_cents
 #   v2: JSONL, adds a channel column
-_HARMONIZE_STAGE_CACHE: dict[str, tuple[str, str, str]] = {}
-
-
 def _stage_harmonize_shards(spark: SparkSession, sf_dir: str):
-    from dynamodb_stream_processor_2_0_spark.sources import formats
+    def write(base: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+        )
+        gen = F.col("event_id") % 3
+        formats.write_batch(
+            ev.filter(gen == 0).select("event_id", "user_id", "event_type"),
+            f"{base}/v0",
+            fmt="parquet",
+        )
+        formats.write_batch(
+            ev.filter(gen == 1),
+            f"{base}/v1",
+            fmt="csv",
+            header="true",
+        )
+        formats.write_batch(
+            ev.filter(gen == 2).withColumn(
+                "channel", F.concat(F.col("event_type"), F.lit("_ch"))
+            ),
+            f"{base}/v2",
+            fmt="json",
+        )
 
-    if sf_dir in _HARMONIZE_STAGE_CACHE:
-        return _HARMONIZE_STAGE_CACHE[sf_dir]
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-    )
-    gen = F.col("event_id") % 3
-    p0 = formats.staged_tmpdir("harm_v0_")
-    p1 = formats.staged_tmpdir("harm_v1_")
-    p2 = formats.staged_tmpdir("harm_v2_")
-    formats.write_batch(
-        ev.filter(gen == 0).select("event_id", "user_id", "event_type"),
-        p0,
-        fmt="parquet",
-    )
-    formats.write_batch(
-        ev.filter(gen == 1),
-        p1,
-        fmt="csv",
-        header="true",
-    )
-    formats.write_batch(
-        ev.filter(gen == 2).withColumn(
-            "channel", F.concat(F.col("event_type"), F.lit("_ch"))
-        ),
-        p2,
-        fmt="json",
-    )
-    _HARMONIZE_STAGE_CACHE[sf_dir] = (p0, p1, p2)
-    return p0, p1, p2
+    base = formats.staged("harm_", (sf_dir,), write)
+    return f"{base}/v0", f"{base}/v1", f"{base}/v2"
 
 
 @register(
@@ -104,8 +97,6 @@ def source_union_schema_harmonize(
     primitive: each generation contributes its own explicit schema,
     later columns surface as NULL for earlier shards, and the
     coalesce defaults are the single place the contract lives."""
-    from dynamodb_stream_processor_2_0_spark.sources import formats
-
     p0, p1, p2 = _stage_harmonize_shards(spark, sf_dir)
     v0 = formats.read_batch(spark, p0, fmt="parquet").withColumn(
         "schema_version", F.lit(0).cast("long")

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from dynamodb_stream_processor_2_0_spark.config import DEFAULT_CONFIG
 from dynamodb_stream_processor_2_0_spark.operators import disposition as D
 from dynamodb_stream_processor_2_0_spark.plans.registry import register
+from dynamodb_stream_processor_2_0_spark.sources import formats
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 from dynamodb_stream_processor_2_0_spark.sources.formats import staged_tmpdir
 
@@ -99,9 +100,6 @@ def s1_stream_record_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CSV_STAGE_CACHE: dict[str, str] = {}
-
-
 @register(
     "source_csv_roundtrip",
     oracle="""
@@ -124,34 +122,30 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     int cents anyway so the round trip is exact by construction, and
     the timestamp travels as an explicit ISO string (CSV timestamp
     parsing would re-enter session-timezone territory)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from dynamodb_stream_processor_2_0_spark.sources import formats
-
-    if sf_dir not in _CSV_STAGE_CACHE:
-        path = staged_tmpdir(prefix="events_csv_")
-        staged = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss").alias("ts_iso"),
-        )
-        formats.write_batch(staged, path, fmt="csv", header="true")
-        _CSV_STAGE_CACHE[sf_dir] = path
+    path = formats.staged(
+        "events_csv_",
+        (sf_dir,),
+        lambda path: formats.write_batch(
+            load_table(spark, sf_dir, "events").select(
+                "event_id",
+                "user_id",
+                "event_type",
+                F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss").alias("ts_iso"),
+            ),
+            path,
+            fmt="csv",
+            header="true",
+        ),
+    )
     df = formats.read_batch(
         spark,
-        _CSV_STAGE_CACHE[sf_dir],
+        path,
         fmt="csv",
         schema="event_id bigint, user_id bigint, event_type string, "
         "value_cents bigint, ts_iso string",
     )
     return df.filter(F.col("event_type") != "error")
-
-
-_JSONL_STAGE_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -175,25 +169,20 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     side to show predicate evaluation over a row-oriented source (no
     pushdown into JSON — the scan cost is the parse, which is why
     parquet is the primary format)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from dynamodb_stream_processor_2_0_spark.sources import formats
-
-    if sf_dir not in _JSONL_STAGE_CACHE:
-        path = staged_tmpdir(prefix="docs_jsonl_")
-        formats.write_batch(
+    path = formats.staged(
+        "docs_jsonl_",
+        (sf_dir,),
+        lambda path: formats.write_batch(
             load_table(spark, sf_dir, "documents").select(
                 "doc_id", "lang", "source", "n_chars", "text"
             ),
             path,
             fmt="json",
-        )
-        _JSONL_STAGE_CACHE[sf_dir] = path
+        ),
+    )
     df = formats.read_batch(
         spark,
-        _JSONL_STAGE_CACHE[sf_dir],
+        path,
         fmt="json",
         schema="doc_id bigint, lang string, source string, n_chars bigint, text string",
     )
@@ -202,29 +191,24 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PARTITIONED_STAGE_CACHE: dict[str, str] = {}
-
-
 def _stage_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """events written partitionBy(event_type): one directory per type,
     shared by the static- and dynamic-pruning queries."""
-    from dynamodb_stream_processor_2_0_spark.sources import formats
-
-    if sf_dir not in _PARTITIONED_STAGE_CACHE:
-        import tempfile
-
-        path = staged_tmpdir(prefix="events_part_")
-        staged = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-            "event_type",
-        )
-        formats.write_batch(
-            staged, path, fmt="parquet", partition_by=["event_type"]
-        )
-        _PARTITIONED_STAGE_CACHE[sf_dir] = path
-    return _PARTITIONED_STAGE_CACHE[sf_dir]
+    return formats.staged(
+        "events_part_",
+        (sf_dir,),
+        lambda path: formats.write_batch(
+            load_table(spark, sf_dir, "events").select(
+                "event_id",
+                "user_id",
+                F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+                "event_type",
+            ),
+            path,
+            fmt="parquet",
+            partition_by=["event_type"],
+        ),
+    )
 
 
 @register(
@@ -249,8 +233,6 @@ def source_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions. ts is intentionally excluded from the projection: the
     staged copy does not re-apply the nanos rebuild, and the query is
     about the access path, not the timestamp column."""
-    from dynamodb_stream_processor_2_0_spark.sources import formats
-
     path = _stage_partitioned_events(spark, sf_dir)
     # explicit schema: no footer-inference pass at scale, and an empty
     # staged dataset (zero partition dirs) still reads as an empty
@@ -264,9 +246,6 @@ def source_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "event_type", "value_cents"
     )
-
-
-_ORC_STAGE_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -287,23 +266,21 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both filters reach the ORC scan as PushedFilters (In + IsNotNull;
     the modulo evaluates post-scan) — same pushdown contract as parquet,
     proven by the round trip hashing equal to the parquet-side oracle."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from dynamodb_stream_processor_2_0_spark.sources import formats
-
-    if sf_dir not in _ORC_STAGE_CACHE:
-        path = staged_tmpdir(prefix="events_orc_")
-        staged = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-        )
-        formats.write_batch(staged, path, fmt="orc")
-        _ORC_STAGE_CACHE[sf_dir] = path
-    df = formats.read_batch(spark, _ORC_STAGE_CACHE[sf_dir], fmt="orc")
+    path = formats.staged(
+        "events_orc_",
+        (sf_dir,),
+        lambda path: formats.write_batch(
+            load_table(spark, sf_dir, "events").select(
+                "event_id",
+                "user_id",
+                "event_type",
+                F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+            ),
+            path,
+            fmt="orc",
+        ),
+    )
+    df = formats.read_batch(spark, path, fmt="orc")
     return df.filter(
         F.col("event_type").isin("purchase", "click") & (F.col("user_id") % 3 == 0)
     ).select("event_id", "user_id", "event_type", "value_cents")
@@ -602,8 +579,6 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     "retried tasks are invisible by construction (index.js:570-611).",
 )
 def sink_python_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window, functions as F
 
     from dynamodb_stream_processor_2_0_spark.sources import (
@@ -677,8 +652,6 @@ def source_dynamic_partition_pruning(
     HAVING into a static partition filter; the broadcast exchange is
     reused as the pruning filter (`ReusedExchange` under the scan's
     dynamicpruning subquery — free at runtime)."""
-    from dynamodb_stream_processor_2_0_spark.sources import formats
-
     path = _stage_partitioned_events(spark, sf_dir)
     fact = formats.read_batch(
         spark,
@@ -839,9 +812,6 @@ def cdc_retraction_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVOLVE_STAGE_CACHE: dict[str, tuple[str, str]] = {}
-
-
 @register(
     "source_schema_evolution_merge",
     oracle="""
@@ -866,27 +836,24 @@ _EVOLVE_STAGE_CACHE: dict[str, tuple[str, str]] = {}
     "(index.js:34-63 record parse) to evolving wire schemas.",
 )
 def source_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
-    if sf_dir not in _EVOLVE_STAGE_CACHE:
-        base = tempfile.mkdtemp(prefix="events_evolve_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
+    def write(base: str) -> None:
         events = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
             F.round(F.col("value") * 100).cast("long").alias("value_cents"),
             "event_type",
         )
-        v1, v2 = f"{base}/v1", f"{base}/v2"
         events.filter(F.col("event_id") % 2 == 0).drop("event_type").write.mode(
             "overwrite"
-        ).parquet(v1)
-        events.filter(F.col("event_id") % 2 != 0).write.mode("overwrite").parquet(v2)
-        _EVOLVE_STAGE_CACHE[sf_dir] = (v1, v2)
-    v1, v2 = _EVOLVE_STAGE_CACHE[sf_dir]
-    merged = spark.read.option("mergeSchema", "true").parquet(v1, v2)
+        ).parquet(f"{base}/v1")
+        events.filter(F.col("event_id") % 2 != 0).write.mode("overwrite").parquet(
+            f"{base}/v2"
+        )
+
+    base = formats.staged("events_evolve_", (sf_dir,), write)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        f"{base}/v1", f"{base}/v2"
+    )
     return merged.select(
         "event_id",
         "user_id",

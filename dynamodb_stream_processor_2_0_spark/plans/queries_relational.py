@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans.registry import register
+from dynamodb_stream_processor_2_0_spark.sources import formats
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 
 
@@ -1640,9 +1641,6 @@ def window_function_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_STAGE_CACHE: dict[str, tuple[str, str]] = {}
-
-
 @register(
     "bucketed_colocated_join",
     oracle="""
@@ -1670,33 +1668,30 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SelectedBucketsCount and no exchange below the join — asserted in
     tests. Bucketed staging happens once per (process, sf_dir); table
     names carry an sf digest so concurrent scale factors don't collide
-    in a shared session catalog."""
+    in a shared session catalog. Catalog entries belong to the session,
+    so a session that lacks the tables writes them again."""
     import hashlib
-    import tempfile
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     t_orders, t_lineitem = f"b_orders_{key}", f"b_lineitem_{key}"
-    if sf_dir not in _BUCKETED_STAGE_CACHE or not spark.catalog.tableExists(
-        t_orders
-    ):
-        base = tempfile.mkdtemp(prefix="bucketed_")
-        (
-            load_table(spark, sf_dir, "orders")
-            .write.bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", f"{base}/{t_orders}")
-            .mode("overwrite")
-            .saveAsTable(t_orders)
-        )
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .write.bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", f"{base}/{t_lineitem}")
-            .mode("overwrite")
-            .saveAsTable(t_lineitem)
-        )
-        _BUCKETED_STAGE_CACHE[sf_dir] = (t_orders, t_lineitem)
+
+    def write(base: str) -> None:
+        for table, name, col in (
+            ("orders", t_orders, "o_orderkey"),
+            ("lineitem", t_lineitem, "l_orderkey"),
+        ):
+            (
+                load_table(spark, sf_dir, table)
+                .write.bucketBy(8, col)
+                .sortBy(col)
+                .option("path", f"{base}/{name}")
+                .mode("overwrite")
+                .saveAsTable(name)
+            )
+
+    base = formats.staged("bucketed_", (sf_dir,), write)
+    if not spark.catalog.tableExists(t_orders):
+        write(base)
     orders = spark.table(t_orders)
     li = spark.table(t_lineitem)
     return (

@@ -38,6 +38,11 @@ sink.
   session cannot see Python data sources registered on the parent.
 - The streaming DataFrame is built inside the scope, because casts bind
   the session time zone when the DataFrame is built, not at ``start()``.
+- Staged input: the replay chunks a query reads (``replay.stage_event_chunks``
+  and its hashed and wire-JSONL siblings, the near-dup document chunks)
+  are written once per process per (sf_dir, chunks) through
+  ``sources.formats.staged`` and deleted at interpreter exit; sink
+  outputs and checkpoints are fresh per run.
 - No partial results: a query that has not drained within its timeout
   (180 s; 240 s for the outer join, 300 s for near-dup arrival) is
   stopped and ``TimeoutError`` is raised instead of reading its sink.
@@ -56,6 +61,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans.registry import register
+from dynamodb_stream_processor_2_0_spark.sources import formats
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 from dynamodb_stream_processor_2_0_spark.sources.formats import staged_tmpdir
 from dynamodb_stream_processor_2_0_spark.streaming.runner import (
@@ -1382,19 +1388,20 @@ def streaming_neardup_arrival_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from dynamodb_stream_processor_2_0_spark.operators import dedup
 
-    docs = load_table(spark, sf_dir, "documents")
-    n = docs.count()
-    per = -(-n // 4)
-    src = staged_tmpdir(prefix="neardup_src_")
-    for k in range(4):
-        (
-            docs.filter(
-                (F.col("doc_id") >= k * per) & (F.col("doc_id") < (k + 1) * per)
+    def write(src: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        per = -(-docs.count() // 4)
+        for k in range(4):
+            (
+                docs.filter(
+                    (F.col("doc_id") >= k * per) & (F.col("doc_id") < (k + 1) * per)
+                )
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(f"{src}/chunk={k}")
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{src}/chunk={k}")
-        )
+
+    src = formats.staged("neardup_src_", (sf_dir,), write)
     state_dir = staged_tmpdir(prefix="neardup_state_")
     out_dir = staged_tmpdir(prefix="neardup_out_")
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans.registry import register
+from dynamodb_stream_processor_2_0_spark.sources import formats
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 
 
@@ -160,11 +161,12 @@ def recursive_order_chain_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
       the ranked side is read shuffle-free. coalesce(1) and the
       broadcast hint are never emitted on this path — either would be
       the 100 TB bottleneck (single write task / OOM broadcast).
+
+    The ranked side is staged once per process per (sf_dir, layout);
+    the bucketed table is named by an sf digest and written again when
+    the session catalog lacks it.
     """
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
+    import hashlib
 
     orders = load_table(spark, sf_dir, "orders")
     # |ranked| <= |orders| (rn <= 8 prunes further); the column-less
@@ -189,20 +191,32 @@ def recursive_order_chain_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    ranked = (
-        orders.select(
+    small = n_orders <= cap
+    # Large path: bucket on o_custkey so every fixpoint level reuses the
+    # written layout (walk frontier shuffles to it; ranked never does).
+    n_buckets = max(1, min(2048, n_orders // 500_000 + 1))
+    tbl = f"order_chain_ranked_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+
+    def write(path: str) -> None:
+        w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+        ranked = orders.select(
             "o_custkey",
             F.row_number().over(w).alias("rn"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        ).filter(F.col("rn") <= 8)
+        if small:
+            ranked.coalesce(1).write.mode("overwrite").parquet(path)
+            return
+        (
+            ranked.write.mode("overwrite")
+            .option("path", path)
+            .bucketBy(n_buckets, "o_custkey")
+            .sortBy("o_custkey", "rn")
+            .saveAsTable(tbl)
         )
-        .filter(F.col("rn") <= 8)
-    )
 
-    path = tempfile.mkdtemp(prefix="order_chain_ranked_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    if n_orders <= cap:
-        ranked.coalesce(1).write.mode("overwrite").parquet(path)
+    path = formats.staged("order_chain_ranked_", (sf_dir, small), write)
+    if small:
         return spark.sql(
             _RECURSIVE_WALK_STEP.format(
                 extra_ctes="",
@@ -211,17 +225,8 @@ def recursive_order_chain_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 step_hint="/*+ BROADCAST(o) */",
             )
         )
-    # Large path: bucket on o_custkey so every fixpoint level reuses the
-    # written layout (walk frontier shuffles to it; ranked never does).
-    n_buckets = max(1, min(2048, n_orders // 500_000 + 1))
-    tbl = f"order_chain_ranked_{uuid.uuid4().hex}"
-    (
-        ranked.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, "o_custkey")
-        .sortBy("o_custkey", "rn")
-        .saveAsTable(tbl)
-    )
+    if not spark.catalog.tableExists(tbl):
+        write(path)
     return spark.sql(
         _RECURSIVE_WALK_STEP.format(
             extra_ctes="", ranked=tbl, anchor_hint="", step_hint=""

@@ -155,27 +155,22 @@ def parse_new_image(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFram
     )
 
 
-_WIRE_CACHE: dict[str, str] = {}
-
-
 def staged_wire(spark, sf_dir: str) -> DataFrame:
     """The synthetic events rendered in the wire format ONCE per
     (process, sf_dir) and staged to parquet — the connector's real
     input is bus/file-delivered wire records, so reading staged records
     is the honest parse-side workload (the encode is test scaffolding).
     Partitioned so the parse parallelizes regardless of source layout."""
-    import tempfile
-
     from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
+    from dynamodb_stream_processor_2_0_spark.sources.formats import staged
 
-    if sf_dir not in _WIRE_CACHE:
-        path = tempfile.mkdtemp(prefix="ddb_wire_")
+    def write(path: str) -> None:
         events = load_table(spark, sf_dir, "events").repartition(
             spark.sparkContext.defaultParallelism
         )
         events_as_stream_json(events).write.mode("overwrite").parquet(path)
-        _WIRE_CACHE[sf_dir] = path
-    return spark.read.parquet(_WIRE_CACHE[sf_dir])
+
+    return spark.read.parquet(staged("ddb_wire_", (sf_dir,), write))
 
 
 def events_as_stream_json(events: DataFrame) -> DataFrame:

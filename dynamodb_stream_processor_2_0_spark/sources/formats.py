@@ -12,9 +12,22 @@ Scale notes: every reader takes an explicit schema — at 100 TB schema
 inference is a full extra pass over the data (and for CSV/JSON is also
 a correctness hazard). The writer partitions by columns so downstream
 scans prune; `maxRecordsPerFile` bounds file sizes for object stores.
+
+Scratch files: every staged copy of a source table (replay chunks, wire
+renderings, format round-trips, bucketed tables) goes through
+``staged``, which writes it once per process and key; every scratch
+directory (staged copies, sink outputs, checkpoints) comes from
+``staged_tmpdir`` and is deleted by one handler at interpreter exit.
+No other package module creates or deletes temp directories.
 """
 
 from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
+import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -74,45 +87,49 @@ def write_batch(
     writer.save(path)
 
 
-# All staging dirs created by staged_tmpdir, cleaned by ONE atexit
-# handler, registered unconditionally at import (a no-op on an empty
-# list). A single module-level registry instead of one atexit entry
-# per call keeps long-lived driver processes from accumulating
-# unbounded atexit entries, and makes the cleanup order explicit:
-# nothing is deleted until the one handler runs, so a Spark read of a
-# cached staged path can never race an earlier per-dir hook during
-# interpreter shutdown. Import-time registration also removes the
-# check-then-set race a lazy flag would have if plans ever staged from
-# worker threads (list.append itself is atomic under the GIL).
+# Every dir staged_tmpdir made, deleted by ONE exit handler: nothing is
+# deleted before it runs, so a Spark read of a memoized path never races
+# a deletion, and long-lived drivers do not grow their atexit list.
+# _STAGED maps (prefix, *key) to the copy ``staged`` wrote; the lock
+# makes threads that build the same staging query wait for one write
+# instead of racing two into one table name.
 _STAGED_DIRS: list[str] = []
+_STAGED: dict[tuple, str] = {}
+_STAGED_LOCK = threading.RLock()
 
 
+@atexit.register
 def _cleanup_staged_dirs() -> None:
-    import shutil
-
     for path in _STAGED_DIRS:
         shutil.rmtree(path, ignore_errors=True)
     _STAGED_DIRS.clear()
-
-
-import atexit as _atexit  # noqa: E402  (after the handler it registers)
-
-_atexit.register(_cleanup_staged_dirs)
+    _STAGED.clear()
 
 
 def staged_tmpdir(prefix: str) -> str:
-    """mkdtemp tracked for a single atexit cleanup.
+    """A fresh temp directory, deleted at interpreter exit.
 
-    Every staging directory the query plans materialize (format
-    round-trips, harmonization shards, sink outputs, checkpoints) is
-    process-scoped scratch: callers cache the path for the life of the
-    process, so the only correct deletion point is interpreter exit.
-    Tracking the dirs in one registry keeps staged shard copies from
-    leaking across sessions without registering one atexit hook per
-    call.
-    """
-    import tempfile
-
+    For per-call scratch (sink outputs, checkpoints) and as the home of
+    every ``staged`` copy; the one exit handler deletes them all."""
     path = tempfile.mkdtemp(prefix=prefix)
     _STAGED_DIRS.append(path)
     return path
+
+
+def staged(prefix: str, key: tuple, write: Callable[[str], object]) -> str:
+    """Path of a staged copy, written once per process and key.
+
+    The first call for ``(prefix, *key)`` makes a ``staged_tmpdir``
+    and calls ``write(path)`` to fill it; later calls return that path.
+    ``prefix`` names the staging kind and ``key`` must hold every
+    argument that shapes the files (source dir, chunk or shard count).
+    The source is keyed by path, so tables rewritten in place keep their
+    old copy until exit. A failed ``write`` memoizes nothing; its
+    directory is still deleted at exit."""
+    k = (prefix, *key)
+    with _STAGED_LOCK:
+        if k not in _STAGED:
+            path = staged_tmpdir(prefix)
+            write(path)
+            _STAGED[k] = path
+        return _STAGED[k]

@@ -165,7 +165,6 @@ class DynamoDBWireReader(DataSourceReader):
 
 
 _REGISTERED: set[int] = set()
-_JSONL_STAGE: dict[str, str] = {}
 
 
 def register_wire_datasource(spark) -> None:
@@ -199,20 +198,18 @@ def register_wire_datasource(spark) -> None:
 
 def staged_wire_jsonl(spark, sf_dir: str, n_shards: int = 8) -> str:
     """Stage the synthetic events as sharded wire JSONL once per
-    (process, sf_dir): ``shard = event_id % n_shards`` models the
-    stream's hash-partitioned shards; encode is test scaffolding, the
-    source under test is the read path."""
-    if sf_dir not in _JSONL_STAGE:
-        import tempfile
+    (process, sf_dir, n_shards): ``shard = event_id % n_shards`` models
+    the stream's hash-partitioned shards; encode is test scaffolding,
+    the source under test is the read path."""
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
+    from dynamodb_stream_processor_2_0_spark.sources.dynamodb_stream import (
+        events_as_stream_json,
+    )
+    from dynamodb_stream_processor_2_0_spark.sources.formats import staged
 
-        from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
-        from dynamodb_stream_processor_2_0_spark.sources.dynamodb_stream import (
-            events_as_stream_json,
-        )
-
-        path = tempfile.mkdtemp(prefix="ddb_wire_jsonl_")
+    def write(path: str) -> None:
         events = load_table(spark, sf_dir, "events")
         (
             events_as_stream_json(events)
@@ -223,8 +220,8 @@ def staged_wire_jsonl(spark, sf_dir: str, n_shards: int = 8) -> str:
             .partitionBy("shard")
             .text(path)
         )
-        _JSONL_STAGE[sf_dir] = path
-    return _JSONL_STAGE[sf_dir]
+
+    return staged("ddb_wire_jsonl_", (sf_dir, n_shards), write)
 
 
 class WireChunkPartition(InputPartition):
@@ -318,35 +315,24 @@ class WireReplayStreamReader(DataSourceStreamReader):
         pass
 
 
-_CHUNK_STAGE: dict[str, str] = {}
-
-
 def staged_wire_chunks_jsonl(spark, sf_dir: str, chunks: int = 4) -> str:
     """Stage wire records as ts-ordered JSONL chunk dirs once per
-    (process, sf_dir): chunk i holds the i-th global (ts, event_id)
-    slice, so replay order == event-time order (mirrors
-    streaming/replay.py's parquet staging)."""
-    if sf_dir not in _CHUNK_STAGE:
-        import tempfile
+    (process, sf_dir, chunks): chunk i holds the i-th global
+    (ts, event_id) slice of streaming/replay.py's chunker, so replay
+    order == event-time order."""
+    from pyspark.sql import functions as F
 
-        from pyspark.sql import functions as F
+    from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
+    from dynamodb_stream_processor_2_0_spark.sources.dynamodb_stream import (
+        events_as_stream_json,
+    )
+    from dynamodb_stream_processor_2_0_spark.sources.formats import staged
+    from dynamodb_stream_processor_2_0_spark.streaming.replay import (
+        ts_ordered_chunks,
+    )
 
-        from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
-        from dynamodb_stream_processor_2_0_spark.sources.dynamodb_stream import (
-            events_as_stream_json,
-        )
-
-        path = tempfile.mkdtemp(prefix="ddb_wire_chunks_")
-        events = load_table(spark, sf_dir, "events")
-        total = events.count()
-        per = (total + chunks - 1) // chunks
-        ordered = (
-            events.coalesce(1)
-            .sortWithinPartitions("ts", "event_id")
-            .withColumn(
-                "chunk", (F.monotonically_increasing_id() / per).cast("int")
-            )
-        )
+    def write(path: str) -> None:
+        ordered = ts_ordered_chunks(load_table(spark, sf_dir, "events"), chunks)
         wire = events_as_stream_json(ordered)  # (event_id, record_json)
         (
             wire.join(ordered.select("event_id", "chunk"), "event_id")
@@ -355,8 +341,8 @@ def staged_wire_chunks_jsonl(spark, sf_dir: str, chunks: int = 4) -> str:
             .partitionBy("chunk")
             .text(path)
         )
-        _CHUNK_STAGE[sf_dir] = path
-    return _CHUNK_STAGE[sf_dir]
+
+    return staged("ddb_wire_chunks_", (sf_dir, chunks), write)
 
 
 # ---------------------------------------------------------------------------

@@ -14,35 +14,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
-from dynamodb_stream_processor_2_0_spark.sources.formats import staged_tmpdir
+from dynamodb_stream_processor_2_0_spark.sources.formats import staged
 
 
-def stage_event_chunks(
-    spark: SparkSession, sf_dir: str, chunks: int = 4, out_dir: str | None = None
-) -> str:
-    """Write events into ``chunks`` single-file parquet slices in ts
-    order (slice i = rows with ntile i) so arrival order == event-time
-    order during replay."""
-    out_dir = out_dir or staged_tmpdir("events_replay_")
-    events = load_table(spark, sf_dir, "events")
-    total = events.count()
-    per = (total + chunks - 1) // chunks
+def ts_ordered_chunks(events: DataFrame, chunks: int) -> DataFrame:
+    """``events`` plus an int ``chunk`` column: chunk i holds the i-th
+    of ``chunks`` equal slices in global (ts, event_id) order."""
+    per = (events.count() + chunks - 1) // chunks
     # a single sorted partition makes monotonically_increasing_id a true
     # global ts-order rank, so chunk boundaries are exact.
-    ordered = (
+    return (
         events.coalesce(1)
         .sortWithinPartitions("ts", "event_id")
         .withColumn("chunk", (F.monotonically_increasing_id() / per).cast("int"))
     )
+
+
+def _write_chunks(tagged: DataFrame, chunks: int, out_dir: str) -> None:
+    # sequential writes give strictly increasing mtimes, so the file
+    # stream replays chunk 0..n-1 in this order
     for i in range(chunks):
         (
-            ordered.filter(F.col("chunk") == i)
+            tagged.filter(F.col("chunk") == i)
             .drop("chunk")
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(f"{out_dir}/chunk={i}")
         )
-    return out_dir
+
+
+def stage_event_chunks(spark: SparkSession, sf_dir: str, chunks: int = 4) -> str:
+    """Write events into ``chunks`` single-file parquet slices in ts
+    order (slice i = rows with ntile i) so arrival order == event-time
+    order during replay. Staged once per process per (sf_dir, chunks)."""
+    return staged(
+        "events_replay_",
+        (sf_dir, chunks),
+        lambda out_dir: _write_chunks(
+            ts_ordered_chunks(load_table(spark, sf_dir, "events"), chunks),
+            chunks,
+            out_dir,
+        ),
+    )
 
 
 def read_event_stream(
@@ -63,30 +76,25 @@ def read_event_stream(
 
 
 def stage_event_chunks_hashed(
-    spark: SparkSession, sf_dir: str, chunks: int = 4, out_dir: str | None = None
+    spark: SparkSession, sf_dir: str, chunks: int = 4
 ) -> str:
     """Write events into ``chunks`` slices keyed by a deterministic hash
     of event_id — arrival order is then UNCORRELATED with event time, so
     replaying one chunk per micro-batch genuinely exercises watermark
     late-data drops (the ts-ordered staging never produces late rows).
     The same md5-derived assignment is expressible in the DuckDB oracle,
-    which makes the drop accounting itself oracle-checkable."""
-    out_dir = out_dir or staged_tmpdir("events_hashed_")
-    events = load_table(spark, sf_dir, "events")
+    which makes the drop accounting itself oracle-checkable. Staged once
+    per process per (sf_dir, chunks)."""
     chunk = (
         F.conv(F.substring(F.md5(F.concat(F.lit("late:"), F.col("event_id"))), 1, 8), 16, 10)
         .cast("bigint") % chunks
     )
-    tagged = events.withColumn("chunk", chunk)
-    # sequential writes give strictly increasing mtimes, so the file
-    # stream replays chunk 0..n-1 in this order (same contract the
-    # ts-ordered staging relies on)
-    for i in range(chunks):
-        (
-            tagged.filter(F.col("chunk") == i)
-            .drop("chunk")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/chunk={i}")
-        )
-    return out_dir
+    return staged(
+        "events_hashed_",
+        (sf_dir, chunks),
+        lambda out_dir: _write_chunks(
+            load_table(spark, sf_dir, "events").withColumn("chunk", chunk),
+            chunks,
+            out_dir,
+        ),
+    )

@@ -17,6 +17,10 @@ SF_DIR_MEDIUM = os.environ.get("SPARK_GRAFT_TEST_SF_MEDIUM", "/root/testdata/sf0
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # get_spark pins -Xms to the heap ceiling; its 8g default kept a
+    # ~10 GB resident JVM through the whole suite. bench.py's sf0.1
+    # sweep runs in 4g.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     from dynamodb_stream_processor_2_0_spark.session import get_spark
 
     spark = get_spark("tests")

@@ -2,13 +2,20 @@
 
 from __future__ import annotations
 
+import ast
+import os
+import pathlib
+import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from dynamodb_stream_processor_2_0_spark.sources import formats
 from dynamodb_stream_processor_2_0_spark.sources.catalog import TABLES, load_table
 from dynamodb_stream_processor_2_0_spark.sources.formats import read_batch, write_batch
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "dynamodb_stream_processor_2_0_spark"
 
 
 @pytest.fixture(scope="module")
@@ -139,3 +146,168 @@ def test_warm_loads_and_builds_run_no_job(spark, sf_dir):
     before = dag.nextJobId()
     load_and_build_all()
     assert dag.nextJobId() == before
+
+
+# Every registered query that stages a copy of a source table: the
+# batch ones stage while they build, the streaming ones while they run.
+BATCH_STAGING = (
+    "s1_stream_record_parse",
+    "bucketed_colocated_join",
+    "recursive_order_chain_walk",
+    "source_csv_roundtrip",
+    "source_jsonl_roundtrip",
+    "source_partitioned_pruning",
+    "source_dynamic_partition_pruning",
+    "source_orc_roundtrip",
+    "source_schema_evolution_merge",
+    "source_union_schema_harmonize",
+    "source_python_datasource",
+    "source_python_pushdown_pruning",
+)
+STREAMING_STAGING = (
+    "streaming_delivery_e2e",
+    "streaming_stream_join_e2e",
+    "streaming_dedup_watermark_e2e",
+    "streaming_window_agg_e2e",
+    "streaming_sessionize_e2e",
+    "streaming_static_enrich_e2e",
+    "streaming_foreachbatch_sink_e2e",
+    "streaming_incremental_rollup_e2e",
+    "streaming_python_source_e2e",
+    "streaming_python_sink_e2e",
+    "streaming_outer_join_e2e",
+    "streaming_chained_window_agg_e2e",
+    "streaming_late_data_audit_e2e",
+    "streaming_rocksdb_state_e2e",
+    "streaming_state_introspection",
+    "streaming_neardup_arrival_e2e",
+)
+
+# The kind prefix of every staged copy, and the prefixes of the
+# per-run sink and checkpoint dirs those queries make.
+STAGING_KINDS = (
+    "ddb_wire_",
+    "ddb_wire_jsonl_",
+    "ddb_wire_chunks_",
+    "bucketed_",
+    "order_chain_ranked_",
+    "events_csv_",
+    "docs_jsonl_",
+    "events_part_",
+    "events_orc_",
+    "events_evolve_",
+    "harm_",
+    "events_replay_",
+    "events_hashed_",
+    "neardup_src_",
+)
+RUN_PREFIXES = ("envelope_", "pysink_ckpt_", "state_introspect_ckpt_", "neardup_")
+
+
+def _tmp_dirs(prefixes) -> set[str]:
+    root = tempfile.gettempdir()
+    return {
+        os.path.join(root, e)
+        for e in os.listdir(root)
+        if e.startswith(prefixes)
+    }
+
+
+def _of_kind(dirs, kind: str) -> set[str]:
+    # mkdtemp appends 8 characters, so "ddb_wire_" does not match
+    # "ddb_wire_jsonl_<8>"
+    return {d for d in dirs if len(os.path.basename(d)) == len(kind) + 8
+            and os.path.basename(d).startswith(kind)}
+
+
+def test_staging_writes_each_copy_once_and_tracks_every_dir(spark, sf_dir, tmp_path):
+    """Every staged copy is written once per process and key into a dir
+    the exit handler deletes: a fresh copy of the tables gives each kind
+    exactly one new dir, a second call returns its path, and every dir
+    the staging queries leave is in ``formats._STAGED_DIRS``."""
+    from dynamodb_stream_processor_2_0_spark.plans import (
+        queries_ingest_ext,
+        queries_pipeline,
+        registry,
+    )
+    from dynamodb_stream_processor_2_0_spark.sources import (
+        dynamodb_stream as DS,
+        python_datasource as PDS,
+    )
+    from dynamodb_stream_processor_2_0_spark.streaming import replay
+
+    # a path no earlier test staged from, so every memo entry is cold
+    fresh = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, fresh)
+    stagers = (
+        lambda: replay.stage_event_chunks(spark, fresh, chunks=4),
+        lambda: replay.stage_event_chunks_hashed(spark, fresh, chunks=4),
+        lambda: PDS.staged_wire_jsonl(spark, fresh, n_shards=8),
+        lambda: PDS.staged_wire_chunks_jsonl(spark, fresh, chunks=4),
+        lambda: queries_pipeline._stage_partitioned_events(spark, fresh),
+        lambda: queries_ingest_ext._stage_harmonize_shards(spark, fresh),
+        lambda: DS.staged_wire(spark, fresh).inputFiles(),
+    )
+    before = _tmp_dirs(STAGING_KINDS + RUN_PREFIXES)
+    first = [stage() for stage in stagers]
+    for name in BATCH_STAGING + STREAMING_STAGING + BATCH_STAGING:
+        registry.get(name).fn(spark, fresh)
+    assert [stage() for stage in stagers] == first
+
+    new = _tmp_dirs(STAGING_KINDS + RUN_PREFIXES) - before
+    assert new <= set(formats._STAGED_DIRS), sorted(new - set(formats._STAGED_DIRS))
+    for kind in STAGING_KINDS:
+        assert len(_of_kind(new, kind)) == 1, (kind, sorted(_of_kind(new, kind)))
+
+
+def test_staged_writes_once_under_racing_threads():
+    """Threads that miss the memo together still run one write and all
+    get its path."""
+    import sys
+    import threading
+    import time
+
+    writes = []
+
+    def write(path):
+        writes.append(path)
+        time.sleep(0.01)
+
+    key = (f"race-{os.getpid()}-{time.time_ns()}",)
+    paths = []
+    threads = [
+        threading.Thread(target=lambda: paths.append(formats.staged("race_", key, write)))
+        for _ in range(min(64, 4 * (os.cpu_count() or 1)))
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(writes) == 1 and paths == writes * len(threads)
+
+
+def test_only_formats_makes_temp_dirs():
+    """Scratch dirs are made and deleted in one place: no package module
+    but sources/formats.py imports tempfile or atexit."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        if rel == "sources/formats.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            else:
+                continue
+            offenders += [
+                f"{rel}:{node.lineno} {n}" for n in names if n in ("tempfile", "atexit")
+            ]
+    assert not offenders, offenders

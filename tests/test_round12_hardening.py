@@ -16,7 +16,6 @@ this fails before the oracle gate does.
 from __future__ import annotations
 
 import sys
-import tempfile
 from pathlib import Path
 
 import pytest
@@ -57,10 +56,9 @@ def test_mra_arms_identical_real_data(spark):
 @pytest.mark.parametrize(
     "build", [build_degenerate, build_nulls, build_empty], ids=["degenerate", "nulls", "empty"]
 )
-def test_mra_arms_identical_hostile(spark, build):
-    tmp = tempfile.mkdtemp(prefix="mra_eq_")
-    build(tmp)
-    driver_rows, dist_rows = _both_arms(spark, tmp)
+def test_mra_arms_identical_hostile(spark, build, tmp_path):
+    build(str(tmp_path))
+    driver_rows, dist_rows = _both_arms(spark, str(tmp_path))
     assert driver_rows == dist_rows
 
 

@@ -51,6 +51,14 @@ DRIVER_SIDE_ALLOWLIST = {
     # driver (pure Catalyst expressions, no UDF); the `dedup` module
     # reference is resolved before any task is serialized
     ("plans/queries_dedup.py", "prefix_pairs", "dedup"),
+    # sources.formats.staged write callbacks: called once in the driver
+    # to fill a staging directory, never shipped to workers
+    ("plans/queries_ingest_ext.py", "write", "formats"),
+    ("plans/queries_ingest_ext.py", "write", "load_table"),
+    ("plans/queries_pipeline.py", "write", "load_table"),
+    ("plans/queries_relational.py", "write", "load_table"),
+    ("plans/queries_streaming_batch.py", "write", "load_table"),
+    ("sources/dynamodb_stream.py", "write", "events_as_stream_json"),
 }
 
 

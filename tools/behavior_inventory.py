@@ -57,6 +57,7 @@ NON_BEHAVIOR_TESTS = {
     # quoting a query there must not promote it to behavior-tested
     "test_hostile_worlds.py",
     "test_ab.py",  # uses a query to exercise tools/ab.py
+    "test_formats.py",  # builds queries to exercise load_table and staging
 }
 
 # Direct transcriptions of a declarative spec (see module docstring).

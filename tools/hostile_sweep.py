@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import shutil
 import sys
 import tempfile
 import traceback
@@ -256,20 +257,23 @@ def main() -> None:
     failures: dict[str, dict[str, str]] = {}
     for world in worlds:
         tmp = tempfile.mkdtemp(prefix=f"hostile_{world}_")
-        WORLDS[world](tmp)
-        statuses[world] = {}
-        for name in registry.all_queries():
-            spec = registry.get(name)
-            if "streaming" in spec.tags and not include_streaming:
-                continue
-            try:
-                n_rows = len(spec.fn(spark, tmp).collect())
-                statuses[world][name] = f"pass:{n_rows}"
-            except Exception as exc:  # noqa: BLE001 - sweep reports all
-                msg = f"FAIL {type(exc).__name__}: {str(exc)[:200]}"
-                statuses[world][name] = msg
-                failures.setdefault(world, {})[name] = msg
-                print(f"FAIL [{world}] {name}: {msg}")
+        try:
+            WORLDS[world](tmp)
+            statuses[world] = {}
+            for name in registry.all_queries():
+                spec = registry.get(name)
+                if "streaming" in spec.tags and not include_streaming:
+                    continue
+                try:
+                    n_rows = len(spec.fn(spark, tmp).collect())
+                    statuses[world][name] = f"pass:{n_rows}"
+                except Exception as exc:  # noqa: BLE001 - sweep reports all
+                    msg = f"FAIL {type(exc).__name__}: {str(exc)[:200]}"
+                    statuses[world][name] = msg
+                    failures.setdefault(world, {})[name] = msg
+                    print(f"FAIL [{world}] {name}: {msg}")
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         done = len(statuses[world])
         n_fail = len(failures.get(world, {}))
         print(f"# world={world}: {done - n_fail}/{done} pass, {n_fail} crash")
