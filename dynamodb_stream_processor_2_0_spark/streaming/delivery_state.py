@@ -41,6 +41,12 @@ plus state pickle), one touched bucket at 64 buckets:
     750k                  11.7k             14 ms
     7.5M                  117k              242 ms
 
+These are per-group costs inside the worker, on top of each micro-batch's
+fixed cost: at perfbench size a 100-row tail batch takes a median 673 ms,
+554 ms of it ``addBatch``, with the session's worker daemon
+(session.py) sparing each state partition's Python task a re-read of
+``pyspark.zip``.
+
 Above about 10^5-10^6 keys a 100-row batch costs more than one Python
 call per key did. The layout whose cost scales with the touched keys is
 a per-bucket ``MapState`` on ``transformWithStateInPandas``, which needs
@@ -63,10 +69,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# Median 2,000-row backlog micro-batch, 4-core host, same-JVM interleaved
-# runs: 2,870 ms grouped per key; 1,015 ms at 16 buckets, 915 ms at 64,
-# 1,226 ms at 256 (fewer, larger groups lose task parallelism; more,
-# smaller ones pay the per-group cost again).
+# Median 2,000-row backlog micro-batch, 4-core host, one session per
+# setting, interleaved: 762 ms at 16 buckets, 678 ms at 64, 789 ms at
+# 256 (fewer, larger groups lose task parallelism; more, smaller ones pay
+# the per-group cost again). Grouped per key it took 2,870 ms.
 _BUCKETS = 64
 
 DISPOSITION_SCHEMA = T.StructType(

@@ -24,8 +24,8 @@ def events(spark, sf_dir):
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "json", "csv", "orc"])
-def test_roundtrip(spark, events, fmt):
-    out = tempfile.mkdtemp(prefix=f"fmt_{fmt}_")
+def test_roundtrip(spark, events, fmt, tmp_path):
+    out = str(tmp_path)
     # CSV can't carry nested/timestamp_ntz faithfully without options;
     # normalize to the columns every format handles.
     df = events.select("event_id", "user_id", "event_type", "value")
@@ -39,8 +39,8 @@ def test_roundtrip(spark, events, fmt):
     )
 
 
-def test_partitioned_write_prunes(spark, events):
-    out = tempfile.mkdtemp(prefix="fmt_part_")
+def test_partitioned_write_prunes(spark, events, tmp_path):
+    out = str(tmp_path)
     write_batch(events.select("event_id", "event_type", "value"), out, partition_by=["event_type"])
     back = read_batch(spark, out).filter(F.col("event_type") == "purchase")
     # partition pruning: the physical scan must read only the purchase dir

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import glob
 import json
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,15 +17,15 @@ from dynamodb_stream_processor_2_0_spark.streaming.runner import run_available_n
 
 
 @pytest.fixture(scope="module")
-def wire_dir(spark, sf_dir):
+def wire_dir(spark, sf_dir, tmp_path_factory):
     """Stage wire-format records as 3 parquet files (micro-batches)."""
-    out = tempfile.mkdtemp(prefix="wire_stream_")
+    out = str(tmp_path_factory.mktemp("wire_stream"))
     events = load_table(spark, sf_dir, "events")
     DS.events_as_stream_json(events).repartition(3).write.mode("overwrite").parquet(out)
     return out
 
 
-def test_wire_to_envelope_stream(spark, sf_dir, wire_dir):
+def test_wire_to_envelope_stream(spark, sf_dir, wire_dir, tmp_path):
     schema = "event_id long, record_json string"
     stream = (
         spark.readStream.schema(schema)
@@ -45,7 +44,7 @@ def test_wire_to_envelope_stream(spark, sf_dir, wire_dir):
         .otherwise("normal")
         .alias("priority"),
     )
-    out_dir = tempfile.mkdtemp(prefix="wire_envelopes_")
+    out_dir = str(tmp_path / "wire_envelopes")
 
     def sink(batch_df, epoch_id):
         (

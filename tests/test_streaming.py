@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import glob
 import json
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,14 +34,14 @@ def test_replay_preserves_all_events(spark, sf_dir, staged):
     assert staged_total == total
 
 
-def test_delivery_state_machine_exactly_once(spark, sf_dir, staged):
+def test_delivery_state_machine_exactly_once(spark, sf_dir, staged, tmp_path):
     """The heart of the reference (D4 CAS): across all micro-batches,
     each (user_id, event_type) key triggers exactly one email — the
     event-time-first one — and every other attempt is
     duplicate_prevented. The checkpointed state, read back through the
     statestore source, holds one row per hash bucket whose arrays carry
     exactly one entry per key, delivered to that key's winner."""
-    checkpoint = tempfile.mkdtemp(prefix="dispositions_ckpt_")
+    checkpoint = str(tmp_path / "dispositions_ckpt")
     q = run_available_now(
         spark,
         "dispositions",
@@ -324,9 +323,9 @@ def test_windowed_agg_stream_matches_batch(spark, sf_dir, staged):
         assert batch.get(key) == n, f"window {key}: stream {n} != batch {batch.get(key)}"
 
 
-def test_envelope_sink_idempotent_and_observed(spark, sf_dir, staged):
+def test_envelope_sink_idempotent_and_observed(spark, sf_dir, staged, tmp_path):
     """S3 envelope sink via foreachBatch + S4 observe metrics."""
-    out_dir = tempfile.mkdtemp(prefix="envelopes_")
+    out_dir = str(tmp_path / "envelopes")
     q = run_available_now(
         spark,
         "envelopes",

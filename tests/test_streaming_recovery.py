@@ -5,7 +5,6 @@ matches the uninterrupted batch golden."""
 
 from __future__ import annotations
 
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,19 +23,19 @@ from dynamodb_stream_processor_2_0_spark.streaming.runner import (
 
 
 @pytest.mark.parametrize("provider", [{}, ROCKSDB], ids=["default-hdfs", "rocksdb"])
-def test_exactly_once_across_restart(spark, sf_dir, provider):
+def test_exactly_once_across_restart(spark, sf_dir, provider, tmp_path):
     """Restart recovery must hold on BOTH state backends: checkpoint
     offsets/commits are backend-independent, but RocksDB additionally
     restores keyed state from its own changelog/snapshot files — the
     path a 100 TB job exercises on every executor loss."""
     with conf_scope(spark, provider):
-        _run_restart_scenario(spark, sf_dir)
+        _run_restart_scenario(spark, sf_dir, tmp_path)
 
 
-def _run_restart_scenario(spark, sf_dir):
+def _run_restart_scenario(spark, sf_dir, tmp_path):
     staged = replay.stage_event_chunks(spark, sf_dir, chunks=6)
-    checkpoint = tempfile.mkdtemp(prefix="ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="recovery_out_")
+    checkpoint = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "recovery_out")
 
     def writer():
         stream = replay.read_event_stream(spark, staged)

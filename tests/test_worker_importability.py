@@ -176,3 +176,31 @@ def test_allowlist_entries_still_exist():
         V().visit(tree)
     stale = DRIVER_SIDE_ALLOWLIST - live
     assert not stale, f"stale allowlist rows: {sorted(stale)}"
+
+
+PYWORKER = PKG / "pyworker"
+
+
+def test_daemon_directory_holds_only_the_daemon():
+    """``session.get_spark`` puts this directory on the workers'
+    PYTHONPATH; anything else in it would be importable in a worker,
+    and an ``__init__.py`` would make the directory a package path."""
+    names = sorted(p.name for p in PYWORKER.iterdir() if p.name != "__pycache__")
+    assert names == ["graft_daemon.py"]
+
+
+def test_daemon_imports_only_stdlib_and_pyspark():
+    """A worker imports the daemon with the package NOT importable, so
+    the daemon may import only the stdlib, pyspark and itself."""
+    import sys
+
+    tree = ast.parse((PYWORKER / "graft_daemon.py").read_text())
+    roots = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.ImportFrom):
+            assert n.level == 0, f"relative import at line {n.lineno}"
+            roots.add(n.module.split(".")[0])
+        elif isinstance(n, ast.Import):
+            roots |= {a.name.split(".")[0] for a in n.names}
+    foreign = roots - set(sys.stdlib_module_names) - {"pyspark", "graft_daemon"}
+    assert not foreign, f"graft_daemon imports {sorted(foreign)}"
