@@ -612,19 +612,17 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY user_id, event_type
     """,
     tags=("D3", "D4", "attribution"),
-    doc="Batch-mode confirmation of streaming/first_touch.py's "
-    "transformWithStateInPandas semantics (the new-API state operator "
-    "cannot execute in this container — no protobuf — so its contract "
-    "gets an oracle row here instead): per (user, event_type) the first "
-    "event by (ts, event_id) is attributed and every later touch is "
-    "suppressed-and-counted, exactly what the MapState processor emits "
-    "plus the suppression tally. One shuffle on the grouping key; both "
-    "window frames share a single exchange+sort.",
+    doc="First-touch attribution: per (user, event_type) the first event "
+    "by (ts, event_id) is attributed and every later touch is "
+    "suppressed-and-counted — the delivery claim's first-occurrence rule "
+    "(streaming/delivery_state.py) in batch, plus the suppression tally. "
+    "One shuffle on the grouping key; both window frames share a single "
+    "exchange+sort.",
 )
 def first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mirrors FirstTouchProcessor (streaming/first_touch.py): identical
-    ordering rule (ts, event_id) and key (user_id, event_type); the
-    row_number pick is the batch analog of the MapState first-claim."""
+    """Same key (user_id, event_type) and ordering rule (ts, event_id)
+    as the streaming delivery claim; the row_number pick is the batch
+    analog of its first claim."""
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events")

@@ -1,5 +1,5 @@
-"""Per-key delivery state machine (reference D4/S5/S6/S7,
-index.js:324-344, 448-522) as a Structured Streaming stateful operator.
+"""Per-key delivery claim (reference D4/S5/S6/S7, index.js:324-344,
+448-522) as a Structured Streaming stateful operator.
 
 The reference implements exactly-once delivery with a conditional-write
 CAS against the table: claim ``processing`` only if the current status
@@ -7,16 +7,20 @@ allows it, ``ConditionalCheckFailedException`` -> duplicate_prevented,
 success -> sink send -> ``delivered`` (or compensating revert to
 ``pending`` on sink failure). Spark's stateful model makes the race
 disappear: a key is owned by exactly one task per micro-batch, so the
-CAS becomes a pure state-machine guard inside
-``applyInPandasWithState`` — same observable semantics, no distributed
-lock.
+CAS becomes a membership test inside ``applyInPandasWithState`` — same
+observable semantics, no distributed lock. The only question left per
+record is whether its key already has a winner: if not, the record wins
+(``email_triggered``); if so, it is ``duplicate_prevented``.
+``status_after`` is therefore always ``delivered``.
 
-States: (none) -> delivered, with every later attempt for the key
-tagged ``duplicate_prevented`` — the reference's pending -> processing
--> delivered collapses within a micro-batch because claim and delivery
-are a single ownership scope; the ``sink_ok`` hook keeps S7's
-compensating transition expressible (failure -> stays pending, retried
-next batch).
+S7 (compensation on a failed send) is Spark's epoch retry, not a state
+transition. A micro-batch counts as done only once its commit-log entry
+is written, after the sink returns. If the sink raises, a restart from
+the checkpoint re-runs that batch on the state version it started from,
+so the same records win again, and the epoch-keyed sink
+(``sinks.write_envelopes``) overwrites the failed epoch's output.
+``tests/test_streaming_recovery.py`` fails an epoch after its sink
+wrote it and checks that every key lands exactly once.
 
 Bucket layout. The operator groups by ``pmod(xxhash64(user_id,
 event_type), _BUCKETS)``, not by the key, so Spark makes one Python
@@ -24,16 +28,17 @@ call per touched bucket instead of one per touched key. Grouped per key,
 a 2,000-row batch touched about 1,765 keys, and Spark's fixed cost per
 group (Arrow slicing, pandas conversion, ``GroupState`` set-up, output
 encoding) came on top of about 1.25 ms of function body per key group.
-Each bucket's state is one row of typed parallel
-arrays — ``user_id``, ``event_type``, ``delivery_status``,
-``delivered_event_id``, ``attempts`` — so ``spark.read.format(
-"statestore")`` still reads it; exploding the arrays gives one entry
-per key. One task still owns each bucket, hence each key, per
-micro-batch, so the single-writer argument above is unchanged.
+Each bucket's state is one row of three typed parallel arrays —
+``user_id``, ``event_type``, ``delivered_event_id`` — so
+``spark.read.format("statestore")`` still reads it; exploding the
+arrays gives one entry per key, holding that key's winner. One task
+still owns each bucket, hence each key, per micro-batch, so the
+single-writer argument above is unchanged.
 
 Limit. A touched bucket rewrites every key it holds, so the cost per
 touched bucket grows with keys per bucket. Python side alone (function
-plus state pickle), one touched bucket at 64 buckets:
+plus state pickle), one touched bucket at 64 buckets, measured on the
+earlier five-array state (the three-array state pickles less):
 
     total keys            keys per bucket   cost per touched bucket
     7.5k (perfbench)      117               1.3 ms
@@ -49,13 +54,15 @@ fixed cost: at perfbench size a 100-row tail batch takes a median 673 ms,
 
 Above about 10^5-10^6 keys a 100-row batch costs more than one Python
 call per key did. The layout whose cost scales with the touched keys is
-a per-bucket ``MapState`` on ``transformWithStateInPandas``, which needs
-``google.protobuf`` (see ``first_touch.py``).
+Spark's native per-key aggregation, which emits one row per touched key
+instead of one disposition per record.
 
-Checkpoints written by the earlier per-key layout (state keyed by
-``(user_id, event_type)``, value ``(delivery_status,
-delivered_event_id, attempts)``) cannot be restarted by this operator:
-both the grouping key and the state schema differ.
+Checkpoints written by earlier layouts cannot be restarted by this
+operator: neither the per-key layout (state keyed by ``(user_id,
+event_type)``, value ``(delivery_status, delivered_event_id,
+attempts)``) nor the five-array bucket layout (``user_id``,
+``event_type``, ``delivery_status``, ``delivered_event_id``,
+``attempts``); the grouping key or the state schema differs.
 """
 
 from __future__ import annotations
@@ -90,20 +97,15 @@ STATE_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.ArrayType(T.LongType())),
         T.StructField("event_type", T.ArrayType(T.StringType())),
-        T.StructField("delivery_status", T.ArrayType(T.StringType())),
         T.StructField("delivered_event_id", T.ArrayType(T.LongType())),
-        T.StructField("attempts", T.ArrayType(T.LongType())),
     ]
 )
 
 
-def make_bucket_fn(
-    sink_ok: Callable[[int], bool] | None = None,
-) -> Callable[[Any, Iterator[pd.DataFrame], GroupState], Iterator[pd.DataFrame]]:
-    """Build the stateful function for one hash bucket.
-    ``sink_ok(event_id)`` models the S3 queue send; returning False
-    triggers the S7 compensating path (status stays pending, nothing
-    marked delivered)."""
+def make_bucket_fn() -> Callable[
+    [Any, Iterator[pd.DataFrame], GroupState], Iterator[pd.DataFrame]
+]:
+    """Build the stateful function for one hash bucket."""
 
     # Nested, so cloudpickle ships it by value: a worker started outside
     # the repository cannot import this package.
@@ -116,95 +118,65 @@ def make_bucket_fn(
     def fn(
         bucket: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        # (user_id, event_type) -> [delivery_status, delivered_event_id, attempts]
-        keys: dict[tuple, list] = {}
+        # (user_id, event_type) -> delivered_event_id
+        winners: dict[tuple, int] = {}
         if state.exists:
-            users, types, statuses, delivered, attempts = state.get
-            keys = {
-                (u, t): [s, d, a]
-                for u, t, s, d, a in zip(users, types, statuses, delivered, attempts)
-            }
+            known_users, known_types, delivered = state.get
+            winners = dict(zip(zip(known_users, known_types), delivered))
 
-        out_user: list = []
-        out_type: list = []
-        out_event: list[int] = []
-        out_action: list[str] = []
+        users, types, events, actions = [], [], [], []
         # A bucket's rows in one micro-batch may arrive as multiple Arrow
         # chunks (> arrow.maxRecordsPerBatch rows per group), and chunk
         # order is not ts-ordered after the shuffle — materialize the
         # whole group before the single deterministic sort, or a key's
-        # delivered winner is no longer its global (ts, event_id)
-        # minimum (the reference processes records in stream order,
-        # index.js:53). This buffers one bucket's batch slice, not the
-        # stream.
+        # winner is no longer its global (ts, event_id) minimum (the
+        # reference processes records in stream order, index.js:53).
+        # This buffers one bucket's batch slice, not the stream.
         chunks = [pdf for pdf in pdfs if len(pdf)]
         if chunks:
             whole = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
             whole = whole.sort_values(["ts", "event_id"])
-            rows = zip(
-                user_ids(whole["user_id"]),
-                whole["event_type"].tolist(),
-                whole["event_id"].tolist(),
-            )
-            for user_id, event_type, event_id in rows:
-                entry = keys.get((user_id, event_type))
-                if entry is None:
-                    entry = keys[(user_id, event_type)] = ["pending", None, 0]
-                entry[2] += 1
-                event_id = int(event_id)
-                if entry[0] == "delivered":
+            users = user_ids(whole["user_id"])
+            types = whole["event_type"].tolist()
+            events = [int(e) for e in whole["event_id"].tolist()]
+            for key, event_id in zip(zip(users, types), events):
+                if key in winners:
                     # D4 claim fails: ConditionalCheckFailed analog
-                    action = "duplicate_prevented"
-                # claim succeeds (single writer per key): -> processing
-                elif sink_ok is None or sink_ok(event_id):
-                    entry[0], entry[1] = "delivered", event_id
-                    action = "email_triggered"
+                    actions.append("duplicate_prevented")
                 else:
-                    # S7 compensating revert: back to pending
-                    entry[0] = "pending"
-                    action = "sink_failed"
-                out_user.append(user_id)
-                out_type.append(event_type)
-                out_event.append(event_id)
-                out_action.append(action)
+                    winners[key] = event_id
+                    actions.append("email_triggered")
 
-        entries = list(keys.values())
         state.update(
             (
-                [k[0] for k in keys],
-                [k[1] for k in keys],
-                [e[0] for e in entries],
-                [e[1] for e in entries],
-                [e[2] for e in entries],
+                [k[0] for k in winners],
+                [k[1] for k in winners],
+                list(winners.values()),
             )
         )
         yield pd.DataFrame(
             {
-                "user_id": out_user,
-                "event_type": out_type,
-                "event_id": out_event,
-                "action": out_action,
-                "status_after": [keys[k][0] for k in zip(out_user, out_type)],
+                "user_id": users,
+                "event_type": types,
+                "event_id": events,
+                "action": actions,
+                "status_after": "delivered",
             }
         )
 
     return fn
 
 
-def apply_delivery_state(
-    events: DataFrame,
-    sink_ok: Callable[[int], bool] | None = None,
-) -> DataFrame:
-    """Wire the state machine over a (streaming or batch) events frame
-    keyed by (user_id, event_type), grouped into ``_BUCKETS`` hash
-    buckets."""
+def apply_delivery_state(events: DataFrame) -> DataFrame:
+    """Wire the claim over a (streaming or batch) events frame keyed by
+    (user_id, event_type), grouped into ``_BUCKETS`` hash buckets."""
     bucket = F.pmod(F.xxhash64("user_id", "event_type"), F.lit(_BUCKETS))
     return (
         events.select("user_id", "event_type", "event_id", "ts")
         .withColumn("bucket", bucket)
         .groupBy("bucket")
         .applyInPandasWithState(
-            make_bucket_fn(sink_ok),
+            make_bucket_fn(),
             outputStructType=DISPOSITION_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

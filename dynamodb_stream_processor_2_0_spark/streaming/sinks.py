@@ -59,7 +59,9 @@ def write_envelopes(out_dir: str, msg_type: str = "face_match_email"):
 
 def observed(df: DataFrame, name: str = "metrics") -> DataFrame:
     """Attach the reference's four batch counters (index.js:42-49):
-    processed, triggered, duplicates, errors."""
+    processed, triggered, duplicates, errors. An error is a row carrying
+    neither disposition; a record that fails to process fails its
+    micro-batch instead, which the restart retries (S7)."""
     return df.observe(
         name,
         F.count(F.lit(1)).alias("records_processed"),
@@ -67,7 +69,8 @@ def observed(df: DataFrame, name: str = "metrics") -> DataFrame:
         F.count_if(F.col("action") == "duplicate_prevented").alias(
             "duplicates_prevented"
         ),
-        F.count_if(F.col("action").startswith("sink_failed")).alias(
-            "processing_errors"
-        ),
+        F.count_if(
+            F.col("action").isNull()
+            | ~F.col("action").isin("email_triggered", "duplicate_prevented")
+        ).alias("processing_errors"),
     )

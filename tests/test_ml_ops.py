@@ -13,7 +13,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,12 +34,12 @@ TABLES = (
 )
 
 
-def _sf_dir_with(spark, sf_dir, overrides):
-    """Build a synthetic sf dir: symlink every real table, overwrite
-    the given {name: DataFrame} as single-file parquet (the DuckDB
-    side of the harness reads file paths)."""
-    d = tempfile.mkdtemp(prefix="mlops_fixture_")
-    tmp = tempfile.mkdtemp(prefix="mlops_write_")
+def _sf_dir_with(spark, sf_dir, tmp_path, overrides):
+    """Build a synthetic sf dir under ``tmp_path``: symlink every real
+    table, overwrite the given {name: DataFrame} as single-file parquet
+    (the DuckDB side of the harness reads file paths)."""
+    d = str(tmp_path)
+    tmp = str(tmp_path / "write")
     for t in TABLES:
         if t not in overrides:
             os.symlink(f"{sf_dir}/{t}.parquet", f"{d}/{t}.parquet")
@@ -48,18 +47,13 @@ def _sf_dir_with(spark, sf_dir, overrides):
         out = f"{tmp}/{t}"
         df.coalesce(1).write.mode("overwrite").parquet(out)
         shutil.copy(glob.glob(f"{out}/part-*.parquet")[0], f"{d}/{t}.parquet")
-    return d, tmp
-
-
-def _cleanup(*dirs):
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
+    return d
 
 
 # --- closed-form OLS: exact model recovery ---------------------------------
 
 
-def test_ols_recovers_planted_linear_model(spark, sf_dir):
+def test_ols_recovers_planted_linear_model(spark, sf_dir, tmp_path):
     """Plant y_cents = 300 + 200*qty + 50*disc_permille exactly over a
     full (qty, discount) grid; the closed-form fit must return the
     planted coefficients EXACTLY on the milli grid (digit-drop k=0)."""
@@ -76,18 +70,15 @@ def test_ols_recovers_planted_linear_model(spark, sf_dir):
         " l_tax double, l_returnflag string, l_linestatus string,"
         " l_shipdate string",
     ).withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
-    d, tmp = _sf_dir_with(spark, sf_dir, {"lineitem": li})
-    try:
-        out = registry.get("ml_ols_regression_closed_form").fn(spark, d)
-        row = {r["l_returnflag"]: r for r in out.collect()}["A"]
-        assert row["digits_dropped"] == 0
-        assert row["b0_cents_milli"] == 300_000
-        assert row["b1_cents_per_qty_milli"] == 200_000
-        assert row["b2_cents_per_permille_milli"] == 50_000
-        # and the oracle twin agrees on the synthetic shape too
-        compare_query(spark, registry.get("ml_ols_regression_closed_form"), d)
-    finally:
-        _cleanup(d, tmp)
+    d = _sf_dir_with(spark, sf_dir, tmp_path, {"lineitem": li})
+    out = registry.get("ml_ols_regression_closed_form").fn(spark, d)
+    row = {r["l_returnflag"]: r for r in out.collect()}["A"]
+    assert row["digits_dropped"] == 0
+    assert row["b0_cents_milli"] == 300_000
+    assert row["b1_cents_per_qty_milli"] == 200_000
+    assert row["b2_cents_per_permille_milli"] == 50_000
+    # and the oracle twin agrees on the synthetic shape too
+    compare_query(spark, registry.get("ml_ols_regression_closed_form"), d)
 
 
 # --- Shapley: dummy + efficiency axioms ------------------------------------
@@ -101,7 +92,7 @@ def _events_df(spark, rows):
     )
 
 
-def test_shapley_dummy_and_efficiency_axioms(spark, sf_dir):
+def test_shapley_dummy_and_efficiency_axioms(spark, sf_dir, tmp_path):
     """10 users exposed only to click all convert; 10 users exposed
     only to view never convert. v(S) = 10 iff click in S, so click's
     exact credit24 is 24*10 = 240 and every other channel is a dummy
@@ -118,28 +109,25 @@ def test_shapley_dummy_and_efficiency_axioms(spark, sf_dir):
         spark,
         [(a, None, c, d_, e, f) for a, _, c, d_, e, f in rows],
     ).withColumn("ts", F.lit("2024-01-01 10:00:00").cast("timestamp"))
-    d, tmp = _sf_dir_with(spark, sf_dir, {"events": ev})
-    try:
-        out = {
-            r["channel"]: r
-            for r in registry.get("attribution_shapley_exact")
-            .fn(spark, d)
-            .collect()
-        }
-        assert out["click"]["credit24"] == 240
-        assert out["click"]["credit_permille"] == 1000
-        for ch in ("error", "signup", "view"):
-            assert out[ch]["credit24"] == 0
-        assert all(r["efficiency_holds"] for r in out.values())
-        compare_query(spark, registry.get("attribution_shapley_exact"), d)
-    finally:
-        _cleanup(d, tmp)
+    d = _sf_dir_with(spark, sf_dir, tmp_path, {"events": ev})
+    out = {
+        r["channel"]: r
+        for r in registry.get("attribution_shapley_exact")
+        .fn(spark, d)
+        .collect()
+    }
+    assert out["click"]["credit24"] == 240
+    assert out["click"]["credit_permille"] == 1000
+    for ch in ("error", "signup", "view"):
+        assert out[ch]["credit24"] == 0
+    assert all(r["efficiency_holds"] for r in out.values())
+    compare_query(spark, registry.get("attribution_shapley_exact"), d)
 
 
 # --- Allen census on a hand-built day --------------------------------------
 
 
-def test_allen_census_classifies_handbuilt_day(spark, sf_dir):
+def test_allen_census_classifies_handbuilt_day(spark, sf_dir, tmp_path):
     """Intervals u1=[0,10], u2=[2,5], u3=[10,20], u4=[2,5]:
     {u2,u4} equals; u1-u2 and u1-u4 during; u1-u3 meets;
     u2-u3 and u4-u3 precede. Total = C(4,2) = 6 pairs."""
@@ -162,23 +150,20 @@ def test_allen_census_classifies_handbuilt_day(spark, sf_dir):
             (F.col("event_id") + 1).cast("int"),
         ),
     )
-    d, tmp = _sf_dir_with(spark, sf_dir, {"events": ev})
-    try:
-        out = {
-            r["relation"]: r["n_pairs"]
-            for r in registry.get("interval_allen_algebra_census")
-            .fn(spark, d)
-            .collect()
-        }
-        assert out == {"equals": 1, "during": 2, "meets": 1, "precedes": 2}
-    finally:
-        _cleanup(d, tmp)
+    d = _sf_dir_with(spark, sf_dir, tmp_path, {"events": ev})
+    out = {
+        r["relation"]: r["n_pairs"]
+        for r in registry.get("interval_allen_algebra_census")
+        .fn(spark, d)
+        .collect()
+    }
+    assert out == {"equals": 1, "during": 2, "meets": 1, "precedes": 2}
 
 
 # --- Mann-Kendall closed form on a monotone series -------------------------
 
 
-def test_mann_kendall_monotone_series_closed_form(spark, sf_dir):
+def test_mann_kendall_monotone_series_closed_form(spark, sf_dir, tmp_path):
     """30 strictly increasing daily values for one type: S = C(30,2) =
     435 exactly, var18 = 30*29*65 = 56550 (no ties), significant
     increasing."""
@@ -198,29 +183,26 @@ def test_mann_kendall_monotone_series_closed_form(spark, sf_dir):
             (F.col("event_id") + 1).cast("int"),
         ),
     )
-    d, tmp = _sf_dir_with(spark, sf_dir, {"events": ev})
-    try:
-        out = {
-            r["event_type"]: r
-            for r in registry.get("events_mann_kendall_test")
-            .fn(spark, d)
-            .collect()
-        }
-        row = out["signup"]
-        assert row["n_days"] == 30
-        assert row["s_stat"] == 435
-        assert row["var18"] == 30 * 29 * 65
-        assert row["direction"] == "increasing"
-        assert bool(row["significant"]) is True
-        compare_query(spark, registry.get("events_mann_kendall_test"), d)
-    finally:
-        _cleanup(d, tmp)
+    d = _sf_dir_with(spark, sf_dir, tmp_path, {"events": ev})
+    out = {
+        r["event_type"]: r
+        for r in registry.get("events_mann_kendall_test")
+        .fn(spark, d)
+        .collect()
+    }
+    row = out["signup"]
+    assert row["n_days"] == 30
+    assert row["s_stat"] == 435
+    assert row["var18"] == 30 * 29 * 65
+    assert row["direction"] == "increasing"
+    assert bool(row["significant"]) is True
+    compare_query(spark, registry.get("events_mann_kendall_test"), d)
 
 
 # --- sequential patterns: the promised gap tolerance -----------------------
 
 
-def test_sequential_patterns_tolerate_one_gap(spark, sf_dir):
+def test_sequential_patterns_tolerate_one_gap(spark, sf_dir, tmp_path):
     """Three users each do view, error, click, purchase: the
     view>click>purchase pattern (click is 2 positions after view —
     one noise event skipped) must be found with user support 3."""
@@ -241,26 +223,23 @@ def test_sequential_patterns_tolerate_one_gap(spark, sf_dir):
             (F.col("event_id") + 1).cast("int"),
         ),
     )
-    d, tmp = _sf_dir_with(spark, sf_dir, {"events": ev})
-    try:
-        out = {
-            r["pattern"]: r
-            for r in registry.get("events_sequential_patterns")
-            .fn(spark, d)
-            .collect()
-        }
-        assert out["view>click>purchase"]["n_users"] == 3
-        assert out["view>click>purchase"]["n_occurrences"] == 3
-        # strictly-adjacent run is also there, via the (1, 2) combo
-        assert out["view>error>click"]["n_users"] == 3
-    finally:
-        _cleanup(d, tmp)
+    d = _sf_dir_with(spark, sf_dir, tmp_path, {"events": ev})
+    out = {
+        r["pattern"]: r
+        for r in registry.get("events_sequential_patterns")
+        .fn(spark, d)
+        .collect()
+    }
+    assert out["view>click>purchase"]["n_users"] == 3
+    assert out["view>click>purchase"]["n_occurrences"] == 3
+    # strictly-adjacent run is also there, via the (1, 2) combo
+    assert out["view>error>click"]["n_users"] == 3
 
 
 # --- Fellegi-Sunter decision thresholds ------------------------------------
 
 
-def test_fellegi_sunter_thresholds(spark, sf_dir):
+def test_fellegi_sunter_thresholds(spark, sf_dir, tmp_path):
     """Two identical-attribute parts score +8266 (match); a pair
     agreeing on nothing but the block scores -10155 (non-match);
     brand+type-only agreement scores -74 -> possible is NOT reached
@@ -274,27 +253,24 @@ def test_fellegi_sunter_thresholds(spark, sf_dir):
         "p_partkey long, p_name string, p_brand string, p_type string,"
         " p_size int, p_retailprice double",
     )
-    d, tmp = _sf_dir_with(spark, sf_dir, {"part": parts})
-    try:
-        out = {
-            r["decision"]: r
-            for r in registry.get("dedup_fellegi_sunter_linkage")
-            .fn(spark, d)
-            .collect()
-        }
-        assert out["match"]["n_pairs"] == 1
-        assert out["match"]["max_score_milli"] == 8266
-        assert out["non_match"]["n_pairs"] == 2
-        assert out["non_match"]["min_score_milli"] == -10155
-        assert "possible" not in out
-    finally:
-        _cleanup(d, tmp)
+    d = _sf_dir_with(spark, sf_dir, tmp_path, {"part": parts})
+    out = {
+        r["decision"]: r
+        for r in registry.get("dedup_fellegi_sunter_linkage")
+        .fn(spark, d)
+        .collect()
+    }
+    assert out["match"]["n_pairs"] == 1
+    assert out["match"]["max_score_milli"] == 8266
+    assert out["non_match"]["n_pairs"] == 2
+    assert out["non_match"]["min_score_milli"] == -10155
+    assert "possible" not in out
 
 
 # --- B-cubed: perfect clustering scores 1000/1000/1000 ---------------------
 
 
-def test_bcubed_perfect_on_exact_duplicate_corpus(spark, sf_dir):
+def test_bcubed_perfect_on_exact_duplicate_corpus(spark, sf_dir, tmp_path):
     """A corpus of distinct texts plus exact copies: LSH+CC recovers
     exactly the md5 truth groups, so B^3 P = R = F1 = 1000."""
     texts = [
@@ -312,17 +288,14 @@ def test_bcubed_perfect_on_exact_duplicate_corpus(spark, sf_dir):
         "doc_id long, text string, lang string, source string,"
         " n_chars long",
     )
-    d, tmp = _sf_dir_with(spark, sf_dir, {"documents": docs})
-    try:
-        row = registry.get("eval_dedup_bcubed").fn(spark, d).collect()[0]
-        assert row["n_docs"] == 8
-        assert row["n_sys_clusters"] == 4 and row["n_truth_groups"] == 4
-        assert row["bcubed_p_permille"] == 1000
-        assert row["bcubed_r_permille"] == 1000
-        assert row["bcubed_f1_permille"] == 1000
-        compare_query(spark, registry.get("eval_dedup_bcubed"), d)
-    finally:
-        _cleanup(d, tmp)
+    d = _sf_dir_with(spark, sf_dir, tmp_path, {"documents": docs})
+    row = registry.get("eval_dedup_bcubed").fn(spark, d).collect()[0]
+    assert row["n_docs"] == 8
+    assert row["n_sys_clusters"] == 4 and row["n_truth_groups"] == 4
+    assert row["bcubed_p_permille"] == 1000
+    assert row["bcubed_r_permille"] == 1000
+    assert row["bcubed_f1_permille"] == 1000
+    compare_query(spark, registry.get("eval_dedup_bcubed"), d)
 
 
 # --- split-conformal: the finite-sample coverage guarantee -----------------

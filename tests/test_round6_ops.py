@@ -394,7 +394,7 @@ def test_drawdown_invariants(spark, sf_dir):
 # --- sorted-neighborhood blocking: window guarantee -------------------------
 
 
-def test_sorted_neighborhood_window_bound_and_recall(spark):
+def test_sorted_neighborhood_window_bound_and_recall(spark, tmp_path):
     """The two guarantees the operator claims: (a) every emitted pair
     sits within the w=8 sliding window of the sort order (rank_gap in
     [1, w-1]) — the n*(w-1) candidate bound BY CONSTRUCTION — and (b)
@@ -403,7 +403,6 @@ def test_sorted_neighborhood_window_bound_and_recall(spark):
     import glob
     import os
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import (
         queries_dedup as D,
@@ -420,33 +419,29 @@ def test_sorted_neighborhood_window_bound_and_recall(spark):
     # planted pair: identical 24-char prefix, one-char probe edit
     texts.append("zzz unique prefix here padded out long enough A tail")
     texts.append("zzz unique prefix here padded out long enough B tail")
-    d = tempfile.mkdtemp(prefix="snm_")
-    tmp = tempfile.mkdtemp(prefix="snmw_")
-    try:
-        docs = spark.createDataFrame(
-            [(i, t, "en", "src0", len(t)) for i, t in enumerate(texts)],
-            "doc_id long, text string, lang string, source string, n_chars long",
-        )
-        docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
-        )
-        rows = registry.get("dedup_sorted_neighborhood").fn(spark, d).collect()
-        assert rows, "no candidate pairs emitted"
-        w = D._SNM_W
-        for r in rows:
-            assert 1 <= r["rank_gap"] <= w - 1, r
-        planted = [
-            r
-            for r in rows
-            if {r["doc_a"], r["doc_b"]} == {20, 21}
-        ]
-        assert planted, "adjacent planted near-dup pair not found"
-        # probes differ in exactly one char (A vs B at the same offset)
-        assert planted[0]["edit_dist"] == 1
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+    d = str(tmp_path)
+    tmp = str(tmp_path / "snmw")
+    docs = spark.createDataFrame(
+        [(i, t, "en", "src0", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    docs.coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.copy(
+        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
+    )
+    rows = registry.get("dedup_sorted_neighborhood").fn(spark, d).collect()
+    assert rows, "no candidate pairs emitted"
+    w = D._SNM_W
+    for r in rows:
+        assert 1 <= r["rank_gap"] <= w - 1, r
+    planted = [
+        r
+        for r in rows
+        if {r["doc_a"], r["doc_b"]} == {20, 21}
+    ]
+    assert planted, "adjacent planted near-dup pair not found"
+    # probes differ in exactly one char (A vs B at the same offset)
+    assert planted[0]["edit_dist"] == 1
 
 
 # --- fourth-continuation batch: planted-model behavior ----------------------
@@ -457,9 +452,8 @@ def _write_events(spark, rows, d):
     single-file events.parquet under d (micros vintage)."""
     import glob
     import shutil
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="evw_")
+    tmp = f"{d}/_evw"
     df = spark.createDataFrame(
         [(i, ts, u, et, v, "{}") for (i, ts, u, et, v) in rows],
         "event_id long, ts string, user_id long, event_type string,"
@@ -474,157 +468,136 @@ def _write_events(spark, rows, d):
     )
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/events.parquet")
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_cuped_perfect_covariate_recovers_theta_and_kills_variance(spark):
+def test_cuped_perfect_covariate_recovers_theta_and_kills_variance(spark, tmp_path):
     """When every user's post-period mean EQUALS their pre-period mean
     (Y = X exactly), CUPED must estimate theta ~ 1 (1000 milli), report
     ~full variance reduction, and shrink the treatment contrast to ~0
     — the defining behavior of the estimator."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="cuped_")
-    try:
-        rows = []
-        eid = 0
-        for u in range(40):
-            v = float(10 + 7 * u)  # user-specific level, Y == X
-            for day, half in (("2024-01-02", "pre"), ("2024-01-28", "post")):
-                rows.append((eid, f"{day} 12:00:00", u, "click", v))
-                eid += 1
-        _write_events(spark, rows, d)
-        out = {
-            r["event_type"]: r
-            for r in registry.get("events_cuped_variance_reduction")
-            .fn(spark, d)
-            .collect()
-        }
-        r = out["click"]
-        assert r["n_users"] == 40
-        assert abs(r["theta_milli"] - 1000) <= 1
-        assert r["var_reduction_permille"] >= 990
-        assert abs(r["cuped_diff_millicents"]) <= abs(
-            r["raw_diff_millicents"]
-        )
-        assert abs(r["cuped_diff_millicents"]) <= 2000  # ~0 vs raw scale
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    eid = 0
+    for u in range(40):
+        v = float(10 + 7 * u)  # user-specific level, Y == X
+        for day, half in (("2024-01-02", "pre"), ("2024-01-28", "post")):
+            rows.append((eid, f"{day} 12:00:00", u, "click", v))
+            eid += 1
+    _write_events(spark, rows, d)
+    out = {
+        r["event_type"]: r
+        for r in registry.get("events_cuped_variance_reduction")
+        .fn(spark, d)
+        .collect()
+    }
+    r = out["click"]
+    assert r["n_users"] == 40
+    assert abs(r["theta_milli"] - 1000) <= 1
+    assert r["var_reduction_permille"] >= 990
+    assert abs(r["cuped_diff_millicents"]) <= abs(
+        r["raw_diff_millicents"]
+    )
+    assert abs(r["cuped_diff_millicents"]) <= 2000  # ~0 vs raw scale
 
 
-def test_xcorr_planted_shift_peaks_at_its_lag(spark):
+def test_xcorr_planted_shift_peaks_at_its_lag(spark, tmp_path):
     """A 'click' series that is the 'view' series shifted by +2 days
     must peak the signed-r^2 statistic at lag +2, near 1000."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="xcorr_")
-    try:
-        # daily counts: view bursts on days 3,9,15,21; click 2 days later
-        counts = {day: 1 for day in range(1, 29)}
-        rows = []
-        eid = 0
-        for day in range(1, 29):
-            nv = 9 if day in (3, 9, 15, 21) else 1
-            nc = 9 if day in (5, 11, 17, 23) else 1
-            for _ in range(nv):
-                rows.append(
-                    (eid, f"2024-01-{day:02d} 10:00:00", eid % 7, "view", 1.0)
-                )
-                eid += 1
-            for _ in range(nc):
-                rows.append(
-                    (eid, f"2024-01-{day:02d} 11:00:00", eid % 7, "click", 1.0)
-                )
-                eid += 1
-        _write_events(spark, rows, d)
-        out = registry.get("events_cross_correlation_leadlag").fn(
-            spark, d
-        ).collect()
-        by_lag = {
-            r["lag"]: r["xcorr_r2_signed_permille"]
-            for r in out
-            if r["pair_type"] == "click"
-        }
-        assert by_lag[2] == max(by_lag.values())
-        assert by_lag[2] >= 800
-        assert by_lag[0] < by_lag[2]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    # daily counts: view bursts on days 3,9,15,21; click 2 days later
+    counts = {day: 1 for day in range(1, 29)}
+    rows = []
+    eid = 0
+    for day in range(1, 29):
+        nv = 9 if day in (3, 9, 15, 21) else 1
+        nc = 9 if day in (5, 11, 17, 23) else 1
+        for _ in range(nv):
+            rows.append(
+                (eid, f"2024-01-{day:02d} 10:00:00", eid % 7, "view", 1.0)
+            )
+            eid += 1
+        for _ in range(nc):
+            rows.append(
+                (eid, f"2024-01-{day:02d} 11:00:00", eid % 7, "click", 1.0)
+            )
+            eid += 1
+    _write_events(spark, rows, d)
+    out = registry.get("events_cross_correlation_leadlag").fn(
+        spark, d
+    ).collect()
+    by_lag = {
+        r["lag"]: r["xcorr_r2_signed_permille"]
+        for r in out
+        if r["pair_type"] == "click"
+    }
+    assert by_lag[2] == max(by_lag.values())
+    assert by_lag[2] >= 800
+    assert by_lag[0] < by_lag[2]
 
 
-def test_markov_eval_deterministic_chain_scores_1000(spark):
+def test_markov_eval_deterministic_chain_scores_1000(spark, tmp_path):
     """A strictly alternating a->b->a->b chain per user is perfectly
     predictable: held-out top-1 accuracy must be exactly 1000 permille
     for both states."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="mkv_")
-    try:
-        rows = []
-        eid = 0
-        for u in range(6):
-            for day in range(1, 29):
-                et = "view" if day % 2 == 1 else "purchase"
-                rows.append(
-                    (eid, f"2024-01-{day:02d} 09:00:00", u, et, 1.0)
-                )
-                eid += 1
-        _write_events(spark, rows, d)
-        out = registry.get("events_markov_next_event_eval").fn(
-            spark, d
-        ).collect()
-        assert len(out) == 2
-        for r in out:
-            assert r["accuracy_permille"] == 1000
-            assert r["n_correct"] == r["n_test"] > 0
-        pred = {r["prev_type"]: r["predicted_type"] for r in out}
-        assert pred == {"view": "purchase", "purchase": "view"}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    eid = 0
+    for u in range(6):
+        for day in range(1, 29):
+            et = "view" if day % 2 == 1 else "purchase"
+            rows.append(
+                (eid, f"2024-01-{day:02d} 09:00:00", u, et, 1.0)
+            )
+            eid += 1
+    _write_events(spark, rows, d)
+    out = registry.get("events_markov_next_event_eval").fn(
+        spark, d
+    ).collect()
+    assert len(out) == 2
+    for r in out:
+        assert r["accuracy_permille"] == 1000
+        assert r["n_correct"] == r["n_test"] > 0
+    pred = {r["prev_type"]: r["predicted_type"] for r in out}
+    assert pred == {"view": "purchase", "purchase": "view"}
 
 
-def test_chao1_known_frequency_of_frequencies(spark):
+def test_chao1_known_frequency_of_frequencies(spark, tmp_path):
     """Hand-computed Chao1 on a corpus with known f1/f2: tokens
     'a a b c d' => V=4, N=5, f1=3, f2=1, chao1 = 4 + 3*2//(2*2) = 5,
     unseen mass = 1000*3//5 = 600."""
     import glob
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="chao_")
-    tmp = tempfile.mkdtemp(prefix="chaow_")
-    try:
-        docs = spark.createDataFrame(
-            [(0, "a a b", "en", "s", 5), (1, "c d", "en", "s", 3)],
-            "doc_id long, text string, lang string, source string,"
-            " n_chars long",
-        )
-        docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
-        )
-        r = registry.get("text_chao1_vocab_richness").fn(spark, d).collect()[0]
-        assert r["vocab_size"] == 4
-        assert r["total_tokens"] == 5
-        assert r["f1_singletons"] == 3
-        assert r["f2_doubletons"] == 1
-        assert r["chao1_estimate"] == 5
-        assert r["unseen_mass_permille"] == 600
-        assert r["coverage_permille"] == 400
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+    d = str(tmp_path)
+    tmp = str(tmp_path / "chaow")
+    docs = spark.createDataFrame(
+        [(0, "a a b", "en", "s", 5), (1, "c d", "en", "s", 3)],
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long",
+    )
+    docs.coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.copy(
+        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
+    )
+    r = registry.get("text_chao1_vocab_richness").fn(spark, d).collect()[0]
+    assert r["vocab_size"] == 4
+    assert r["total_tokens"] == 5
+    assert r["f1_singletons"] == 3
+    assert r["f2_doubletons"] == 1
+    assert r["chao1_estimate"] == 5
+    assert r["unseen_mass_permille"] == 600
+    assert r["coverage_permille"] == 400
 
 
 # --- fifth-continuation batch ------------------------------------------------
@@ -677,93 +650,83 @@ def test_ind_discovery_fk_truths_and_consistency(spark, sf_dir):
         assert 0 <= r["n_violations"] <= r["n_lhs_distinct"]
 
 
-def test_clustering_coefficient_clique_is_1000(spark):
+def test_clustering_coefficient_clique_is_1000(spark, tmp_path):
     """Three byte-identical docs form a 3-clique in the LSH candidate
     graph: every node's local cc and the global transitivity must be
     exactly 1000 permille."""
     import glob
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="cc_")
-    tmp = tempfile.mkdtemp(prefix="ccw_")
-    try:
-        t = " ".join(f"tok{i % 17}w{i % 5}" for i in range(60))
-        other = " ".join(f"zz{i}q{i * 3 + 1}" for i in range(60))
-        docs = spark.createDataFrame(
-            [
-                (0, t, "en", "s", len(t)),
-                (1, t, "en", "s", len(t)),
-                (2, t, "en", "s", len(t)),
-                (3, other, "en", "s", len(other)),
-            ],
-            "doc_id long, text string, lang string, source string,"
-            " n_chars long",
-        )
-        docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
-        )
-        rows = registry.get("graph_clustering_coefficient").fn(
-            spark, d
-        ).collect()
-        assert {r["doc_id"] for r in rows} == {0, 1, 2}
-        for r in rows:
-            assert r["degree"] == 2
-            assert r["n_triangles"] == 1
-            assert r["local_cc_permille"] == 1000
-            assert r["transitivity_permille"] == 1000
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+    d = str(tmp_path)
+    tmp = str(tmp_path / "ccw")
+    t = " ".join(f"tok{i % 17}w{i % 5}" for i in range(60))
+    other = " ".join(f"zz{i}q{i * 3 + 1}" for i in range(60))
+    docs = spark.createDataFrame(
+        [
+            (0, t, "en", "s", len(t)),
+            (1, t, "en", "s", len(t)),
+            (2, t, "en", "s", len(t)),
+            (3, other, "en", "s", len(other)),
+        ],
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long",
+    )
+    docs.coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.copy(
+        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
+    )
+    rows = registry.get("graph_clustering_coefficient").fn(
+        spark, d
+    ).collect()
+    assert {r["doc_id"] for r in rows} == {0, 1, 2}
+    for r in rows:
+        assert r["degree"] == 2
+        assert r["n_triangles"] == 1
+        assert r["local_cc_permille"] == 1000
+        assert r["transitivity_permille"] == 1000
 
 
-def test_jsd_disjoint_source_is_most_divergent(spark):
+def test_jsd_disjoint_source_is_most_divergent(spark, tmp_path):
     """A source with a disjoint vocabulary must score a strictly
     higher JSD-vs-rest than sources sharing a common distribution."""
     import glob
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="jsd_")
-    tmp = tempfile.mkdtemp(prefix="jsdw_")
-    try:
-        common = " ".join(
-            "alpha beta gamma delta".split()[i % 4] for i in range(40)
-        )
-        alien = " ".join(f"xeno{i % 6}" for i in range(40))
-        rows = []
-        for i in range(4):
-            rows.append((i, common, "en", "srcA", len(common)))
-        for i in range(4, 8):
-            rows.append((i, common, "en", "srcB", len(common)))
-        for i in range(8, 12):
-            rows.append((i, alien, "en", "srcC", len(alien)))
-        docs = spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string,"
-            " n_chars long",
-        )
-        docs.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
-        )
-        out = {
-            r["source"]: r["jsd_millibits"]
-            for r in registry.get("text_js_divergence_sources")
-            .fn(spark, d)
-            .collect()
-        }
-        assert out["srcC"] > out["srcA"]
-        assert out["srcC"] > out["srcB"]
-        assert out["srcC"] >= 500  # disjoint vocab: JSD near 1 bit
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+    d = str(tmp_path)
+    tmp = str(tmp_path / "jsdw")
+    common = " ".join(
+        "alpha beta gamma delta".split()[i % 4] for i in range(40)
+    )
+    alien = " ".join(f"xeno{i % 6}" for i in range(40))
+    rows = []
+    for i in range(4):
+        rows.append((i, common, "en", "srcA", len(common)))
+    for i in range(4, 8):
+        rows.append((i, common, "en", "srcB", len(common)))
+    for i in range(8, 12):
+        rows.append((i, alien, "en", "srcC", len(alien)))
+    docs = spark.createDataFrame(
+        rows,
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long",
+    )
+    docs.coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.copy(
+        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
+    )
+    out = {
+        r["source"]: r["jsd_millibits"]
+        for r in registry.get("text_js_divergence_sources")
+        .fn(spark, d)
+        .collect()
+    }
+    assert out["srcC"] > out["srcA"]
+    assert out["srcC"] > out["srcB"]
+    assert out["srcC"] >= 500  # disjoint vocab: JSD near 1 bit
 
 
 # --- sixth-continuation batch -------------------------------------------------
@@ -773,9 +736,8 @@ def _write_embeddings(spark, rows, d):
     """rows: (vec_id, [floats], label)."""
     import glob
     import shutil
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="embw_")
+    tmp = f"{d}/_embw"
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
@@ -783,158 +745,137 @@ def _write_embeddings(spark, rows, d):
     shutil.copy(
         glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/embeddings.parquet"
     )
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_isotropy_extremes(spark):
+def test_isotropy_extremes(spark, tmp_path):
     """Identical vectors score mean pairwise cosine exactly 1e6 micro
     (a degenerate cone); distinct one-hot vectors score exactly 0
     (perfectly isotropic on the simplex axes)."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
     fn = registry.get("embedding_isotropy_audit").fn
-    d = tempfile.mkdtemp(prefix="iso_")
-    try:
-        _write_embeddings(
-            spark, [(i, [3.0, 4.0, 0.0, 0.0], 0) for i in range(8)], d
-        )
-        r = fn(spark, d).collect()[0]
-        assert r["mean_pairwise_cos_micro"] == 1000000
-        onehots = [
-            (i, [1.0 if j == i else 0.0 for j in range(8)], 0)
-            for i in range(8)
-        ]
-        _write_embeddings(spark, onehots, d)
-        r = fn(spark, d).collect()[0]
-        assert r["mean_pairwise_cos_micro"] == 0
-        # one-hot cloud: every dim carries the same variance
-        assert r["top_dim_var_share_permille"] == 125
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    _write_embeddings(
+        spark, [(i, [3.0, 4.0, 0.0, 0.0], 0) for i in range(8)], d
+    )
+    r = fn(spark, d).collect()[0]
+    assert r["mean_pairwise_cos_micro"] == 1000000
+    onehots = [
+        (i, [1.0 if j == i else 0.0 for j in range(8)], 0)
+        for i in range(8)
+    ]
+    _write_embeddings(spark, onehots, d)
+    r = fn(spark, d).collect()[0]
+    assert r["mean_pairwise_cos_micro"] == 0
+    # one-hot cloud: every dim carries the same variance
+    assert r["top_dim_var_share_permille"] == 125
 
 
-def test_gini_stump_separable_split(spark):
+def test_gini_stump_separable_split(spark, tmp_path):
     """A perfectly separable feature (y = quantity > 50) must yield
     impurity 0 at the boundary threshold and full info gain."""
     import glob
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="stump_")
-    tmp = tempfile.mkdtemp(prefix="stumpw_")
-    try:
-        rows = []
-        for i in range(100):
-            q = float(i + 1)
-            flag = "R" if q > 50 else "N"
-            rows.append((i + 1, 1, q, q * 10.0, flag))
-        spark.createDataFrame(
-            rows,
-            "l_orderkey long, l_linenumber long, l_quantity double,"
-            " l_extendedprice double, l_returnflag string",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/lineitem.parquet"
-        )
-        out = {
-            r["feature"]: r
-            for r in registry.get("ml_gini_decision_stump")
-            .fn(spark, d)
-            .collect()
-        }
-        r = out["l_quantity"]
-        assert r["n_rows"] == 100 and r["n_pos"] == 50
-        assert r["baseline_gini_micro"] == 500000
-        assert r["best_impurity_micro"] == 0
-        assert r["best_threshold"] == 50
-        assert r["info_gain_micro"] == 500000
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+    d = str(tmp_path)
+    tmp = str(tmp_path / "stumpw")
+    rows = []
+    for i in range(100):
+        q = float(i + 1)
+        flag = "R" if q > 50 else "N"
+        rows.append((i + 1, 1, q, q * 10.0, flag))
+    spark.createDataFrame(
+        rows,
+        "l_orderkey long, l_linenumber long, l_quantity double,"
+        " l_extendedprice double, l_returnflag string",
+    ).coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.copy(
+        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/lineitem.parquet"
+    )
+    out = {
+        r["feature"]: r
+        for r in registry.get("ml_gini_decision_stump")
+        .fn(spark, d)
+        .collect()
+    }
+    r = out["l_quantity"]
+    assert r["n_rows"] == 100 and r["n_pos"] == 50
+    assert r["baseline_gini_micro"] == 500000
+    assert r["best_impurity_micro"] == 0
+    assert r["best_threshold"] == 50
+    assert r["info_gain_micro"] == 500000
 
 
-def test_dp_sensitivity_power_user(spark):
+def test_dp_sensitivity_power_user(spark, tmp_path):
     """One 100-event power user dominates the user-level count
     sensitivity; the Laplace scale must be sensitivity/epsilon
     exactly."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="dp_")
-    try:
-        rows = [(i, "2024-01-05 10:00:00", 999, "click", 2.0) for i in range(100)]
-        rows += [
-            (100 + u, "2024-01-06 10:00:00", u, "click", 2.0)
-            for u in range(20)
-        ]
-        _write_events(spark, rows, d)
-        out = {
-            r["eps_milli"]: r
-            for r in registry.get("privacy_dp_sensitivity_report")
-            .fn(spark, d)
-            .collect()
-        }
-        assert set(out) == {100, 500, 1000}
-        r = out[1000]
-        assert r["n_events"] == 120
-        assert r["sens_count"] == 100
-        assert r["b_count_milli"] == 100 * 1000000 // 1000
-        # noise scale ~ 100 on a true count of 120: unusable, and the
-        # report says so
-        assert r["rel_err_count_permille"] >= 800
-        assert out[100]["b_count_milli"] == 100 * 1000000 // 100
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = [(i, "2024-01-05 10:00:00", 999, "click", 2.0) for i in range(100)]
+    rows += [
+        (100 + u, "2024-01-06 10:00:00", u, "click", 2.0)
+        for u in range(20)
+    ]
+    _write_events(spark, rows, d)
+    out = {
+        r["eps_milli"]: r
+        for r in registry.get("privacy_dp_sensitivity_report")
+        .fn(spark, d)
+        .collect()
+    }
+    assert set(out) == {100, 500, 1000}
+    r = out[1000]
+    assert r["n_events"] == 120
+    assert r["sens_count"] == 100
+    assert r["b_count_milli"] == 100 * 1000000 // 1000
+    # noise scale ~ 100 on a true count of 120: unusable, and the
+    # report says so
+    assert r["rel_err_count_permille"] >= 800
+    assert out[100]["b_count_milli"] == 100 * 1000000 // 100
 
 
-def test_kcenter_hits_separated_clusters(spark):
+def test_kcenter_hits_separated_clusters(spark, tmp_path):
     """Four well-separated clusters: the Gonzalez trace must pick one
     exemplar per cluster, with non-increasing selection distances and
     a final radius bounded by the within-cluster spread."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="kc_")
-    try:
-        rows = []
-        vid = 0
-        for c in range(4):
-            base = [0.0] * 8
-            base[c] = 100.0
-            for j in range(5):
-                v = list(base)
-                v[(c + 4) % 8] = 0.5 * j  # tiny within-cluster spread
-                rows.append((vid, [float(x) for x in v], c))
-                vid += 1
-        _write_embeddings(spark, rows, d)
-        out = registry.get("embedding_kcenter_coreset").fn(
-            spark, d
-        ).collect()
-        assert len(out) == 4
-        clusters = {r["center_vec_id"] // 5 for r in out}
-        assert clusters == {0, 1, 2, 3}
-        dists = [
-            r["chosen_dist_micro"] for r in out if r["iteration"] >= 2
-        ]
-        assert dists == sorted(dists, reverse=True)
-        # final radius = within-cluster spread (max 2.0^2 = 4.0), far
-        # below the between-cluster separation (~2*100^2)
-        assert out[0]["final_radius_micro"] <= 4_000_000
-        assert all(
-            r["final_radius_micro"] == out[0]["final_radius_micro"]
-            for r in out
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    vid = 0
+    for c in range(4):
+        base = [0.0] * 8
+        base[c] = 100.0
+        for j in range(5):
+            v = list(base)
+            v[(c + 4) % 8] = 0.5 * j  # tiny within-cluster spread
+            rows.append((vid, [float(x) for x in v], c))
+            vid += 1
+    _write_embeddings(spark, rows, d)
+    out = registry.get("embedding_kcenter_coreset").fn(
+        spark, d
+    ).collect()
+    assert len(out) == 4
+    clusters = {r["center_vec_id"] // 5 for r in out}
+    assert clusters == {0, 1, 2, 3}
+    dists = [
+        r["chosen_dist_micro"] for r in out if r["iteration"] >= 2
+    ]
+    assert dists == sorted(dists, reverse=True)
+    # final radius = within-cluster spread (max 2.0^2 = 4.0), far
+    # below the between-cluster separation (~2*100^2)
+    assert out[0]["final_radius_micro"] <= 4_000_000
+    assert all(
+        r["final_radius_micro"] == out[0]["final_radius_micro"]
+        for r in out
+    )
 
 
 # --- seventh-continuation batch ------------------------------------------------
@@ -944,9 +885,8 @@ def _stage_docs(spark, rows, d):
     """rows: (doc_id, text, lang, source)."""
     import glob
     import shutil
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="docw_")
+    tmp = f"{d}/_docw"
     spark.createDataFrame(
         [(i, t, lg, src, len(t)) for (i, t, lg, src) in rows],
         "doc_id long, text string, lang string, source string,"
@@ -955,256 +895,220 @@ def _stage_docs(spark, rows, d):
     shutil.copy(
         glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
     )
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_naive_bayes_disjoint_vocab_scores_1000(spark):
+def test_naive_bayes_disjoint_vocab_scores_1000(spark, tmp_path):
     """Two 'languages' with disjoint vocabularies: the learned NB
     classifier must score held-out accuracy 1000 for both."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="nb_")
-    try:
-        rows = []
-        for i in range(30):
-            rows.append(
-                (i, "roter hund springt uber den zaun heute", "de", "s")
-            )
-        for i in range(30, 60):
-            rows.append(
-                (i, "red dog jumps over the fence today quickly", "en", "s")
-            )
-        _stage_docs(spark, rows, d)
-        out = {
-            r["true_lang"]: r
-            for r in registry.get("ml_naive_bayes_langid")
-            .fn(spark, d)
-            .collect()
-        }
-        assert set(out) == {"de", "en"}
-        for lang, r in out.items():
-            assert r["n_test"] > 0
-            assert r["accuracy_permille"] == 1000, (lang, r)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    for i in range(30):
+        rows.append(
+            (i, "roter hund springt uber den zaun heute", "de", "s")
+        )
+    for i in range(30, 60):
+        rows.append(
+            (i, "red dog jumps over the fence today quickly", "en", "s")
+        )
+    _stage_docs(spark, rows, d)
+    out = {
+        r["true_lang"]: r
+        for r in registry.get("ml_naive_bayes_langid")
+        .fn(spark, d)
+        .collect()
+    }
+    assert set(out) == {"de", "en"}
+    for lang, r in out.items():
+        assert r["n_test"] > 0
+        assert r["accuracy_permille"] == 1000, (lang, r)
 
 
-def test_kneser_ney_hand_computed(spark):
+def test_kneser_ney_hand_computed(spark, tmp_path):
     """Hand-computed KN on 'aa bb aa bb aa cc': D = 1/5, and the three
     bigram probabilities come out exactly as the common-denominator
     fractions floor to micro units."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="kn_")
-    try:
-        _stage_docs(spark, [(0, "aa bb aa bb aa cc", "en", "s")], d)
-        rows = registry.get("text_kneser_ney_bigram_lm").fn(
-            spark, d
-        ).collect()
-        by = {(r["w1"], r["w2"]): r for r in rows}
-        assert by[("aa", "bb")]["p_mle_micro"] == 666666
-        assert by[("aa", "bb")]["p_kn_micro"] == 644444
-        assert by[("bb", "aa")]["p_mle_micro"] == 1000000
-        assert by[("bb", "aa")]["p_kn_micro"] == 933333
-        assert by[("aa", "cc")]["p_mle_micro"] == 333333
-        assert by[("aa", "cc")]["p_kn_micro"] == 311111
-        # discount moves mass off every seen bigram of a dense row
-        for k, r in by.items():
-            assert r["p_kn_micro"] < r["p_mle_micro"], k
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    _stage_docs(spark, [(0, "aa bb aa bb aa cc", "en", "s")], d)
+    rows = registry.get("text_kneser_ney_bigram_lm").fn(
+        spark, d
+    ).collect()
+    by = {(r["w1"], r["w2"]): r for r in rows}
+    assert by[("aa", "bb")]["p_mle_micro"] == 666666
+    assert by[("aa", "bb")]["p_kn_micro"] == 644444
+    assert by[("bb", "aa")]["p_mle_micro"] == 1000000
+    assert by[("bb", "aa")]["p_kn_micro"] == 933333
+    assert by[("aa", "cc")]["p_mle_micro"] == 333333
+    assert by[("aa", "cc")]["p_kn_micro"] == 311111
+    # discount moves mass off every seen bigram of a dense row
+    for k, r in by.items():
+        assert r["p_kn_micro"] < r["p_mle_micro"], k
 
 
-def test_audio_landmarks_match_identical_payloads(spark):
+def test_audio_landmarks_match_identical_payloads(spark, tmp_path):
     """Two byte-identical payloads share every landmark (overlap 1000);
     an unrelated payload must not out-rank that pair."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="alf_")
-    try:
-        loud = " ".join(
-            ("LOUDLOUD" if i % 5 == 0 else "quiet sh") for i in range(80)
-        )
-        other = "".join(chr(97 + (i * 7) % 26) for i in range(600))
-        _stage_docs(
-            spark,
-            [(0, loud, "en", "s"), (1, loud, "en", "s"), (2, other, "en", "s")],
-            d,
-        )
-        rows = registry.get("multimodal_audio_landmark_match").fn(
-            spark, d
-        ).collect()
-        assert rows, "identical payloads produced no landmark match"
-        top = rows[0]
-        assert {top["doc_a"], top["doc_b"]} == {0, 1}
-        assert top["overlap_permille"] == 1000
-        assert top["n_lm_a"] == top["n_lm_b"] == top["n_shared"]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    loud = " ".join(
+        ("LOUDLOUD" if i % 5 == 0 else "quiet sh") for i in range(80)
+    )
+    other = "".join(chr(97 + (i * 7) % 26) for i in range(600))
+    _stage_docs(
+        spark,
+        [(0, loud, "en", "s"), (1, loud, "en", "s"), (2, other, "en", "s")],
+        d,
+    )
+    rows = registry.get("multimodal_audio_landmark_match").fn(
+        spark, d
+    ).collect()
+    assert rows, "identical payloads produced no landmark match"
+    top = rows[0]
+    assert {top["doc_a"], top["doc_b"]} == {0, 1}
+    assert top["overlap_permille"] == 1000
+    assert top["n_lm_a"] == top["n_lm_b"] == top["n_shared"]
 
 
 # --- eighth-continuation batch -------------------------------------------------
 
 
-def test_rouge_identical_and_subset_pairs(spark):
+def test_rouge_identical_and_subset_pairs(spark, tmp_path):
     """Byte-identical docs must score ROUGE-1/2 F1 = 1000; when doc A
     is a strict prefix of doc B, precision (vs A) is 1000 while recall
     (vs B) is proportionally lower."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="rouge_")
-    try:
-        base = " ".join(f"tok{i % 23}m{i % 7}" for i in range(60))
-        ext = base + " " + " ".join(f"extra{i}" for i in range(20))
-        _stage_docs(
-            spark,
-            [
-                (0, base, "en", "s"),
-                (1, base, "en", "s"),
-                (2, ext, "en", "s"),
-            ],
-            d,
-        )
-        rows = registry.get("eval_rouge_near_dup_pairs").fn(
-            spark, d
-        ).collect()
-        by = {(r["doc_a"], r["doc_b"]): r for r in rows}
-        assert (0, 1) in by, "identical docs not in candidate pairs"
-        ident = by[(0, 1)]
-        assert ident["rouge1_f1_permille"] == 1000
-        assert ident["rouge2_f1_permille"] == 1000
-        sub = by.get((0, 2)) or by.get((1, 2))
-        if sub is not None:  # LSH may or may not band the prefix pair
-            # doc_a (60 toks) is a strict prefix of doc_b (80 toks):
-            # all of a's unigrams match -> precision vs a = 1000,
-            # recall vs b = 60/80 = 750
-            assert sub["rouge1_prec_permille"] == 1000
-            assert sub["rouge1_rec_permille"] == 750
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    base = " ".join(f"tok{i % 23}m{i % 7}" for i in range(60))
+    ext = base + " " + " ".join(f"extra{i}" for i in range(20))
+    _stage_docs(
+        spark,
+        [
+            (0, base, "en", "s"),
+            (1, base, "en", "s"),
+            (2, ext, "en", "s"),
+        ],
+        d,
+    )
+    rows = registry.get("eval_rouge_near_dup_pairs").fn(
+        spark, d
+    ).collect()
+    by = {(r["doc_a"], r["doc_b"]): r for r in rows}
+    assert (0, 1) in by, "identical docs not in candidate pairs"
+    ident = by[(0, 1)]
+    assert ident["rouge1_f1_permille"] == 1000
+    assert ident["rouge2_f1_permille"] == 1000
+    sub = by.get((0, 2)) or by.get((1, 2))
+    if sub is not None:  # LSH may or may not band the prefix pair
+        # doc_a (60 toks) is a strict prefix of doc_b (80 toks):
+        # all of a's unigrams match -> precision vs a = 1000,
+        # recall vs b = 60/80 = 750
+        assert sub["rouge1_prec_permille"] == 1000
+        assert sub["rouge1_rec_permille"] == 750
 
 
-def test_markov_removal_sole_path_channel(spark):
+def test_markov_removal_sole_path_channel(spark, tmp_path):
     """Every conversion goes view -> click -> purchase; 'error' events
     never convert. Removing view or click must kill ALL conversions
     (effect 1000); removing error must change nothing (effect 0)."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="mra_")
-    try:
-        rows = []
-        eid = 0
-        for u in range(20):
-            for day, et in (
-                ("2024-01-02", "view"),
-                ("2024-01-03", "click"),
-                ("2024-01-04", "purchase"),
-            ):
-                rows.append((eid, f"{day} 10:00:00", u, et, 1.0))
-                eid += 1
-        for u in range(20, 30):
-            rows.append((eid, "2024-01-05 10:00:00", u, "error", 1.0))
+    d = str(tmp_path)
+    rows = []
+    eid = 0
+    for u in range(20):
+        for day, et in (
+            ("2024-01-02", "view"),
+            ("2024-01-03", "click"),
+            ("2024-01-04", "purchase"),
+        ):
+            rows.append((eid, f"{day} 10:00:00", u, et, 1.0))
             eid += 1
-        _write_events(spark, rows, d)
-        out = {
-            r["channel"]: r
-            for r in registry.get("attribution_markov_removal")
-            .fn(spark, d)
-            .collect()
-        }
-        assert set(out) == {"view", "click", "error"}
-        assert out["view"]["removal_effect_permille"] == 1000
-        assert out["click"]["removal_effect_permille"] == 1000
-        assert out["error"]["removal_effect_permille"] == 0
-        assert out["error"]["attribution_share_permille"] == 0
-        assert (
-            out["view"]["attribution_share_permille"]
-            == out["click"]["attribution_share_permille"]
-            == 500
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    for u in range(20, 30):
+        rows.append((eid, "2024-01-05 10:00:00", u, "error", 1.0))
+        eid += 1
+    _write_events(spark, rows, d)
+    out = {
+        r["channel"]: r
+        for r in registry.get("attribution_markov_removal")
+        .fn(spark, d)
+        .collect()
+    }
+    assert set(out) == {"view", "click", "error"}
+    assert out["view"]["removal_effect_permille"] == 1000
+    assert out["click"]["removal_effect_permille"] == 1000
+    assert out["error"]["removal_effect_permille"] == 0
+    assert out["error"]["attribution_share_permille"] == 0
+    assert (
+        out["view"]["attribution_share_permille"]
+        == out["click"]["attribution_share_permille"]
+        == 500
+    )
 
 
 # --- ninth-continuation batch ---------------------------------------------------
 
 
-def test_knn_clustered_labels_score_1000(spark):
+def test_knn_clustered_labels_score_1000(spark, tmp_path):
     """Embeddings whose geometry matches their labels (tight one-hot
     clusters) must classify perfectly under the 5-NN majority vote."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="knn_")
-    try:
-        rows = []
-        vid = 0
-        for lab in range(3):
-            base = [0.0] * 8
-            base[lab] = 10.0
-            for j in range(20):
-                v = list(base)
-                v[(lab + 3) % 8] = 0.01 * j
-                rows.append((vid, [float(x) for x in v], lab))
-                vid += 1
-        _write_embeddings(spark, rows, d)
-        out = registry.get("ml_knn_label_eval").fn(spark, d).collect()
-        assert out, "no test rows from the 80/20 split"
-        for r in out:
-            assert r["accuracy_permille"] == 1000, r
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    vid = 0
+    for lab in range(3):
+        base = [0.0] * 8
+        base[lab] = 10.0
+        for j in range(20):
+            v = list(base)
+            v[(lab + 3) % 8] = 0.01 * j
+            rows.append((vid, [float(x) for x in v], lab))
+            vid += 1
+    _write_embeddings(spark, rows, d)
+    out = registry.get("ml_knn_label_eval").fn(spark, d).collect()
+    assert out, "no test rows from the 80/20 split"
+    for r in out:
+        assert r["accuracy_permille"] == 1000, r
 
 
-def test_periodogram_weekly_cycle_peaks_at_7(spark):
+def test_periodogram_weekly_cycle_peaks_at_7(spark, tmp_path):
     """A planted 7-day cycle in click volume must put the P=7 power
     far above every other candidate period for that type."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="pg_")
-    try:
-        rows = []
-        eid = 0
-        for day in range(1, 29):
-            n = 12 if day % 7 == 0 else 2
-            for _ in range(n):
-                rows.append(
-                    (eid, f"2024-01-{day:02d} 09:00:00", eid % 5, "click", 1.0)
-                )
-                eid += 1
-        _write_events(spark, rows, d)
-        out = {
-            r["period_days"]: r["power_permille"]
-            for r in registry.get("events_periodogram_fixed")
-            .fn(spark, d)
-            .collect()
-            if r["event_type"] == "click"
-        }
-        assert set(out) == {2, 3, 7, 14}
-        assert out[7] == max(out.values())
-        assert out[7] >= 2 * max(out[2], out[3])
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    eid = 0
+    for day in range(1, 29):
+        n = 12 if day % 7 == 0 else 2
+        for _ in range(n):
+            rows.append(
+                (eid, f"2024-01-{day:02d} 09:00:00", eid % 5, "click", 1.0)
+            )
+            eid += 1
+    _write_events(spark, rows, d)
+    out = {
+        r["period_days"]: r["power_permille"]
+        for r in registry.get("events_periodogram_fixed")
+        .fn(spark, d)
+        .collect()
+        if r["event_type"] == "click"
+    }
+    assert set(out) == {2, 3, 7, 14}
+    assert out[7] == max(out.values())
+    assert out[7] >= 2 * max(out[2], out[3])
 
 
 # --- tenth-continuation batch ----------------------------------------------------
@@ -1240,211 +1144,181 @@ def test_key_discovery_fixture_truths(spark, sf_dir):
         assert (r["uniqueness_permille"] == 1000) >= r["is_key"]
 
 
-def test_neyman_zero_variance_stratum_gets_nothing(spark):
+def test_neyman_zero_variance_stratum_gets_nothing(spark, tmp_path):
     """A constant-length stratum carries zero estimator variance, so
     Neyman assigns it zero budget; allocations sum to the budget and
     the capped column never exceeds the stratum size."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import (
         queries_ingest_ext as Q,
     )
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="ney_")
-    try:
-        rows = []
-        for i in range(40):  # constant length: zero variance
-            rows.append((i, "x" * 50, "en", "srcA"))
-        for i in range(40, 80):  # varying length
-            rows.append((i, "y" * (10 + 5 * (i % 13)), "en", "srcB"))
-        _stage_docs(spark, rows, d)
-        out = {
-            r["source"]: r
-            for r in registry.get("sample_neyman_allocation")
-            .fn(spark, d)
-            .collect()
-        }
-        assert out["srcA"]["neyman_weight"] == 0
-        assert out["srcA"]["n_alloc"] == 0
-        assert out["srcB"]["n_alloc"] == Q._NEYMAN_BUDGET
-        assert out["srcB"]["n_alloc_capped"] == out["srcB"]["n_h"]
-        assert (
-            sum(r["n_alloc"] for r in out.values()) == Q._NEYMAN_BUDGET
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    for i in range(40):  # constant length: zero variance
+        rows.append((i, "x" * 50, "en", "srcA"))
+    for i in range(40, 80):  # varying length
+        rows.append((i, "y" * (10 + 5 * (i % 13)), "en", "srcB"))
+    _stage_docs(spark, rows, d)
+    out = {
+        r["source"]: r
+        for r in registry.get("sample_neyman_allocation")
+        .fn(spark, d)
+        .collect()
+    }
+    assert out["srcA"]["neyman_weight"] == 0
+    assert out["srcA"]["n_alloc"] == 0
+    assert out["srcB"]["n_alloc"] == Q._NEYMAN_BUDGET
+    assert out["srcB"]["n_alloc_capped"] == out["srcB"]["n_h"]
+    assert (
+        sum(r["n_alloc"] for r in out.values()) == Q._NEYMAN_BUDGET
+    )
 
 
-def test_method_agreement_identical_docs_in_both(spark):
+def test_method_agreement_identical_docs_in_both(spark, tmp_path):
     """Three byte-identical docs are near-dups under BOTH detector
     families, so all three pairs land in the intersection."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="agree_")
-    try:
-        t = " ".join(f"w{i % 19}q{i % 5}" for i in range(80))
-        rows = [(i, t, "en", "s") for i in range(3)]
-        rows.append((3, " ".join(f"zz{i}" for i in range(80)), "en", "s"))
-        _stage_docs(spark, rows, d)
-        r = registry.get("eval_dedup_method_agreement").fn(
-            spark, d
-        ).collect()[0]
-        assert r["n_both"] >= 3
-        assert r["jaccard_permille"] > 0
-        assert r["n_minhash"] >= 3 and r["n_simhash"] >= 3
-        assert (
-            r["n_both"] + r["n_minhash_only"] + r["n_simhash_only"]
-            >= r["n_minhash"]
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    t = " ".join(f"w{i % 19}q{i % 5}" for i in range(80))
+    rows = [(i, t, "en", "s") for i in range(3)]
+    rows.append((3, " ".join(f"zz{i}" for i in range(80)), "en", "s"))
+    _stage_docs(spark, rows, d)
+    r = registry.get("eval_dedup_method_agreement").fn(
+        spark, d
+    ).collect()[0]
+    assert r["n_both"] >= 3
+    assert r["jaccard_permille"] > 0
+    assert r["n_minhash"] >= 3 and r["n_simhash"] >= 3
+    assert (
+        r["n_both"] + r["n_minhash_only"] + r["n_simhash_only"]
+        >= r["n_minhash"]
+    )
 
 
 # --- eleventh-continuation batch ---------------------------------------------------
 
 
-def test_mutual_information_planted_dependence(spark):
+def test_mutual_information_planted_dependence(spark, tmp_path):
     """A feature that DETERMINES the label must score MI ~ H(Y)
     (uncertainty coefficient ~1000); the independent features stay at
     the noise floor."""
     import glob
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="mi_")
-    tmp = tempfile.mkdtemp(prefix="miw_")
-    try:
-        rows = []
-        for i in range(400):
-            qty = float(5 + (i % 2) * 20)  # band 0 vs band 2
-            flag = "R" if i % 2 == 0 else "N"  # determined by qty band
-            rows.append(
-                (i, 1, qty, 100.0, 0.01 * (i % 7), 0.0, flag, "O",
-                 "1995-0%d-15" % (1 + i % 9))
-            )
-        spark.createDataFrame(
-            rows,
-            "l_orderkey long, l_linenumber long, l_quantity double,"
-            " l_extendedprice double, l_discount double, l_tax double,"
-            " l_returnflag string, l_linestatus string, l_shipdate string",
-        ).selectExpr(
-            "l_orderkey", "l_linenumber", "l_quantity",
-            "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-            "l_linestatus", "CAST(l_shipdate AS DATE) AS l_shipdate",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/lineitem.parquet"
+    d = str(tmp_path)
+    tmp = str(tmp_path / "miw")
+    rows = []
+    for i in range(400):
+        qty = float(5 + (i % 2) * 20)  # band 0 vs band 2
+        flag = "R" if i % 2 == 0 else "N"  # determined by qty band
+        rows.append(
+            (i, 1, qty, 100.0, 0.01 * (i % 7), 0.0, flag, "O",
+             "1995-0%d-15" % (1 + i % 9))
         )
-        out = {
-            r["feature"]: r
-            for r in registry.get("ml_feature_mutual_information")
-            .fn(spark, d)
-            .collect()
-        }
-        # qty band determines the label: MI = H(Y) up to log
-        # interpolation error
-        assert out["qty_band10"]["uncertainty_coeff_permille"] >= 950
-        # discount cycles independently of the label
-        assert out["discount_pct"]["uncertainty_coeff_permille"] <= 100
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+    spark.createDataFrame(
+        rows,
+        "l_orderkey long, l_linenumber long, l_quantity double,"
+        " l_extendedprice double, l_discount double, l_tax double,"
+        " l_returnflag string, l_linestatus string, l_shipdate string",
+    ).selectExpr(
+        "l_orderkey", "l_linenumber", "l_quantity",
+        "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
+        "l_linestatus", "CAST(l_shipdate AS DATE) AS l_shipdate",
+    ).coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.copy(
+        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/lineitem.parquet"
+    )
+    out = {
+        r["feature"]: r
+        for r in registry.get("ml_feature_mutual_information")
+        .fn(spark, d)
+        .collect()
+    }
+    # qty band determines the label: MI = H(Y) up to log
+    # interpolation error
+    assert out["qty_band10"]["uncertainty_coeff_permille"] >= 950
+    # discount cycles independently of the label
+    assert out["discount_pct"]["uncertainty_coeff_permille"] <= 100
 
 
-def test_shot_keyframes_planted_cut(spark):
+def test_shot_keyframes_planted_cut(spark, tmp_path):
     """A payload built from two very different 32-byte frame blocks
     must segment into (at least) two shots, and every keyframe must
     be the max-intensity frame of its shot."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="kf_")
-    try:
-        # frame A: flat 'a'*32 (sig 0); frame B: 16 high + 16 low
-        # bytes (blocks 0-3 beat the mean -> sig 0b1111, Hamming 4)
-        frame_a = "a" * 32
-        frame_b = "~" * 16 + "!" * 16
-        text = frame_a * 2 + frame_b * 2 + frame_a
-        _stage_docs(spark, [(0, text, "en", "s")], d)
-        rows = registry.get("multimodal_shot_keyframes").fn(
-            spark, d
-        ).collect()
-        assert len(rows) >= 2, rows
-        total_frames = sum(r["shot_len"] for r in rows)
-        assert total_frames == len(text) // 32
-        for r in rows:
-            assert (
-                r["shot_start"]
-                <= r["keyframe_idx"]
-                < r["shot_start"] + r["shot_len"]
-            )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    # frame A: flat 'a'*32 (sig 0); frame B: 16 high + 16 low
+    # bytes (blocks 0-3 beat the mean -> sig 0b1111, Hamming 4)
+    frame_a = "a" * 32
+    frame_b = "~" * 16 + "!" * 16
+    text = frame_a * 2 + frame_b * 2 + frame_a
+    _stage_docs(spark, [(0, text, "en", "s")], d)
+    rows = registry.get("multimodal_shot_keyframes").fn(
+        spark, d
+    ).collect()
+    assert len(rows) >= 2, rows
+    total_frames = sum(r["shot_len"] for r in rows)
+    assert total_frames == len(text) // 32
+    for r in rows:
+        assert (
+            r["shot_start"]
+            <= r["keyframe_idx"]
+            < r["shot_start"] + r["shot_len"]
+        )
 
 
-def test_ktruss_clique_survives_chain_peels(spark):
+def test_ktruss_clique_survives_chain_peels(spark, tmp_path):
     """Four byte-identical docs form a 4-clique: every edge has
     support 2, so the whole clique survives the 4-truss peel; a pair
     of docs (single edge, no triangles) must peel away."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="truss_")
-    try:
-        t1 = " ".join(f"k{i % 13}v{i % 7}" for i in range(70))
-        t2 = " ".join(f"solo{i}" for i in range(70))
-        rows = [(i, t1, "en", "s") for i in range(4)]
-        rows += [(4, t2, "en", "s"), (5, t2, "en", "s")]
-        _stage_docs(spark, rows, d)
-        out = registry.get("graph_ktruss_edges").fn(spark, d).collect()
-        edges = {(r["doc_a"], r["doc_b"]) for r in out}
-        clique = {(a, b) for a in range(4) for b in range(4) if a < b}
-        assert edges == clique, edges
-        for r in out:
-            assert r["support"] == 2
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    t1 = " ".join(f"k{i % 13}v{i % 7}" for i in range(70))
+    t2 = " ".join(f"solo{i}" for i in range(70))
+    rows = [(i, t1, "en", "s") for i in range(4)]
+    rows += [(4, t2, "en", "s"), (5, t2, "en", "s")]
+    _stage_docs(spark, rows, d)
+    out = registry.get("graph_ktruss_edges").fn(spark, d).collect()
+    edges = {(r["doc_a"], r["doc_b"]) for r in out}
+    clique = {(a, b) for a in range(4) for b in range(4) if a < b}
+    assert edges == clique, edges
+    for r in out:
+        assert r["support"] == 2
 
 
 # --- twelfth-continuation batch ------------------------------------------------------
 
 
-def test_ood_planted_outlier_tops_ranking(spark):
+def test_ood_planted_outlier_tops_ranking(spark, tmp_path):
     """A tight cluster plus one far-away vector: the outlier must rank
     first by kNN distance and be flagged against the Tukey fence."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="ood_")
-    try:
-        rows = []
-        for i in range(40):  # identical cluster: knn distance 0
-            rows.append((i, [1.0, 2.0, 3.0, 0.0, 0.0, 0.0, 0.0, 0.0], 0))
-        rows.append((99, [50.0, -40.0, 10.0, 5.0, 0.0, 0.0, 0.0, 0.0], 1))
-        _write_embeddings(spark, rows, d)
-        out = registry.get("embedding_ood_knn_distance").fn(
-            spark, d
-        ).collect()
-        assert out[0]["vec_id"] == 99
-        assert out[0]["is_outlier"]
-        # cluster members must not be flagged
-        flagged = {r["vec_id"] for r in out if r["is_outlier"]}
-        assert flagged == {99}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    for i in range(40):  # identical cluster: knn distance 0
+        rows.append((i, [1.0, 2.0, 3.0, 0.0, 0.0, 0.0, 0.0, 0.0], 0))
+    rows.append((99, [50.0, -40.0, 10.0, 5.0, 0.0, 0.0, 0.0, 0.0], 1))
+    _write_embeddings(spark, rows, d)
+    out = registry.get("embedding_ood_knn_distance").fn(
+        spark, d
+    ).collect()
+    assert out[0]["vec_id"] == 99
+    assert out[0]["is_outlier"]
+    # cluster members must not be flagged
+    flagged = {r["vec_id"] for r in out if r["is_outlier"]}
+    assert flagged == {99}
 
 
 def test_synthetic_fidelity_bounds(spark, sf_dir):
@@ -1471,141 +1345,126 @@ def test_synthetic_fidelity_bounds(spark, sf_dir):
         assert v >= 0
 
 
-def test_residual_anomaly_flags_spike_not_weekends(spark):
+def test_residual_anomaly_flags_spike_not_weekends(spark, tmp_path):
     """Weekly-cyclical traffic (busy weekends) plus one mid-week burst:
     the burst day must be flagged; regular weekend highs must NOT be
     (the raw-count fence would flag them)."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="resid_")
-    try:
-        rows = []
-        eid = 0
-        import datetime
+    d = str(tmp_path)
+    rows = []
+    eid = 0
+    import datetime
 
-        d0 = datetime.date(2024, 1, 1)
-        for off in range(35):
-            day = d0 + datetime.timedelta(days=off)
-            # weekly cycle plus mild day-to-day jitter so the residual
-            # MAD is nonzero (a constant series has no robust scale)
-            n = (10 if day.weekday() >= 5 else 3) + (off % 3)
-            if off == 16:  # a Wednesday burst
-                n = 40
-            for _ in range(n):
-                rows.append(
-                    (eid, f"{day} 10:00:00", eid % 9, "click", 1.0)
-                )
-                eid += 1
-        _write_events(spark, rows, d)
-        out = registry.get("events_seasonal_residual_anomaly").fn(
-            spark, d
-        ).collect()
-        days = {r["day"] for r in out}
-        assert "2024-01-17" in days, out
-        weekend_days = {
-            str(d0 + datetime.timedelta(days=o))
-            for o in range(35)
-            if (d0 + datetime.timedelta(days=o)).weekday() >= 5
-        }
-        assert not (days & weekend_days), (days, weekend_days)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d0 = datetime.date(2024, 1, 1)
+    for off in range(35):
+        day = d0 + datetime.timedelta(days=off)
+        # weekly cycle plus mild day-to-day jitter so the residual
+        # MAD is nonzero (a constant series has no robust scale)
+        n = (10 if day.weekday() >= 5 else 3) + (off % 3)
+        if off == 16:  # a Wednesday burst
+            n = 40
+        for _ in range(n):
+            rows.append(
+                (eid, f"{day} 10:00:00", eid % 9, "click", 1.0)
+            )
+            eid += 1
+    _write_events(spark, rows, d)
+    out = registry.get("events_seasonal_residual_anomaly").fn(
+        spark, d
+    ).collect()
+    days = {r["day"] for r in out}
+    assert "2024-01-17" in days, out
+    weekend_days = {
+        str(d0 + datetime.timedelta(days=o))
+        for o in range(35)
+        if (d0 + datetime.timedelta(days=o)).weekday() >= 5
+    }
+    assert not (days & weekend_days), (days, weekend_days)
 
 
-def test_slo_burn_multiwindow_suppression(spark):
+def test_slo_burn_multiwindow_suppression(spark, tmp_path):
     """A sustained error burst pages (both windows hot); the hour
     right after the burst ends does NOT page even though the 6h
     window is still hot — the multi-window rule's whole point."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="slo_")
-    try:
-        rows = []
-        eid = 0
-        for hour in range(24):
-            # baseline: 100 events, 0 errors; burst hours 10-12: half errors
-            n_err = 50 if hour in (10, 11, 12) else 0
-            for i in range(100):
-                et = "error" if i < n_err else "view"
-                rows.append(
-                    (eid, f"2024-01-05 {hour:02d}:30:00", eid % 7, et, 1.0)
-                )
-                eid += 1
-        _write_events(spark, rows, d)
-        out = {
-            r["hour"]: r
-            for r in registry.get("events_slo_burn_rate")
-            .fn(spark, d)
-            .collect()
-        }
-        # burn in a burst hour: 50% errors vs 1% budget => burn 50x
-        assert out["2024-01-05 11:00"]["page_alert"]
-        assert out["2024-01-05 11:00"]["burn1h_milli"] == 50000
-        # hour 13: short window cold (0 errors), 6h window still hot
-        r13 = out["2024-01-05 13:00"]
-        assert r13["burn1h_milli"] == 0
-        assert r13["burn6h_milli"] > 6000
-        assert not r13["page_alert"]
-        # quiet hours never page
-        assert not out["2024-01-05 05:00"]["page_alert"]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    rows = []
+    eid = 0
+    for hour in range(24):
+        # baseline: 100 events, 0 errors; burst hours 10-12: half errors
+        n_err = 50 if hour in (10, 11, 12) else 0
+        for i in range(100):
+            et = "error" if i < n_err else "view"
+            rows.append(
+                (eid, f"2024-01-05 {hour:02d}:30:00", eid % 7, et, 1.0)
+            )
+            eid += 1
+    _write_events(spark, rows, d)
+    out = {
+        r["hour"]: r
+        for r in registry.get("events_slo_burn_rate")
+        .fn(spark, d)
+        .collect()
+    }
+    # burn in a burst hour: 50% errors vs 1% budget => burn 50x
+    assert out["2024-01-05 11:00"]["page_alert"]
+    assert out["2024-01-05 11:00"]["burn1h_milli"] == 50000
+    # hour 13: short window cold (0 errors), 6h window still hot
+    r13 = out["2024-01-05 13:00"]
+    assert r13["burn1h_milli"] == 0
+    assert r13["burn6h_milli"] > 6000
+    assert not r13["page_alert"]
+    # quiet hours never page
+    assert not out["2024-01-05 05:00"]["page_alert"]
 
 
 # --- fourteenth-continuation batch ---------------------------------------------------
 
 
-def test_pvm_identity_and_hand_case(spark):
+def test_pvm_identity_and_hand_case(spark, tmp_path):
     """Hand case: 10 orders at avg 100c -> 20 at avg 150c gives
     volume/rate/joint = 1e6/5e5/5e5 millicents, remainder 0; the
     decomposition identity must hold exactly on every row."""
     import glob
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="pvm_")
-    tmp = tempfile.mkdtemp(prefix="pvmw_")
-    try:
-        rows = []
-        k = 0
-        for i in range(10):
-            rows.append((k, 1, "O", 1.00, "1995-01-10", "1-URGENT")); k += 1
-        for i in range(20):
-            rows.append((k, 1, "O", 1.50, "1995-02-10", "1-URGENT")); k += 1
-        spark.createDataFrame(
-            rows,
-            "o_orderkey long, o_custkey long, o_orderstatus string,"
-            " o_totalprice double, o_orderdate string,"
-            " o_orderpriority string",
-        ).selectExpr(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-            "CAST(o_orderdate AS TIMESTAMP) AS o_orderdate",
-            "o_orderpriority",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/orders.parquet"
-        )
-        rowsout = registry.get("orders_price_volume_mix").fn(
-            spark, d
-        ).collect()
-        assert len(rowsout) == 1
-        r = rowsout[0]
-        assert r["delta_millicents"] == 2_000_000
-        assert r["volume_effect"] == 1_000_000
-        assert r["rate_effect"] == 500_000
-        assert r["joint_effect"] == 500_000
-        assert r["truncation_remainder"] == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+    d = str(tmp_path)
+    tmp = str(tmp_path / "pvmw")
+    rows = []
+    k = 0
+    for i in range(10):
+        rows.append((k, 1, "O", 1.00, "1995-01-10", "1-URGENT")); k += 1
+    for i in range(20):
+        rows.append((k, 1, "O", 1.50, "1995-02-10", "1-URGENT")); k += 1
+    spark.createDataFrame(
+        rows,
+        "o_orderkey long, o_custkey long, o_orderstatus string,"
+        " o_totalprice double, o_orderdate string,"
+        " o_orderpriority string",
+    ).selectExpr(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "CAST(o_orderdate AS TIMESTAMP) AS o_orderdate",
+        "o_orderpriority",
+    ).coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.copy(
+        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/orders.parquet"
+    )
+    rowsout = registry.get("orders_price_volume_mix").fn(
+        spark, d
+    ).collect()
+    assert len(rowsout) == 1
+    r = rowsout[0]
+    assert r["delta_millicents"] == 2_000_000
+    assert r["volume_effect"] == 1_000_000
+    assert r["rate_effect"] == 500_000
+    assert r["joint_effect"] == 500_000
+    assert r["truncation_remainder"] == 0
 
 
 def test_pvm_identity_on_fixture(spark, sf_dir):
@@ -1622,84 +1481,74 @@ def test_pvm_identity_on_fixture(spark, sf_dir):
         ), r
 
 
-def test_adamic_adar_rare_neighbor_outranks_hub(spark):
+def test_adamic_adar_rare_neighbor_outranks_hub(spark, tmp_path):
     """A supplier pair sharing a degree-2 customer (weight 1e6) must
     out-score pairs sharing only a degree-8 hub customer
     (weight 1e9/3000 = 333333)."""
     import glob
     import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="aa_")
-    t1 = tempfile.mkdtemp(prefix="aaw1_")
-    t2 = tempfile.mkdtemp(prefix="aaw2_")
-    try:
-        spark.createDataFrame(
-            [(1, "c1", 1, 0.0, "A"), (2, "c2", 2, 0.0, "A")],
-            "c_custkey long, c_name string, c_nationkey int,"
-            " c_acctbal double, c_mktsegment string",
-        ).coalesce(1).write.mode("overwrite").parquet(t1)
-        shutil.copy(glob.glob(f"{t1}/part-*.parquet")[0], f"{d}/customer.parquet")
-        supps = [(1, "s1", 1, 0.0), (2, "s2", 1, 0.0)]
-        supps += [(10 + i, f"s{10 + i}", 2, 0.0) for i in range(8)]
-        spark.createDataFrame(
-            supps,
-            "s_suppkey long, s_name string, s_nationkey int,"
-            " s_acctbal double",
-        ).coalesce(1).write.mode("overwrite").parquet(t2)
-        shutil.copy(glob.glob(f"{t2}/part-*.parquet")[0], f"{d}/supplier.parquet")
-        out = registry.get("graph_adamic_adar_linkpred").fn(
-            spark, d
-        ).collect()
-        top = out[0]
-        assert (top["s1"], top["s2"]) == (1, 2)
-        assert top["aa_micro"] == 1_000_000  # 1/log2(2) in micro
-        hub_pairs = [r for r in out if r["s1"] >= 10]
-        assert hub_pairs and all(
-            r["aa_micro"] == 333_333 for r in hub_pairs
-        )
-    finally:
-        for p in (d, t1, t2):
-            shutil.rmtree(p, ignore_errors=True)
+    d = str(tmp_path)
+    t1 = str(tmp_path / "aaw1")
+    t2 = str(tmp_path / "aaw2")
+    spark.createDataFrame(
+        [(1, "c1", 1, 0.0, "A"), (2, "c2", 2, 0.0, "A")],
+        "c_custkey long, c_name string, c_nationkey int,"
+        " c_acctbal double, c_mktsegment string",
+    ).coalesce(1).write.mode("overwrite").parquet(t1)
+    shutil.copy(glob.glob(f"{t1}/part-*.parquet")[0], f"{d}/customer.parquet")
+    supps = [(1, "s1", 1, 0.0), (2, "s2", 1, 0.0)]
+    supps += [(10 + i, f"s{10 + i}", 2, 0.0) for i in range(8)]
+    spark.createDataFrame(
+        supps,
+        "s_suppkey long, s_name string, s_nationkey int,"
+        " s_acctbal double",
+    ).coalesce(1).write.mode("overwrite").parquet(t2)
+    shutil.copy(glob.glob(f"{t2}/part-*.parquet")[0], f"{d}/supplier.parquet")
+    out = registry.get("graph_adamic_adar_linkpred").fn(
+        spark, d
+    ).collect()
+    top = out[0]
+    assert (top["s1"], top["s2"]) == (1, 2)
+    assert top["aa_micro"] == 1_000_000  # 1/log2(2) in micro
+    hub_pairs = [r for r in out if r["s1"] >= 10]
+    assert hub_pairs and all(
+        r["aa_micro"] == 333_333 for r in hub_pairs
+    )
 
 
-def test_dup_rate_by_source_cross_vs_local(spark):
+def test_dup_rate_by_source_cross_vs_local(spark, tmp_path):
     """Planted: srcA holds two copies of one text (shard-local dup),
     srcB holds a third copy (cross-source), srcC is clean. The
     report must separate local from cross-source duplication."""
-    import shutil
-    import tempfile
 
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
-    d = tempfile.mkdtemp(prefix="dupsrc_")
-    try:
-        t = " ".join(f"dup{i % 17}w{i % 5}" for i in range(70))
-        clean = " ".join(f"clean{i}" for i in range(70))
-        _stage_docs(
-            spark,
-            [
-                (0, t, "en", "srcA"),
-                (1, t, "en", "srcA"),
-                (2, t, "en", "srcB"),
-                (3, clean, "en", "srcC"),
-            ],
-            d,
-        )
-        out = {
-            r["source"]: r
-            for r in registry.get("corpus_dup_rate_by_source")
-            .fn(spark, d)
-            .collect()
-        }
-        assert out["srcA"]["n_dup_docs"] == 2
-        assert out["srcA"]["dup_rate_permille"] == 1000
-        assert out["srcA"]["n_cross_source"] == 2  # both pair into srcB
-        assert out["srcB"]["n_dup_docs"] == 1
-        assert out["srcB"]["n_cross_source"] == 1
-        assert out["srcC"]["n_dup_docs"] == 0
-        assert out["srcC"]["dup_rate_permille"] == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    t = " ".join(f"dup{i % 17}w{i % 5}" for i in range(70))
+    clean = " ".join(f"clean{i}" for i in range(70))
+    _stage_docs(
+        spark,
+        [
+            (0, t, "en", "srcA"),
+            (1, t, "en", "srcA"),
+            (2, t, "en", "srcB"),
+            (3, clean, "en", "srcC"),
+        ],
+        d,
+    )
+    out = {
+        r["source"]: r
+        for r in registry.get("corpus_dup_rate_by_source")
+        .fn(spark, d)
+        .collect()
+    }
+    assert out["srcA"]["n_dup_docs"] == 2
+    assert out["srcA"]["dup_rate_permille"] == 1000
+    assert out["srcA"]["n_cross_source"] == 2  # both pair into srcB
+    assert out["srcB"]["n_dup_docs"] == 1
+    assert out["srcB"]["n_cross_source"] == 1
+    assert out["srcC"]["n_dup_docs"] == 0
+    assert out["srcC"]["dup_rate_permille"] == 0

@@ -17,7 +17,6 @@ from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
     apply_delivery_state,
 )
 from dynamodb_stream_processor_2_0_spark.streaming.runner import (
-    ROCKSDB,
     conf_scope,
     run_available_now,
 )
@@ -84,13 +83,11 @@ def test_delivery_state_machine_exactly_once(spark, sf_dir, staged, tmp_path):
         F.explode(
             F.arrays_zip(
                 *(F.col(f"value.groupState.{c}").alias(c)
-                  for c in ("user_id", "event_type", "delivery_status",
-                            "delivered_event_id"))
+                  for c in ("user_id", "event_type", "delivered_event_id"))
             )
         ).alias("e")
     ).select("e.*")
     assert entries.count() == keys, "exactly one state entry per key"
-    assert entries.filter(F.col("delivery_status") != "delivered").count() == 0
     stored = entries.select(
         "user_id", "event_type", F.col("delivered_event_id").alias("event_id")
     )
@@ -123,7 +120,7 @@ def test_delivery_fn_multi_chunk_global_order():
     global (ts, event_id) minimum — a per-chunk sort would deliver
     whatever the first chunk happens to hold (the round-1 bug: hidden at
     test scale because groups fit in one chunk). Two keys share the
-    bucket; neither's status may leak into the other's."""
+    bucket; neither's winner may leak into the other's."""
     import pandas as pd
 
     from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
@@ -148,22 +145,18 @@ def test_delivery_fn_multi_chunk_global_order():
         frame([(*b, 11, "2026-01-01 12:00"), (*a, 10, "2026-01-01")]),
     ]
 
-    def run(fn, batch, state):
-        [out] = list(fn((7,), iter(batch), state))
+    def run(batch, state):
+        [out] = list(make_bucket_fn()((7,), iter(batch), state))
         got = {}
         for r in out.itertuples():
             got.setdefault((r.user_id, r.event_type), []).append(
                 (r.event_id, r.action, r.status_after)
             )
-        users, types, statuses, delivered, attempts = state.get
-        per_key = {
-            (u, t): (s, d, n)
-            for u, t, s, d, n in zip(users, types, statuses, delivered, attempts)
-        }
-        return got, per_key
+        users, types, delivered = state.get
+        return got, dict(zip(zip(users, types), delivered))
 
     state = _FakeGroupState()
-    got, per_key = run(make_bucket_fn(), chunks, state)
+    got, winners = run(chunks, state)
     dup, trig = "duplicate_prevented", "email_triggered"
     assert got == {
         a: [(10, trig, "delivered"), (20, dup, "delivered"),
@@ -171,33 +164,21 @@ def test_delivery_fn_multi_chunk_global_order():
         b: [(11, trig, "delivered"), (21, dup, "delivered"),
             (31, dup, "delivered")],
     }, "each key's rows emitted in its global ts order, earliest one wins"
-    assert per_key == {a: ("delivered", 10, 4), b: ("delivered", 11, 3)}
+    assert winners == {a: 10, b: 11}
 
     # The next micro-batch with that state: every row is a duplicate.
     later = [frame([(*b, 51, "2026-01-05"), (*a, 50, "2026-01-05")])]
-    got, per_key = run(make_bucket_fn(), later, state)
+    got, winners = run(later, state)
     assert got == {a: [(50, dup, "delivered")], b: [(51, dup, "delivered")]}
-    assert per_key == {a: ("delivered", 10, 5), b: ("delivered", 11, 4)}
-
-    # S7: key b's first send fails after key a has delivered, so b's next
-    # event delivers; key a, in the same bucket, is untouched by b's
-    # revert to pending.
-    state = _FakeGroupState()
-    got, per_key = run(make_bucket_fn(lambda eid: eid != 11), chunks, state)
-    assert got[a] == [(10, trig, "delivered"), (20, dup, "delivered"),
-                      (30, dup, "delivered"), (40, dup, "delivered")]
-    assert got[b] == [(11, "sink_failed", "delivered"), (21, trig, "delivered"),
-                      (31, dup, "delivered")]
-    assert per_key == {a: ("delivered", 10, 4), b: ("delivered", 21, 3)}
+    assert winners == {a: 10, b: 11}
 
     # Arrow hands a user_id column holding a null to pandas as float64
     # (tools/hostile_sweep.py's nulls world); the null key keeps its own
     # entry and the others stay integers.
     state = _FakeGroupState()
     nulls = frame([(None, "click", 1, "2026-01-01"), (3, "click", 2, "2026-01-01")])
-    _, per_key = run(make_bucket_fn(), [nulls], state)
-    assert per_key == {(None, "click"): ("delivered", 1, 1),
-                       (3, "click"): ("delivered", 2, 1)}
+    _, winners = run([nulls], state)
+    assert winners == {(None, "click"): 1, (3, "click"): 2}
     assert type(state.get[0][1]) is int
 
 
@@ -227,50 +208,6 @@ def test_delivery_state_exactly_once_tiny_arrow_batches(spark, sf_dir, staged):
         .count()
         == 0
     ), "streaming winners must match batch first-occurrence"
-
-
-def test_delivery_state_sink_failure_compensation(spark, sf_dir, staged):
-    """S7: a failing sink send must not mark the key delivered — the
-    next attempt for that key must still be able to trigger. The whole
-    disposition multiset must equal a sequential model of the reference
-    (events in (ts, event_id) order, every odd event_id failing at the
-    sink), so no key's status leaks into another key of its bucket."""
-    q = run_available_now(
-        spark,
-        "dispositions_fail",
-        lambda: apply_delivery_state(
-            replay.read_event_stream(spark, staged),
-            sink_ok=lambda eid: eid % 2 == 0,
-        )
-        .writeStream.outputMode("append")
-        .format("memory"),
-        timeout_s=120,
-    )
-    got = sorted(
-        tuple(r)
-        for r in spark.table(q.name)
-        .select("user_id", "event_type", "event_id", "action")
-        .collect()
-    )
-
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "event_id", "ts"
-    )
-    status: dict[tuple, str] = {}
-    want = []
-    for r in sorted(events.collect(), key=lambda r: (r.ts, r.event_id)):
-        key = (r.user_id, r.event_type)
-        if status.get(key) == "delivered":
-            action = "duplicate_prevented"
-        elif r.event_id % 2 == 0:
-            status[key], action = "delivered", "email_triggered"
-        else:
-            action = "sink_failed"
-        want.append((*key, r.event_id, action))
-    assert {a for *_, a in want} == {
-        "email_triggered", "duplicate_prevented", "sink_failed"
-    }, "the model must exercise every transition"
-    assert got == sorted(want)
 
 
 def test_watermark_dedup_stream(spark, staged):
@@ -365,9 +302,14 @@ def test_envelope_sink_idempotent_and_observed(spark, sf_dir, staged, tmp_path):
     assert all(
         max(c.values()) == 1 for c in per_epoch.values() if c
     ), "dedup_id repeated within an epoch"
-    # observed metrics cover all processed records
-    total_processed = sum(m["records_processed"] for m in metrics)
-    assert total_processed == load_table(spark, sf_dir, "events").count()
+    # observed metrics cover all processed records, each carrying one
+    # of the two dispositions
+    total = {k: sum(m[k] for m in metrics) for k in metrics[0].asDict()}
+    assert total["records_processed"] == load_table(spark, sf_dir, "events").count()
+    assert total["records_processed"] == (
+        total["emails_triggered"] + total["duplicates_prevented"]
+    )
+    assert total["processing_errors"] == 0
 
 
 def test_session_window_stream_matches_batch(spark, sf_dir, staged):
@@ -474,134 +416,35 @@ def test_sessionize_fn_chunk_spanning_and_state_carry():
     assert got2 == {4: (2, 2), 5: (3, 1)}
 
 
-class _FakeMapState:
-    """Minimal MapState double for unit-testing FirstTouchProcessor."""
-
-    def __init__(self):
-        self._d = {}
-
-    def containsKey(self, k):
-        return k in self._d
-
-    def updateValue(self, k, v):
-        self._d[k] = v
-
-
-def test_first_touch_processor_chunk_and_batch_semantics():
-    """Chunk order must not matter (concat+sort before iterating), and
-    state must suppress re-emission across batches."""
-    import pandas as pd
-
-    from dynamodb_stream_processor_2_0_spark.streaming.first_touch import (
-        FirstTouchProcessor,
-    )
-
-    p = FirstTouchProcessor()
-    p._seen = _FakeMapState()
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-
-    def pdf(rows):
-        return pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": [t0 + pd.Timedelta(seconds=r[1]) for r in rows],
-                "event_type": [r[2] for r in rows],
-            }
-        )
-
-    # batch 1: two chunks, the true first 'click' (event 1, t=0) is in
-    # the SECOND chunk — a chunk-order-sensitive implementation would
-    # pick event 3 (t=5) instead.
-    out1 = pd.concat(
-        list(
-            p.handleInputRows(
-                (7,),
-                iter([pdf([(3, 5, "click"), (2, 9, "view")]),
-                      pdf([(1, 0, "click")])]),
-                None,
-            )
-        )
-    )
-    got1 = dict(zip(out1.event_type, out1.first_event_id))
-    assert got1 == {"click": 1, "view": 2}
-    assert list(out1.user_id.unique()) == [7]
-
-    # batch 2: repeat types emit nothing; a new type emits once.
-    out2 = list(
-        p.handleInputRows(
-            (7,),
-            iter([pdf([(9, 20, "click"), (10, 21, "purchase")])]),
-            None,
-        )
-    )
-    got2 = dict(zip(out2[0].event_type, out2[0].first_event_id))
-    assert got2 == {"purchase": 10}
-
-
-def test_first_touch_transform_with_state_e2e(spark, sf_dir):
-    """Full transformWithStateInPandas run — requires google.protobuf
-    (the new API's state-server protocol), absent in this container."""
-    pytest.importorskip("google.protobuf")
-    from dynamodb_stream_processor_2_0_spark.streaming.first_touch import (
-        apply_first_touch,
-    )
-
-    staged = replay.stage_event_chunks(spark, sf_dir, chunks=4)
-    q = run_available_now(
-        spark,
-        "first_touch",
-        lambda: apply_first_touch(replay.read_event_stream(spark, staged))
-        .writeStream.format("memory")
-        .outputMode("append"),
-        conf=ROCKSDB,
-        timeout_s=240,
-    )
-    got = {
-        (r.user_id, r.event_type): r.first_event_id
-        for r in spark.table(q.name).collect()
-    }
-    from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
-    from pyspark.sql import Window, functions as F
-
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    want = {
-        (r.user_id, r.event_type): r.event_id
-        for r in load_table(spark, sf_dir, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    assert got == want
-
-
-def test_first_touch_batch_twin_matches_processor(spark, sf_dir):
-    """first_touch_attribution (the registered batch twin) must pick the
-    same winners as FirstTouchProcessor replaying the same events in
-    arbitrary chunk order — the semantic-equivalence proof behind giving
-    the transformWithState operator an oracle row via batch."""
+def test_first_touch_attribution_matches_sequential_model(spark, sf_dir):
+    """first_touch_attribution must pick, per (user_id, event_type), the
+    winner a sequential claim picks when the events arrive in arbitrary
+    order: a record wins its key unless the key's current winner is
+    earlier by (ts, event_id). Every other touch of the key is
+    suppressed and counted."""
     from dynamodb_stream_processor_2_0_spark.plans import registry
-    from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
-    from dynamodb_stream_processor_2_0_spark.streaming.first_touch import (
-        FirstTouchProcessor,
-    )
 
     batch = registry.get("first_touch_attribution").fn(spark, sf_dir)
-    got_batch = {
-        (r.user_id, r.event_type): r.first_event_id for r in batch.collect()
+    got = {
+        (r.user_id, r.event_type): (r.first_event_id, r.n_touches, r.n_suppressed)
+        for r in batch.collect()
     }
 
-    ev = (
+    arrivals = (
         load_table(spark, sf_dir, "events")
         .select("user_id", "event_type", "event_id", "ts")
         .toPandas()
         .sample(frac=1.0, random_state=7)  # arbitrary arrival order
     )
-    got_proc: dict = {}
-    for uid, g in ev.groupby("user_id"):
-        p = FirstTouchProcessor()
-        p._seen = _FakeMapState()
-        chunks = [g.iloc[i::3] for i in range(3)]  # keys span chunks
-        for out in p.handleInputRows((uid,), iter(chunks), None):
-            for r in out.itertuples():
-                got_proc[(uid, r.event_type)] = r.first_event_id
-    assert got_batch == got_proc
+    winner: dict = {}
+    touches: dict = {}
+    for r in arrivals.itertuples():
+        key = (r.user_id, r.event_type)
+        touches[key] = touches.get(key, 0) + 1
+        if key not in winner or (r.ts, r.event_id) < winner[key]:
+            winner[key] = (r.ts, r.event_id)
+    want = {
+        key: (event_id, touches[key], touches[key] - 1)
+        for key, (_, event_id) in winner.items()
+    }
+    assert got == want

@@ -1,17 +1,19 @@
-"""Exactly-once across restart (the reference's core claim, D4 +
-checkpointing): stop the delivery stream mid-replay, restart from the
-checkpoint, and verify no key ever triggers twice and the final ledger
-matches the uninterrupted batch golden."""
+"""Exactly-once across a failed epoch (the reference's core claim, D4 +
+S7 + checkpointing): the envelope sink fails an epoch after writing it,
+the query restarts from the checkpoint, and every key must still land
+exactly once with the batch golden's winner."""
 
 from __future__ import annotations
 
+import os
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.operators.dedup import first_occurrence
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
-from dynamodb_stream_processor_2_0_spark.streaming import replay
+from dynamodb_stream_processor_2_0_spark.streaming import replay, sinks
 from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
     apply_delivery_state,
 )
@@ -21,73 +23,72 @@ from dynamodb_stream_processor_2_0_spark.streaming.runner import (
     run_available_now,
 )
 
+# Replay chunks are ts-ordered, so most keys are won in epoch 0; epoch 1
+# is the last one that still has winners at sf0.001.
+_FAILED_EPOCH = 1
+
 
 @pytest.mark.parametrize("provider", [{}, ROCKSDB], ids=["default-hdfs", "rocksdb"])
 def test_exactly_once_across_restart(spark, sf_dir, provider, tmp_path):
-    """Restart recovery must hold on BOTH state backends: checkpoint
-    offsets/commits are backend-independent, but RocksDB additionally
-    restores keyed state from its own changelog/snapshot files — the
-    path a 100 TB job exercises on every executor loss."""
-    with conf_scope(spark, provider):
-        _run_restart_scenario(spark, sf_dir, tmp_path)
-
-
-def _run_restart_scenario(spark, sf_dir, tmp_path):
+    """S7 is Spark's epoch retry. The sink raises on epoch 1 after its
+    envelopes are written, so that batch's state was written but the
+    batch never committed. The restart must re-run epoch 1 on the state
+    it started from (its winners win again and overwrite the epoch's
+    envelopes), then drain the other chunks. Both state backends: RocksDB
+    also restores keyed state from its own changelog/snapshot files —
+    the path a 100 TB job exercises on every executor loss."""
     staged = replay.stage_event_chunks(spark, sf_dir, chunks=6)
     checkpoint = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "recovery_out")
+    out_dir = str(tmp_path / "envelopes")
+    write = sinks.write_envelopes(out_dir)
 
-    def writer():
-        stream = replay.read_event_stream(spark, staged)
-        return (
-            apply_delivery_state(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint)
+    def fail_after_write(batch_df, epoch_id):
+        write(batch_df, epoch_id)
+        if epoch_id == _FAILED_EPOCH:
+            raise RuntimeError(f"queue send failed on epoch {epoch_id}")
+
+    def writer(sink):
+        def build():
+            stream = replay.read_event_stream(spark, staged)
+            triggered = apply_delivery_state(stream).filter(
+                F.col("action") == "email_triggered"
+            )
+            return triggered.writeStream.foreachBatch(sink).option(
+                "checkpointLocation", checkpoint
+            )
+
+        return build
+
+    with pytest.raises(StreamingQueryException, match="queue send failed"):
+        run_available_now(
+            spark, "recovery_fail", writer(fail_after_write), conf=provider
         )
-
-    # Phase 1: process at least one micro-batch, then stop mid-replay.
-    q = writer().trigger(availableNow=True).start()
-    while not q.recentProgress:
-        q.awaitTermination(1)
-    q.stop()
-    q.awaitTermination(60)
-    first_phase = spark.read.parquet(out_dir).count()
-
-    # Phase 2: restart from the checkpoint and drain.
-    run_available_now(spark, "recovery_restart", writer, timeout_s=120)
-
-    out = spark.read.parquet(out_dir)
-    events = load_table(spark, sf_dir, "events")
-    # Crash-restart may replay the in-flight batch (at-least-once at the
-    # file sink), but a clean stop() commits; availableNow restart must
-    # resume, not restart from zero.
-    assert out.count() == events.count(), "restart lost or duplicated events"
-    if first_phase >= events.count():
-        import warnings
-
-        # machine drained all 6 micro-batches before stop(); the restart
-        # path still ran (no-op resume) but interruption wasn't exercised
-        warnings.warn("phase 1 completed before stop(); weak interruption")
-
-    triggered = out.filter(F.col("action") == "email_triggered")
-    keys = events.select("user_id", "event_type").distinct().count()
-    assert triggered.count() == keys, "exactly one trigger per key across restart"
-    dupes = (
-        triggered.groupBy("user_id", "event_type").count().filter("count > 1").count()
+    interrupted = sorted(os.listdir(out_dir))
+    restart = run_available_now(
+        spark, "recovery_restart", writer(write), conf=provider
     )
-    assert dupes == 0
 
+    assert interrupted == [f"epoch={e}" for e in range(_FAILED_EPOCH + 1)]
+    assert restart.recentProgress[0]["batchId"] == _FAILED_EPOCH, (
+        "the restart must re-run the failed epoch, not skip it or start over"
+    )
+    body = F.col("message_body")
+    envelopes = spark.read.json(out_dir)
+    assert envelopes.filter(F.col("epoch") == _FAILED_EPOCH).count() > 0, (
+        "the failed epoch carried no winner, so its retry proves nothing"
+    )
+    landed = envelopes.select(
+        F.get_json_object(body, "$.payload.user_id").cast("long").alias("user_id"),
+        F.get_json_object(body, "$.payload.event_type").alias("event_type"),
+        F.get_json_object(body, "$.payload.event_id").cast("long").alias("event_id"),
+    )
     expected = first_occurrence(
-        events, ["user_id", "event_type"], ["ts", "event_id"]
+        load_table(spark, sf_dir, "events"),
+        ["user_id", "event_type"],
+        ["ts", "event_id"],
     ).select("user_id", "event_type", "event_id")
-    mismatches = (
-        triggered.select("user_id", "event_type", "event_id")
-        .exceptAll(expected)
-        .count()
-    )
-    assert mismatches == 0, "post-restart winners must equal batch first-occurrence"
+    assert landed.exceptAll(expected).count() == 0, "a key landed twice or late"
+    assert expected.exceptAll(landed).count() == 0, "a key never landed"
 
 
 def test_delivery_e2e_on_rocksdb_state_store(spark, sf_dir):
