@@ -8,6 +8,7 @@ import glob
 import json
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.operators.dedup import first_occurrence
@@ -208,6 +209,63 @@ def test_delivery_state_exactly_once_tiny_arrow_batches(spark, sf_dir, staged):
         .count()
         == 0
     ), "streaming winners must match batch first-occurrence"
+
+
+def test_delivery_state_sink_failure_compensation(
+    spark, sf_dir, staged, tmp_path
+):
+    """S7: a failed send must not mark its keys delivered. The sink
+    raises on epoch 0 before it keeps anything, so that epoch's state
+    was written but the batch never committed. The query restarted from
+    the checkpoint re-runs epoch 0 on empty state, and the whole
+    disposition multiset must equal a sequential model of the reference
+    (events in (ts, event_id) order, the first per key triggers): a key
+    the failed attempt had claimed would show up as duplicate only."""
+    checkpoint = str(tmp_path / "ckpt")
+    kept: dict[int, list[tuple]] = {}
+
+    def sink(fail):
+        def write(batch_df, epoch_id):
+            if fail and epoch_id == 0:
+                raise RuntimeError("queue send failed on epoch 0")
+            kept[epoch_id] = [
+                tuple(r)
+                for r in batch_df.select(
+                    "user_id", "event_type", "event_id", "action"
+                ).collect()
+            ]
+
+        return lambda: (
+            apply_delivery_state(replay.read_event_stream(spark, staged))
+            .writeStream.foreachBatch(write)
+            .option("checkpointLocation", checkpoint)
+        )
+
+    with pytest.raises(StreamingQueryException, match="queue send failed"):
+        run_available_now(spark, "dispositions_fail", sink(True), timeout_s=120)
+    assert kept == {}
+    restart = run_available_now(
+        spark, "dispositions_retry", sink(False), timeout_s=120
+    )
+    assert restart.recentProgress[0]["batchId"] == 0, (
+        "the restart must re-run the failed epoch"
+    )
+    assert any(a == "email_triggered" for *_, a in kept[0]), (
+        "the failed epoch carried no winner, so its retry proves nothing"
+    )
+
+    events = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "event_id", "ts"
+    )
+    won: set[tuple] = set()
+    want = []
+    for r in sorted(events.collect(), key=lambda r: (r.ts, r.event_id)):
+        key = (r.user_id, r.event_type)
+        action = "duplicate_prevented" if key in won else "email_triggered"
+        won.add(key)
+        want.append((*key, r.event_id, action))
+    got = [row for rows in kept.values() for row in rows]
+    assert sorted(got) == sorted(want)
 
 
 def test_watermark_dedup_stream(spark, staged):
