@@ -74,10 +74,6 @@ def s1_stream_record_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dynamodb_stream_processor_2_0_spark.sources import dynamodb_stream as DS
 
-    # One from_json per record, not one per extracted field: the
-    # per-path pruning rule can't prune inside the map-typed images, so
-    # it would re-parse the record per expression (see parse_new_image).
-    spark.conf.set("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
     wire = DS.staged_wire(spark, sf_dir)
     typed = DS.parse_new_image(DS.decode_records(wire))
     return typed.select(
@@ -323,7 +319,7 @@ def e2_corrupt_record_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-coercible field as a corrupt record), silently diverging from
     both the reference and the oracle on inputs the testdata never
     contains — caught by the planted '{"k": "x"}' row in
-    tests/test_round9_behavior_events.py. from_json into
+    tests/test_pipeline.py. from_json into
     map<string,string> is the validity probe (NULL iff unparseable; a
     JSON scalar would also read NULL, which is fine — every envelope is
     an object); the typed field is a try_cast on the extracted string,
@@ -535,7 +531,6 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         python_datasource as PDS,
     )
 
-    spark.conf.set("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
     PDS.register_wire_datasource(spark)
     path = PDS.staged_wire_jsonl(spark, sf_dir, n_shards=8)
     wire = spark.read.format("dynamodb_stream_wire").option("path", path).load()
@@ -903,7 +898,6 @@ def source_python_pushdown_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         python_datasource as PDS,
     )
 
-    spark.conf.set("spark.sql.optimizer.enableJsonExpressionOptimization", "false")
     PDS.register_wire_datasource(spark)
     path = PDS.staged_wire_jsonl(spark, sf_dir, n_shards=8)
     wire = (

@@ -746,8 +746,7 @@ def conditional_bitwise_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "named struct), key/value extraction, missing-key null, size, "
     "concat, field access, and JSON serialization — the dynamic "
     "attribute-map surface of the reference's DynamoDB images "
-    "(index.js:350-385; the connector's IMAGE_SCHEMA is exactly such a "
-    "map) pinned cross-engine. Maps/structs never cross the gate raw: "
+    "(index.js:350-385) pinned cross-engine. Maps/structs never cross the gate raw: "
     "keys/values are array_join-serialized, structs go out as "
     "canonical JSON.",
 )
@@ -814,7 +813,7 @@ def variant_json_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     '{"k": "x"}') must shred to NULL, not kill the task with
     INVALID_VARIANT_CAST — the same fail-open rule as try_parse_json
     for unparseable rows. (Caught by the planted wrong-typed row in
-    tests/test_round9_behavior_pipeline.py; variant_get crashed the
+    tests/test_scalar.py; variant_get crashed the
     whole job on data the testdata never contains.) k_kind reports the
     variant's actual JSON type — the oracle mirrors it via DuckDB
     json_type with VARCHAR->STRING spelling normalization."""

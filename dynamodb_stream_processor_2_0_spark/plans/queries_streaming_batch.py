@@ -937,10 +937,7 @@ def streaming_python_source_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("append")
         )
 
-    q = run_available_now(
-        spark, "py_source", build,
-        conf={"spark.sql.optimizer.enableJsonExpressionOptimization": "false"},
-    )
+    q = run_available_now(spark, "py_source", build)
     return spark.table(q.name)
 
 

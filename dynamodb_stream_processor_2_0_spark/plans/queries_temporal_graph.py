@@ -153,7 +153,7 @@ def recursive_order_chain_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The physical layout is size-gated (same pattern as
     connected_components' union-find arm, operators/dedup.py):
 
-    - small (<= spark_graft.chainwalk.broadcast_row_cap orders): a
+    - small (<= _CHAIN_WALK_BROADCAST_ROW_CAP orders): a
       single parquet file + BROADCAST hint makes every recursion level
       a map-only join — no per-level shuffle at all.
     - large: a table bucketed on o_custkey; each level then shuffles
@@ -180,18 +180,15 @@ def recursive_order_chain_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 10x scale experiment died on exactly this. Raise it to the
     # measured bound (sticky: execution-phase planning re-reads the
     # conf lazily, so a set-and-restore would revert before the driver
-    # runs the plan; a raised guard has no effect on other queries).
+    # runs the plan; a raised guard has no effect on other queries). An
+    # outer LIMIT over the recursive CTE also lifts the guard, but it
+    # plans GlobalLimit over Exchange SinglePartition: the single-task
+    # bottleneck this walk exists to avoid.
     guard = int(spark.conf.get("spark.sql.cteRecursionRowLimit", "1000000"))
     if guard < 2 * n_orders + 1000:
         spark.conf.set("spark.sql.cteRecursionRowLimit", str(2 * n_orders + 1000))
-    cap = int(
-        spark.conf.get(
-            "spark_graft.chainwalk.broadcast_row_cap",
-            str(_CHAIN_WALK_BROADCAST_ROW_CAP),
-        )
-    )
 
-    small = n_orders <= cap
+    small = n_orders <= _CHAIN_WALK_BROADCAST_ROW_CAP
     # Large path: bucket on o_custkey so every fixpoint level reuses the
     # written layout (walk frontier shuffles to it; ranked never does).
     n_buckets = max(1, min(2048, n_orders // 500_000 + 1))

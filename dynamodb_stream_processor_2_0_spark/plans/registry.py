@@ -123,6 +123,11 @@ def _load() -> None:
             # only fails if it's someone else's import error.
             if mod.rsplit(".", 1)[-1] not in str(exc):
                 raise
+    # Registration order is module order, even if a caller imported a
+    # query module before this first load.
+    rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}
+    for name in sorted(REGISTRY, key=lambda n: rank.get(REGISTRY[n].fn.__module__, len(rank))):
+        REGISTRY[name] = REGISTRY.pop(name)
     _loaded = True
 
 

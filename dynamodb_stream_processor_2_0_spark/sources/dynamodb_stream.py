@@ -32,7 +32,16 @@ ATTR_SCHEMA = T.StructType(
     ]
 )
 
-IMAGE_SCHEMA = T.MapType(T.StringType(), ATTR_SCHEMA)
+# The 11 attributes parse_new_image reads (index.js:350-385). A struct,
+# not a map: an absent attribute is a null field (``?.``), a bare
+# untagged value nulls only its own field, and a duplicate key keeps its
+# last value, as JSON.parse does.
+IMAGE_ATTRS = (
+    "eventId", "guestId", "guest_name", "guest_email", "email_sent",
+    "delivery_status", "total_matches", "best_similarity", "processed_at",
+    "matched_images", "match_statistics",
+)
+IMAGE_SCHEMA = T.StructType([T.StructField(a, ATTR_SCHEMA) for a in IMAGE_ATTRS])
 
 STREAM_RECORD_SCHEMA = T.StructType(
     [
@@ -66,31 +75,23 @@ MATCHED_IMAGES_SCHEMA = T.ArrayType(
 MATCH_STATS_SCHEMA = T.MapType(T.StringType(), T.StringType())
 
 
-def _attr(image: Column, name: str) -> Column:
-    """``image.name`` with ``?.`` semantics: absent key -> null struct."""
-    return F.element_at(image, name)
-
-
 def attr_s(image: Column, name: str) -> Column:
-    return _attr(image, name).getField("S")
+    return image.getField(name).getField("S")
 
 
 def attr_bool(image: Column, name: str) -> Column:
-    return _attr(image, name).getField("BOOL")
+    return image.getField(name).getField("BOOL")
 
 
 def attr_int(image: Column, name: str) -> Column:
     """parseInt(x?.N || '0') — N is a number-as-string."""
-    return F.coalesce(
-        F.try_element_at(image, F.lit(name)).getField("N").try_cast("int"), F.lit(0)
-    )
+    return F.coalesce(image.getField(name).getField("N").try_cast("int"), F.lit(0))
 
 
 def attr_double(image: Column, name: str) -> Column:
     """parseFloat(x?.N || '0')."""
     return F.coalesce(
-        F.try_element_at(image, F.lit(name)).getField("N").try_cast("double"),
-        F.lit(0.0),
+        image.getField(name).getField("N").try_cast("double"), F.lit(0.0)
     )
 
 
@@ -108,12 +109,8 @@ def parse_new_image(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFram
     Plan shape: ONE projection extracts every field, and the F1/F2
     filters run on the projected columns AFTER it. Filtering on
     ``rec.*`` first would give each predicate and each field its own
-    schema-pruned ``from_json`` — and map-typed images can't be pruned,
-    so the record would be re-parsed per expression (measured 8x slower
-    at sf0.1). One projection = one parse via codegen subexpression
-    elimination; pair with
-    ``spark.sql.optimizer.enableJsonExpressionOptimization=false`` so
-    the per-path pruning rule doesn't break the common subexpression.
+    ``from_json``, so the record would be re-parsed per expression
+    (measured 8x slower at sf0.1 with map-typed images).
     """
     img = F.col("rec.dynamodb.NewImage")
     old = F.col("rec.dynamodb.OldImage")

@@ -35,3 +35,21 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_dir_medium() -> str:
     return SF_DIR_MEDIUM
+
+
+@pytest.fixture()
+def world(tmp_path):
+    """A tmp sf_dir holding the planted TPC-H world (tests/planted.py)."""
+    from tests import planted
+
+    planted.write_world(tmp_path)
+    return tmp_path
+
+
+@pytest.fixture()
+def events_dir(tmp_path):
+    """A tmp sf_dir holding the planted events world (tests/planted.py)."""
+    from tests import planted
+
+    planted.write(tmp_path, "events", planted.EVENTS)
+    return tmp_path

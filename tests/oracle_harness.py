@@ -111,7 +111,7 @@ def _cell(v) -> str:
     return str(v)
 
 
-def _canon(df: pd.DataFrame) -> list[tuple]:
+def canon(df: pd.DataFrame) -> list[tuple]:
     cols = sorted(df.columns)
     rows = [
         tuple(_cell(row[c]) for c in cols)
@@ -154,8 +154,8 @@ def compare_frames(
     assert len(spdf) == len(ddf), (
         f"{name}: row count mismatch spark={len(spdf)} duckdb={len(ddf)}"
     )
-    sn = _canon(spdf)
-    dn = _canon(ddf)
+    sn = canon(spdf)
+    dn = canon(ddf)
     if sn != dn:
         cols = sorted(spdf.columns)
         diffs = []

@@ -15,6 +15,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 
 from dynamodb_stream_processor_2_0_spark.plans import registry
+from tests.oracle_harness import canon
 
 _NAMES = [
     "recursive_order_chain_walk",
@@ -28,21 +29,14 @@ _NAMES = [
 ]
 
 
-def _canon(df):
-    return sorted(
-        tuple(str(v) for v in row)
-        for row in df.toPandas()[sorted(df.columns)].itertuples(index=False)
-    )
-
-
 @pytest.mark.slow
 def test_concurrent_queries_match_sequential(spark, sf_dir):
     sequential = {
-        n: _canon(registry.get(n).fn(spark, sf_dir)) for n in set(_NAMES)
+        n: canon(registry.get(n).fn(spark, sf_dir).toPandas()) for n in set(_NAMES)
     }
     with ThreadPoolExecutor(max_workers=len(_NAMES)) as pool:
         futures = [
-            pool.submit(lambda n=n: (n, _canon(registry.get(n).fn(spark, sf_dir))))
+            pool.submit(lambda n=n: (n, canon(registry.get(n).fn(spark, sf_dir).toPandas())))
             for n in _NAMES
         ]
         for fut in futures:

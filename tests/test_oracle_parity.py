@@ -24,19 +24,15 @@ from tests.oracle_harness import (
 
 WIDTHS = ("7", "32")
 
-_JSON_OPT = "spark.sql.optimizer.enableJsonExpressionOptimization"
 _PUSHDOWN = "spark.sql.python.filterPushdown.enabled"
 
 # Session conf keys a query is known to leave set, with the line that
 # writes each. Every other key of spark.conf.getAll must read the same
 # after a parity cell as before it.
 _LEAVES_SET = {
-    # queries_pipeline.py:79
-    "s1_stream_record_parse": (_JSON_OPT,),
-    # queries_pipeline.py:561, 939; python_datasource.py:191
-    "source_python_datasource": (_JSON_OPT, _PUSHDOWN),
-    "source_python_pushdown_pruning": (_JSON_OPT, _PUSHDOWN),
     # python_datasource.py:191
+    "source_python_datasource": (_PUSHDOWN,),
+    "source_python_pushdown_pruning": (_PUSHDOWN,),
     "sink_python_datasource_roundtrip": (_PUSHDOWN,),
     "streaming_python_source_e2e": (_PUSHDOWN,),
     "streaming_python_sink_e2e": (_PUSHDOWN,),
@@ -52,8 +48,7 @@ _ANY_QUERY = ("spark.sql.legacy.parquet.nanosAsLong",)
 # driver order's first 95 names at the time, then the queries added
 # after that order was frozen. Kept so each of those cells keeps its id;
 # a new query joins the sf0.01 lane only through the driver sample. A
-# name in both parts has two cells (ids ``<name>0`` and ``<name>1``);
-# the second reuses the frames the first kept.
+# name in both parts gets one cell.
 _FROZEN_PREFIX = tuple(
     """
     pipeline_disposition_summary pipeline_disposition_ledger
@@ -181,29 +176,22 @@ _FROZEN_EXTRAS = tuple(
     corpus_dup_rate_by_source
     """.split()
 )
-FROZEN_LANE = _FROZEN_PREFIX + _FROZEN_EXTRAS
+FROZEN_LANE = tuple(dict.fromkeys(_FROZEN_PREFIX + _FROZEN_EXTRAS))
 
-# Frames a later cell checks again, keyed by (name, sf_dir, side).
+# Spark frames the width cell checks again, keyed by (name, sf_dir, width).
 _KEPT: dict[tuple[str, str, str], pd.DataFrame] = {}
-
-
-def _frame(key, make, keep: bool) -> pd.DataFrame:
-    if key in _KEPT:
-        return _KEPT[key]
-    frame = make()
-    if keep:
-        _KEPT[key] = frame
-    return frame
 
 
 def spark_frame(spark, spec, sf_dir, width, keep=False) -> pd.DataFrame:
     """The Spark result of ``spec`` at shuffle width ``width``."""
-
-    def run():
+    key = (spec.name, sf_dir, width)
+    if key not in _KEPT:
         with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
-            return fetch_spark(spark, spec, sf_dir)
-
-    return _frame((spec.name, sf_dir, width), run, keep)
+            frame = fetch_spark(spark, spec, sf_dir)
+        if not keep:
+            return frame
+        _KEPT[key] = frame
+    return _KEPT[key]
 
 
 def _small_cells():
@@ -229,7 +217,6 @@ def _medium_specs():
 
 
 _MEDIUM = _medium_specs()
-_MEDIUM_TWICE = {s.name for s in _MEDIUM if _MEDIUM.count(s) > 1}
 
 
 def _keeping_conf(spark, spec, check) -> None:
@@ -264,15 +251,9 @@ def test_parity_small(spark, sf_dir, spec):
 
 @pytest.mark.parametrize("spec", _MEDIUM, ids=lambda s: s.name)
 def test_parity_medium(spark, sf_dir_medium, spec):
-    keep = spec.name in _MEDIUM_TWICE
-    key = (spec.name, sf_dir_medium)
-
     def check():
-        spdf = _frame(
-            (*key, "spark"), lambda: fetch_spark(spark, spec, sf_dir_medium), keep
-        )
-        ddf = _frame((*key, "oracle"), lambda: fetch_oracle(spec, sf_dir_medium), keep)
-        compare_frames(spec.name, spdf, ddf)
+        spdf = fetch_spark(spark, spec, sf_dir_medium)
+        compare_frames(spec.name, spdf, fetch_oracle(spec, sf_dir_medium))
 
     _keeping_conf(spark, spec, check)
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from dynamodb_stream_processor_2_0_spark.plans import registry
+from tests.oracle_harness import canon
 from tests.test_oracle_parity import FROZEN_LANE, WIDTHS, spark_frame
 
 
@@ -18,14 +19,7 @@ def _specs():
     return [registry.REGISTRY[n] for n in FROZEN_LANE]
 
 
-def _canon(pdf):
-    return sorted(
-        tuple(str(v) for v in row)
-        for row in pdf[sorted(pdf.columns)].itertuples(index=False)
-    )
-
-
 @pytest.mark.parametrize("spec", _specs(), ids=lambda s: s.name)
 def test_width_invariant(spark, sf_dir, spec):
     narrow, wide = (spark_frame(spark, spec, sf_dir, w, keep=True) for w in WIDTHS)
-    assert _canon(narrow) == _canon(wide), f"{spec.name}: output depends on shuffle width"
+    assert canon(narrow) == canon(wide), f"{spec.name}: output depends on shuffle width"
