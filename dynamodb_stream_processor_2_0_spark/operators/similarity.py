@@ -64,7 +64,7 @@ def _dot_fold(a: str, b: str) -> F.Column:
 # semantics exactly. The union of the arms is bit-identical to the HOF
 # alone: the unrolled tree is the same left fold ((0.0 + t0) + t1) ...
 # in the same IEEE order (adversarial-vector pin incl. -0.0/NaN/Inf/
-# NULL elements in tests/test_similarity.py). 64 is the
+# NULL elements in tests/test_round12_hardening.py). 64 is the
 # embeddings corpus width; rows of any other width stay correct via
 # the HOF arm, so the constant is a fast-path hint, not a schema
 # assumption.

@@ -2330,7 +2330,7 @@ def _mra_solve_driver(spark: SparkSession, rollup) -> DataFrame:
     "cardinality gate (64) the rollup is collected once and the SAME "
     "integer iteration runs driver-side in exact Python ints "
     "(sf0.1 warm 6.53 s -> ~1.8 s; arms proven row-identical incl. "
-    "the nulls/empty hostile worlds, tests/test_causal_eval.py). "
+    "the nulls/empty hostile worlds, tests/test_round12_hardening). "
     "Above the gate, all variants (full + one per removed channel) "
     "ride ONE keyed (variant, state) relation: 12 tiny join+rollups. "
     "Output: removal effect and normalized attribution share per "

@@ -319,7 +319,7 @@ def e2_corrupt_record_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-coercible field as a corrupt record), silently diverging from
     both the reference and the oracle on inputs the testdata never
     contains — caught by the planted '{"k": "x"}' row in
-    tests/test_pipeline.py. from_json into
+    tests/test_round9_behavior_events.py. from_json into
     map<string,string> is the validity probe (NULL iff unparseable; a
     JSON scalar would also read NULL, which is fine — every envelope is
     an object); the typed field is a try_cast on the extracted string,

@@ -813,7 +813,7 @@ def variant_json_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     '{"k": "x"}') must shred to NULL, not kill the task with
     INVALID_VARIANT_CAST — the same fail-open rule as try_parse_json
     for unparseable rows. (Caught by the planted wrong-typed row in
-    tests/test_scalar.py; variant_get crashed the
+    tests/test_round9_behavior_pipeline.py; variant_get crashed the
     whole job on data the testdata never contains.) k_kind reports the
     variant's actual JSON type — the oracle mirrors it via DuckDB
     json_type with VARCHAR->STRING spelling normalization."""

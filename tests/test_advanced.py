@@ -5,15 +5,7 @@ NULL-key matching in the null-safe join)."""
 
 from __future__ import annotations
 
-import datetime as dt
-from collections import defaultdict
-from fractions import Fraction
-
-import pytest
 from pyspark.sql import functions as F
-
-from tests import planted
-from tests.planted import EVENTS, ORDERS
 
 
 def test_bitmap_semi_join_matches_semi_join_on_64bit_keys(spark):
@@ -108,626 +100,3 @@ def test_incremental_rollup_snapshot_equals_batch(spark, sf_dir):
         .collect()
     }
     assert snap == batch
-
-
-# Planted-model recovery and algebraic axioms for the advanced and
-# relational analytics. Where the shipped plan is a closed-form rewrite
-# of a sequential algorithm (CUSUM prefix-min form, FIFO clamp form,
-# skyline window form), the test runs the SEQUENTIAL original, which is
-# precisely the check parity cannot provide.
-
-
-def _daily_count_events(series_by_type, start="2024-01-01"):
-    """series_by_type: {event_type: [day0_count, ...]}; None skips the
-    day entirely. Emits COUNT events per (type, day) — for the ops
-    that aggregate daily counts, plant count patterns."""
-    rows = []
-    eid = 0
-    t0 = dt.date.fromisoformat(start)
-    for etype, series in series_by_type.items():
-        for d, c in enumerate(series):
-            if c is None:
-                continue
-            day = t0 + dt.timedelta(days=d)
-            for k in range(c):
-                rows.append(
-                    (
-                        eid,
-                        f"{day.isoformat()}T{10 + (k % 12):02d}:00:00",
-                        1 + eid % 7,
-                        etype,
-                        1.0,
-                    )
-                )
-                eid += 1
-    return rows
-
-
-# --- CUSUM: the closed form vs the published recursion -----------------------
-def test_cusum_matches_sequential_recursion(spark, tmp_path):
-    """The shipped plan computes CUSUM as prefix - min(0, running-min
-    of prefixes). Run the PUBLISHED sequential recursion
-    s_i = max(0, s_{i-1} + dev_i) on the planted daily counts and
-    demand exact equality — the algebraic identity the closed form
-    rests on, checked by the original algorithm."""
-    # level shift: 14 days at 3/day then 10 days at 9/day
-    counts = [3] * 14 + [9] * 10
-    planted.write(tmp_path, "events", _daily_count_events({"view": counts}))
-    rows = {r["day"]: r for r in planted.run(spark, "events_cusum_shift_detect", tmp_path)}
-
-    nd, tot = len(counts), sum(counts)
-    s = 0
-    t0 = dt.date.fromisoformat("2024-01-01")
-    for d, c in enumerate(counts):
-        s = max(0, s + (nd * c - tot))
-        day = (t0 + dt.timedelta(days=d)).isoformat()
-        assert rows[day]["cusum_scaled"] == s, day
-        assert rows[day]["c"] == c
-    # detection shape: zero through the pre-shift regime's first days,
-    # strictly climbing across the post-shift regime
-    assert rows["2024-01-01"]["cusum_scaled"] == 0
-    post = [rows[(t0 + dt.timedelta(days=d)).isoformat()]["cusum_scaled"]
-            for d in range(14, 24)]
-    assert post == sorted(post) and post[-1] > post[0]
-
-
-# --- two-sample KS: sequential merged-CDF recomputation ----------------------
-def _ks_sequential(purchase_vals, view_vals):
-    """Textbook two-sample KS on integer-cent values: D as the max
-    |n2*cum1 - n1*cum2| over the merged support."""
-    n1, n2 = len(purchase_vals), len(view_vals)
-    support = sorted(set(purchase_vals) | set(view_vals))
-    c1 = c2 = best = 0
-    for v in support:
-        c1 += sum(1 for x in purchase_vals if x == v)
-        c2 += sum(1 for x in view_vals if x == v)
-        best = max(best, abs(n2 * c1 - n1 * c2))
-    return n1, n2, best
-
-
-def test_ks_identical_vs_disjoint_samples(spark, tmp_path):
-    ident = [100, 200, 300, 400, 500] * 4
-    rows = []
-    eid = 0
-    for v in ident:
-        rows.append((eid, "2024-01-01T10:00:00", 1, "purchase", v / 100.0))
-        eid += 1
-    for v in ident:
-        rows.append((eid, "2024-01-01T11:00:00", 2, "view", v / 100.0))
-        eid += 1
-    planted.write(tmp_path, "events", rows)
-    (r,) = planted.run(spark, "events_ks_distribution_shift", tmp_path)
-    n1, n2, d = _ks_sequential(ident, ident)
-    assert (r["n1"], r["n2"], r["d_scaled"]) == (n1, n2, d) and d == 0
-    assert r["d_micro"] == 0 and not r["reject_5pct"]
-
-
-def test_ks_shifted_samples_sequential_recomputation(spark, tmp_path):
-    purchase = [100, 150, 200, 250, 300, 350, 400, 450, 500, 550] * 3
-    view = [v + 500 for v in purchase]  # hard shift: fully separated (min 600 > max 550)
-    rows = []
-    eid = 0
-    for v in purchase:
-        rows.append((eid, "2024-01-01T10:00:00", 1, "purchase", v / 100.0))
-        eid += 1
-    for v in view:
-        rows.append((eid, "2024-01-01T11:00:00", 2, "view", v / 100.0))
-        eid += 1
-    planted.write(tmp_path, "events", rows)
-    (r,) = planted.run(spark, "events_ks_distribution_shift", tmp_path)
-    n1, n2, d = _ks_sequential(purchase, view)
-    assert (r["n1"], r["n2"], r["d_scaled"]) == (n1, n2, d)
-    assert d == n1 * n2  # fully separated -> D = 1
-    assert r["d_micro"] == 1_000_000
-    # 5% rule, recomputed: d^2 * 1e6 > 1844772 * (n1+n2) * n1 * n2
-    assert r["reject_5pct"] == (d * d * 1_000_000 > 1844772 * (n1 + n2) * n1 * n2)
-    assert r["reject_5pct"]
-
-
-# --- weighted median: cumulative-distribution definition ---------------------
-def test_weighted_median_dominant_weight(spark, tmp_path):
-    """A customer holding >half the segment revenue IS the weighted
-    median regardless of every other balance — the defining property
-    interpolated quantiles would violate."""
-    planted.write(tmp_path, "customer", [
-            (1, "a", 0, 10.00, "SEG"),
-            (2, "b", 0, 999.00, "SEG"),  # dominant weight, highest balance
-            (3, "c", 0, 5.00, "SEG"),
-            (4, "d", 0, 70.00, "OTHER"),
-            (5, "e", 0, 30.00, "OTHER"),
-        ])
-    planted.write(tmp_path, "orders", [
-            (10, 1, "F", 100.00, "2024-01-01T00:00:00", "1-URGENT"),
-            (11, 2, "F", 600.00, "2024-01-02T00:00:00", "1-URGENT"),
-            (12, 3, "F", 100.00, "2024-01-03T00:00:00", "1-URGENT"),
-            # OTHER: equal weights -> median is the first bal whose cum
-            # reaches half, in ascending (bal, custkey) order = 30.00
-            (13, 4, "F", 50.00, "2024-01-04T00:00:00", "1-URGENT"),
-            (14, 5, "F", 50.00, "2024-01-05T00:00:00", "1-URGENT"),
-        ])
-    rows = {r["c_mktsegment"]: r for r in
-            planted.run(spark, "customer_weighted_median_balance", tmp_path)}
-    # SEG ascending balances: c(5.00, w=10000), a(10.00, w=10000),
-    # b(999.00, w=60000); tot=80000; cum 10000, 20000, 80000 -> first
-    # 2*cum >= tot is b
-    assert rows["SEG"]["weighted_median_bal_cents"] == 99900
-    assert rows["SEG"]["total_weight_cents"] == 80000
-    assert rows["OTHER"]["weighted_median_bal_cents"] == 3000
-    assert rows["OTHER"]["total_weight_cents"] == 10000
-
-
-# --- winsorized stats: sequential clamp recomputation ------------------------
-def test_winsorized_stats_clamps_outliers(spark, tmp_path):
-    """Sequential recomputation of the p5/p95 interpolated quantiles
-    and the clamped sum; the two planted outliers must move the raw
-    mean but barely the winsorized one."""
-    vals = [float(v) for v in range(1, 20)] + [10_000.0]  # 20 values
-    rows = [(i, "2024-01-01T10:00:00", 1 + i % 3, "view", v)
-            for i, v in enumerate(vals)]
-    planted.write(tmp_path, "events", rows)
-    (r,) = planted.run(spark, "agg_winsorized_stats", tmp_path)
-
-    def q_interp(sorted_vals, p):
-        # linear interpolation, the percentile_cont / quantile_cont rule
-        h = p * (len(sorted_vals) - 1)
-        lo = int(h)
-        hi = min(lo + 1, len(sorted_vals) - 1)
-        return sorted_vals[lo] + (h - lo) * (sorted_vals[hi] - sorted_vals[lo])
-
-    sv = sorted(vals)
-    lo, hi = q_interp(sv, 0.05), q_interp(sv, 0.95)
-    clamped = [min(max(v, lo), hi) for v in vals]
-    assert r["n_events"] == 20
-    assert r["n_clamped"] == sum(1 for v in vals if v < lo or v > hi)
-    assert abs(r["winsorized_sum"] - sum(clamped)) < 1e-6
-    assert abs(r["winsorized_mean"] - sum(clamped) / 20) < 1e-9
-    # the robust property itself: outlier contributes hi, not 10000
-    assert r["winsorized_mean"] < 100
-
-
-# --- least-squares trend slope: exact rational vs Fraction --------------------
-def test_trend_slope_exact_rational(spark, tmp_path):
-    """Plant a noisy series and recompute the LSQ slope as a Fraction;
-    the op's (num, den) pair must equal the exact rational and the
-    scaled quotient must follow the sign-extracted truncation rule.
-    Includes a NEGATIVE non-integer slope — the floor-vs-truncate trap
-    the op documents."""
-    # daily revenue cents: y = 1000 - 7*x + planted residuals (sum 0)
-    resid = [3, -3, 5, -5, 2, -2, 0, 4, -4, 0]
-    ys = [1000 - 7 * x + resid[x] for x in range(10)]
-    rows = [(x, f"2024-01-{x + 1:02d}T12:00:00", 1, "purchase", ys[x] / 100.0)
-            for x in range(10)]
-    planted.write(tmp_path, "events", rows)
-    (r,) = planted.run(spark, "events_trend_slope_by_type", tmp_path)
-    n = len(ys)
-    sx, sy = sum(range(n)), sum(ys)
-    sxy = sum(x * y for x, y in enumerate(ys))
-    sxx = sum(x * x for x in range(n))
-    num, den = n * sxy - sx * sy, n * sxx - sx * sx
-    assert (r["slope_num"], r["slope_den"]) == (num, den)
-    slope = Fraction(num, den)
-    assert slope < 0 and slope.denominator > 1  # the trap is armed
-    sign = 1 if num >= 0 else -1
-    assert r["slope_cents_per_day_x100"] == sign * (abs(num) * 100 // den)
-    assert not r["trending_up"]
-
-
-# --- Benford audit: integer chi-square recomputation --------------------------
-def test_benford_chi_square_recomputation(spark, tmp_path):
-    from dynamodb_stream_processor_2_0_spark.plans.queries_advanced import (
-        _BENFORD_MICRO,
-    )
-
-    # first digits: 1 x12, 2 x5, 9 x3 (all other digits absent)
-    prices = [100.0] * 12 + [25.50] * 5 + [9000.0] * 3
-    planted.write(tmp_path, "orders", [(i, 1 + i, "F", p, "2024-01-01T00:00:00", "1-URGENT")
-         for i, p in enumerate(prices)])
-    rows = {r["first_digit"]: r for r in
-            planted.run(spark, "orders_benford_digit_audit", tmp_path)}
-    obs = {1: 12, 2: 5, 9: 3}
-    n = 20
-    assert set(rows) == set(range(1, 10))  # absent digits still audited
-    for d in range(1, 10):
-        e = _BENFORD_MICRO[d]
-        o = obs.get(d, 0)
-        assert rows[d]["n_obs"] == o
-        assert rows[d]["obs_micro"] == o * 1_000_000 // n
-        assert rows[d]["exp_micro"] == e
-        dev = o * 1_000_000 - n * e
-        assert rows[d]["chi2_term_micro"] == dev * dev // (n * n * e), d
-
-
-# --- bot regularity: CV^2 of planted gap patterns ----------------------------
-def test_bot_regularity_constant_vs_bursty_gaps(spark, tmp_path):
-    rows = []
-    eid = 0
-    t0 = dt.datetime.fromisoformat("2024-01-01T00:00:00")
-    # user 1: metronome, exactly 600s gaps x 8
-    for k in range(9):
-        rows.append((eid, (t0 + dt.timedelta(seconds=600 * k)).isoformat(),
-                     1, "view", 1.0))
-        eid += 1
-    # user 2: bursty, gaps alternating 10s and 3600s
-    t = t0
-    gaps2 = [10, 3600, 10, 3600, 10, 3600, 10, 3600]
-    rows.append((eid, t.isoformat(), 2, "view", 1.0))
-    eid += 1
-    for g in gaps2:
-        t = t + dt.timedelta(seconds=g)
-        rows.append((eid, t.isoformat(), 2, "view", 1.0))
-        eid += 1
-    # user 3: only 3 gaps -> filtered by n >= 5
-    for k in range(4):
-        rows.append((eid, (t0 + dt.timedelta(seconds=60 * k)).isoformat(),
-                     3, "view", 1.0))
-        eid += 1
-    planted.write(tmp_path, "events", rows)
-    out = {r["user_id"]: r for r in
-           planted.run(spark, "events_bot_regularity_score", tmp_path)}
-    assert set(out) == {1, 2}
-
-    def cv2_milli(gaps):
-        n, sd, sdd = len(gaps), sum(gaps), sum(g * g for g in gaps)
-        return (n * sdd - sd * sd) * 1000 // (sd * sd)
-
-    assert out[1]["cv2_milli"] == 0 and out[1]["is_machine_regular"]
-    assert out[1]["n_gaps"] == 8 and out[1]["mean_gap_s"] == 600
-    assert out[2]["cv2_milli"] == cv2_milli(gaps2)
-    assert out[2]["cv2_milli"] > 900  # near-alternating -> CV^2 ~ 1
-    assert not out[2]["is_machine_regular"]
-
-
-# --- error spike: cross-multiplied rate compare ------------------------------
-def test_error_spike_planted_regimes(spark, tmp_path):
-    # 7 days at 100 total / 5 errors (5%), then a 20% day, then a 5% day
-    totals = [100] * 7 + [100, 100]
-    errors = [5] * 7 + [20, 5]
-    series = {
-        "error": errors,
-        "view": [t - e for t, e in zip(totals, errors)],
-    }
-    planted.write(tmp_path, "events", _daily_count_events(series))
-    rows = {r["day"]: r for r in
-            planted.run(spark, "events_error_spike_detection", tmp_path)}
-    t0 = dt.date.fromisoformat("2024-01-01")
-    for d in range(9):
-        day = (t0 + dt.timedelta(days=d)).isoformat()
-        trail_t = sum(totals[max(0, d - 7):d])
-        trail_e = sum(errors[max(0, d - 7):d])
-        r = rows[day]
-        assert (r["n_total"], r["n_errors"]) == (totals[d], errors[d])
-        assert (r["trail_total"], r["trail_errors"]) == (trail_t, trail_e)
-        expect = trail_t > 0 and errors[d] * trail_t > 2 * totals[d] * trail_e
-        assert r["is_spike"] == expect, day
-    assert not rows["2024-01-01"]["is_spike"]  # no trail -> never a spike
-    assert rows["2024-01-08"]["is_spike"]      # 20% vs 5% trailing
-    assert not rows["2024-01-09"]["is_spike"]  # back to baseline
-
-
-# --- DAU/WAU stickiness: brute-force window recomputation ---------------------
-def test_dau_wau_stickiness_planted(spark, tmp_path):
-    # users per day (day -> set of user ids); includes a gap day (absent)
-    plan = {
-        0: {1, 2, 3},
-        1: {1},
-        2: {4, 5},
-        4: {1, 2, 3, 4, 5, 6},
-        9: {1},
-    }
-    rows = []
-    eid = 0
-    t0 = dt.date.fromisoformat("2024-03-01")
-    for d, users in plan.items():
-        for u in users:
-            day = t0 + dt.timedelta(days=d)
-            rows.append((eid, f"{day.isoformat()}T09:00:00", u, "view", 1.0))
-            eid += 1
-    planted.write(tmp_path, "events", rows)
-    out = {r["day"]: r for r in
-           planted.run(spark, "events_dau_wau_stickiness", tmp_path)}
-    assert len(out) == len(plan)  # gap days produce no row
-    for d, users in plan.items():
-        day = (t0 + dt.timedelta(days=d)).isoformat()
-        wau_users = set()
-        for d2, u2 in plan.items():
-            if d - 7 < d2 <= d:
-                wau_users |= u2
-        r = out[day]
-        assert r["dau"] == len(users)
-        assert r["wau"] == len(wau_users)
-        assert abs(r["stickiness"] - len(users) / len(wau_users)) < 1e-12
-
-
-# --- rolling 7d active users: exact arm vs brute force ------------------------
-def test_rolling_7d_active_users_exact_arm(spark, tmp_path):
-    plan = {0: {1, 2}, 1: {2, 3}, 3: {4}, 8: {1}, 9: {5, 6, 7}}
-    rows = []
-    eid = 0
-    t0 = dt.date.fromisoformat("2024-03-01")
-    for d, users in plan.items():
-        for u in users:
-            day = t0 + dt.timedelta(days=d)
-            rows.append((eid, f"{day.isoformat()}T09:00:00", u, "view", 1.0))
-            eid += 1
-    planted.write(tmp_path, "events", rows)
-    out = {r["day"]: r for r in planted.run(spark, "rolling_7d_active_users", tmp_path)}
-    for d, _ in plan.items():
-        day = (t0 + dt.timedelta(days=d)).isoformat()
-        in_win = [d2 for d2 in plan if d - 7 < d2 <= d]
-        users = set().union(*(plan[d2] for d2 in in_win))
-        assert out[day]["n_days_in_window"] == len(in_win)
-        assert out[day]["exact_active_7d"] == len(users)
-        assert out[day]["sketch_within_5pct"]  # tiny cardinalities: HLL exact
-
-
-# --- seasonality index ---------------------------------------------------------
-def test_seasonality_index_peak_month(spark, tmp_path):
-    # 3 months: feb = 3x the jan/mar revenue (the 2x case sits EXACTLY
-    # on the >1.5x boundary: 2000*3*2 == 4000*3 -> not a peak, which
-    # the loop below still verifies via the cross-multiplied rule)
-    orders = [
-        (1, 1, "F", 10.00, "2024-01-10T00:00:00", "1-URGENT"),
-        (2, 2, "F", 30.00, "2024-02-10T00:00:00", "1-URGENT"),
-        (3, 3, "F", 10.00, "2024-03-10T00:00:00", "1-URGENT"),
-    ]
-    planted.write(tmp_path, "orders", orders)
-    rows = {r["month"]: r for r in
-            planted.run(spark, "orders_seasonality_index", tmp_path)}
-    tot, nm = 5000, 3
-    for mon, cents in [(1, 1000), (2, 3000), (3, 1000)]:
-        assert rows[mon]["cents"] == cents
-        assert rows[mon]["seasonality_permille"] == cents * nm * 1000 // tot
-        assert rows[mon]["is_peak"] == (cents * nm * 2 > tot * 3)
-    assert rows[2]["is_peak"] and not rows[1]["is_peak"]
-
-
-# --- skyline: O(n^2) dominance oracle -------------------------------------------
-def test_pareto_skyline_planted_dominance(spark, tmp_path):
-    """Sequential quadratic dominance test as the third implementation:
-    a point survives iff no other point has (earlier day, >= price) or
-    (same-or-earlier day, > price) ... precisely: dominated iff some
-    point has strictly earlier x and cents >= its cents, or same x and
-    strictly greater cents (matching the shipped two-window test)."""
-    pts = [  # (orderkey, day offset, price)
-        (1, 0, 50.00),
-        (2, 0, 50.00),   # same-day equal -> tie, both in the skyline row
-        (3, 1, 60.00),   # later but higher -> survives
-        (4, 1, 55.00),   # same day as 3, lower -> dominated (m_same)
-        (5, 2, 40.00),   # later and lower than 3 -> dominated (m_before)
-        (6, 3, 70.00),   # survives
-    ]
-    base = dt.date.fromisoformat("1992-01-01")
-    planted.write(tmp_path, "orders", [(k, k, "F", p,
-          f"{(base + dt.timedelta(days=x)).isoformat()}T00:00:00", "1-URGENT")
-         for k, x, p in pts])
-    out = planted.run(spark, "orders_pareto_skyline", tmp_path)
-
-    # sequential recomputation
-    cents = [(k, x, round(p * 100)) for k, x, p in pts]
-    surv = {}
-    for k, x, c in cents:
-        m_before = max((c2 for _, x2, c2 in cents if x2 < x), default=None)
-        m_same = max(c2 for _, x2, c2 in cents if x2 == x)
-        if (m_before is None or m_before < c) and m_same == c:
-            key = (x, c)
-            n, mk = surv.get(key, (0, 10**9))
-            surv[key] = (n + 1, min(mk, k))
-    got = {(r["day_no"], r["cents"]): (r["n_orders"], r["min_orderkey"])
-           for r in out}
-    assert got == surv
-    assert got[(0, 5000)] == (2, 1)  # the tie row
-    assert (1, 5500) not in got and (2, 4000) not in got
-
-
-def test_twap_held_value_weights(spark, tmp_path):
-    t0 = dt.datetime.fromisoformat("2024-05-01T00:00:00")
-    rows = [
-        (1, t0.isoformat(), 7, "view", 1.00),                      # held 100 s
-        (2, (t0 + dt.timedelta(seconds=100)).isoformat(), 7, "view", 3.00),  # held 100 s
-        (3, (t0 + dt.timedelta(seconds=200)).isoformat(), 7, "view", 9.00),  # last: no span
-        # user 8: duplicate timestamp -> zero-duration span filtered
-        (4, t0.isoformat(), 8, "view", 5.00),
-        (5, t0.isoformat(), 8, "view", 6.00),
-        (6, (t0 + dt.timedelta(seconds=50)).isoformat(), 8, "view", 7.00),
-    ]
-    planted.write(tmp_path, "events", rows)
-    out = {r["user_id"]: r for r in planted.run(spark, "timeseries_twap_per_user", tmp_path)}
-    assert out[7]["n_spans"] == 2 and out[7]["total_s"] == 200
-    assert abs(out[7]["twap"] - 2.0) < 1e-12     # (100*100 + 300*100)/200/100
-    assert out[8]["n_spans"] == 1 and out[8]["total_s"] == 50
-    assert abs(out[8]["twap"] - 6.0) < 1e-12     # the dup-ts span dropped
-
-
-# --- data-ops / quality -----------------------------------------------------------
-def test_data_quality_profile_planted_defects(spark, tmp_path):
-    rows = [
-        (1, "2024-01-01T10:00:00", 1, "view", 5.0, "{}"),
-        (2, "2024-01-01T10:00:00", None, "view", -2.0, '{"k": 1}'),  # null user, negative
-        (3, "2024-01-01T10:00:00", 2, "view", None, "not json"),     # null value, corrupt
-        (4, "2024-01-01T10:00:00", 3, "click", 1.0, ""),             # empty props: not corrupt
-    ]
-    planted.write(tmp_path, "events", rows)
-    out = {r["event_type"]: r for r in planted.run(spark, "data_quality_profile", tmp_path)}
-    v = out["view"]
-    assert v["n_rows"] == 3
-    assert v["null_users"] == 1 and v["null_values"] == 1
-    assert (v["min_value"], v["max_value"]) == (-2.0, 5.0)
-    assert v["n_negative"] == 1
-    assert v["n_corrupt_json"] == 1
-    c = out["click"]
-    assert c["n_rows"] == 1 and c["n_corrupt_json"] == 0
-
-
-def test_drift_chisquare_identical_halves_zero(spark, tmp_path):
-    # identical value histograms on even and odd day indices -> chi2 = 0;
-    # day parity is vs 1992-01-01, so 2024-01-01 (day 11688) is EVEN
-    rows = []
-    eid = 0
-    for day, half in (("2024-01-01", 0), ("2024-01-02", 1)):
-        for v in (10.0, 10.0, 60.0, 120.0):
-            rows.append((eid, f"{day}T10:00:00", 1, "view", v))
-            eid += 1
-    planted.write(tmp_path, "events", rows)
-    (r,) = planted.run(spark, "drift_chisquare_by_type", tmp_path)
-    assert r["event_type"] == "view"
-    assert r["n_buckets"] == 3          # buckets 0 (10s), 1 (60), 2 (120)
-    assert r["chi2"] == 0.0
-
-    # now shift the odd half entirely into bucket 9 -> recompute by hand
-    rows2 = []
-    eid = 0
-    for v in (10.0, 10.0):
-        rows2.append((eid, "2024-01-01T10:00:00", 1, "view", v)); eid += 1
-    for v in (999.0, 999.0):
-        rows2.append((eid, "2024-01-02T10:00:00", 1, "view", v)); eid += 1
-    planted.write(tmp_path, "events", rows2)
-    (r2,) = planted.run(spark, "drift_chisquare_by_type", tmp_path)
-    # buckets: b0 (n1=2, n2=0), b9 (n1=0, n2=2); s1=s2=2
-    # b0 term: (0*2 - 2*2)^2 / (2*2*2) = 16/8 = 2.0; b9: n1=0 -> 0
-    assert r2["n_buckets"] == 2
-    assert abs(r2["chi2"] - 2.0) < 1e-8
-
-
-def test_pii_pseudonymize_tokens_and_rollup(spark, tmp_path):
-    planted.write(tmp_path, "customer", [
-            (1, "Alice", 3, 0.0, "SEG"),
-            (2, "Bob", 3, 0.0, "SEG"),     # same nation -> same geo token
-            (3, "Alice", 5, 0.0, "OTHER"),  # same name -> same name token
-        ])
-    planted.write(tmp_path, "orders", [
-            (1, 1, "F", 10.00, "2024-01-01T00:00:00", "X"),
-            (2, 1, "F", 5.00, "2024-01-02T00:00:00", "X"),
-            (3, 2, "F", 7.00, "2024-01-03T00:00:00", "X"),
-            # customer 3: no orders -> zero row survives the left join
-        ])
-    out = planted.run(spark, "pii_pseudonymize_consistent", tmp_path)
-    tok = lambda name: "cust_" + planted.md5(f"name:{name}")[:12]  # noqa: E731
-    geo = lambda n: "geo_" + planted.md5(f"nation:{n}")[:8]        # noqa: E731
-    rows = {(r["name_token"], r["geo_token"]): r for r in out}
-    a = rows[(tok("Alice"), geo(3))]
-    assert a["n_orders"] == 2 and a["revenue_cents"] == 1500
-    b = rows[(tok("Bob"), geo(3))]
-    assert b["n_orders"] == 1 and b["revenue_cents"] == 700
-    c = rows[(tok("Alice"), geo(5))]
-    assert c["n_orders"] == 0 and c["revenue_cents"] == 0
-    # consistency axioms: same identity -> same token; tokens never
-    # collide across distinct identities in the fixture
-    assert a["name_token"] == c["name_token"]
-    assert a["geo_token"] == b["geo_token"] != c["geo_token"]
-
-
-def test_data_contract_planted_violations(spark, tmp_path):
-    planted.write(tmp_path, "customer", [(1, "a", 0, 0.0, "SEG")])
-    planted.write(tmp_path, "orders", [
-            (1, 1, "F", 10.00, "1995-01-01T00:00:00", "X"),
-            (1, 1, "O", 20.00, "1995-01-02T00:00:00", "X"),   # dup orderkey
-            (2, 99, "F", -5.00, "1990-01-01T00:00:00", "X"),  # neg price, date
-                                                              # out of range, bad FK
-            (3, 1, "Z", 1.00, "1995-01-03T00:00:00", "X"),    # bad status
-        ])
-    rows = {r["rule_id"]: r for r in planted.run(spark, "data_contract_check", tmp_path)}
-    assert rows["o_totalprice_positive"]["n_violations"] == 1
-    assert rows["o_orderdate_in_range"]["n_violations"] == 1
-    assert rows["o_orderstatus_in_domain"]["n_violations"] == 1
-    assert rows["o_custkey_fk_resolves"]["n_violations"] == 1
-    assert rows["o_orderkey_unique"]["n_violations"] == 1
-    assert all(not r["passed"] for r in rows.values())
-    assert all(r["n_checked"] == 4 for r in rows.values())
-
-
-# --- Z-order layout ----------------------------------------------------------------------------
-def test_zorder_layout_morton_recomputation(spark, tmp_path):
-    # 128 orders over a 2D grid of (custkey, day) values
-    orders = []
-    ok = 0
-    base = dt.date(1992, 1, 1)
-    for cx in range(16):
-        for dy in range(8):
-            ok += 1
-            day = base + dt.timedelta(days=dy * 37)
-            orders.append((ok, cx * 11, "F", 1.0,
-                           f"{day.isoformat()}T00:00:00", "X"))
-    planted.write(tmp_path, "orders", orders)
-    rows = {r["bucket"]: r for r in planted.run(spark, "zorder_layout_stats", tmp_path)}
-
-    def morton(x, y):
-        z = 0
-        for b in range(16):
-            z |= ((x >> b) & 1) << (2 * b)
-            z |= ((y >> b) & 1) << (2 * b + 1)
-        return z
-
-    pts = []
-    for okey, cust, _, _, od, _ in orders:
-        x = cust % 65536
-        y = (dt.date.fromisoformat(od[:10]) - base).days % 65536
-        pts.append((morton(x, y), okey, x, y))
-    pts.sort()
-    n = len(pts)
-    expected: dict[int, list] = {}
-    for rnk, (_, _, x, y) in enumerate(pts, start=1):
-        b = (rnk - 1) * 64 // n
-        expected.setdefault(b, []).append((x, y))
-    assert set(rows) == set(expected)
-    for b, cell in expected.items():
-        r = rows[b]
-        xs, ys = [p[0] for p in cell], [p[1] for p in cell]
-        assert r["n_rows"] == len(cell), b
-        assert (r["min_x"], r["max_x"]) == (min(xs), max(xs)), b
-        assert (r["min_y"], r["max_y"]) == (min(ys), max(ys)), b
-        assert r["span_x"] == max(xs) - min(xs)
-        assert r["span_y"] == max(ys) - min(ys)
-
-
-# --- null-safe join ----------------------------------------------------------------
-def test_nullsafe_join_dispositions_planted(spark, events_dir):
-    got = {r["k_disp"]: r for r in planted.run(spark, "nullsafe_join_dispositions", events_dir)}
-    groups = defaultdict(int)
-    for r in EVENTS:
-        k = None if r[3] == "error" else r[3]
-        groups[k if k is not None else "<null>"] += 1
-    assert set(got) == set(groups)
-    for disp, n in groups.items():
-        assert got[disp]["n_rows"] == n
-        assert got[disp]["n_dim"] == n  # the dim side counts the same rows
-        assert got[disp]["n_values"] == n  # value is never NULL here
-    assert got["<null>"]["n_rows"] == 3  # NULL keys matched, not dropped
-
-
-def test_agg_exact_percentiles_planted(spark, events_dir):
-    got = planted.run(spark, "agg_exact_percentiles", events_dir)
-    by_type = defaultdict(list)
-    for r in EVENTS:
-        by_type[r[3]].append(r[4])
-    assert [r["event_type"] for r in got] == sorted(by_type)
-    for r in got:
-        vals = by_type[r["event_type"]]
-        for col, p in (("p25", 0.25), ("p50", 0.50), ("p75", 0.75)):
-            assert r[col] == pytest.approx(planted.quantile_cont(vals, p)), (
-                r["event_type"],
-                col,
-            )
-        assert r["n_values"] == len(vals)
-
-
-def test_sql_scripting_coverage_walk_planted(spark, world):
-    conf_before = dict(spark.conf.getAll)
-    got = planted.run(spark, "sql_scripting_coverage_walk", world)
-    # scripting is on by default: the query must not set (or leave
-    # behind) any session conf
-    assert dict(spark.conf.getAll) == conf_before
-    assert len(got) == 1
-    bits = sorted(int(o[3]).bit_length() for o in ORDERS)
-    total = len(bits)
-    k = next(
-        k
-        for k in range(1, 64)
-        if sum(1 for b in bits if b <= k) * 100 >= total * 95
-    )
-    cov = sum(1 for b in bits if b <= k) / total
-    r = got[0]
-    assert r["k"] == k
-    assert r["threshold"] == pytest.approx(2.0**k)
-    assert r["coverage"] == pytest.approx(cov)
-    # planted: the 500k order forces the tail, so coverage < 1 at k
-    assert cov < 1.0

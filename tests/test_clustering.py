@@ -85,28 +85,3 @@ def test_lloyd_round_moves_centroid_to_member_mean(spark):
     got = out.select(F.countDistinct("cluster"), F.max("cluster_size")).first()
     assert got[0] >= 1 and got[1] >= 1
     assert out.filter(~F.col("keep")).count() == 0
-
-
-def test_kmeans_modal_dim_survives_overlong_outlier(spark):
-    # five well-formed dim-4 vectors + ONE corrupt dim-9 vector: the
-    # modal-dim hygiene rule keeps the well-formed corpus and drops the
-    # outlier (the old max-dim rule inverted this).
-    rows = [(i, [float(i), 1.0, 0.0, 0.0]) for i in range(1, 6)]
-    rows.append((99, [0.5] * 9))
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    clustered = {r["vec_id"] for r in kmeans_assignments(emb, k=2).collect()}
-    assert clustered == {1, 2, 3, 4, 5}
-
-
-def test_kmeans_modal_dim_tie_prefers_larger(spark):
-    # 2 vectors of dim 3 vs 2 of dim 4: tie -> larger dim wins (pinned
-    # so the rule is deterministic, not hash-order-dependent).
-    rows = [
-        (1, [1.0, 0.0, 0.0]),
-        (2, [0.0, 1.0, 0.0]),
-        (3, [1.0, 0.0, 0.0, 0.0]),
-        (4, [0.0, 1.0, 0.0, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    clustered = {r["vec_id"] for r in kmeans_assignments(emb, k=2).collect()}
-    assert clustered == {3, 4}

@@ -9,11 +9,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from dynamodb_stream_processor_2_0_spark.plans import registry
 from dynamodb_stream_processor_2_0_spark.sources import dynamodb_stream as DS
-from dynamodb_stream_processor_2_0_spark.sources.python_datasource import (
-    DynamoDBWireReader,
-)
 
 
 def _wire(spark, records):
@@ -240,102 +236,3 @@ def test_wire_reader_pushdown_prunes_shard_partitions(spark, sf_dir):
     total = fresh().count()
     below = fresh().filter("shard < 5").count()
     assert pruned.count() == total - below
-
-
-def test_wire_reader_rejects_non_dataset_dir(tmp_path):
-    # non-empty directory without shard=* entries = wrong path -> loud
-    wrong = tmp_path / "not_a_dataset"
-    wrong.mkdir()
-    (wrong / "unrelated.txt").write_text("hello\n")
-    reader = DynamoDBWireReader({"path": str(wrong)})
-    with pytest.raises(ValueError, match="no shard"):
-        reader.partitions()
-
-
-def test_wire_reader_accepts_marker_only_dir(tmp_path):
-    # _SUCCESS / dotfile markers only = legitimately empty dataset ->
-    # one zero-row sentinel partition, no error
-    empty = tmp_path / "empty_dataset"
-    empty.mkdir()
-    (empty / "_SUCCESS").write_text("")
-    (empty / ".hidden").write_text("")
-    reader = DynamoDBWireReader({"path": str(empty)})
-    parts = reader.partitions()
-    assert len(parts) == 1 and parts[0].files == []
-
-
-def test_wire_reader_missing_dir_still_raises(tmp_path):
-    reader = DynamoDBWireReader({"path": str(tmp_path / "nope")})
-    with pytest.raises(OSError):
-        reader.partitions()
-
-
-# Wire REPLAY stream reader wrong-path detection mirrors the batch
-# reader's convention: a non-empty dir with no chunk=* entries raises; a
-# marker-only dir is a legitimate empty stream. The Python data source
-# module must be registered for by-value pickling, or workers started
-# outside the repo cannot import it.
-
-
-def test_datasource_module_registered_for_by_value_pickling(spark):
-    """spark.dataSource.register pickles the DataSource CLASS by
-    reference (module.qualname), which dies in Spark's Python planner
-    process whenever the session launches from a cwd that cannot
-    import this package (found live in r11: the whole 5-query
-    python-datasource family crashed from /tmp). The AST lint in
-    test_worker_importability.py only sees nested FUNCTIONS, so this
-    class-shaped hazard gets its own pin: registering the wire source
-    must put its module on cloudpickle's by-value registry."""
-    from pyspark import cloudpickle as cp
-
-    from dynamodb_stream_processor_2_0_spark.sources import (
-        python_datasource as PDS,
-    )
-
-    PDS.register_wire_datasource(spark)
-    registry = {
-        m if isinstance(m, str) else m.__name__
-        for m in cp.list_registry_pickle_by_value()
-    }
-    assert PDS.__name__ in registry, (
-        "python_datasource must be registered for by-value pickling — "
-        "without it the DataSource classes pickle by reference and the "
-        "planner worker needs the repo on its own sys.path"
-    )
-
-
-def test_wire_replay_stream_reader_rejects_wrong_path(tmp_path):
-    from dynamodb_stream_processor_2_0_spark.sources.python_datasource import (
-        WireReplayStreamReader,
-    )
-
-    wrong = tmp_path / "not_a_wire_dataset"
-    wrong.mkdir()
-    (wrong / "some_unrelated_file.txt").write_text("hello")
-    with pytest.raises(ValueError, match="no chunk=.*directories"):
-        WireReplayStreamReader({"path": str(wrong)})
-
-
-def test_wire_replay_stream_reader_accepts_marker_only_dir(tmp_path):
-    from dynamodb_stream_processor_2_0_spark.sources.python_datasource import (
-        WireReplayStreamReader,
-    )
-
-    empty = tmp_path / "legit_empty_stream"
-    empty.mkdir()
-    (empty / "_SUCCESS").write_text("")
-    r = WireReplayStreamReader({"path": str(empty)})
-    assert r.chunks == []
-    assert r.latestOffset() == {"chunk": 0}
-
-
-def test_wire_replay_stream_reader_reads_chunk_dirs(tmp_path):
-    from dynamodb_stream_processor_2_0_spark.sources.python_datasource import (
-        WireReplayStreamReader,
-    )
-
-    root = tmp_path / "wire"
-    (root / "chunk=0").mkdir(parents=True)
-    (root / "chunk=0" / "a.jsonl").write_text("{}\n")
-    r = WireReplayStreamReader({"path": str(root)})
-    assert len(r.chunks) == 1 and r.latestOffset() == {"chunk": 1}

@@ -3,22 +3,8 @@ decode step is the injected deterministic fake (codec libs absent)."""
 
 from __future__ import annotations
 
-import hashlib
-import shutil
-import struct
-from pathlib import Path
-
-import pytest
-from pyspark.sql import types as T
-
 from dynamodb_stream_processor_2_0_spark.operators import multimodal as MM
-from dynamodb_stream_processor_2_0_spark.plans import registry
-from dynamodb_stream_processor_2_0_spark.sources.catalog import (
-    load_table,
-    TABLES,
-)
-from tests import planted
-from tests.oracle_harness import compare_query
+from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 
 
 def test_decode_image_batch_schema_and_determinism(spark, sf_dir):
@@ -61,392 +47,3 @@ def test_resize_images_batch_shape(spark, sf_dir):
     # deterministic: same payload -> same resized bytes
     again = {r.doc_id: bytes(r.resized) for r in resize_images(docs, 8, 4).collect()}
     assert all(bytes(r.resized) == again[r.doc_id] for r in out)
-
-
-def test_vad_segments_known_runs(spark):
-    """Hand-built PCM payload: windows of loud samples vs silence give
-    known active runs. window=16 samples; 3 loud windows in runs of
-    lengths 2 and 1 -> 2 segments, longest 2."""
-    import struct
-
-    from dynamodb_stream_processor_2_0_spark.operators import multimodal as MM
-
-    loud = struct.pack("<16h", *([1000] * 16))
-    quiet = struct.pack("<16h", *([0] * 16))
-    payload = loud + loud + quiet + loud + quiet  # acts: 1 1 0 1 0
-    df = spark.createDataFrame(
-        [(1, bytearray(payload))], "doc_id long, payload binary"
-    )
-    row = MM.audio_vad_segments(df).collect()[0]
-    assert row.n_windows == 5
-    assert row.n_active == 3
-    assert row.n_segments == 2
-    assert row.longest_segment == 2
-    assert row.first_active == 0
-
-
-def test_vad_all_equal_energy_has_no_active(spark):
-    """Uniform energy: no window strictly beats the mean -> 0 active,
-    first_active = -1."""
-    import struct
-
-    from dynamodb_stream_processor_2_0_spark.operators import multimodal as MM
-
-    w = struct.pack("<16h", *([7] * 16))
-    df = spark.createDataFrame(
-        [(1, bytearray(w * 4))], "doc_id long, payload binary"
-    )
-    row = MM.audio_vad_segments(df).collect()[0]
-    assert row.n_active == 0
-    assert row.n_segments == 0
-    assert row.first_active == -1
-
-
-def test_audio_landmarks_match_identical_payloads(spark, tmp_path):
-    """Two byte-identical payloads share every landmark (overlap 1000);
-    an unrelated payload must not out-rank that pair."""
-
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    d = str(tmp_path)
-    loud = " ".join(
-        ("LOUDLOUD" if i % 5 == 0 else "quiet sh") for i in range(80)
-    )
-    other = "".join(chr(97 + (i * 7) % 26) for i in range(600))
-    planted.write(d, "documents", [(0, loud, "en", "s"), (1, loud, "en", "s"), (2, other, "en", "s")])
-    rows = registry.get("multimodal_audio_landmark_match").fn(
-        spark, d
-    ).collect()
-    assert rows, "identical payloads produced no landmark match"
-    top = rows[0]
-    assert {top["doc_a"], top["doc_b"]} == {0, 1}
-    assert top["overlap_permille"] == 1000
-    assert top["n_lm_a"] == top["n_lm_b"] == top["n_shared"]
-
-
-def test_shot_keyframes_planted_cut(spark, tmp_path):
-    """A payload built from two very different 32-byte frame blocks
-    must segment into (at least) two shots, and every keyframe must
-    be the max-intensity frame of its shot."""
-
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    d = str(tmp_path)
-    # frame A: flat 'a'*32 (sig 0); frame B: 16 high + 16 low
-    # bytes (blocks 0-3 beat the mean -> sig 0b1111, Hamming 4)
-    frame_a = "a" * 32
-    frame_b = "~" * 16 + "!" * 16
-    text = frame_a * 2 + frame_b * 2 + frame_a
-    planted.write(d, "documents", [(0, text, "en", "s")])
-    rows = registry.get("multimodal_shot_keyframes").fn(
-        spark, d
-    ).collect()
-    assert len(rows) >= 2, rows
-    total_frames = sum(r["shot_len"] for r in rows)
-    assert total_frames == len(text) // 32
-    for r in rows:
-        assert (
-            r["shot_start"]
-            <= r["keyframe_idx"]
-            < r["shot_start"] + r["shot_len"]
-        )
-
-
-def test_scene_cut_planted_frames(spark, tmp_path):
-    """A 160-byte payload = three identical flat frames then two
-    frames with a 4-bit different signature: exactly one cut at the
-    boundary. An all-flat payload has zero cuts."""
-    frame_a = "x" * 32                      # flat: signature 0x00
-    frame_b = "z" * 16 + "a" * 16           # 4 high blocks: 4 sig bits
-    cut_doc = frame_a * 3 + frame_b * 2
-    flat_doc = frame_a * 5
-    planted.write(tmp_path, "documents", [(1, cut_doc, "en", "src0"), (2, flat_doc, "en", "src0")])
-    out = {r.doc_id: r for r in planted.run(spark, "multimodal_scene_cut_detect", tmp_path)}
-    assert out[1].n_frames == 5
-    assert out[1].n_cuts == 1
-    assert 3 <= out[1].first_cut_idx <= 4
-    assert out[2].n_frames == 5
-    assert out[2].n_cuts == 0
-
-
-# --- multimodal decode kernels --------------------------------------------------------------------
-def test_arrow_digest_hashlib(spark, tmp_path):
-    docs = [
-        (1, "plain ascii payload", "en", "s"),
-        (2, "bytes with ünïcödé", "en", "s"),   # multibyte UTF-8
-        (3, "", "en", "s"),                     # empty payload
-    ]
-    planted.write(tmp_path, "documents", docs)
-    rows = {r["doc_id"]: r for r in planted.run(spark, "multimodal_arrow_digest", tmp_path)}
-    for d, text, _, _ in docs:
-        raw = text.encode("utf-8")
-        assert rows[d]["n_bytes"] == len(raw), d
-        assert rows[d]["payload_md5"] == hashlib.md5(raw).hexdigest(), d
-
-
-def test_pcm_window_energy_struct_unpack(spark, tmp_path):
-    # texts chosen to exercise: odd byte count (dropped), short trailing
-    # window (kept), multibyte chars
-    docs = [
-        (1, "abcdefgh" * 5, "en", "s"),     # 40 bytes = 20 samples
-        (2, "xyz", "en", "s"),              # 3 bytes -> 1 sample
-        (3, "", "en", "s"),                 # empty
-    ]
-    planted.write(tmp_path, "documents", docs)
-    rows = {r["doc_id"]: r for r in
-            planted.run(spark, "multimodal_pcm_window_energy", tmp_path)}
-    for d, text, _, _ in docs:
-        raw = text.encode("utf-8")
-        n = len(raw) // 2
-        samples = struct.unpack(f"<{n}h", raw[: 2 * n]) if n else ()
-        sq = [s * s for s in samples]
-        n_win = -(-n // 16) if n else 0
-        energies = [sum(sq[w * 16: (w + 1) * 16]) for w in range(n_win)]
-        peak = max(range(n_win), key=lambda w: (energies[w], -w)) if n_win else -1
-        r = rows[d]
-        assert r["n_samples"] == n, d
-        assert r["n_windows"] == n_win, d
-        assert r["total_energy"] == sum(sq), d
-        assert r["peak_window"] == peak, d
-        assert r["peak_energy"] == (energies[peak] if n_win else 0), d
-
-
-# Multimodal decode stages, CDC/snapshot state machines, time-series
-# similarity, walks, contrastive sampling, and the corpus mixture
-# planners. Third implementations: hashlib for every md5-derived
-# quantity (fake decoder metadata, walk argmins, negative sampling,
-# cleaning gates), struct-unpacked int16 PCM + gaps-and-islands VAD,
-# exact-integer Pearson from BIGINT moments, sequential
-# changelog/snapshot maintenance, and Hamilton largest-remainder
-# apportionment.
-
-
-# --- multimodal decode stages ----------------------------------------------------
-def test_image_decode_md5_seeded_metadata(spark, tmp_path):
-    docs = [(1, "an image payload", "en", "s"), (2, "另一个 payload", "en", "s")]
-    planted.write(tmp_path, "documents", docs)
-    rows = {r["doc_id"]: r for r in planted.run(spark, "multimodal_image_decode", tmp_path)}
-    for d, text, _, _ in docs:
-        raw = text.encode("utf-8")
-        h = hashlib.md5(raw).digest()
-        r = rows[d]
-        assert r["n_bytes"] == len(raw), d
-        assert r["width"] == 64 + h[0] % 192, d
-        assert r["height"] == 64 + h[1] % 192, d
-        assert r["channels"] == 3
-        assert r["f0_byte"] == h[2] and r["f7_byte"] == h[9], d
-
-
-def test_frame_sample_every_fourth_chunk(spark, tmp_path):
-    text = "x" * 270  # 270 bytes -> ceil(270/32) = 9 chunks -> frames 0,4,8
-    planted.write(tmp_path, "documents", [(1, text, "en", "s")])
-    rows = {r["frame_idx"]: r["frame_hex"]
-            for r in planted.run(spark, "multimodal_frame_sample", tmp_path)}
-    raw = text.encode("utf-8")
-    expected = {}
-    n_chunks = -(-len(raw) // 32)
-    for idx in range(0, n_chunks, 4):
-        expected[idx] = raw[idx * 32: (idx + 1) * 32].hex().upper()
-    assert rows == expected
-    assert set(rows) == {0, 4, 8}
-    assert len(rows[8]) == 2 * (270 - 8 * 32)  # trailing short frame kept
-
-
-def test_resize_digest_cycled_payload(spark, tmp_path):
-    docs = [(1, "tile me", "en", "s"), (2, "y" * 5000, "en", "s")]
-    planted.write(tmp_path, "documents", docs)
-    rows = {r["doc_id"]: r for r in planted.run(spark, "multimodal_resize_digest", tmp_path)}
-    for d, text, _, _ in docs:
-        raw = text.encode("utf-8")
-        resized = (raw * (4096 // len(raw) + 1))[:4096]
-        r = rows[d]
-        assert (r["width"], r["height"]) == (64, 64)
-        assert r["n_resized_bytes"] == 4096
-        assert r["resized_md5"] == hashlib.md5(
-            resized.hex().upper().encode()
-        ).hexdigest(), d
-
-
-def test_audio_vad_segments_islands(spark, tmp_path):
-    # craft a payload whose 16-sample windows have a known loud/quiet
-    # pattern: quiet windows of small bytes, loud windows of 'z' runs
-    quiet = "\x01" * 32   # 16 samples of tiny amplitude
-    loud = "zz" * 16      # 16 samples of large amplitude
-    text = quiet + loud + loud + quiet + loud  # pattern: Q L L Q L
-    planted.write(tmp_path, "documents", [(1, text, "en", "s")])
-    (r,) = planted.run(spark, "multimodal_audio_vad_segments", tmp_path)
-
-    raw = text.encode("utf-8")
-    n = len(raw) // 2
-    samples = struct.unpack(f"<{n}h", raw[: 2 * n])
-    sq = [s * s for s in samples]
-    n_win = -(-n // 16)
-    energies = [sum(sq[w * 16: (w + 1) * 16]) for w in range(n_win)]
-    total = sum(energies)
-    active = [w for w in range(n_win) if energies[w] * n_win > total]
-    segs = []
-    for w in active:
-        if segs and segs[-1][1] == w - 1:
-            segs[-1][1] = w
-        else:
-            segs.append([w, w])
-    assert r["n_windows"] == n_win
-    assert r["n_active"] == len(active)
-    assert r["n_segments"] == len(segs) == 2          # LL and L islands
-    assert r["longest_segment"] == max(b - a + 1 for a, b in segs)
-    assert r["first_active"] == active[0]
-
-
-# Operator-level robustness conventions:
-# 1. multimodal NULL convention: a NULL media payload PROPAGATES NULL
-#    through every wide-form Pandas kernel (matching the arrow-digest
-#    kernel and the oracles' length(NULL)/md5(NULL) semantics) and emits
-#    ZERO rows from every long-form explode-style kernel (SQL
-#    explode-over-NULL semantics), instead of decoding as b"".
-# 2. kmeans ragged-vector hygiene (tests/test_clustering.py): the
-#    canonical dimension is the MODAL positive vector length, so one
-#    corrupt over-long vector does not drop every well-formed row.
-# 3. wire datasource wrong-path detection
-#    (tests/test_dynamodb_connector.py): a directory that exists and is
-#    non-empty but contains no shard=* entries raises instead of silently
-#    reading zero rows; a marker-only directory is still a legitimate
-#    empty dataset.
-
-
-PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    # doc 1: real payload (64 bytes -> 2 scene frames, 32 PCM samples);
-    # doc 2: NULL payload; doc 3: EMPTY payload (a real value).
-    return spark.createDataFrame(
-        [
-            (1, bytes(range(64))),
-            (2, None),
-            (3, b""),
-        ],
-        PAYLOAD_SCHEMA,
-    )
-
-
-def test_null_payload_decodes_to_null_metadata(media):
-    rows = {r["doc_id"]: r for r in MM.decode_image_batch(media).collect()}
-    assert rows[2]["n_bytes"] is None
-    assert rows[2]["width"] is None and rows[2]["feature"] is None
-    # empty payload is a VALUE: md5(b"") metadata, n_bytes = 0
-    assert rows[3]["n_bytes"] == 0 and rows[3]["width"] is not None
-    assert rows[1]["n_bytes"] == 64
-
-
-def test_null_payload_resizes_to_null_image(media):
-    rows = {r["doc_id"]: r for r in MM.resize_images(media, 8, 8).collect()}
-    assert rows[2]["resized"] is None
-    # width/height are the requested target (parameters), not metrics
-    assert rows[2]["width"] == 8 and rows[2]["height"] == 8
-    assert len(rows[1]["resized"]) == 64
-    assert len(rows[3]["resized"]) == 64  # empty payload still fabricates
-
-
-def test_null_payload_pcm_energy_is_null(media):
-    rows = {r["doc_id"]: r for r in MM.pcm_window_energy(media).collect()}
-    assert all(rows[2][c] is None for c in rows[2].asDict() if c != "doc_id")
-    assert rows[3]["n_samples"] == 0 and rows[3]["total_energy"] == 0
-    assert rows[1]["n_samples"] == 32 and rows[1]["total_energy"] > 0
-
-
-def test_null_payload_scene_cut_is_null(media):
-    rows = {r["doc_id"]: r for r in MM.scene_cut_detect(media).collect()}
-    assert rows[2]["n_frames"] is None and rows[2]["n_cuts"] is None
-    assert rows[3]["n_frames"] == 0  # empty payload: zero frames, not NULL
-    assert rows[1]["n_frames"] == 2
-
-
-def test_null_payload_vad_is_null(media):
-    rows = {r["doc_id"]: r for r in MM.audio_vad_segments(media).collect()}
-    assert rows[2]["n_windows"] is None and rows[2]["n_segments"] is None
-    assert rows[3]["n_windows"] == 0
-    assert rows[1]["n_windows"] == 2
-
-
-def test_null_payload_longform_kernels_emit_zero_rows(media):
-    for fn in (MM.sample_frames, MM.pcm_window_energies, MM.frame_signatures):
-        ids = {r["doc_id"] for r in fn(media).collect()}
-        assert 2 not in ids, fn.__name__
-        assert 1 in ids, fn.__name__
-
-
-# Multimodal oracle/kernel NULL alignment: the kernels propagate NULL
-# (wide-form -> NULL metrics, long-form -> zero rows), and every SQL
-# oracle must agree: none may COALESCE a NULL-payload metric to 0/-1
-# (audio VAD, scene cut, PCM energy), drop the row (resize's WHERE
-# octet_length > 0 also dropped EMPTY payloads the kernel keeps), or
-# emit a constant where the kernel emits NULL (image decode's channels).
-# The fixture has no NULL/empty texts, so the mismatch was latent: this
-# runs full driver-faithful oracle parity on a doctored documents table
-# with a NULL text, an empty text, and real texts.
-
-
-SF_SMALL = "/root/testdata/sf0.001"
-
-
-_MM_PARITY_SPECS = [
-    "multimodal_image_decode",
-    "multimodal_frame_sample",
-    "multimodal_resize_digest",
-    "multimodal_arrow_digest",
-    "multimodal_pcm_window_energy",
-    "multimodal_scene_cut_detect",
-    "multimodal_audio_vad_segments",
-]
-
-
-@pytest.fixture(scope="module")
-def nulls_sf_dir(spark, tmp_path_factory) -> str:
-    """A scale-factor dir whose documents table contains a NULL text,
-    an EMPTY text, and a handful of real texts; every other table is
-    the sf0.001 original (symlinked — read-only use)."""
-    root = tmp_path_factory.mktemp("sf_nulltext")
-    for name in TABLES:
-        if name == "documents":
-            continue
-        (root / f"{name}.parquet").symlink_to(
-            Path(SF_SMALL) / f"{name}.parquet"
-        )
-    docs = (
-        spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-        .limit(8)
-        .collect()
-    )
-    base = [tuple(r) for r in docs]
-    schema = spark.read.parquet(f"{SF_SMALL}/documents.parquet").schema
-    doctored = base + [
-        (90001, None, "en", "synthetic", None),  # NULL payload
-        (90002, "", "en", "synthetic", 0),  # EMPTY payload (real value)
-    ]
-    out = root / "documents.parquet"
-    tmp_write = root / "_docs_out"
-    spark.createDataFrame(doctored, schema).coalesce(1).write.parquet(
-        str(tmp_write)
-    )
-    part = next(tmp_write.glob("part-*.parquet"))
-    shutil.move(str(part), str(out))
-    shutil.rmtree(tmp_write)
-    return str(root)
-
-
-@pytest.mark.parametrize("name", _MM_PARITY_SPECS)
-def test_multimodal_oracle_parity_with_null_and_empty_payload(
-    spark, nulls_sf_dir, name
-):
-    """The r10 ADVICE medium item, made non-latent: kernel and SQL
-    oracle agree ROW FOR ROW (driver-faithful comparator) on a table
-    containing NULL and empty payloads — NULL propagates on both
-    sides, empty stays a real value on both sides."""
-    registry._load()
-    compare_query(spark, registry.REGISTRY[name], nulls_sf_dir)

@@ -5,7 +5,7 @@ queries still rested on golden replay alone (inventory class S) —
 ``streaming_foreachbatch_sink_e2e``, ``streaming_python_sink_e2e``, and
 ``streaming_python_source_e2e``. Each has a deterministic batch shadow,
 so the r9 device applies: plant a tiny hand-designed events fixture
-(production schema) in a tmp sf_dir, run the REGISTERED query
+(production schema) in a tmp stream_dir, run the REGISTERED query
 end-to-end (real Structured Streaming: chunked staging, availableNow
 replay, state stores, the real foreachBatch / Python DataSource sink or
 source), and check the result against a sequential-Python third
@@ -26,38 +26,12 @@ What each pin proves beyond the twin-formula oracle:
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import math
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-
-def _write_events(tmp, rows):
-    """rows: (event_id, ts_iso, user_id, event_type, value, props)."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _run_df(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir))
+from tests import planted
 
 
 # --- the planted stream ----------------------------------------------------
@@ -71,6 +45,8 @@ def _run_df(spark, name, sf_dir):
 # as REMOVE (dropped by the source's F1 filter) but the delivery state
 # machine still runs on it (first (4, error) occurrence -> email).
 _D = "2024-05-01"
+
+
 _EVENTS = [
     (0, f"{_D}T00:10:00", 1, "click", 1.0, '{"k": 3}'),
     (1, f"{_D}T00:20:00", 1, "click", 2.0, "{}"),
@@ -83,13 +59,15 @@ _EVENTS = [
     (8, f"{_D}T02:30:00", 5, "view", 9.0, '{"k": 11}'),
     (9, f"{_D}T03:10:00", 2, "view", 10.0, "{}"),
 ]
+
+
 _CHUNKS = 4
 
 
 @pytest.fixture(scope="module")
-def sf_dir(tmp_path_factory):
+def stream_dir(tmp_path_factory):
     tmp = tmp_path_factory.mktemp("r10_stream_fixture")
-    _write_events(tmp, _EVENTS)
+    planted.write(tmp, "events", _EVENTS)
     return tmp
 
 
@@ -122,7 +100,7 @@ def _expected_emails():
 
 
 @pytest.mark.slow
-def test_foreachbatch_sink_lands_exactly_one_email_per_key(spark, sf_dir):
+def test_foreachbatch_sink_lands_exactly_one_email_per_key(spark, stream_dir):
     got = sorted(
         (
             r["dedup_id"],
@@ -131,22 +109,18 @@ def test_foreachbatch_sink_lands_exactly_one_email_per_key(spark, sf_dir):
             r["user_id"],
             r["event_type"],
         )
-        for r in _run_df(
-            spark, "streaming_foreachbatch_sink_e2e", sf_dir
-        ).collect()
+        for r in planted.run(spark, "streaming_foreachbatch_sink_e2e", stream_dir)
     )
     assert got == _expected_emails()
     # and every envelope carries the S3 message type
     types = {
         r["msg_type"]
-        for r in _run_df(
-            spark, "streaming_foreachbatch_sink_e2e", sf_dir
-        ).collect()
+        for r in planted.run(spark, "streaming_foreachbatch_sink_e2e", stream_dir)
     }
     assert types == {"face_match_email"}
 
 
-def test_python_sink_manifest_commits_the_same_email_set(spark, sf_dir):
+def test_python_sink_manifest_commits_the_same_email_set(spark, stream_dir):
     got = sorted(
         (
             r["dedup_id"],
@@ -155,9 +129,7 @@ def test_python_sink_manifest_commits_the_same_email_set(spark, sf_dir):
             r["user_id"],
             r["event_type"],
         )
-        for r in _run_df(
-            spark, "streaming_python_sink_e2e", sf_dir
-        ).collect()
+        for r in planted.run(spark, "streaming_python_sink_e2e", stream_dir)
     )
     assert got == _expected_emails()
 
@@ -190,7 +162,7 @@ def _expected_source_rows():
     return sorted(out)
 
 
-def test_python_source_replays_each_record_once_in_its_chunk(spark, sf_dir):
+def test_python_source_replays_each_record_once_in_its_chunk(spark, stream_dir):
     got = sorted(
         (
             int(r["chunk"]),
@@ -199,9 +171,7 @@ def test_python_source_replays_each_record_once_in_its_chunk(spark, sf_dir):
             r["guest_id"],
             r["total_matches"],
         )
-        for r in _run_df(
-            spark, "streaming_python_source_e2e", sf_dir
-        ).collect()
+        for r in planted.run(spark, "streaming_python_source_e2e", stream_dir)
     )
     expected = _expected_source_rows()
     assert got == expected

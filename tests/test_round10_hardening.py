@@ -21,7 +21,6 @@ robustness conventions:
 from __future__ import annotations
 
 import pytest
-
 from pyspark.sql import types as T
 
 from dynamodb_stream_processor_2_0_spark.operators import multimodal as mm
@@ -31,6 +30,7 @@ from dynamodb_stream_processor_2_0_spark.operators.clustering import (
 from dynamodb_stream_processor_2_0_spark.sources.python_datasource import (
     DynamoDBWireReader,
 )
+
 
 PAYLOAD_SCHEMA = T.StructType(
     [

@@ -33,7 +33,9 @@ from dynamodb_stream_processor_2_0_spark.plans import registry
 from dynamodb_stream_processor_2_0_spark.sources.catalog import TABLES
 from tests.oracle_harness import compare_query
 
+
 SF_SMALL = "/root/testdata/sf0.001"
+
 
 _MM_PARITY_SPECS = [
     "multimodal_image_decode",

@@ -15,10 +15,17 @@ this fails before the oracle gate does.
 
 from __future__ import annotations
 
+import datetime as _dt
+import random as _random
 import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
+
+import dynamodb_stream_processor_2_0_spark.plans.queries_causal_eval as QCE
+from dynamodb_stream_processor_2_0_spark.plans import registry
+from tests import planted
 
 REPO_ROOT = Path(__file__).resolve().parent.parent
 if str(REPO_ROOT / "tools") not in sys.path:
@@ -26,8 +33,6 @@ if str(REPO_ROOT / "tools") not in sys.path:
 
 from hostile_sweep import build_degenerate, build_empty, build_nulls  # noqa: E402
 
-import dynamodb_stream_processor_2_0_spark.plans.queries_causal_eval as QCE  # noqa: E402
-from dynamodb_stream_processor_2_0_spark.plans import registry  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -75,7 +80,6 @@ def test_mra_default_gate_uses_driver_arm_on_testdata(spark):
 # HOF on every input class — same left fold, same IEEE order — and the
 # DataFrame-level split must route every row class to a correct arm.
 # ---------------------------------------------------------------------------
-
 _ADVERSARIAL_VECS = [
     # (label, a, b)
     ("random", [((7 * i + 3) % 13 - 6) / 7.0 for i in range(64)],
@@ -160,29 +164,6 @@ def test_pair_folds_single_split_multi_output(spark):
     assert got.count() == df.count()
 
 
-# --- interval-family counting rewrites: randomized brute-force pins --------
-#
-# r12 replaced the banded pair joins with counting algebra (census) and
-# an endpoint sweep (overlap join). The oracle gate proves them on the
-# generated corpora; these pins prove them on ADVERSARIAL interval
-# multisets a generator never emits — tiny value domains force heavy
-# ties, point intervals (s = e), meets chains, and deep nesting, which
-# is exactly where the classifier-precedence masks and the
-# strict-inversion count could drift. Expected values come from an
-# O(n^2) brute force of the ORACLE's normalized CASE.
-
-import datetime as _dt
-import random as _random
-
-import pyarrow as _pa
-import pyarrow.parquet as _pq
-
-
-def _run(spark, name, sf_dir):
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
-
-
 def _plant_interval_events(tmp, day_intervals):
     """day_intervals: {date_iso: [(s_sec, e_sec), ...]} — one interval
     per synthetic user; two events pin (min, max) seconds-of-day."""
@@ -194,17 +175,7 @@ def _plant_interval_events(tmp, day_intervals):
                 ts = _dt.datetime.fromisoformat(day) + _dt.timedelta(seconds=sec)
                 rows.append((eid, ts, uid, "click", 1.0))
                 eid += 1
-    t = _pa.table(
-        {
-            "event_id": _pa.array([r[0] for r in rows], _pa.int64()),
-            "ts": _pa.array([r[1] for r in rows], _pa.timestamp("us")),
-            "user_id": _pa.array([r[2] for r in rows], _pa.int64()),
-            "event_type": _pa.array([r[3] for r in rows], _pa.string()),
-            "value": _pa.array([r[4] for r in rows], _pa.float64()),
-            "props": _pa.array(["{}" for _ in rows], _pa.string()),
-        }
-    )
-    _pq.write_table(t, str(Path(tmp) / "events.parquet"))
+    planted.write(tmp, "events", rows)
 
 
 def _brute_census(day_intervals):
@@ -297,7 +268,7 @@ def test_allen_census_matches_bruteforce_random(spark, tmp_path):
     _plant_interval_events(tmp_path, worlds)
     got = {
         (r.day, r.relation): r.n_pairs
-        for r in _run(spark, "interval_allen_algebra_census", tmp_path)
+        for r in planted.run(spark, "interval_allen_algebra_census", tmp_path)
     }
     assert got == _brute_census(worlds)
 
@@ -307,24 +278,9 @@ def test_overlap_join_matches_bruteforce_random(spark, tmp_path):
     _plant_interval_events(tmp_path, worlds)
     got = {
         r.day: (r.n_pairs, r.sum_overlap_sec)
-        for r in _run(spark, "interval_overlap_join", tmp_path)
+        for r in planted.run(spark, "interval_overlap_join", tmp_path)
     }
     assert got == _brute_overlap(worlds)
-
-
-# --- r12 second batch: array-verification + single-pass IND identities ------
-#
-# dedup_simhash_threshold_sweep and dedup_minhash_calibration replaced
-# their exploded intersection joins (candidates x shingles through a
-# join + groupBy) with per-doc sorted arrays verified by
-# size(array_intersect(...)) per candidate row, and schema_ind_discovery
-# replaced its per-arm distinct+anti-join+separate-count double pass
-# with ONE left-join aggregate. These tests pin the identities the
-# rewrites rely on, on adversarial inputs the parquet fixtures do not
-# contain (zero overlap, full overlap, shingle-less docs, NULL keys,
-# empty relations).
-
-from pyspark.sql import functions as F  # noqa: E402
 
 
 def _shingle_frame(spark, rows):

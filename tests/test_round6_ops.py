@@ -9,12 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        [(i, t, "en", "src0", len(t)) for i, t in enumerate(rows)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
+from tests import planted
 
 
 def _winnow_fps(spark, rows):
@@ -23,7 +18,7 @@ def _winnow_fps(spark, rows):
     {doc_id: set(fingerprints)}."""
     from dynamodb_stream_processor_2_0_spark.plans import queries_retrieval as R
 
-    docs = _docs(spark, rows)
+    docs = planted.docs_frame(spark, rows)
     # Reuse the registered fn end-to-end is pair-level; for the
     # guarantee we need per-doc fingerprint sets, so drive the same
     # code path via a temp view swap: smallest honest route is to
@@ -121,7 +116,7 @@ def _chunk_hashes(spark, rows):
 
     from dynamodb_stream_processor_2_0_spark.plans import queries_dedup as D
 
-    docs = _docs(spark, rows)
+    docs = planted.docs_frame(spark, rows)
     wpos = Window.partitionBy("doc_id").orderBy("pos")
     toks = (
         docs.select(
@@ -284,8 +279,6 @@ def test_modularity_bounds(spark, sf_dir):
 
 
 # --- Lindley queue: closed form == naive sequential simulation -------------
-
-
 def test_lindley_closed_form_matches_sequential_simulation(spark, sf_dir):
     """The window-algebra closed form C_n = S_n + max_j(a_j - S_{j-1})
     must reproduce the literal Lindley recurrence W_{n+1} =
@@ -327,8 +320,6 @@ def test_lindley_closed_form_matches_sequential_simulation(spark, sf_dir):
 
 
 # --- sign-flip FDR: exact p-value range + step-up down-set -----------------
-
-
 def test_signflip_fdr_axioms(spark, sf_dir):
     """Exact permutation p-values live on {1..65}/65; BH step-up
     rejections form a DOWN-SET in the p-value ranking (if rank k is
@@ -353,8 +344,6 @@ def test_signflip_fdr_axioms(spark, sf_dir):
 
 
 # --- Poisson bootstrap: CI brackets the point estimate ---------------------
-
-
 def test_poisson_bootstrap_ci_brackets_mean(spark, sf_dir):
     """With 32 replicates the (2nd, 31st) order-statistic CI must be a
     proper interval and, on this data, bracket the exact mean (the
@@ -374,8 +363,6 @@ def test_poisson_bootstrap_ci_brackets_mean(spark, sf_dir):
 
 
 # --- drawdown: peak/final/drawdown consistency -----------------------------
-
-
 def test_drawdown_invariants(spark, sf_dir):
     """Max drawdown is non-negative and bounded below by the END
     drawdown peak - final (the running peak's last reading); peak >=
@@ -392,8 +379,6 @@ def test_drawdown_invariants(spark, sf_dir):
 
 
 # --- sorted-neighborhood blocking: window guarantee -------------------------
-
-
 def test_sorted_neighborhood_window_bound_and_recall(spark, tmp_path):
     """The two guarantees the operator claims: (a) every emitted pair
     sits within the w=8 sliding window of the sort order (rank_gap in
@@ -444,32 +429,6 @@ def test_sorted_neighborhood_window_bound_and_recall(spark, tmp_path):
     assert planted[0]["edit_dist"] == 1
 
 
-# --- fourth-continuation batch: planted-model behavior ----------------------
-
-
-def _write_events(spark, rows, d):
-    """rows: (event_id, ts_str, user_id, event_type, value). Writes a
-    single-file events.parquet under d (micros vintage)."""
-    import glob
-    import shutil
-
-    tmp = f"{d}/_evw"
-    df = spark.createDataFrame(
-        [(i, ts, u, et, v, "{}") for (i, ts, u, et, v) in rows],
-        "event_id long, ts string, user_id long, event_type string,"
-        " value double, props string",
-    ).select(
-        "event_id",
-        F.to_timestamp("ts").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/events.parquet")
-
-
 def test_cuped_perfect_covariate_recovers_theta_and_kills_variance(spark, tmp_path):
     """When every user's post-period mean EQUALS their pre-period mean
     (Y = X exactly), CUPED must estimate theta ~ 1 (1000 milli), report
@@ -486,7 +445,7 @@ def test_cuped_perfect_covariate_recovers_theta_and_kills_variance(spark, tmp_pa
         for day, half in (("2024-01-02", "pre"), ("2024-01-28", "post")):
             rows.append((eid, f"{day} 12:00:00", u, "click", v))
             eid += 1
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = {
         r["event_type"]: r
         for r in registry.get("events_cuped_variance_reduction")
@@ -527,7 +486,7 @@ def test_xcorr_planted_shift_peaks_at_its_lag(spark, tmp_path):
                 (eid, f"2024-01-{day:02d} 11:00:00", eid % 7, "click", 1.0)
             )
             eid += 1
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = registry.get("events_cross_correlation_leadlag").fn(
         spark, d
     ).collect()
@@ -558,7 +517,7 @@ def test_markov_eval_deterministic_chain_scores_1000(spark, tmp_path):
                 (eid, f"2024-01-{day:02d} 09:00:00", u, et, 1.0)
             )
             eid += 1
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = registry.get("events_markov_next_event_eval").fn(
         spark, d
     ).collect()
@@ -601,8 +560,6 @@ def test_chao1_known_frequency_of_frequencies(spark, tmp_path):
 
 
 # --- fifth-continuation batch ------------------------------------------------
-
-
 def test_brier_murphy_identity_and_bounds(spark, sf_dir):
     """Murphy terms are non-negative, UNC <= 250000 micro (max of
     p(1-p)), and the decomposition identity holds up to the reported
@@ -729,24 +686,6 @@ def test_jsd_disjoint_source_is_most_divergent(spark, tmp_path):
     assert out["srcC"] >= 500  # disjoint vocab: JSD near 1 bit
 
 
-# --- sixth-continuation batch -------------------------------------------------
-
-
-def _write_embeddings(spark, rows, d):
-    """rows: (vec_id, [floats], label)."""
-    import glob
-    import shutil
-
-    tmp = f"{d}/_embw"
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.copy(
-        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/embeddings.parquet"
-    )
-
-
 def test_isotropy_extremes(spark, tmp_path):
     """Identical vectors score mean pairwise cosine exactly 1e6 micro
     (a degenerate cone); distinct one-hot vectors score exactly 0
@@ -756,16 +695,14 @@ def test_isotropy_extremes(spark, tmp_path):
 
     fn = registry.get("embedding_isotropy_audit").fn
     d = str(tmp_path)
-    _write_embeddings(
-        spark, [(i, [3.0, 4.0, 0.0, 0.0], 0) for i in range(8)], d
-    )
+    planted.write(d, "embeddings", [(i, [3.0, 4.0, 0.0, 0.0], 0) for i in range(8)])
     r = fn(spark, d).collect()[0]
     assert r["mean_pairwise_cos_micro"] == 1000000
     onehots = [
         (i, [1.0 if j == i else 0.0 for j in range(8)], 0)
         for i in range(8)
     ]
-    _write_embeddings(spark, onehots, d)
+    planted.write(d, "embeddings", onehots)
     r = fn(spark, d).collect()[0]
     assert r["mean_pairwise_cos_micro"] == 0
     # one-hot cloud: every dim carries the same variance
@@ -822,7 +759,7 @@ def test_dp_sensitivity_power_user(spark, tmp_path):
         (100 + u, "2024-01-06 10:00:00", u, "click", 2.0)
         for u in range(20)
     ]
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = {
         r["eps_milli"]: r
         for r in registry.get("privacy_dp_sensitivity_report")
@@ -858,7 +795,7 @@ def test_kcenter_hits_separated_clusters(spark, tmp_path):
             v[(c + 4) % 8] = 0.5 * j  # tiny within-cluster spread
             rows.append((vid, [float(x) for x in v], c))
             vid += 1
-    _write_embeddings(spark, rows, d)
+    planted.write(d, "embeddings", rows)
     out = registry.get("embedding_kcenter_coreset").fn(
         spark, d
     ).collect()
@@ -878,25 +815,6 @@ def test_kcenter_hits_separated_clusters(spark, tmp_path):
     )
 
 
-# --- seventh-continuation batch ------------------------------------------------
-
-
-def _stage_docs(spark, rows, d):
-    """rows: (doc_id, text, lang, source)."""
-    import glob
-    import shutil
-
-    tmp = f"{d}/_docw"
-    spark.createDataFrame(
-        [(i, t, lg, src, len(t)) for (i, t, lg, src) in rows],
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.copy(
-        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/documents.parquet"
-    )
-
-
 def test_naive_bayes_disjoint_vocab_scores_1000(spark, tmp_path):
     """Two 'languages' with disjoint vocabularies: the learned NB
     classifier must score held-out accuracy 1000 for both."""
@@ -913,7 +831,7 @@ def test_naive_bayes_disjoint_vocab_scores_1000(spark, tmp_path):
         rows.append(
             (i, "red dog jumps over the fence today quickly", "en", "s")
         )
-    _stage_docs(spark, rows, d)
+    planted.write(d, "documents", rows)
     out = {
         r["true_lang"]: r
         for r in registry.get("ml_naive_bayes_langid")
@@ -934,7 +852,7 @@ def test_kneser_ney_hand_computed(spark, tmp_path):
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
     d = str(tmp_path)
-    _stage_docs(spark, [(0, "aa bb aa bb aa cc", "en", "s")], d)
+    planted.write(d, "documents", [(0, "aa bb aa bb aa cc", "en", "s")])
     rows = registry.get("text_kneser_ney_bigram_lm").fn(
         spark, d
     ).collect()
@@ -961,11 +879,7 @@ def test_audio_landmarks_match_identical_payloads(spark, tmp_path):
         ("LOUDLOUD" if i % 5 == 0 else "quiet sh") for i in range(80)
     )
     other = "".join(chr(97 + (i * 7) % 26) for i in range(600))
-    _stage_docs(
-        spark,
-        [(0, loud, "en", "s"), (1, loud, "en", "s"), (2, other, "en", "s")],
-        d,
-    )
+    planted.write(d, "documents", [(0, loud, "en", "s"), (1, loud, "en", "s"), (2, other, "en", "s")])
     rows = registry.get("multimodal_audio_landmark_match").fn(
         spark, d
     ).collect()
@@ -977,8 +891,6 @@ def test_audio_landmarks_match_identical_payloads(spark, tmp_path):
 
 
 # --- eighth-continuation batch -------------------------------------------------
-
-
 def test_rouge_identical_and_subset_pairs(spark, tmp_path):
     """Byte-identical docs must score ROUGE-1/2 F1 = 1000; when doc A
     is a strict prefix of doc B, precision (vs A) is 1000 while recall
@@ -989,15 +901,11 @@ def test_rouge_identical_and_subset_pairs(spark, tmp_path):
     d = str(tmp_path)
     base = " ".join(f"tok{i % 23}m{i % 7}" for i in range(60))
     ext = base + " " + " ".join(f"extra{i}" for i in range(20))
-    _stage_docs(
-        spark,
-        [
+    planted.write(d, "documents", [
             (0, base, "en", "s"),
             (1, base, "en", "s"),
             (2, ext, "en", "s"),
-        ],
-        d,
-    )
+        ])
     rows = registry.get("eval_rouge_near_dup_pairs").fn(
         spark, d
     ).collect()
@@ -1036,7 +944,7 @@ def test_markov_removal_sole_path_channel(spark, tmp_path):
     for u in range(20, 30):
         rows.append((eid, "2024-01-05 10:00:00", u, "error", 1.0))
         eid += 1
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = {
         r["channel"]: r
         for r in registry.get("attribution_markov_removal")
@@ -1056,8 +964,6 @@ def test_markov_removal_sole_path_channel(spark, tmp_path):
 
 
 # --- ninth-continuation batch ---------------------------------------------------
-
-
 def test_knn_clustered_labels_score_1000(spark, tmp_path):
     """Embeddings whose geometry matches their labels (tight one-hot
     clusters) must classify perfectly under the 5-NN majority vote."""
@@ -1075,7 +981,7 @@ def test_knn_clustered_labels_score_1000(spark, tmp_path):
             v[(lab + 3) % 8] = 0.01 * j
             rows.append((vid, [float(x) for x in v], lab))
             vid += 1
-    _write_embeddings(spark, rows, d)
+    planted.write(d, "embeddings", rows)
     out = registry.get("ml_knn_label_eval").fn(spark, d).collect()
     assert out, "no test rows from the 80/20 split"
     for r in out:
@@ -1098,7 +1004,7 @@ def test_periodogram_weekly_cycle_peaks_at_7(spark, tmp_path):
                 (eid, f"2024-01-{day:02d} 09:00:00", eid % 5, "click", 1.0)
             )
             eid += 1
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = {
         r["period_days"]: r["power_permille"]
         for r in registry.get("events_periodogram_fixed")
@@ -1112,8 +1018,6 @@ def test_periodogram_weekly_cycle_peaks_at_7(spark, tmp_path):
 
 
 # --- tenth-continuation batch ----------------------------------------------------
-
-
 def test_key_discovery_fixture_truths(spark, sf_dir):
     """Known key structure of the fixture: PKs are keys, the FK and
     the low-cardinality column are not, and the lineitem composite
@@ -1160,7 +1064,7 @@ def test_neyman_zero_variance_stratum_gets_nothing(spark, tmp_path):
         rows.append((i, "x" * 50, "en", "srcA"))
     for i in range(40, 80):  # varying length
         rows.append((i, "y" * (10 + 5 * (i % 13)), "en", "srcB"))
-    _stage_docs(spark, rows, d)
+    planted.write(d, "documents", rows)
     out = {
         r["source"]: r
         for r in registry.get("sample_neyman_allocation")
@@ -1186,7 +1090,7 @@ def test_method_agreement_identical_docs_in_both(spark, tmp_path):
     t = " ".join(f"w{i % 19}q{i % 5}" for i in range(80))
     rows = [(i, t, "en", "s") for i in range(3)]
     rows.append((3, " ".join(f"zz{i}" for i in range(80)), "en", "s"))
-    _stage_docs(spark, rows, d)
+    planted.write(d, "documents", rows)
     r = registry.get("eval_dedup_method_agreement").fn(
         spark, d
     ).collect()[0]
@@ -1200,8 +1104,6 @@ def test_method_agreement_identical_docs_in_both(spark, tmp_path):
 
 
 # --- eleventh-continuation batch ---------------------------------------------------
-
-
 def test_mutual_information_planted_dependence(spark, tmp_path):
     """A feature that DETERMINES the label must score MI ~ H(Y)
     (uncertainty coefficient ~1000); the independent features stay at
@@ -1260,7 +1162,7 @@ def test_shot_keyframes_planted_cut(spark, tmp_path):
     frame_a = "a" * 32
     frame_b = "~" * 16 + "!" * 16
     text = frame_a * 2 + frame_b * 2 + frame_a
-    _stage_docs(spark, [(0, text, "en", "s")], d)
+    planted.write(d, "documents", [(0, text, "en", "s")])
     rows = registry.get("multimodal_shot_keyframes").fn(
         spark, d
     ).collect()
@@ -1287,7 +1189,7 @@ def test_ktruss_clique_survives_chain_peels(spark, tmp_path):
     t2 = " ".join(f"solo{i}" for i in range(70))
     rows = [(i, t1, "en", "s") for i in range(4)]
     rows += [(4, t2, "en", "s"), (5, t2, "en", "s")]
-    _stage_docs(spark, rows, d)
+    planted.write(d, "documents", rows)
     out = registry.get("graph_ktruss_edges").fn(spark, d).collect()
     edges = {(r["doc_a"], r["doc_b"]) for r in out}
     clique = {(a, b) for a in range(4) for b in range(4) if a < b}
@@ -1297,8 +1199,6 @@ def test_ktruss_clique_survives_chain_peels(spark, tmp_path):
 
 
 # --- twelfth-continuation batch ------------------------------------------------------
-
-
 def test_ood_planted_outlier_tops_ranking(spark, tmp_path):
     """A tight cluster plus one far-away vector: the outlier must rank
     first by kNN distance and be flagged against the Tukey fence."""
@@ -1310,7 +1210,7 @@ def test_ood_planted_outlier_tops_ranking(spark, tmp_path):
     for i in range(40):  # identical cluster: knn distance 0
         rows.append((i, [1.0, 2.0, 3.0, 0.0, 0.0, 0.0, 0.0, 0.0], 0))
     rows.append((99, [50.0, -40.0, 10.0, 5.0, 0.0, 0.0, 0.0, 0.0], 1))
-    _write_embeddings(spark, rows, d)
+    planted.write(d, "embeddings", rows)
     out = registry.get("embedding_ood_knn_distance").fn(
         spark, d
     ).collect()
@@ -1370,7 +1270,7 @@ def test_residual_anomaly_flags_spike_not_weekends(spark, tmp_path):
                 (eid, f"{day} 10:00:00", eid % 9, "click", 1.0)
             )
             eid += 1
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = registry.get("events_seasonal_residual_anomaly").fn(
         spark, d
     ).collect()
@@ -1403,7 +1303,7 @@ def test_slo_burn_multiwindow_suppression(spark, tmp_path):
                 (eid, f"2024-01-05 {hour:02d}:30:00", eid % 7, et, 1.0)
             )
             eid += 1
-    _write_events(spark, rows, d)
+    planted.write(d, "events", rows)
     out = {
         r["hour"]: r
         for r in registry.get("events_slo_burn_rate")
@@ -1423,8 +1323,6 @@ def test_slo_burn_multiwindow_suppression(spark, tmp_path):
 
 
 # --- fourteenth-continuation batch ---------------------------------------------------
-
-
 def test_pvm_identity_and_hand_case(spark, tmp_path):
     """Hand case: 10 orders at avg 100c -> 20 at avg 150c gives
     volume/rate/joint = 1e6/5e5/5e5 millicents, remainder 0; the
@@ -1529,16 +1427,12 @@ def test_dup_rate_by_source_cross_vs_local(spark, tmp_path):
     d = str(tmp_path)
     t = " ".join(f"dup{i % 17}w{i % 5}" for i in range(70))
     clean = " ".join(f"clean{i}" for i in range(70))
-    _stage_docs(
-        spark,
-        [
+    planted.write(d, "documents", [
             (0, t, "en", "srcA"),
             (1, t, "en", "srcA"),
             (2, t, "en", "srcB"),
             (3, clean, "en", "srcC"),
-        ],
-        d,
-    )
+        ])
     out = {
         r["source"]: r
         for r in registry.get("corpus_dup_rate_by_source")

@@ -18,71 +18,10 @@ import datetime as dt
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-
-# --- planted-fixture builders ----------------------------------------------
-
-
-def _write_documents(tmp, rows):
-    """rows: list of (doc_id, text, lang, source). n_chars derived."""
-    t = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(t, str(tmp / "documents.parquet"))
-
-
-def _write_events(tmp, rows):
-    """rows: list of (event_id, ts_iso, user_id, event_type, value)."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array(["{}" for _ in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _daily_events(series_by_type, start="2024-01-01", user_of=None):
-    """series_by_type: {event_type: [day0_value, ...]}; None skips the
-    day. One event per (type, day)."""
-    rows = []
-    eid = 0
-    t0 = dt.date.fromisoformat(start)
-    for etype, series in series_by_type.items():
-        for d, v in enumerate(series):
-            if v is None:
-                continue
-            day = t0 + dt.timedelta(days=d)
-            uid = user_of(eid) if user_of else 1 + eid % 7
-            rows.append(
-                (eid, f"{day.isoformat()}T12:00:00", uid, etype, v)
-            )
-            eid += 1
-    return rows
-
-
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
+from tests import planted
 
 
 # --- retrieval / text statistics --------------------------------------------
-
-
 def test_bm25_formula_recomputed_from_scratch(spark, sf_dir):
     """Re-derive every (query, doc) BM25 score from the raw fixture
     corpus in sequential Python — tokenize, build tf/df/dl, pick the
@@ -128,7 +67,7 @@ def test_bm25_formula_recomputed_from_scratch(spark, sf_dir):
     expected: dict[int, list[tuple]] = {}
     for (qid, doc_id), cs in scores.items():
         expected.setdefault(qid, []).append((-sum(cs), doc_id, len(cs)))
-    rows = _run(spark, "text_bm25_topk", sf_dir)
+    rows = planted.run(spark, "text_bm25_topk", sf_dir)
     assert rows, "operator returned nothing"
     for qid, docs_scored in expected.items():
         docs_scored.sort()
@@ -151,7 +90,7 @@ def test_rrf_scores_are_valid_arm_sums(spark, sf_dir):
 
     terms = {1_000_000 // (R._RRF_K + r) for r in range(1, R._RRF_ARM_K + 1)}
     pair_sums = {a + b for a in terms for b in terms}
-    rows = _run(spark, "search_rrf_hybrid", sf_dir)
+    rows = planted.run(spark, "search_rrf_hybrid", sf_dir)
     assert rows
     by_q: dict[int, list] = {}
     for r in rows:
@@ -180,8 +119,8 @@ def test_rake_planted_phrase_wins(spark, tmp_path):
         fill = " ".join(filler)
         body = f"{fill} {phrase} {fill}" if i < 6 else f"{fill} solo {fill}"
         rows.append((i, body, "en", "src0"))
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "text_rake_keywords", tmp_path)
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "text_rake_keywords", tmp_path)
     assert out[0].phrase == phrase
     assert out[0].n_occurrences == 6
     got = {r.phrase: r for r in out}
@@ -208,8 +147,8 @@ def test_pmi_attracted_pair_outranks_diluted_pair(spark, tmp_path):
         rows.append((doc_id, "gamma x", "en", "src0"))
         rows.append((doc_id + 1, "delta y", "en", "src0"))
         doc_id += 2
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "text_pmi_collocations", tmp_path)
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "text_pmi_collocations", tmp_path)
     got = {(r.w1, r.w2): r.pmi_bits for r in out}
     ab = got.get(("alpha", "beta"))
     gd = got.get(("gamma", "delta"))
@@ -230,8 +169,8 @@ def test_oov_rate_planted_sources(spark, tmp_path):
     for i in range(10):
         rare = " ".join(f"r{i}x{j}" for j in range(20))
         rows.append((100 + i, " ".join(common) + " " + rare, "en", "srcB"))
-    _write_documents(tmp_path, rows)
-    out = {r.source: r for r in _run(spark, "text_vocab_oov_rate", tmp_path)}
+    planted.write(tmp_path, "documents", rows)
+    out = {r.source: r for r in planted.run(spark, "text_vocab_oov_rate", tmp_path)}
     assert out["srcA"].oov_permille == 0
     assert out["srcA"].n_docs_high_oov == 0
     assert out["srcB"].oov_permille == 500
@@ -244,8 +183,8 @@ def test_zipf_uniform_corpus_slope_zero(spark, tmp_path):
     rows = []
     for i in range(8):
         rows.append((i, " ".join(f"t{j}" for j in range(16)), "en", "src0"))
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "text_zipf_fit", tmp_path)[0]
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "text_zipf_fit", tmp_path)[0]
     assert out.n_terms == 16
     assert out.zipf_slope_milli == 0
     assert bool(out.fit_defined) is True
@@ -258,8 +197,8 @@ def test_zipf_decaying_corpus_slope_negative(spark, tmp_path):
     for k in range(8):
         text += [f"z{k}"] * (2 ** (8 - k))
     rows = [(0, " ".join(text), "en", "src0")]
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "text_zipf_fit", tmp_path)[0]
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "text_zipf_fit", tmp_path)[0]
     assert out.zipf_slope_milli < 0
 
 
@@ -273,8 +212,8 @@ def test_heaps_all_unique_beta_exactly_one(spark, tmp_path):
         words = " ".join(f"u{tok + j}" for j in range(8))
         tok += 8
         rows.append((i, words, "en", "src0"))
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "text_heaps_law_fit", tmp_path)[0]
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "text_heaps_law_fit", tmp_path)[0]
     assert out.vocab_size == out.total_tokens == 96
     assert out.heaps_beta_milli == 1000
     assert bool(out.fit_defined) is True
@@ -284,8 +223,8 @@ def test_heaps_closed_vocab_beta_zero(spark, tmp_path):
     """Every doc reuses the same 5 tokens => vocab flatlines at 5 =>
     log-vocab constant => beta exactly 0."""
     rows = [(i, "a b c d e", "en", "src0") for i in range(16)]
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "text_heaps_law_fit", tmp_path)[0]
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "text_heaps_law_fit", tmp_path)[0]
     assert out.vocab_size == 5
     assert out.heaps_beta_milli == 0
 
@@ -299,8 +238,8 @@ def test_burstiness_constant_vs_bursty(spark, tmp_path):
     for i in range(20):
         body = "steady " + ("burst " * 10 if i == 0 else "") + "pad"
         rows.append((i, body.strip(), "en", "src0"))
-    _write_documents(tmp_path, rows)
-    out = {r.tok: r for r in _run(spark, "text_term_burstiness", tmp_path)}
+    planted.write(tmp_path, "documents", rows)
+    out = {r.tok: r for r in planted.run(spark, "text_term_burstiness", tmp_path)}
     assert out["steady"].vmr_milli == 0
     assert bool(out["steady"].is_bursty) is False
     assert out["burst"].vmr_milli == (20 * 100 - 100) * 1000 // (10 * 19)
@@ -318,10 +257,10 @@ def test_quantile_normalize_equal_sized_sources_align_exactly(
         rows.append((i, "x" * (10 + i), "en", "srcA"))
     for i in range(16):
         rows.append((100 + i, "y" * (110 + i), "en", "srcB"))
-    _write_documents(tmp_path, rows)
+    planted.write(tmp_path, "documents", rows)
     out = {
         r.source: r
-        for r in _run(spark, "text_quantile_normalize_sources", tmp_path)
+        for r in planted.run(spark, "text_quantile_normalize_sources", tmp_path)
     }
     assert out["srcA"].raw_sum < out["srcB"].raw_sum
     assert out["srcA"].norm_sum == out["srcB"].norm_sum
@@ -330,8 +269,6 @@ def test_quantile_normalize_equal_sized_sources_align_exactly(
 
 
 # --- time-series diagnostics -------------------------------------------------
-
-
 def test_theil_sen_exact_on_linear_series_with_outliers(spark, tmp_path):
     """A perfectly linear daily series (slope 3 cents/day) with 2 of
     30 days corrupted: the median pairwise slope is still exactly
@@ -340,8 +277,8 @@ def test_theil_sen_exact_on_linear_series_with_outliers(spark, tmp_path):
     series = [10.00 + 0.03 * d for d in range(30)]
     series[5] = 500.0
     series[17] = 0.01
-    _write_events(tmp_path, _daily_events({"purchase": series}))
-    out = _run(spark, "events_theil_sen_trend", tmp_path)
+    planted.write(tmp_path, "events", planted.daily_events({"purchase": series}))
+    out = planted.run(spark, "events_theil_sen_trend", tmp_path)
     row = next(r for r in out if r.event_type == "purchase")
     assert row.n_pairs == 435
     assert row.median_slope_milli == 3000
@@ -352,10 +289,10 @@ def test_rolling_median_hand_computed(spark, tmp_path):
     literal sequential recomputation, including the 1..6-day ramp-up
     frames."""
     vals = [1.00, 2.00, 3.00, 4.00, 5.00, 6.00, 7.00, 100.00, 8.00, 9.00]
-    _write_events(tmp_path, _daily_events({"click": vals}))
+    planted.write(tmp_path, "events", planted.daily_events({"click": vals}))
     out = [
         r
-        for r in _run(spark, "timeseries_rolling_median_7d", tmp_path)
+        for r in planted.run(spark, "timeseries_rolling_median_7d", tmp_path)
         if r.event_type == "click"
     ]
     out.sort(key=lambda r: str(r.day))
@@ -374,10 +311,10 @@ def test_mad_anomaly_flags_spike_only(spark, tmp_path):
     clears it."""
     vals = [10.0, 10.2, 10.4, 10.2, 10.4, 10.2, 10.0, 1000.0, 10.2, 10.4,
             10.0, 10.2, 10.4, 10.0]
-    _write_events(tmp_path, _daily_events({"view": vals}))
+    planted.write(tmp_path, "events", planted.daily_events({"view": vals}))
     out = [
         r
-        for r in _run(spark, "events_anomaly_mad", tmp_path)
+        for r in planted.run(spark, "events_anomaly_mad", tmp_path)
         if r.event_type == "view"
     ]
     assert len(out) == 1
@@ -394,13 +331,10 @@ def test_croston_constant_demand_recovers_rate(spark, tmp_path):
     cents, interval EWMA exactly 4000 milli-days, and the rate is
     size/interval."""
     series = [24.0 if d % 4 == 0 else None for d in range(33)]
-    _write_events(
-        tmp_path,
-        _daily_events({"purchase": series}, user_of=lambda eid: 1),
-    )
+    planted.write(tmp_path, "events", planted.daily_events({"purchase": series}, user_of=lambda eid: 1))
     out = [
         r
-        for r in _run(spark, "timeseries_croston_forecast", tmp_path)
+        for r in planted.run(spark, "timeseries_croston_forecast", tmp_path)
         if r.user_id == 1
     ]
     assert len(out) == 1
@@ -416,10 +350,10 @@ def test_mase_naive_wins_on_flat_holdout(spark, tmp_path):
     (MASE 0); the seasonal-naive reaches back into the alternating
     region and must score worse."""
     vals = [10.0, 50.0] * 7 + [30.0] * 8
-    _write_events(tmp_path, _daily_events({"signup": vals}))
+    planted.write(tmp_path, "events", planted.daily_events({"signup": vals}))
     out = [
         r
-        for r in _run(spark, "forecast_mase_eval", tmp_path)
+        for r in planted.run(spark, "forecast_mase_eval", tmp_path)
         if r.event_type == "signup"
     ]
     assert len(out) == 1
@@ -432,10 +366,10 @@ def test_changepoint_locates_planted_shift(spark, tmp_path):
     binary segmentation must split 15/15 with the exact 8000-cent
     shift."""
     vals = [10.0] * 15 + [90.0] * 15
-    _write_events(tmp_path, _daily_events({"error": vals}))
+    planted.write(tmp_path, "events", planted.daily_events({"error": vals}))
     out = [
         r
-        for r in _run(spark, "events_changepoint_binary_seg", tmp_path)
+        for r in planted.run(spark, "events_changepoint_binary_seg", tmp_path)
         if r.event_type == "error"
     ]
     assert len(out) == 1
@@ -453,10 +387,10 @@ def test_seasonal_decompose_pure_weekly_cycle(spark, tmp_path):
     planted type."""
     dow_amp = [0.0, 10.0, 20.0, 30.0, 20.0, 10.0, 0.0]
     vals = [100.0 + dow_amp[d % 7] for d in range(70)]
-    _write_events(tmp_path, _daily_events({"click": vals}))
+    planted.write(tmp_path, "events", planted.daily_events({"click": vals}))
     out = [
         r
-        for r in _run(spark, "timeseries_seasonal_decompose", tmp_path)
+        for r in planted.run(spark, "timeseries_seasonal_decompose", tmp_path)
         if r.event_type == "click"
     ]
     assert out
@@ -475,11 +409,8 @@ def test_psi_identical_halves_zero_drift(spark, tmp_path):
     drifted = [float(5 + (d % 10)) for d in range(20)] + [
         float(500 + d) for d in range(20)
     ]
-    _write_events(
-        tmp_path,
-        _daily_events({"view": stable, "click": drifted}),
-    )
-    out = {r.event_type: r for r in _run(spark, "events_psi_drift", tmp_path)}
+    planted.write(tmp_path, "events", planted.daily_events({"view": stable, "click": drifted}))
+    out = {r.event_type: r for r in planted.run(spark, "events_psi_drift", tmp_path)}
     assert out["view"].psi_millibits == 0
     assert bool(out["view"].drift_flag) is False
     assert out["click"].psi_millibits > 0
@@ -487,8 +418,6 @@ def test_psi_identical_halves_zero_drift(spark, tmp_path):
 
 
 # --- causal / experimentation / eval ----------------------------------------
-
-
 def test_ab_test_null_and_planted_effect(spark, tmp_path):
     """Homogeneous behavior across buckets => z exactly 0, nothing
     significant. Conversion confined to one bucket (user_id % 2 is
@@ -498,8 +427,8 @@ def test_ab_test_null_and_planted_effect(spark, tmp_path):
     for u in range(40):
         rows.append((eid, "2024-01-05T10:00:00", u, "purchase", 10.0))
         eid += 1
-    _write_events(tmp_path, rows)
-    out = _run(spark, "events_ab_proportion_test", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    out = planted.run(spark, "events_ab_proportion_test", tmp_path)
     assert out
     for r in out:
         assert bool(r.significant) is False
@@ -510,8 +439,8 @@ def test_ab_test_null_and_planted_effect(spark, tmp_path):
         etype = "purchase" if u % 2 == 0 else "click"
         rows.append((eid, "2024-01-05T10:00:00", u, etype, 10.0))
         eid += 1
-    _write_events(tmp_path, rows)
-    out = _run(spark, "events_ab_proportion_test", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    out = planted.run(spark, "events_ab_proportion_test", tmp_path)
     by_metric = {r.metric: r for r in out}
     conv = [r for r in out if r.c_a + r.c_b == 20]
     assert conv and bool(conv[0].significant) is True, by_metric
@@ -526,8 +455,8 @@ def test_auc_perfect_separation(spark, tmp_path):
         rows.append((i, "e" * (200 + i), "en", "srcA"))
     for i in range(10):
         rows.append((100 + i, "x" * (10 + i), "xx", "srcA"))
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "eval_auc_mann_whitney", tmp_path)[0]
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "eval_auc_mann_whitney", tmp_path)[0]
     assert (out.n_pos, out.n_neg) == (10, 10)
     assert out.u_statistic == 100
     assert out.auc_permille == 1000
@@ -538,11 +467,8 @@ def test_diff_in_diff_zero_effect_on_homogeneous_values(spark, tmp_path):
     identical and both the ATT and the placebo are exactly 0
     regardless of which users the md5 coin assigns to treatment."""
     vals = [50.0] * 28
-    _write_events(
-        tmp_path,
-        _daily_events({"purchase": vals, "click": vals}),
-    )
-    out = _run(spark, "events_diff_in_diff", tmp_path)
+    planted.write(tmp_path, "events", planted.daily_events({"purchase": vals, "click": vals}))
+    out = planted.run(spark, "events_diff_in_diff", tmp_path)
     assert out
     for r in out:
         assert r.did_millicents == 0
@@ -575,7 +501,7 @@ def test_kaplan_meier_axioms(spark, tmp_path):
         }
     )
     pq.write_table(t, str(tmp_path / "orders.parquet"))
-    out = _run(spark, "customer_kaplan_meier_survival", tmp_path)
+    out = planted.run(spark, "customer_kaplan_meier_survival", tmp_path)
     assert out
     prev = 10**5
     for r in sorted(out, key=lambda r: r.horizon_days):
@@ -601,10 +527,10 @@ def test_vshape_planted_pattern(spark, tmp_path):
             (eid, (t0 + dt.timedelta(hours=i)).isoformat(), 2, "click", v)
         )
         eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = [
         r
-        for r in _run(spark, "events_pattern_vshape_match", tmp_path)
+        for r in planted.run(spark, "events_pattern_vshape_match", tmp_path)
         if r.event_type == "click"
     ]
     assert len(out) == 1
@@ -615,15 +541,13 @@ def test_vshape_planted_pattern(spark, tmp_path):
 
 
 # --- ML / eval ---------------------------------------------------------------
-
-
 def test_hashed_scorer_report_totals(spark, sf_dir):
     """The (source, kept) report must partition the corpus: per-source
     doc counts sum to the corpus size, and both verdicts appear with
     milli-grid margins."""
     import duckdb
 
-    rows = _run(spark, "ml_hashed_linear_scorer", sf_dir)
+    rows = planted.run(spark, "ml_hashed_linear_scorer", sf_dir)
     assert rows
     n_corpus = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{sf_dir}/documents.parquet')"
@@ -637,7 +561,7 @@ def test_calibration_ece_is_weighted_bin_gap(spark, sf_dir):
     n_pos*1000 div n_docs, the gap is SIGNED (acc - mean conf, so the
     diagram shows over- vs under-confidence), and the single ECE value
     is the doc-count-weighted truncating mean of the ABSOLUTE gaps."""
-    rows = _run(spark, "eval_calibration_curve_ece", sf_dir)
+    rows = planted.run(spark, "eval_calibration_curve_ece", sf_dir)
     assert rows
     n_total = sum(r.n_docs for r in rows)
     weighted = sum(abs(r.gap_permille) * r.n_docs for r in rows) // n_total
@@ -652,7 +576,7 @@ def test_ndcg_bounds_and_grid(spark, sf_dir):
     """nDCG@10 per query sits in (0, 1000] permille and the DCG is a
     positive micro-grid integer (the int8 arm always retrieves SOME
     of the exact arm's top-10 on the fixture)."""
-    rows = _run(spark, "eval_ndcg_ranking", sf_dir)
+    rows = planted.run(spark, "eval_ndcg_ranking", sf_dir)
     assert rows
     for r in rows:
         assert 0 <= r.ndcg_permille <= 1000
@@ -660,20 +584,11 @@ def test_ndcg_bounds_and_grid(spark, sf_dir):
 
 
 # --- sketches / operational analytics / privacy ------------------------------
-
-
 def _write_customers(tmp, rows):
     """rows: (c_custkey, c_nationkey, c_acctbal, c_mktsegment)."""
-    t = pa.table(
-        {
-            "c_custkey": pa.array([r[0] for r in rows], pa.int64()),
-            "c_name": pa.array([f"Customer#{r[0]}" for r in rows], pa.string()),
-            "c_nationkey": pa.array([r[1] for r in rows], pa.int32()),
-            "c_acctbal": pa.array([float(r[2]) for r in rows], pa.float64()),
-            "c_mktsegment": pa.array([r[3] for r in rows], pa.string()),
-        }
+    planted.write(
+        tmp, "customer", [(r[0], f"Customer#{r[0]}", *r[1:]) for r in rows]
     )
-    pq.write_table(t, str(tmp / "customer.parquet"))
 
 
 def test_k_anonymity_planted_classes(spark, tmp_path):
@@ -682,7 +597,7 @@ def test_k_anonymity_planted_classes(spark, tmp_path):
     rows = [(i, 7, 1500.00, "BUILDING") for i in range(5)]  # class of 5
     rows.append((99, 3, 9500.00, "MACHINERY"))  # singleton
     _write_customers(tmp_path, rows)
-    out = _run(spark, "privacy_k_anonymity_audit", tmp_path)
+    out = planted.run(spark, "privacy_k_anonymity_audit", tmp_path)
     got = {(r.nationkey, r.segment): r for r in out}
     five = got[(7, "BUILDING")]
     assert five.n_members == 5 and bool(five.k_anonymous) is True
@@ -698,7 +613,7 @@ def test_l_diversity_planted_classes(spark, tmp_path):
     segs = ["BUILDING", "MACHINERY", "HOUSEHOLD"] * 2
     rows += [(10 + i, 2, 1500.00, segs[i]) for i in range(6)]  # diverse
     _write_customers(tmp_path, rows)
-    out = {r.nationkey: r for r in _run(spark, "privacy_l_diversity_audit", tmp_path)}
+    out = {r.nationkey: r for r in planted.run(spark, "privacy_l_diversity_audit", tmp_path)}
     assert out[1].n_members == 6 and out[1].l_distinct == 1
     assert bool(out[1].l_diverse) is False
     assert out[2].l_distinct == 3 and bool(out[2].l_diverse) is True
@@ -714,7 +629,7 @@ def test_t_closeness_mirror_and_skew(spark, tmp_path):
     rows += [(10 + i, 2, 1500.00, "BUILDING" if i % 2 == 0 else "MACHINERY")
              for i in range(8)]
     _write_customers(tmp_path, rows)
-    out = _run(spark, "privacy_t_closeness_audit", tmp_path)
+    out = planted.run(spark, "privacy_t_closeness_audit", tmp_path)
     for r in out:
         assert r.tvd_permille == 0
         assert bool(r.t_close) is True
@@ -722,7 +637,7 @@ def test_t_closeness_mirror_and_skew(spark, tmp_path):
     rows = [(i, 1, 1500.00, "BUILDING") for i in range(9)]
     rows += [(20, 2, 1500.00, "MACHINERY")]  # rare segment, own class
     _write_customers(tmp_path, rows)
-    out = {r.nationkey: r for r in _run(spark, "privacy_t_closeness_audit", tmp_path)}
+    out = {r.nationkey: r for r in planted.run(spark, "privacy_t_closeness_audit", tmp_path)}
     # class 2 holds 100% MACHINERY vs global 10% -> TVD = 900 permille
     assert out[2].tvd_permille == 900
     assert bool(out[2].t_close) is False
@@ -733,7 +648,7 @@ def test_littles_law_identity_holds(spark, sf_dir):
     per-order duration sum exactly (identity_exact), and L = lambda*W
     holds on the milli grid up to truncation (cross-multiplied within
     one grid step)."""
-    out = _run(spark, "orders_littles_law_identity", sf_dir)
+    out = planted.run(spark, "orders_littles_law_identity", sf_dir)
     assert len(out) == 1
     r = out[0]
     assert bool(r.identity_exact) is True
@@ -750,7 +665,7 @@ def test_bin_packing_conserves_records_and_caps_fill(spark, sf_dir):
     """Every input file lands in exactly one bin (record conservation
     against a direct recount) and no bin exceeds its capacity
     (fill_permille <= 1000)."""
-    out = _run(spark, "storage_compaction_bin_packing", sf_dir)
+    out = planted.run(spark, "storage_compaction_bin_packing", sf_dir)
     assert out
     for r in out:
         assert 0 < r.fill_permille <= 1000
@@ -766,7 +681,7 @@ def test_abc_xyz_partitions_parts(spark, sf_dir):
     one cell (total n_parts equals the distinct parts with revenue)."""
     import duckdb
 
-    out = _run(spark, "lineitem_abc_xyz_classification", sf_dir)
+    out = planted.run(spark, "lineitem_abc_xyz_classification", sf_dir)
     assert out
     assert {r.abc for r in out} <= {"A", "B", "C"}
     assert {r.xyz for r in out} <= {"X", "Y", "Z"}
@@ -781,7 +696,7 @@ def test_scd2_enrich_conserves_purchases(spark, sf_dir):
     the per-state counts must sum to the corpus's purchase count."""
     import duckdb
 
-    out = _run(spark, "scd2_asof_enrich", sf_dir)
+    out = planted.run(spark, "scd2_asof_enrich", sf_dir)
     assert out
     n_purch = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{sf_dir}/events.parquet')"
@@ -792,7 +707,7 @@ def test_scd2_enrich_conserves_purchases(spark, sf_dir):
 
 def test_cascade_impact_bounded_by_population(spark, sf_dir):
     """Cascaded counts are a subset of each entity's population."""
-    out = _run(spark, "fk_cascade_impact_analysis", sf_dir)
+    out = planted.run(spark, "fk_cascade_impact_analysis", sf_dir)
     assert out
     for r in out:
         assert 0 <= r.n_cascaded <= r.n_total
@@ -803,7 +718,7 @@ def test_fd_discovery_internal_consistency(spark, sf_dir):
     to one RHS value: fd_holds must equal (violations == 0), and the
     violation count is exactly the surplus of distinct (lhs, rhs)
     pairs over distinct lhs values."""
-    out = _run(spark, "schema_fd_discovery", sf_dir)
+    out = planted.run(spark, "schema_fd_discovery", sf_dir)
     assert out
     for r in out:
         assert bool(r.fd_holds) == (r.violating_lhs_values == 0)
@@ -815,7 +730,7 @@ def test_ivf_nprobe_recall_monotone(spark, sf_dir):
     """The whole point of the nProbe sweep: scanning more inverted
     lists can only add candidates, so candidates scored and recall
     must be non-decreasing in nprobe, hitting the permille scale."""
-    out = sorted(_run(spark, "embedding_ann_ivf_nprobe_sweep", sf_dir),
+    out = sorted(planted.run(spark, "embedding_ann_ivf_nprobe_sweep", sf_dir),
                  key=lambda r: r.nprobe)
     assert len(out) >= 2
     for a, b in zip(out, out[1:]):
@@ -831,7 +746,7 @@ def test_calinski_harabasz_scatter_identity(spark, sf_dir):
     identity; on the shared milli grid the two sides may differ only
     by the per-cluster truncation (< k+1 grid steps). CH must be
     non-negative."""
-    out = _run(spark, "eval_clustering_calinski_harabasz", sf_dir)
+    out = planted.run(spark, "eval_clustering_calinski_harabasz", sf_dir)
     assert len(out) == 1
     r = out[0]
     assert r.ch_index >= 0
@@ -841,7 +756,7 @@ def test_calinski_harabasz_scatter_identity(spark, sf_dir):
 def test_alignment_audit_partitions_pairs(spark, sf_dir):
     """Aligned + misaligned must partition the near-dup pair set, and
     the permille is the exact truncating ratio."""
-    out = _run(spark, "quality_text_embedding_alignment", sf_dir)
+    out = planted.run(spark, "quality_text_embedding_alignment", sf_dir)
     assert len(out) == 1
     r = out[0]
     assert r.n_aligned + r.n_misaligned == r.n_near_dup_pairs
@@ -868,7 +783,7 @@ def test_pca_power_iteration_recovers_planted_axis(spark, tmp_path):
         }
     )
     pq.write_table(t, str(tmp_path / "embeddings.parquet"))
-    out = _run(spark, "embedding_pca_power_iteration", tmp_path)
+    out = planted.run(spark, "embedding_pca_power_iteration", tmp_path)
     assert out
     top = max(out, key=lambda r: abs(r.loading_permille))
     assert top.dim == 4  # the report's dims are 1-indexed
@@ -876,15 +791,13 @@ def test_pca_power_iteration_recovers_planted_axis(spark, tmp_path):
 
 
 # --- sketch algebra: estimator guarantees ------------------------------------
-
-
 def test_cm_join_size_never_underestimates(spark, sf_dir):
     """Count-min inner product is a non-negative-error estimator: the
     estimate must be >= the exact join size (the CMS overestimate
     guarantee carried through the AMS inner product), and the op's own
     never_underestimates flag must agree with the two numbers it sits
     beside."""
-    out = _run(spark, "sketch_cm_join_size_estimate", sf_dir)
+    out = planted.run(spark, "sketch_cm_join_size_estimate", sf_dir)
     assert len(out) == 1
     r = out[0]
     assert r.cm_estimate >= r.exact_size > 0
@@ -897,7 +810,7 @@ def test_kmv_intersection_bounds(spark, sf_dir):
     algebra: it is non-negative and the exact intersection of two
     scopes never exceeds either scope's distinct count. Symmetric
     pairs must agree exactly (the estimator is symmetric in A, B)."""
-    out = _run(spark, "sketch_kmv_intersection", sf_dir)
+    out = planted.run(spark, "sketch_kmv_intersection", sf_dir)
     assert out
     seen = {}
     for r in out:
@@ -915,7 +828,7 @@ def test_kmv_difference_algebra(spark, sf_dir):
     the exact reverse-difference plus twice nothing reconstructs the
     union minus intersection (checked against duckdb distinct counts
     would re-twin the oracle, so the axioms stay internal)."""
-    out = _run(spark, "sketch_kmv_difference", sf_dir)
+    out = planted.run(spark, "sketch_kmv_difference", sf_dir)
     assert out
     for r in out:
         assert r.est_difference >= 0
@@ -928,7 +841,7 @@ def test_histogram_quantile_error_band(spark, sf_dir):
     error of the exact percentile — the op's own p50_err_permille
     must stay under 250 permille and the estimates must bracket
     sanely (p99 >= p50)."""
-    out = _run(spark, "sketch_histogram_quantiles", sf_dir)
+    out = planted.run(spark, "sketch_histogram_quantiles", sf_dir)
     assert out
     for r in out:
         assert r.p99_est >= r.p50_est
@@ -980,7 +893,7 @@ def test_backlog_planted_intervals(spark, tmp_path):
     )
     pq.write_table(tl, str(tmp_path / "lineitem.parquet"))
     out = {str(r.day)[:10]: r.n_open
-           for r in _run(spark, "orders_open_backlog_daily", tmp_path)}
+           for r in planted.run(spark, "orders_open_backlog_daily", tmp_path)}
     # literal stabbing: order1 [1,6], order2 [3,4], order3 [5,8]
     import datetime as _dt
 
@@ -1021,14 +934,12 @@ def test_centroid_drift_identical_cohorts_aligned(spark, tmp_path):
         }
     )
     pq.write_table(t, str(tmp_path / "embeddings.parquet"))
-    out = _run(spark, "embedding_centroid_drift", tmp_path)
+    out = planted.run(spark, "embedding_centroid_drift", tmp_path)
     assert len(out) == 1
     assert bool(out[0].aligned) is True
 
 
 # --- batch 3: chains, survival, attribution, intervals, control charts -------
-
-
 def test_markov_stationary_alternating_chain(spark, tmp_path):
     """A user alternating A,B,A,B,... gives the doubly-stochastic
     2-state swap chain whose stationary distribution is exactly
@@ -1039,9 +950,9 @@ def test_markov_stationary_alternating_chain(spark, tmp_path):
     for i in range(20):
         etype = "click" if i % 2 == 0 else "view"
         rows.append((i, (t0 + dt.timedelta(hours=i)).isoformat(), 1, etype, 1.0))
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r.event_type: r.stationary_micro
-           for r in _run(spark, "events_markov_stationary", tmp_path)}
+           for r in planted.run(spark, "events_markov_stationary", tmp_path)}
     # mass lives on the operator's 1e12 grid (the column suffix is the
     # report family name, the grid is documented in the op)
     assert out == {"click": 500_000_000_000, "view": 500_000_000_000}
@@ -1069,7 +980,7 @@ def test_gap_survival_planted_uniform_gaps(spark, tmp_path):
         }
     )
     pq.write_table(t, str(tmp_path / "orders.parquet"))
-    out = {r.horizon_days: r for r in _run(spark, "customer_gap_survival_curve", tmp_path)}
+    out = {r.horizon_days: r for r in planted.run(spark, "customer_gap_survival_curve", tmp_path)}
     assert out[7].survival_permille == 1000
     assert out[14].survival_permille == 1000
     for h in (30, 60, 90):
@@ -1088,8 +999,8 @@ def test_time_decay_attribution_single_touch_and_unattributed(spark, tmp_path):
         # user 2: naked purchase
         (2, "2024-01-10T10:00:00", 2, "purchase", 30.0),
     ]
-    _write_events(tmp_path, rows)
-    out = {r.channel: r for r in _run(spark, "attribution_time_decay", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r.channel: r for r in planted.run(spark, "attribution_time_decay", tmp_path)}
     assert out["click"].credit_milli == 1000
     assert out["unattributed"].credit_milli == 1000
     assert sum(r.credit_milli for r in out.values()) == 2000
@@ -1109,8 +1020,8 @@ def test_entropy_planted_users(spark, tmp_path):
         etype = "click" if i % 2 == 0 else "view"
         rows.append((eid, (t0 + dt.timedelta(hours=i)).isoformat(), 2, etype, 1.0))
         eid += 1
-    _write_events(tmp_path, rows)
-    out = {r.user_id: r for r in _run(spark, "events_entropy_by_user", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r.user_id: r for r in planted.run(spark, "events_entropy_by_user", tmp_path)}
     assert out[1].entropy_millibits == 0
     assert out[1].n_types == 1
     assert out[2].entropy_millibits == 1000
@@ -1129,8 +1040,8 @@ def test_interval_overlap_planted_hour(spark, tmp_path):
         (4, "2024-01-05T14:30:00", 3, "click", 1.0),
         (5, "2024-01-05T15:00:00", 3, "click", 1.0),
     ]
-    _write_events(tmp_path, rows)
-    out = _run(spark, "interval_overlap_join", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    out = planted.run(spark, "interval_overlap_join", tmp_path)
     assert len(out) == 1
     row = out[0]
     assert str(row.day)[:10] == "2024-01-05"
@@ -1146,11 +1057,8 @@ def test_scene_cut_planted_frames(spark, tmp_path):
     frame_b = "z" * 16 + "a" * 16           # 4 high blocks: 4 sig bits
     cut_doc = frame_a * 3 + frame_b * 2
     flat_doc = frame_a * 5
-    _write_documents(
-        tmp_path,
-        [(1, cut_doc, "en", "src0"), (2, flat_doc, "en", "src0")],
-    )
-    out = {r.doc_id: r for r in _run(spark, "multimodal_scene_cut_detect", tmp_path)}
+    planted.write(tmp_path, "documents", [(1, cut_doc, "en", "src0"), (2, flat_doc, "en", "src0")])
+    out = {r.doc_id: r for r in planted.run(spark, "multimodal_scene_cut_detect", tmp_path)}
     assert out[1].n_frames == 5
     assert out[1].n_cuts == 1
     assert 3 <= out[1].first_cut_idx <= 4
@@ -1207,7 +1115,7 @@ def test_control_chart_planted_outlier(spark, tmp_path):
         }
     )
     pq.write_table(tl, str(tmp_path / "lineitem.parquet"))
-    out = {r.suppkey: r for r in _run(spark, "supplier_delay_control_chart", tmp_path)}
+    out = {r.suppkey: r for r in planted.run(spark, "supplier_delay_control_chart", tmp_path)}
     assert out[1].n_out_of_control == 1
     assert bool(out[1].is_stable) is False
     assert out[2].n_out_of_control == 0
@@ -1232,9 +1140,9 @@ def test_rfm_migration_planted_tiers(spark, tmp_path):
     for user, amt in spend_h2.items():
         rows.append((eid, "2024-01-15T10:00:00", user, "purchase", amt))
         eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {(r.tier_first_half, r.tier_second_half): r.n_users
-           for r in _run(spark, "rfm_migration_matrix", tmp_path)}
+           for r in planted.run(spark, "rfm_migration_matrix", tmp_path)}
     expected = {(1, 1): 1, (1, 2): 1, (2, 3): 1, (3, 4): 1, (4, 0): 1}
     assert out == expected
 
@@ -1243,20 +1151,18 @@ def test_betweenness_and_assortativity_axioms(spark, sf_dir):
     """Seeded betweenness scores are non-negative and rank-ordered;
     assortativity's signed r^2 stays on the [-1e6, 1e6] micro grid
     with the disassortative flag agreeing with its sign."""
-    bt = sorted(_run(spark, "graph_betweenness_seeded", sf_dir),
+    bt = sorted(planted.run(spark, "graph_betweenness_seeded", sf_dir),
                 key=lambda r: r.rank)
     assert bt
     scores = [r.betweenness_milli for r in bt]
     assert all(s >= 0 for s in scores)
     assert scores == sorted(scores, reverse=True)
-    ar = _run(spark, "graph_degree_assortativity", sf_dir)[0]
+    ar = planted.run(spark, "graph_degree_assortativity", sf_dir)[0]
     assert -1_000_000 <= ar.r_squared_signed_micro <= 1_000_000
     assert bool(ar.disassortative) == (ar.r_squared_signed_micro < 0)
 
 
 # --- batch 4: streaks, autocorrelation, smoothing, KMV saturation ------------
-
-
 def test_streak_islands_planted_histogram(spark, tmp_path):
     """Longest consecutive-active-day streak per user: planted users
     with longest streaks 3, 1, and 2 produce exactly one user in each
@@ -1271,9 +1177,9 @@ def test_streak_islands_planted_histogram(spark, tmp_path):
     for day in ("01", "02", "05"):
         rows.append((eid, f"2024-01-{day}T10:00:00", 3, "click", 1.0))
         eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r.streak_days: r.n_users
-           for r in _run(spark, "events_streak_islands", tmp_path)}
+           for r in planted.run(spark, "events_streak_islands", tmp_path)}
     assert out == {1: 1, 2: 1, 3: 1}
 
 
@@ -1293,9 +1199,9 @@ def test_autocorrelation_alternating_series(spark, tmp_path):
         if d % 2 == 0:
             rows.append((eid, f"{day}T11:00:00", 2, "click", 1.0)); eid += 1
         rows.append((eid, f"{day}T12:00:00", 3, "view", 1.0)); eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {(r.event_type, r.lag): r.acf_permille
-           for r in _run(spark, "events_autocorrelation_lags", tmp_path)}
+           for r in planted.run(spark, "events_autocorrelation_lags", tmp_path)}
     assert out[("click", 1)] <= -900
     assert out[("click", 2)] >= 900
     for lag in (1, 2, 3):
@@ -1314,9 +1220,9 @@ def test_ewma_constant_series_is_identity(spark, tmp_path):
 
     depth, wtot = TS._EWMA_DEPTH, TS._EWMA_WTOT
     vals = [25.0] * 30
-    _write_events(tmp_path, _daily_events({"view": vals}))
+    planted.write(tmp_path, "events", planted.daily_events({"view": vals}))
     out = sorted(
-        (r for r in _run(spark, "timeseries_ewma_halflife", tmp_path)
+        (r for r in planted.run(spark, "timeseries_ewma_halflife", tmp_path)
          if r.event_type == "view"),
         key=lambda r: str(r.day),
     )
@@ -1333,8 +1239,8 @@ def test_holt_constant_series_zero_error(spark, tmp_path):
     the constant and trend = 0, so the one-step forecast is exact on
     every day: abs_err must be 0 everywhere."""
     vals = [40.0] * 30
-    _write_events(tmp_path, _daily_events({"signup": vals}))
-    out = [r for r in _run(spark, "timeseries_holt_forecast", tmp_path)
+    planted.write(tmp_path, "events", planted.daily_events({"signup": vals}))
+    out = [r for r in planted.run(spark, "timeseries_holt_forecast", tmp_path)
            if r.event_type == "signup"]
     assert out
     for r in out:
@@ -1347,7 +1253,7 @@ def test_kmv_saturation_is_exact(spark, sf_dir):
     values holds EVERY hash, so the estimate must be exactly the true
     distinct count (the fixture's scopes are all under k=64): the
     estimator's saturation regime, where err_permille is exactly 0."""
-    out = _run(spark, "sketch_kmv_distinct", sf_dir)
+    out = planted.run(spark, "sketch_kmv_distinct", sf_dir)
     assert out
     for r in out:
         if r.exact_distinct <= r.k_used:
@@ -1359,7 +1265,7 @@ def test_skew_profile_invariants(spark, sf_dir):
     """Frequency-profile algebra: per scope, max >= p99 >= p50 >= 1,
     the top-10 share is a permille in (0, 1000], and keys never exceed
     rows."""
-    out = _run(spark, "data_skew_profile", sf_dir)
+    out = planted.run(spark, "data_skew_profile", sf_dir)
     assert out
     for r in out:
         assert r.max_freq >= r.p99_freq >= r.p50_freq >= 1
@@ -1377,8 +1283,8 @@ def test_mixture_sample_is_valid_subset(spark, tmp_path):
         rows.append((i, f"alpha beta doc {i}", "en", "src0"))
     for i in range(40):
         rows.append((100 + i, f"gamma delta doc {i}", "xx", "src1"))
-    _write_documents(tmp_path, rows)
-    out = _run(spark, "corpus_mixture_sample", tmp_path)
+    planted.write(tmp_path, "documents", rows)
+    out = planted.run(spark, "corpus_mixture_sample", tmp_path)
     assert out
     ids = [r.doc_id for r in out]
     assert len(ids) == len(set(ids))

@@ -20,89 +20,7 @@ from __future__ import annotations
 import datetime as dt
 from fractions import Fraction
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-# --- planted-fixture builders ----------------------------------------------
-
-
-def _write_events(tmp, rows):
-    """rows: list of (event_id, ts_iso, user_id, event_type, value[, props])."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array(
-                [r[5] if len(r) > 5 else "{}" for r in rows], pa.string()
-            ),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _write_orders(tmp, rows):
-    """rows: list of (o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-    o_orderdate_iso, o_orderpriority)."""
-    t = pa.table(
-        {
-            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
-            "o_totalprice": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "o_orderdate": pa.array(
-                [dt.datetime.fromisoformat(r[4]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "o_orderpriority": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "orders.parquet"))
-
-
-def _write_customer(tmp, rows):
-    """rows: list of (c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment)."""
-    t = pa.table(
-        {
-            "c_custkey": pa.array([r[0] for r in rows], pa.int64()),
-            "c_name": pa.array([r[1] for r in rows], pa.string()),
-            "c_nationkey": pa.array([r[2] for r in rows], pa.int32()),
-            "c_acctbal": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "c_mktsegment": pa.array([r[4] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "customer.parquet"))
-
-
-def _write_lineitem(tmp, rows):
-    """rows: list of (l_orderkey, l_partkey, l_suppkey, l_linenumber,
-    l_quantity, l_extendedprice, l_shipdate_iso)."""
-    t = pa.table(
-        {
-            "l_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "l_partkey": pa.array([r[1] for r in rows], pa.int64()),
-            "l_suppkey": pa.array([r[2] for r in rows], pa.int64()),
-            "l_linenumber": pa.array([r[3] for r in rows], pa.int32()),
-            "l_quantity": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "l_extendedprice": pa.array(
-                [float(r[5]) for r in rows], pa.float64()
-            ),
-            "l_discount": pa.array([0.0] * len(rows), pa.float64()),
-            "l_tax": pa.array([0.0] * len(rows), pa.float64()),
-            "l_returnflag": pa.array(["N"] * len(rows), pa.string()),
-            "l_linestatus": pa.array(["O"] * len(rows), pa.string()),
-            "l_shipdate": pa.array(
-                [dt.datetime.fromisoformat(r[6]) for r in rows],
-                pa.timestamp("us"),
-            ),
-        }
-    )
-    pq.write_table(t, str(tmp / "lineitem.parquet"))
+from tests import planted
 
 
 def _daily_count_events(series_by_type, start="2024-01-01"):
@@ -131,16 +49,7 @@ def _daily_count_events(series_by_type, start="2024-01-01"):
     return rows
 
 
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
-
-
 # --- CUSUM: the closed form vs the published recursion -----------------------
-
-
 def test_cusum_matches_sequential_recursion(spark, tmp_path):
     """The shipped plan computes CUSUM as prefix - min(0, running-min
     of prefixes). Run the PUBLISHED sequential recursion
@@ -149,8 +58,8 @@ def test_cusum_matches_sequential_recursion(spark, tmp_path):
     rests on, checked by the original algorithm."""
     # level shift: 14 days at 3/day then 10 days at 9/day
     counts = [3] * 14 + [9] * 10
-    _write_events(tmp_path, _daily_count_events({"view": counts}))
-    rows = {r["day"]: r for r in _run(spark, "events_cusum_shift_detect", tmp_path)}
+    planted.write(tmp_path, "events", _daily_count_events({"view": counts}))
+    rows = {r["day"]: r for r in planted.run(spark, "events_cusum_shift_detect", tmp_path)}
 
     nd, tot = len(counts), sum(counts)
     s = 0
@@ -169,8 +78,6 @@ def test_cusum_matches_sequential_recursion(spark, tmp_path):
 
 
 # --- two-sample KS: sequential merged-CDF recomputation ----------------------
-
-
 def _ks_sequential(purchase_vals, view_vals):
     """Textbook two-sample KS on integer-cent values: D as the max
     |n2*cum1 - n1*cum2| over the merged support."""
@@ -194,8 +101,8 @@ def test_ks_identical_vs_disjoint_samples(spark, tmp_path):
     for v in ident:
         rows.append((eid, "2024-01-01T11:00:00", 2, "view", v / 100.0))
         eid += 1
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "events_ks_distribution_shift", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "events_ks_distribution_shift", tmp_path)
     n1, n2, d = _ks_sequential(ident, ident)
     assert (r["n1"], r["n2"], r["d_scaled"]) == (n1, n2, d) and d == 0
     assert r["d_micro"] == 0 and not r["reject_5pct"]
@@ -212,8 +119,8 @@ def test_ks_shifted_samples_sequential_recomputation(spark, tmp_path):
     for v in view:
         rows.append((eid, "2024-01-01T11:00:00", 2, "view", v / 100.0))
         eid += 1
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "events_ks_distribution_shift", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "events_ks_distribution_shift", tmp_path)
     n1, n2, d = _ks_sequential(purchase, view)
     assert (r["n1"], r["n2"], r["d_scaled"]) == (n1, n2, d)
     assert d == n1 * n2  # fully separated -> D = 1
@@ -224,25 +131,18 @@ def test_ks_shifted_samples_sequential_recomputation(spark, tmp_path):
 
 
 # --- weighted median: cumulative-distribution definition ---------------------
-
-
 def test_weighted_median_dominant_weight(spark, tmp_path):
     """A customer holding >half the segment revenue IS the weighted
     median regardless of every other balance — the defining property
     interpolated quantiles would violate."""
-    _write_customer(
-        tmp_path,
-        [
+    planted.write(tmp_path, "customer", [
             (1, "a", 0, 10.00, "SEG"),
             (2, "b", 0, 999.00, "SEG"),  # dominant weight, highest balance
             (3, "c", 0, 5.00, "SEG"),
             (4, "d", 0, 70.00, "OTHER"),
             (5, "e", 0, 30.00, "OTHER"),
-        ],
-    )
-    _write_orders(
-        tmp_path,
-        [
+        ])
+    planted.write(tmp_path, "orders", [
             (10, 1, "F", 100.00, "2024-01-01T00:00:00", "1-URGENT"),
             (11, 2, "F", 600.00, "2024-01-02T00:00:00", "1-URGENT"),
             (12, 3, "F", 100.00, "2024-01-03T00:00:00", "1-URGENT"),
@@ -250,10 +150,9 @@ def test_weighted_median_dominant_weight(spark, tmp_path):
             # reaches half, in ascending (bal, custkey) order = 30.00
             (13, 4, "F", 50.00, "2024-01-04T00:00:00", "1-URGENT"),
             (14, 5, "F", 50.00, "2024-01-05T00:00:00", "1-URGENT"),
-        ],
-    )
+        ])
     rows = {r["c_mktsegment"]: r for r in
-            _run(spark, "customer_weighted_median_balance", tmp_path)}
+            planted.run(spark, "customer_weighted_median_balance", tmp_path)}
     # SEG ascending balances: c(5.00, w=10000), a(10.00, w=10000),
     # b(999.00, w=60000); tot=80000; cum 10000, 20000, 80000 -> first
     # 2*cum >= tot is b
@@ -264,8 +163,6 @@ def test_weighted_median_dominant_weight(spark, tmp_path):
 
 
 # --- winsorized stats: sequential clamp recomputation ------------------------
-
-
 def test_winsorized_stats_clamps_outliers(spark, tmp_path):
     """Sequential recomputation of the p5/p95 interpolated quantiles
     and the clamped sum; the two planted outliers must move the raw
@@ -273,8 +170,8 @@ def test_winsorized_stats_clamps_outliers(spark, tmp_path):
     vals = [float(v) for v in range(1, 20)] + [10_000.0]  # 20 values
     rows = [(i, "2024-01-01T10:00:00", 1 + i % 3, "view", v)
             for i, v in enumerate(vals)]
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "agg_winsorized_stats", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "agg_winsorized_stats", tmp_path)
 
     def q_interp(sorted_vals, p):
         # linear interpolation, the percentile_cont / quantile_cont rule
@@ -295,8 +192,6 @@ def test_winsorized_stats_clamps_outliers(spark, tmp_path):
 
 
 # --- least-squares trend slope: exact rational vs Fraction --------------------
-
-
 def test_trend_slope_exact_rational(spark, tmp_path):
     """Plant a noisy series and recompute the LSQ slope as a Fraction;
     the op's (num, den) pair must equal the exact rational and the
@@ -308,8 +203,8 @@ def test_trend_slope_exact_rational(spark, tmp_path):
     ys = [1000 - 7 * x + resid[x] for x in range(10)]
     rows = [(x, f"2024-01-{x + 1:02d}T12:00:00", 1, "purchase", ys[x] / 100.0)
             for x in range(10)]
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "events_trend_slope_by_type", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "events_trend_slope_by_type", tmp_path)
     n = len(ys)
     sx, sy = sum(range(n)), sum(ys)
     sxy = sum(x * y for x, y in enumerate(ys))
@@ -324,8 +219,6 @@ def test_trend_slope_exact_rational(spark, tmp_path):
 
 
 # --- Benford audit: integer chi-square recomputation --------------------------
-
-
 def test_benford_chi_square_recomputation(spark, tmp_path):
     from dynamodb_stream_processor_2_0_spark.plans.queries_advanced import (
         _BENFORD_MICRO,
@@ -333,13 +226,10 @@ def test_benford_chi_square_recomputation(spark, tmp_path):
 
     # first digits: 1 x12, 2 x5, 9 x3 (all other digits absent)
     prices = [100.0] * 12 + [25.50] * 5 + [9000.0] * 3
-    _write_orders(
-        tmp_path,
-        [(i, 1 + i, "F", p, "2024-01-01T00:00:00", "1-URGENT")
-         for i, p in enumerate(prices)],
-    )
+    planted.write(tmp_path, "orders", [(i, 1 + i, "F", p, "2024-01-01T00:00:00", "1-URGENT")
+         for i, p in enumerate(prices)])
     rows = {r["first_digit"]: r for r in
-            _run(spark, "orders_benford_digit_audit", tmp_path)}
+            planted.run(spark, "orders_benford_digit_audit", tmp_path)}
     obs = {1: 12, 2: 5, 9: 3}
     n = 20
     assert set(rows) == set(range(1, 10))  # absent digits still audited
@@ -354,8 +244,6 @@ def test_benford_chi_square_recomputation(spark, tmp_path):
 
 
 # --- bot regularity: CV^2 of planted gap patterns ----------------------------
-
-
 def test_bot_regularity_constant_vs_bursty_gaps(spark, tmp_path):
     rows = []
     eid = 0
@@ -379,9 +267,9 @@ def test_bot_regularity_constant_vs_bursty_gaps(spark, tmp_path):
         rows.append((eid, (t0 + dt.timedelta(seconds=60 * k)).isoformat(),
                      3, "view", 1.0))
         eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r["user_id"]: r for r in
-           _run(spark, "events_bot_regularity_score", tmp_path)}
+           planted.run(spark, "events_bot_regularity_score", tmp_path)}
     assert set(out) == {1, 2}
 
     def cv2_milli(gaps):
@@ -396,8 +284,6 @@ def test_bot_regularity_constant_vs_bursty_gaps(spark, tmp_path):
 
 
 # --- error spike: cross-multiplied rate compare ------------------------------
-
-
 def test_error_spike_planted_regimes(spark, tmp_path):
     # 7 days at 100 total / 5 errors (5%), then a 20% day, then a 5% day
     totals = [100] * 7 + [100, 100]
@@ -406,9 +292,9 @@ def test_error_spike_planted_regimes(spark, tmp_path):
         "error": errors,
         "view": [t - e for t, e in zip(totals, errors)],
     }
-    _write_events(tmp_path, _daily_count_events(series))
+    planted.write(tmp_path, "events", _daily_count_events(series))
     rows = {r["day"]: r for r in
-            _run(spark, "events_error_spike_detection", tmp_path)}
+            planted.run(spark, "events_error_spike_detection", tmp_path)}
     t0 = dt.date.fromisoformat("2024-01-01")
     for d in range(9):
         day = (t0 + dt.timedelta(days=d)).isoformat()
@@ -425,8 +311,6 @@ def test_error_spike_planted_regimes(spark, tmp_path):
 
 
 # --- DAU/WAU stickiness: brute-force window recomputation ---------------------
-
-
 def test_dau_wau_stickiness_planted(spark, tmp_path):
     # users per day (day -> set of user ids); includes a gap day (absent)
     plan = {
@@ -444,9 +328,9 @@ def test_dau_wau_stickiness_planted(spark, tmp_path):
             day = t0 + dt.timedelta(days=d)
             rows.append((eid, f"{day.isoformat()}T09:00:00", u, "view", 1.0))
             eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r["day"]: r for r in
-           _run(spark, "events_dau_wau_stickiness", tmp_path)}
+           planted.run(spark, "events_dau_wau_stickiness", tmp_path)}
     assert len(out) == len(plan)  # gap days produce no row
     for d, users in plan.items():
         day = (t0 + dt.timedelta(days=d)).isoformat()
@@ -461,8 +345,6 @@ def test_dau_wau_stickiness_planted(spark, tmp_path):
 
 
 # --- rolling 7d active users: exact arm vs brute force ------------------------
-
-
 def test_rolling_7d_active_users_exact_arm(spark, tmp_path):
     plan = {0: {1, 2}, 1: {2, 3}, 3: {4}, 8: {1}, 9: {5, 6, 7}}
     rows = []
@@ -473,8 +355,8 @@ def test_rolling_7d_active_users_exact_arm(spark, tmp_path):
             day = t0 + dt.timedelta(days=d)
             rows.append((eid, f"{day.isoformat()}T09:00:00", u, "view", 1.0))
             eid += 1
-    _write_events(tmp_path, rows)
-    out = {r["day"]: r for r in _run(spark, "rolling_7d_active_users", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["day"]: r for r in planted.run(spark, "rolling_7d_active_users", tmp_path)}
     for d, _ in plan.items():
         day = (t0 + dt.timedelta(days=d)).isoformat()
         in_win = [d2 for d2 in plan if d - 7 < d2 <= d]
@@ -485,8 +367,6 @@ def test_rolling_7d_active_users_exact_arm(spark, tmp_path):
 
 
 # --- seasonality index ---------------------------------------------------------
-
-
 def test_seasonality_index_peak_month(spark, tmp_path):
     # 3 months: feb = 3x the jan/mar revenue (the 2x case sits EXACTLY
     # on the >1.5x boundary: 2000*3*2 == 4000*3 -> not a peak, which
@@ -496,9 +376,9 @@ def test_seasonality_index_peak_month(spark, tmp_path):
         (2, 2, "F", 30.00, "2024-02-10T00:00:00", "1-URGENT"),
         (3, 3, "F", 10.00, "2024-03-10T00:00:00", "1-URGENT"),
     ]
-    _write_orders(tmp_path, orders)
+    planted.write(tmp_path, "orders", orders)
     rows = {r["month"]: r for r in
-            _run(spark, "orders_seasonality_index", tmp_path)}
+            planted.run(spark, "orders_seasonality_index", tmp_path)}
     tot, nm = 5000, 3
     for mon, cents in [(1, 1000), (2, 3000), (3, 1000)]:
         assert rows[mon]["cents"] == cents
@@ -508,8 +388,6 @@ def test_seasonality_index_peak_month(spark, tmp_path):
 
 
 # --- FIFO allocation: the sequential pop-the-queue original -------------------
-
-
 def _fifo_sequential(lots):
     """lots: [(qty, cents)] in ship order. The textbook loop the
     shipped plan closed-forms: consume against demand = total//2."""
@@ -536,9 +414,9 @@ def test_fifo_allocation_sequential_recomputation(spark, tmp_path):
         (102, 1, 1, 1, 4.0, 40.00, "2024-01-03T00:00:00"),
         (103, 2, 1, 1, 7.0, 77.77, "2024-01-01T00:00:00"),
     ]
-    _write_lineitem(tmp_path, li)
+    planted.write(tmp_path, "lineitem", li, planted.LINEITEM_COLS)
     rows = {r["l_partkey"]: r for r in
-            _run(spark, "lineitem_fifo_allocation", tmp_path)}
+            planted.run(spark, "lineitem_fifo_allocation", tmp_path)}
     for part, lots in {
         1: [(5, 5000), (3, 6000), (4, 4000)],
         2: [(7, 7777)],
@@ -556,33 +434,23 @@ def test_fifo_allocation_sequential_recomputation(spark, tmp_path):
 
 
 # --- Gini: boundary distributions ---------------------------------------------
-
-
 def test_gini_equal_and_concentrated(spark, tmp_path):
     # equal revenues -> G = 0 exactly
-    _write_orders(
-        tmp_path,
-        [(i, i, "F", 100.00, "2024-01-01T00:00:00", "1-URGENT")
-         for i in range(1, 6)],
-    )
-    (r,) = _run(spark, "customer_revenue_gini", tmp_path)
+    planted.write(tmp_path, "orders", [(i, i, "F", 100.00, "2024-01-01T00:00:00", "1-URGENT")
+         for i in range(1, 6)])
+    (r,) = planted.run(spark, "customer_revenue_gini", tmp_path)
     assert (r["n_customers"], r["total_cents"]) == (5, 50000)
     assert r["gini_x1e8"] == 0
 
     # one customer owns everything among n=5 -> G = (n-1)/n = 0.8
-    _write_orders(
-        tmp_path,
-        [(i, i, "F", 0.00, "2024-01-01T00:00:00", "1-URGENT")
+    planted.write(tmp_path, "orders", [(i, i, "F", 0.00, "2024-01-01T00:00:00", "1-URGENT")
          for i in range(1, 5)]
-        + [(5, 5, "F", 100.00, "2024-01-01T00:00:00", "1-URGENT")],
-    )
-    (r,) = _run(spark, "customer_revenue_gini", tmp_path)
+        + [(5, 5, "F", 100.00, "2024-01-01T00:00:00", "1-URGENT")])
+    (r,) = planted.run(spark, "customer_revenue_gini", tmp_path)
     assert r["gini_x1e8"] == 80_000_000
 
 
 # --- HHI: planted supplier shares ----------------------------------------------
-
-
 def test_hhi_planted_shares(spark, tmp_path):
     li = [
         # part 1: 50/50 across two suppliers -> HHI = 0.5
@@ -595,8 +463,8 @@ def test_hhi_planted_shares(spark, tmp_path):
         # part 3: single supplier -> excluded by n_suppliers >= 2
         (6, 3, 10, 1, 9.0, 0.0, "2024-01-01T00:00:00"),
     ]
-    _write_lineitem(tmp_path, li)
-    rows = {r["l_partkey"]: r for r in _run(spark, "part_sourcing_hhi", tmp_path)}
+    planted.write(tmp_path, "lineitem", li, planted.LINEITEM_COLS)
+    rows = {r["l_partkey"]: r for r in planted.run(spark, "part_sourcing_hhi", tmp_path)}
     assert set(rows) == {1, 2}
     assert rows[1]["hhi_x1e8"] == 50_000_000
     assert rows[1]["n_suppliers"] == 2
@@ -605,17 +473,15 @@ def test_hhi_planted_shares(spark, tmp_path):
 
 
 # --- Pareto 80/20: planted concentration ---------------------------------------
-
-
 def test_supplier_pareto_cumulative_shares(spark, tmp_path):
     li = [
         (1, 1, 1, 1, 1.0, 50.00, "2024-01-01T00:00:00"),
         (2, 1, 2, 1, 1.0, 30.00, "2024-01-01T00:00:00"),
         (3, 1, 3, 1, 1.0, 20.00, "2024-01-01T00:00:00"),
     ]
-    _write_lineitem(tmp_path, li)
+    planted.write(tmp_path, "lineitem", li, planted.LINEITEM_COLS)
     rows = {r["l_suppkey"]: r for r in
-            _run(spark, "supplier_pareto_analysis", tmp_path)}
+            planted.run(spark, "supplier_pareto_analysis", tmp_path)}
     # descending: s1 cum 5000, s2 cum 8000, s3 cum 10000; total 10000
     assert rows[1]["cum_cents"] == 5000 and rows[1]["in_top80"]
     assert rows[2]["cum_cents"] == 8000 and rows[2]["in_top80"]
@@ -624,8 +490,6 @@ def test_supplier_pareto_cumulative_shares(spark, tmp_path):
 
 
 # --- basket lift: independence normalization -----------------------------------
-
-
 def test_market_basket_lift_planted(spark, tmp_path):
     # 6 baskets; parts 1,2 co-occur in 3; part 1 in 5, part 2 in 3.
     # pair (1,3) co-occurs twice -> filtered by support >= 3.
@@ -643,8 +507,8 @@ def test_market_basket_lift_planted(spark, tmp_path):
         for p in parts:
             lk += 1
             li.append((ok, p, 1, lk, 1.0, 1.00, "2024-01-01T00:00:00"))
-    _write_lineitem(tmp_path, li)
-    out = _run(spark, "market_basket_lift", tmp_path)
+    planted.write(tmp_path, "lineitem", li, planted.LINEITEM_COLS)
+    out = planted.run(spark, "market_basket_lift", tmp_path)
     assert len(out) == 1
     r = out[0]
     assert (r["part_a"], r["part_b"], r["support"]) == (1, 2, 3)
@@ -654,8 +518,6 @@ def test_market_basket_lift_planted(spark, tmp_path):
 
 
 # --- skyline: O(n^2) dominance oracle -------------------------------------------
-
-
 def test_pareto_skyline_planted_dominance(spark, tmp_path):
     """Sequential quadratic dominance test as the third implementation:
     a point survives iff no other point has (earlier day, >= price) or
@@ -671,13 +533,10 @@ def test_pareto_skyline_planted_dominance(spark, tmp_path):
         (6, 3, 70.00),   # survives
     ]
     base = dt.date.fromisoformat("1992-01-01")
-    _write_orders(
-        tmp_path,
-        [(k, k, "F", p,
+    planted.write(tmp_path, "orders", [(k, k, "F", p,
           f"{(base + dt.timedelta(days=x)).isoformat()}T00:00:00", "1-URGENT")
-         for k, x, p in pts],
-    )
-    out = _run(spark, "orders_pareto_skyline", tmp_path)
+         for k, x, p in pts])
+    out = planted.run(spark, "orders_pareto_skyline", tmp_path)
 
     # sequential recomputation
     cents = [(k, x, round(p * 100)) for k, x, p in pts]
@@ -697,18 +556,13 @@ def test_pareto_skyline_planted_dominance(spark, tmp_path):
 
 
 # --- relational division: coverage boundary --------------------------------------
-
-
 def test_relational_division_all_quarters(spark, tmp_path):
-    _write_customer(
-        tmp_path,
-        [
+    planted.write(tmp_path, "customer", [
             (1, "full", 0, 0.0, "SEG_A"),
             (2, "missing_q3", 0, 0.0, "SEG_A"),
             (3, "full_dup_orders", 0, 0.0, "SEG_B"),
             (4, "outside_window", 0, 0.0, "SEG_B"),
-        ],
-    )
+        ])
     orders = []
     ok = 0
     # customer 1: one order in each quarter of 1995
@@ -727,9 +581,9 @@ def test_relational_division_all_quarters(spark, tmp_path):
     for m in (2, 5, 8, 11):
         ok += 1
         orders.append((ok, 4, "F", 10.0, f"1994-{m:02d}-15T00:00:00", "X"))
-    _write_orders(tmp_path, orders)
+    planted.write(tmp_path, "orders", orders)
     rows = {r["c_mktsegment"]: r for r in
-            _run(spark, "relational_division_all_quarters", tmp_path)}
+            planted.run(spark, "relational_division_all_quarters", tmp_path)}
     assert rows["SEG_A"]["n_customers"] == 1
     assert rows["SEG_A"]["min_custkey"] == rows["SEG_A"]["max_custkey"] == 1
     assert rows["SEG_B"]["n_customers"] == 1
@@ -737,8 +591,6 @@ def test_relational_division_all_quarters(spark, tmp_path):
 
 
 # --- replay-pair forensics --------------------------------------------------------
-
-
 def test_replay_pair_window_boundary(spark, tmp_path):
     t0 = dt.datetime.fromisoformat("2024-01-01T00:00:00")
     rows = [
@@ -752,8 +604,8 @@ def test_replay_pair_window_boundary(spark, tmp_path):
         # different value -> no pair
         (5, t0.isoformat(), 7, "purchase", 12.35),
     ]
-    _write_events(tmp_path, rows)
-    out = _run(spark, "events_replay_pair_detect", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    out = planted.run(spark, "events_replay_pair_detect", tmp_path)
     pairs = {(r["event_id_a"], r["event_id_b"]): r["seconds_apart"] for r in out}
     # (1,2) 3600s; (2,3) 7 days exactly; (1,3) is 7d+1h -> outside
     assert pairs == {(1, 2): 3600, (2, 3): 604800}
@@ -761,8 +613,6 @@ def test_replay_pair_window_boundary(spark, tmp_path):
 
 
 # --- moment stats: exact correlation ----------------------------------------------
-
-
 def test_moment_stats_perfect_correlation(spark, tmp_path):
     import json as _json
 
@@ -773,8 +623,8 @@ def test_moment_stats_perfect_correlation(spark, tmp_path):
          _json.dumps({"k": int(2 * round(x * 100))}))
         for i, x in enumerate(xs)
     ]
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "agg_moment_stats", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "agg_moment_stats", tmp_path)
     n = len(xs)
     cents = [round(x * 100) for x in xs]
     s1, s2 = sum(cents), sum(c * c for c in cents)

@@ -13,61 +13,10 @@ all re-derived from scratch.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
-import struct
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-# --- fixtures -------------------------------------------------------------------
-
-
-def _f32(x: float) -> float:
-    return struct.unpack("f", struct.pack("f", x))[0]
-
-
-def _mvec(seed: str, dim: int = 64):
-    """Deterministic pseudo-random vector on the exact 1/128 grid
-    (f32- and double-exact, so the third impl sees the stored values)."""
-    h = (hashlib.md5(seed.encode()).digest() * ((dim // 16) + 1))[:dim]
-    return [_f32((b - 127.5) / 128.0) for b in h]
-
-
-def _write_embeddings(tmp, rows):
-    t = pa.table(
-        {
-            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
-            "label": pa.array([r[2] for r in rows], pa.int32()),
-        }
-    )
-    pq.write_table(t, str(tmp / "embeddings.parquet"))
-
-
-def _write_documents(tmp, rows):
-    t = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(t, str(tmp / "documents.parquet"))
-
-
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
+from tests import planted
 
 
 def _cos(a, b):
@@ -83,22 +32,16 @@ def _bucket(v, planes):
     return code
 
 
-def _corpus(n=20):
-    return [(i, _mvec(f"annvec:{i}"), i % 3) for i in range(n)]
-
-
 # --- sign-LSH single probe ----------------------------------------------------------
-
-
 def test_ann_lsh_bucket_selection(spark, tmp_path):
     from dynamodb_stream_processor_2_0_spark.operators.similarity import (
         hyperplane_signs,
     )
 
-    vecs = _corpus()
-    _write_embeddings(tmp_path, vecs)
+    vecs = planted.corpus()
+    planted.write(tmp_path, "embeddings", vecs)
     out = {}
-    for r in _run(spark, "embedding_ann_lsh", tmp_path):
+    for r in planted.run(spark, "embedding_ann_lsh", tmp_path):
         out.setdefault(r["query_id"], []).append(r)
     planes = hyperplane_signs(num_planes=6, dim=64)
     data = {vid: v for vid, v, _ in vecs}
@@ -121,10 +64,10 @@ def test_ann_multiprobe_one_bit_expansion(spark, tmp_path):
         hyperplane_signs,
     )
 
-    vecs = _corpus()
-    _write_embeddings(tmp_path, vecs)
+    vecs = planted.corpus()
+    planted.write(tmp_path, "embeddings", vecs)
     out = {}
-    for r in _run(spark, "embedding_ann_multiprobe", tmp_path):
+    for r in planted.run(spark, "embedding_ann_multiprobe", tmp_path):
         out.setdefault(r["query_id"], []).append(r)
     planes = hyperplane_signs(num_planes=6, dim=64)
     data = {vid: v for vid, v, _ in vecs}
@@ -147,24 +90,22 @@ def test_ann_multiprobe_one_bit_expansion(spark, tmp_path):
 
 
 # --- IVF nProbe=1 ----------------------------------------------------------------------
-
-
 def test_ann_ivf_probe_cell_and_in_cell_ranking(spark, tmp_path):
     # two well-separated cells so centroid assignment is unambiguous:
     # label 0 vectors near +e1, label 1 vectors near -e1
     def cell_vec(seed, sign):
-        base = _mvec(f"ivf:{seed}")
+        base = planted.mvec(f"ivf:{seed}")
         out = [sign * 1.0] + [x / 8 for x in base[1:]]
-        return [_f32(x) for x in out]
+        return [planted.f32(x) for x in out]
 
     vecs = []
     for i in range(8):                      # queries: 4 per side
         vecs.append((i, cell_vec(i, 1.0 if i % 2 == 0 else -1.0), i % 2))
     for i in range(8, 20):                  # inverted lists
         vecs.append((i, cell_vec(i, 1.0 if i % 2 == 0 else -1.0), i % 2))
-    _write_embeddings(tmp_path, vecs)
+    planted.write(tmp_path, "embeddings", vecs)
     out = {}
-    for r in _run(spark, "embedding_ann_ivf", tmp_path):
+    for r in planted.run(spark, "embedding_ann_ivf", tmp_path):
         out.setdefault(r["query_id"], []).append(r)
     data = {vid: v for vid, v, _ in vecs}
     labels = {vid: lab for vid, _, lab in vecs}
@@ -182,20 +123,18 @@ def test_ann_ivf_probe_cell_and_in_cell_ranking(spark, tmp_path):
 
 
 # --- banded near-dup ----------------------------------------------------------------------
-
-
 def test_embedding_near_dup_banded_verify(spark, tmp_path):
     from dynamodb_stream_processor_2_0_spark.operators.similarity import (
         hyperplane_signs,
     )
 
-    base = _mvec("neardup:base")
-    near = [_f32(x * 0.9 + 0.1 * y) for x, y in zip(base, _mvec("neardup:noise"))]
+    base = planted.mvec("neardup:base")
+    near = [planted.f32(x * 0.9 + 0.1 * y) for x, y in zip(base, planted.mvec("neardup:noise"))]
     vecs = [(1, base, 0), (2, base, 0), (3, near, 0)]
-    vecs += [(10 + i, _mvec(f"neardup:far{i}"), 0) for i in range(6)]
-    _write_embeddings(tmp_path, vecs)
+    vecs += [(10 + i, planted.mvec(f"neardup:far{i}"), 0) for i in range(6)]
+    planted.write(tmp_path, "embeddings", vecs)
     out = {(r["id_a"], r["id_b"]): r["cosine"]
-           for r in _run(spark, "dedup_embedding_near", tmp_path)}
+           for r in planted.run(spark, "dedup_embedding_near", tmp_path)}
 
     planes = hyperplane_signs(num_planes=12, dim=64)
     data = {vid: v for vid, v, _ in vecs}
@@ -218,14 +157,12 @@ def test_embedding_near_dup_banded_verify(spark, tmp_path):
 
 
 # --- SemDeDup property ------------------------------------------------------------------------
-
-
 def test_semantic_dedup_exact_copies_collapse(spark, tmp_path):
-    copies = _mvec("semdedup:dup")
+    copies = planted.mvec("semdedup:dup")
     vecs = [(1, copies, 0), (2, copies, 0), (3, copies, 0)]
-    vecs += [(10 + i, _mvec(f"semdedup:solo{i}"), 0) for i in range(9)]
-    _write_embeddings(tmp_path, vecs)
-    rows = {r["vec_id"]: r for r in _run(spark, "semantic_dedup_kmeans", tmp_path)}
+    vecs += [(10 + i, planted.mvec(f"semdedup:solo{i}"), 0) for i in range(9)]
+    planted.write(tmp_path, "embeddings", vecs)
+    rows = {r["vec_id"]: r for r in planted.run(spark, "semantic_dedup_kmeans", tmp_path)}
     # identical vectors assign identically -> same cluster, mutual near
     assert rows[1]["cluster"] == rows[2]["cluster"] == rows[3]["cluster"]
     for vid in (1, 2, 3):
@@ -237,13 +174,11 @@ def test_semantic_dedup_exact_copies_collapse(spark, tmp_path):
 
 
 # --- PQ-ADC -------------------------------------------------------------------------------------
-
-
 def test_pq_adc_table_lookup_recomputation(spark, tmp_path):
-    vecs = _corpus(24)
-    _write_embeddings(tmp_path, vecs)
+    vecs = planted.corpus(24)
+    planted.write(tmp_path, "embeddings", vecs)
     out = {}
-    for r in _run(spark, "embedding_pq_adc_topk", tmp_path):
+    for r in planted.run(spark, "embedding_pq_adc_topk", tmp_path):
         out.setdefault(r["query_id"], []).append(r)
 
     data = {vid: [math.floor(x * 1000) for x in v] for vid, v, _ in vecs}
@@ -280,13 +215,11 @@ def test_pq_adc_table_lookup_recomputation(spark, tmp_path):
 
 
 # --- Matryoshka truncation recall ------------------------------------------------------------------
-
-
 def test_matryoshka_prefix_recall_recomputed(spark, tmp_path):
-    vecs = _corpus(24)
-    _write_embeddings(tmp_path, vecs)
+    vecs = planted.corpus(24)
+    planted.write(tmp_path, "embeddings", vecs)
     out = {r["dims"]: r for r in
-           _run(spark, "embedding_matryoshka_recall", tmp_path)}
+           planted.run(spark, "embedding_matryoshka_recall", tmp_path)}
 
     data = {vid: [math.floor(x * 1000) for x in v] for vid, v, _ in vecs}
     queries = [vid for vid in data if vid < 8]
@@ -310,8 +243,6 @@ def test_matryoshka_prefix_recall_recomputed(spark, tmp_path):
 
 
 # --- hard-negative mining -----------------------------------------------------------------------
-
-
 def test_hard_negative_excludes_positives(spark, tmp_path):
     from dynamodb_stream_processor_2_0_spark.operators.similarity import (
         hyperplane_signs,
@@ -319,12 +250,12 @@ def test_hard_negative_excludes_positives(spark, tmp_path):
 
     # query 1 has an exact copy (a POSITIVE — must be excluded) and
     # plenty of ordinary candidates
-    base = _mvec("hn:base")
+    base = planted.mvec("hn:base")
     vecs = [(1, base, 0), (2, base, 0)]
-    vecs += [(10 + i, _mvec(f"hn:cand{i}"), 0) for i in range(12)]
-    _write_embeddings(tmp_path, vecs)
+    vecs += [(10 + i, planted.mvec(f"hn:cand{i}"), 0) for i in range(12)]
+    planted.write(tmp_path, "embeddings", vecs)
     out = {}
-    for r in _run(spark, "embedding_hard_negative_mine", tmp_path):
+    for r in planted.run(spark, "embedding_hard_negative_mine", tmp_path):
         out.setdefault(r["query_id"], []).append(r)
 
     planes = hyperplane_signs(num_planes=6, dim=64)
@@ -344,15 +275,13 @@ def test_hard_negative_excludes_positives(spark, tmp_path):
 
 
 # --- BPE merge induction ------------------------------------------------------------------------
-
-
 def test_bpe_merge_induction_sequential(spark, tmp_path):
     docs = [
         (1, "low low low lower lowest", "en", "s"),
         (2, "low lower newer new", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    out = {r["round"]: r for r in _run(spark, "bpe_merge_induction", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    out = {r["round"]: r for r in planted.run(spark, "bpe_merge_induction", tmp_path)}
 
     words: dict[tuple, int] = {}
     for _, text, _, _ in docs:
@@ -393,8 +322,6 @@ def test_bpe_merge_induction_sequential(spark, tmp_path):
 
 
 # --- DSIR importance ----------------------------------------------------------------------------
-
-
 def test_dsir_hashed_llr_recomputation(spark, tmp_path):
     docs = [
         (1, "the cat sat on the mat", "en", "web"),
@@ -402,15 +329,15 @@ def test_dsir_hashed_llr_recomputation(spark, tmp_path):
         (3, "the dog ran to the park", "en", "books"),
         (4, "ein hund lief zum park heute", "de", "books"),
     ]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     out = {(r["source"], r["lang"]): r
-           for r in _run(spark, "text_dsir_importance", tmp_path)}
+           for r in planted.run(spark, "text_dsir_importance", tmp_path)}
 
     B = 256
     feat = []  # (doc_id, lang, source, bucket)
     for d, text, lang, src in docs:
         for tok in text.split(" "):
-            feat.append((d, lang, src, int(_md5(tok)[:8], 16) % B))
+            feat.append((d, lang, src, int(planted.md5(tok)[:8], 16) % B))
     src_d: dict[int, int] = {}
     tgt_d: dict[int, int] = {}
     for _, lang, _, bkt in feat:
@@ -443,8 +370,6 @@ def test_dsir_hashed_llr_recomputation(spark, tmp_path):
 
 
 # --- curation pipelines ------------------------------------------------------------------------
-
-
 def test_curation_pipeline_v1_full_recomputation(spark, tmp_path):
     long_good = ("the cat and the dog of a to " * 3).strip()  # stopword-rich
     docs = [
@@ -453,8 +378,8 @@ def test_curation_pipeline_v1_full_recomputation(spark, tmp_path):
         (3, "short text", "en", "s"),                     # < 15 tokens
         (4, " ".join(f"z{i}" for i in range(20)), "en", "s"),  # low quality
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "corpus_curation_pipeline", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "corpus_curation_pipeline", tmp_path)}
 
     seen: dict[str, int] = {}
     for d, text, _, _ in docs:
@@ -466,7 +391,7 @@ def test_curation_pipeline_v1_full_recomputation(spark, tmp_path):
         q = ((n_stop / n_tokens) * 0.5
              + (n_chars / (n_chars + 100.0)) * 0.4
              + (n_punct / n_tokens) * 0.1)
-        fp = _md5(re.sub(r"\s+", " ", text.strip()).lower())
+        fp = planted.md5(re.sub(r"\s+", " ", text.strip()).lower())
         seen[fp] = seen.get(fp, 0) + 1
         if seen[fp] > 1:
             disp = "dropped_duplicate"
@@ -498,22 +423,22 @@ def test_curation_pipeline_v2_composes_registered_stages(spark, tmp_path):
         + [(5, " ".join(f"w{i}" for i in range(30)), "en", "s"),
            (6, " ".join(f"v{i}" for i in range(30)), "en", "s")]
     )
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     ledger = {r["doc_id"]: r for r in
-              _run(spark, "corpus_curation_pipeline_v2", tmp_path)}
+              planted.run(spark, "corpus_curation_pipeline_v2", tmp_path)}
     surv = {r["doc_id"]: r for r in
-            _run(spark, "dedup_survivorship_canonical", tmp_path)}
+            planted.run(spark, "dedup_survivorship_canonical", tmp_path)}
     clf = {r["doc_id"]: r for r in
-           _run(spark, "quality_classifier_score", tmp_path)}
+           planted.run(spark, "quality_classifier_score", tmp_path)}
     tw = {r["doc_id"]: r for r in
-          _run(spark, "dedup_token_window_exact", tmp_path)}
+          planted.run(spark, "dedup_token_window_exact", tmp_path)}
     exact_seen: dict[str, int] = {}
     for d, text, _, _ in sorted(docs):
-        fp = _md5(text)
+        fp = planted.md5(text)
         exact_seen.setdefault(fp, d)
     for d, text, _, _ in docs:
         r = ledger[d]
-        if _md5(text) in exact_seen and exact_seen[_md5(text)] != d:
+        if planted.md5(text) in exact_seen and exact_seen[planted.md5(text)] != d:
             expect = "dropped_exact_dup"
         elif not surv[d]["is_canonical"]:
             expect = "dropped_near_dup"
@@ -525,7 +450,7 @@ def test_curation_pipeline_v2_composes_registered_stages(spark, tmp_path):
             expect = "kept"
         assert r["disposition"] == expect, d
         if expect == "kept":
-            bucket = int(_md5(text)[:8], 16) % 100
+            bucket = int(planted.md5(text)[:8], 16) % 100
             split = "train" if bucket < 80 else ("val" if bucket < 90 else "test")
             assert r["split"] == split, d
         else:
@@ -533,8 +458,6 @@ def test_curation_pipeline_v2_composes_registered_stages(spark, tmp_path):
 
 
 # --- filter-ensemble kappa arithmetic ---------------------------------------------------------
-
-
 def test_filter_ensemble_kappa_arithmetic(spark, tmp_path):
     """Verifies the agreement/kappa ARITHMETIC: the three filters' keep
     decisions are taken from their registered (separately behavior-
@@ -548,7 +471,7 @@ def test_filter_ensemble_kappa_arithmetic(spark, tmp_path):
             for i in range(7)]
     # highly repetitive docs: the Gopher repetition gate drops these
     docs += [(10 + i, ("spam " * 40).strip(), "en", "s") for i in range(3)]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     from dynamodb_stream_processor_2_0_spark.plans import registry
 
     registry._load()
@@ -563,7 +486,7 @@ def test_filter_ensemble_kappa_arithmetic(spark, tmp_path):
             for r in registry.REGISTRY[qname].fn(spark, str(tmp_path)).collect()
         }
     out = {r["pair"]: r for r in
-           _run(spark, "text_filter_ensemble_agreement", tmp_path)}
+           planted.run(spark, "text_filter_ensemble_agreement", tmp_path)}
     ids = sorted(keeps["clf"])
     n = len(ids)
     for pair, x, y in (("classifier|lm", "clf", "lm"),

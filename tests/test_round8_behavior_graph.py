@@ -12,168 +12,27 @@ Spark plan or the DuckDB oracle.
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import re
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-# --- fixture builders ---------------------------------------------------------
-
-
-def _write_events(tmp, rows):
-    """rows: (event_id, ts_iso, user_id|None, event_type, value|None,
-    props|None)."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array(
-                [None if r[4] is None else float(r[4]) for r in rows],
-                pa.float64(),
-            ),
-            "props": pa.array(
-                [r[5] if len(r) > 5 else "{}" for r in rows], pa.string()
-            ),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _write_documents(tmp, rows):
-    t = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(t, str(tmp / "documents.parquet"))
-
-
-def _write_orders(tmp, rows):
-    t = pa.table(
-        {
-            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
-            "o_totalprice": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "o_orderdate": pa.array(
-                [dt.datetime.fromisoformat(r[4]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "o_orderpriority": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "orders.parquet"))
-
-
-def _write_customer(tmp, rows):
-    t = pa.table(
-        {
-            "c_custkey": pa.array([r[0] for r in rows], pa.int64()),
-            "c_name": pa.array([r[1] for r in rows], pa.string()),
-            "c_nationkey": pa.array([r[2] for r in rows], pa.int32()),
-            "c_acctbal": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "c_mktsegment": pa.array([r[4] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "customer.parquet"))
-
-
-def _write_lineitem(tmp, rows):
-    """rows: (l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
-    l_extendedprice, l_shipdate_iso)."""
-    t = pa.table(
-        {
-            "l_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "l_partkey": pa.array([r[1] for r in rows], pa.int64()),
-            "l_suppkey": pa.array([r[2] for r in rows], pa.int64()),
-            "l_linenumber": pa.array([r[3] for r in rows], pa.int32()),
-            "l_quantity": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "l_extendedprice": pa.array(
-                [float(r[5]) for r in rows], pa.float64()
-            ),
-            "l_discount": pa.array([0.0] * len(rows), pa.float64()),
-            "l_tax": pa.array([0.0] * len(rows), pa.float64()),
-            "l_returnflag": pa.array(["N"] * len(rows), pa.string()),
-            "l_linestatus": pa.array(["O"] * len(rows), pa.string()),
-            "l_shipdate": pa.array(
-                [dt.datetime.fromisoformat(r[6]) for r in rows],
-                pa.timestamp("us"),
-            ),
-        }
-    )
-    pq.write_table(t, str(tmp / "lineitem.parquet"))
+from tests import planted
 
 
 def _write_part(tmp, names):
-    t = pa.table(
-        {
-            "p_partkey": pa.array(list(range(1, len(names) + 1)), pa.int64()),
-            "p_name": pa.array(names, pa.string()),
-            "p_brand": pa.array(["B"] * len(names), pa.string()),
-            "p_type": pa.array(["T"] * len(names), pa.string()),
-            "p_size": pa.array([1] * len(names), pa.int32()),
-            "p_retailprice": pa.array([1.0] * len(names), pa.float64()),
-        }
+    planted.write(
+        tmp, "part", [(i, n, "B", "T", 1, 1.0) for i, n in enumerate(names, 1)]
     )
-    pq.write_table(t, str(tmp / "part.parquet"))
-
-
-def _write_embeddings(tmp, rows):
-    t = pa.table(
-        {
-            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
-            "label": pa.array([r[2] for r in rows], pa.int32()),
-        }
-    )
-    pq.write_table(t, str(tmp / "embeddings.parquet"))
-
-
-def _write_purchase_graph(tmp, cust_supp_edges):
-    """Stage orders+lineitem so the customer<->supplier purchase graph
-    equals exactly the given (custkey, suppkey) edge set: one order per
-    edge, one lineitem per order."""
-    orders, lineitem = [], []
-    for i, (c, s) in enumerate(sorted(set(cust_supp_edges)), start=1):
-        orders.append((i, c, "F", 1.0, "2024-01-01T00:00:00", "X"))
-        lineitem.append((i, 1, s, 1, 1.0, 1.0, "2024-01-01T00:00:00"))
-    _write_orders(tmp, orders)
-    _write_lineitem(tmp, lineitem)
-
-
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
 
 
 # --- window / temporal batch twins --------------------------------------------
-
-
 def test_sliding_window_event_in_exactly_two_windows(spark, tmp_path):
     rows = [
         (1, "2024-05-02T10:00:00", 1, "view", 1.25),
         (2, "2024-05-02T11:00:00", 2, "view", 2.00),
         (3, "2024-05-03T10:00:00", 1, "view", 4.00),
     ]
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r["win_start"].date().isoformat(): r
-           for r in _run(spark, "window_sliding_2d_1d", tmp_path)}
+           for r in planted.run(spark, "window_sliding_2d_1d", tmp_path)}
     # event on day D lands in windows starting D-1 and D
     assert set(out) == {"2024-05-01", "2024-05-02", "2024-05-03"}
     assert out["2024-05-01"]["n_events"] == 2          # the two May-2 events
@@ -192,8 +51,8 @@ def test_hypertable_rollup_daily_equals_sum_of_hourly(spark, tmp_path):
         (3, "2024-05-02T13:00:00", 3, "view", 4.00),
         (4, "2024-05-03T01:00:00", 4, "view", 8.00),
     ]
-    _write_events(tmp_path, rows)
-    out = _run(spark, "hypertable_rollup", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    out = planted.run(spark, "hypertable_rollup", tmp_path)
     hourly = {r["bucket"].isoformat(): r for r in out if r["resolution"] == "hour"}
     daily = {r["bucket"].date().isoformat(): r for r in out if r["resolution"] == "day"}
     assert hourly["2024-05-02T10:00:00"]["n_events"] == 2
@@ -244,9 +103,9 @@ def test_session_window_dynamic_gap_sweep_line(spark, tmp_path):
         (i, (t0 + dt.timedelta(seconds=s)).isoformat(), 7, et, v)
         for i, (s, et, v) in enumerate(plan)
     ]
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = sorted(
-        (r for r in _run(spark, "session_window_dynamic_gap", tmp_path)
+        (r for r in planted.run(spark, "session_window_dynamic_gap", tmp_path)
          if r["user_id"] == 7),
         key=lambda r: r["session_start"],
     )
@@ -268,9 +127,9 @@ def test_range_join_neighbor_counts_quadratic_oracle(spark, tmp_path):
     rows = [(eid, (t0 + dt.timedelta(seconds=s)).isoformat(), 7, "view", 1.0)
             for eid, s in offs.items()]
     rows.append((9, t0.isoformat(), 8, "view", 1.0))  # other user: no cross pairs
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r["a_id"]: r["n_neighbors"]
-           for r in _run(spark, "range_join_event_neighbors", tmp_path)
+           for r in planted.run(spark, "range_join_event_neighbors", tmp_path)
            if r["user_id"] == 7}
     expected = {}
     for a, sa in offs.items():
@@ -295,9 +154,9 @@ def test_cohort_ltv_hand_rollup(spark, tmp_path):
         # user 3: cohort W1
         (5, "2024-01-09T10:00:00", 3, "purchase", 8.00),
     ]
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {(r["cohort_week"], r["age_weeks"]): r
-           for r in _run(spark, "events_cohort_ltv", tmp_path)}
+           for r in planted.run(spark, "events_cohort_ltv", tmp_path)}
     w0 = out[("2024-01-01", 0)]
     assert w0["n_active_users"] == 2
     assert w0["revenue_cents"] == 1300          # 10.00 + 1.00 + 2.00
@@ -310,14 +169,12 @@ def test_cohort_ltv_hand_rollup(spark, tmp_path):
 
 
 # --- graph family ---------------------------------------------------------------
-
-
 def test_bfs_depth_census_sequential(spark, tmp_path):
     # purchase graph: seeds are SUPPLIERS 1 and 2 (node ids 3 and 5).
     # s1 - c1, s1 - c2, c2 - s5, s2 - c3; c9 - s7 is disconnected.
     edges = [(1, 1), (2, 1), (2, 5), (3, 2), (9, 7)]
-    _write_purchase_graph(tmp_path, edges)
-    out = {r["depth"]: r for r in _run(spark, "graph_shortest_path_bfs", tmp_path)}
+    planted.purchase_graph(tmp_path, edges)
+    out = {r["depth"]: r for r in planted.run(spark, "graph_shortest_path_bfs", tmp_path)}
 
     # sequential BFS on the same encoding (customer 2k, supplier 2k+1)
     adj: dict[int, set] = {}
@@ -354,8 +211,8 @@ def test_lpa_sync_mode_vote_sequential(spark, tmp_path):
     edges = [(1, 1), (1, 2), (2, 1), (2, 2),      # community A: c1,c2,s1,s2
              (3, 3), (3, 4), (4, 3), (4, 4),      # community B: c3,c4,s3,s4
              (2, 3)]                               # bridge
-    _write_purchase_graph(tmp_path, edges)
-    out = {r["community"]: r for r in _run(spark, "graph_label_propagation", tmp_path)}
+    planted.purchase_graph(tmp_path, edges)
+    out = {r["community"]: r for r in planted.run(spark, "graph_label_propagation", tmp_path)}
 
     adj: dict[int, set] = {}
     for c, s in edges:
@@ -387,8 +244,8 @@ def test_lpa_sync_mode_vote_sequential(spark, tmp_path):
 def test_node_jaccard_hand_sets(spark, tmp_path):
     # supplier customer-sets: s1 {1,2,3}, s2 {2,3}, s3 {9}
     edges = [(1, 1), (2, 1), (3, 1), (2, 2), (3, 2), (9, 3)]
-    _write_purchase_graph(tmp_path, edges)
-    out = _run(spark, "graph_node_jaccard_similarity", tmp_path)
+    planted.purchase_graph(tmp_path, edges)
+    out = planted.run(spark, "graph_node_jaccard_similarity", tmp_path)
     rows = {(r["s1"], r["s2"]): r for r in out}
     # only s1,s2 share customers: |inter|=2, |union|=3 -> 666 permille
     assert set(rows) == {(1, 2)}
@@ -398,8 +255,6 @@ def test_node_jaccard_hand_sets(spark, tmp_path):
 
 
 # --- data-ops / quality -----------------------------------------------------------
-
-
 def test_data_quality_profile_planted_defects(spark, tmp_path):
     rows = [
         (1, "2024-01-01T10:00:00", 1, "view", 5.0, "{}"),
@@ -407,8 +262,8 @@ def test_data_quality_profile_planted_defects(spark, tmp_path):
         (3, "2024-01-01T10:00:00", 2, "view", None, "not json"),     # null value, corrupt
         (4, "2024-01-01T10:00:00", 3, "click", 1.0, ""),             # empty props: not corrupt
     ]
-    _write_events(tmp_path, rows)
-    out = {r["event_type"]: r for r in _run(spark, "data_quality_profile", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["event_type"]: r for r in planted.run(spark, "data_quality_profile", tmp_path)}
     v = out["view"]
     assert v["n_rows"] == 3
     assert v["null_users"] == 1 and v["null_values"] == 1
@@ -428,8 +283,8 @@ def test_drift_chisquare_identical_halves_zero(spark, tmp_path):
         for v in (10.0, 10.0, 60.0, 120.0):
             rows.append((eid, f"{day}T10:00:00", 1, "view", v))
             eid += 1
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "drift_chisquare_by_type", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "drift_chisquare_by_type", tmp_path)
     assert r["event_type"] == "view"
     assert r["n_buckets"] == 3          # buckets 0 (10s), 1 (60), 2 (120)
     assert r["chi2"] == 0.0
@@ -441,8 +296,8 @@ def test_drift_chisquare_identical_halves_zero(spark, tmp_path):
         rows2.append((eid, "2024-01-01T10:00:00", 1, "view", v)); eid += 1
     for v in (999.0, 999.0):
         rows2.append((eid, "2024-01-02T10:00:00", 1, "view", v)); eid += 1
-    _write_events(tmp_path, rows2)
-    (r2,) = _run(spark, "drift_chisquare_by_type", tmp_path)
+    planted.write(tmp_path, "events", rows2)
+    (r2,) = planted.run(spark, "drift_chisquare_by_type", tmp_path)
     # buckets: b0 (n1=2, n2=0), b9 (n1=0, n2=2); s1=s2=2
     # b0 term: (0*2 - 2*2)^2 / (2*2*2) = 16/8 = 2.0; b9: n1=0 -> 0
     assert r2["n_buckets"] == 2
@@ -450,26 +305,20 @@ def test_drift_chisquare_identical_halves_zero(spark, tmp_path):
 
 
 def test_pii_pseudonymize_tokens_and_rollup(spark, tmp_path):
-    _write_customer(
-        tmp_path,
-        [
+    planted.write(tmp_path, "customer", [
             (1, "Alice", 3, 0.0, "SEG"),
             (2, "Bob", 3, 0.0, "SEG"),     # same nation -> same geo token
             (3, "Alice", 5, 0.0, "OTHER"),  # same name -> same name token
-        ],
-    )
-    _write_orders(
-        tmp_path,
-        [
+        ])
+    planted.write(tmp_path, "orders", [
             (1, 1, "F", 10.00, "2024-01-01T00:00:00", "X"),
             (2, 1, "F", 5.00, "2024-01-02T00:00:00", "X"),
             (3, 2, "F", 7.00, "2024-01-03T00:00:00", "X"),
             # customer 3: no orders -> zero row survives the left join
-        ],
-    )
-    out = _run(spark, "pii_pseudonymize_consistent", tmp_path)
-    tok = lambda name: "cust_" + _md5(f"name:{name}")[:12]  # noqa: E731
-    geo = lambda n: "geo_" + _md5(f"nation:{n}")[:8]        # noqa: E731
+        ])
+    out = planted.run(spark, "pii_pseudonymize_consistent", tmp_path)
+    tok = lambda name: "cust_" + planted.md5(f"name:{name}")[:12]  # noqa: E731
+    geo = lambda n: "geo_" + planted.md5(f"nation:{n}")[:8]        # noqa: E731
     rows = {(r["name_token"], r["geo_token"]): r for r in out}
     a = rows[(tok("Alice"), geo(3))]
     assert a["n_orders"] == 2 and a["revenue_cents"] == 1500
@@ -484,18 +333,15 @@ def test_pii_pseudonymize_tokens_and_rollup(spark, tmp_path):
 
 
 def test_data_contract_planted_violations(spark, tmp_path):
-    _write_customer(tmp_path, [(1, "a", 0, 0.0, "SEG")])
-    _write_orders(
-        tmp_path,
-        [
+    planted.write(tmp_path, "customer", [(1, "a", 0, 0.0, "SEG")])
+    planted.write(tmp_path, "orders", [
             (1, 1, "F", 10.00, "1995-01-01T00:00:00", "X"),
             (1, 1, "O", 20.00, "1995-01-02T00:00:00", "X"),   # dup orderkey
             (2, 99, "F", -5.00, "1990-01-01T00:00:00", "X"),  # neg price, date
                                                               # out of range, bad FK
             (3, 1, "Z", 1.00, "1995-01-03T00:00:00", "X"),    # bad status
-        ],
-    )
-    rows = {r["rule_id"]: r for r in _run(spark, "data_contract_check", tmp_path)}
+        ])
+    rows = {r["rule_id"]: r for r in planted.run(spark, "data_contract_check", tmp_path)}
     assert rows["o_totalprice_positive"]["n_violations"] == 1
     assert rows["o_orderdate_in_range"]["n_violations"] == 1
     assert rows["o_orderstatus_in_domain"]["n_violations"] == 1
@@ -506,12 +352,10 @@ def test_data_contract_planted_violations(spark, tmp_path):
 
 
 # --- fingerprints / fuzzy ----------------------------------------------------------
-
-
 def _simhash32(text: str) -> int:
     votes = [0] * 32
     for tok in text.split(" "):
-        tv = int(_md5(tok)[:8], 16)
+        tv = int(planted.md5(tok)[:8], 16)
         for b in range(32):
             votes[b] += 1 if (tv >> b) & 1 else -1
     return sum(1 << b for b in range(32) if votes[b] > 0)
@@ -523,8 +367,8 @@ def test_simhash_hashlib_recomputation(spark, tmp_path):
         (2, "alpha beta gamma", "en", "s"),
         (3, "totally different words", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r["simhash"] for r in _run(spark, "dedup_simhash", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r["simhash"] for r in planted.run(spark, "dedup_simhash", tmp_path)}
     for d, text, _, _ in docs:
         assert rows[d] == _simhash32(text), d
     assert rows[1] == rows[2]
@@ -538,9 +382,9 @@ def test_simhash_hamming_pairs_threshold(spark, tmp_path):
         (2, "alpha beta gamma delta", "en", "s"),
         (3, "completely unrelated text tokens", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     out = {(r["doc_a"], r["doc_b"]): r["hamming"]
-           for r in _run(spark, "dedup_simhash_hamming_pairs", tmp_path)}
+           for r in planted.run(spark, "dedup_simhash_hamming_pairs", tmp_path)}
     assert out[(1, 2)] == 0
     f1, f3 = _simhash32(docs[0][1]), _simhash32(docs[2][1])
     ham13 = bin(f1 ^ f3).count("1")
@@ -572,7 +416,7 @@ def test_fuzzy_match_blocked_levenshtein_hand_distances(spark, tmp_path):
     ]
     _write_part(tmp_path, names)
     out = {(r["name_a"], r["name_b"]): r
-           for r in _run(spark, "fuzzy_match_blocked_levenshtein", tmp_path)}
+           for r in planted.run(spark, "fuzzy_match_blocked_levenshtein", tmp_path)}
     widget = [n for n in names if n.split(" ")[1] == "widget"]
     expected = {}
     for a in widget:
@@ -594,9 +438,9 @@ def test_survivorship_canonical_tiebreak_and_singletons(spark, tmp_path):
         [(i, "alpha beta gamma delta epsilon", "en", "s") for i in (4, 2, 7)]
         + [(9, "unique standalone document text", "en", "s")]
     )
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     rows = {r["doc_id"]: r for r in
-            _run(spark, "dedup_survivorship_canonical", tmp_path)}
+            planted.run(spark, "dedup_survivorship_canonical", tmp_path)}
     # the 3 identical docs: equal n_chars -> smallest doc_id canonical
     for d in (4, 2, 7):
         assert rows[d]["cluster_n"] == 3
@@ -608,8 +452,6 @@ def test_survivorship_canonical_tiebreak_and_singletons(spark, tmp_path):
 
 
 # --- text regex ops ------------------------------------------------------------------
-
-
 def test_bpe_token_count_python_re(spark, tmp_path):
     from dynamodb_stream_processor_2_0_spark.plans.queries_text import (
         _BPE_PATTERN,
@@ -619,8 +461,8 @@ def test_bpe_token_count_python_re(spark, tmp_path):
         (1, "Hello world 123 foo-bar!", "en", "s"),
         (2, "a", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "text_bpe_token_count", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "text_bpe_token_count", tmp_path)}
     for d, text, _, _ in docs:
         n_bpe = len(re.findall(_BPE_PATTERN, text))
         n_ws = len(text.split(" "))
@@ -639,8 +481,8 @@ def test_pii_redaction_python_re(spark, tmp_path):
         (1, "reach me at bob.smith@corp.example.org now", "en", "s"),
         (2, "call 999-888-7777 or 111-222-3333", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "text_pii_redaction", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "text_pii_redaction", tmp_path)}
     for d, text, _, _ in docs:
         raw = f"contact u{d}@mail.example.com or 555-123-4567 {text}"
         n_emails = len(re.findall(_EMAIL_PAT, raw))
@@ -648,14 +490,12 @@ def test_pii_redaction_python_re(spark, tmp_path):
         redacted = re.sub(_PHONE_PAT, "[PHONE]", re.sub(_EMAIL_PAT, "[EMAIL]", raw))
         assert rows[d]["n_emails"] == n_emails, d
         assert rows[d]["n_phones"] == n_phones, d
-        assert rows[d]["redacted_md5"] == _md5(redacted), d
+        assert rows[d]["redacted_md5"] == planted.md5(redacted), d
     assert rows[1]["n_emails"] == 2    # injected + planted
     assert rows[2]["n_phones"] == 3
 
 
 # --- ANN variants ---------------------------------------------------------------------
-
-
 def test_int8_quant_topk_integer_dot(spark, tmp_path):
     vecs = [
         (1, [1.0, 0.5, 0.0, 0.0], 0),    # query
@@ -664,8 +504,8 @@ def test_int8_quant_topk_integer_dot(spark, tmp_path):
         (12, [0.0, 0.0, 1.0, 0.0], 0),
         (13, [-1.0, 0.0, 0.0, 0.0], 0),
     ]
-    _write_embeddings(tmp_path, vecs)
-    out = sorted((r for r in _run(spark, "embedding_int8_quant_topk", tmp_path)
+    planted.write(tmp_path, "embeddings", vecs)
+    out = sorted((r for r in planted.run(spark, "embedding_int8_quant_topk", tmp_path)
                   if r["query_id"] == 1), key=lambda r: r["rank"])
 
     def quant(v):
@@ -696,8 +536,8 @@ def test_binary_hamming_topk_sign_pack(spark, tmp_path):
     for i in (1, 2, 3, 33, 34):
         zeros5[i] = 0.0   # zero is NOT > 0 -> bit clears, distance 5
     vecs = [(1, base, 0), (10, flip3, 0), (11, flip10, 0), (12, zeros5, 0)]
-    _write_embeddings(tmp_path, vecs)
-    out = sorted((r for r in _run(spark, "embedding_binary_hamming_topk", tmp_path)
+    planted.write(tmp_path, "embeddings", vecs)
+    out = sorted((r for r in planted.run(spark, "embedding_binary_hamming_topk", tmp_path)
                   if r["query_id"] == 1), key=lambda r: r["rank"])
 
     def pack(v):
@@ -736,8 +576,8 @@ def test_mmr_greedy_sequential(spark, tmp_path):
         14: v(-1.400),  # low relevance
     }
     vecs = [(1, v(0.0), 0)] + [(vid, vv, 0) for vid, vv in cands.items()]
-    _write_embeddings(tmp_path, vecs)
-    out = sorted((r for r in _run(spark, "embedding_mmr_diverse_topk", tmp_path)
+    planted.write(tmp_path, "embeddings", vecs)
+    out = sorted((r for r in planted.run(spark, "embedding_mmr_diverse_topk", tmp_path)
                   if r["query_id"] == 1), key=lambda r: r["pick_order"])
 
     def cos(a, b):

@@ -17,138 +17,26 @@ import hashlib
 import json as _json
 import struct
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-# --- fixture builders (shared shapes with batches 1-3) -------------------------
-
-
-def _write_events(tmp, rows):
-    """rows: (event_id, ts_iso, user_id, event_type, value[, props])."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array(
-                [r[5] if len(r) > 5 else "{}" for r in rows], pa.string()
-            ),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _write_documents(tmp, rows):
-    t = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(t, str(tmp / "documents.parquet"))
-
-
-def _write_orders(tmp, rows):
-    t = pa.table(
-        {
-            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
-            "o_totalprice": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "o_orderdate": pa.array(
-                [dt.datetime.fromisoformat(r[4]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "o_orderpriority": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "orders.parquet"))
-
-
-def _write_lineitem(tmp, rows):
-    t = pa.table(
-        {
-            "l_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "l_partkey": pa.array([r[1] for r in rows], pa.int64()),
-            "l_suppkey": pa.array([r[2] for r in rows], pa.int64()),
-            "l_linenumber": pa.array([r[3] for r in rows], pa.int32()),
-            "l_quantity": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "l_extendedprice": pa.array(
-                [float(r[5]) for r in rows], pa.float64()
-            ),
-            "l_discount": pa.array([0.0] * len(rows), pa.float64()),
-            "l_tax": pa.array([0.0] * len(rows), pa.float64()),
-            "l_returnflag": pa.array(["N"] * len(rows), pa.string()),
-            "l_linestatus": pa.array(["O"] * len(rows), pa.string()),
-            "l_shipdate": pa.array(
-                [dt.datetime.fromisoformat(r[6]) for r in rows],
-                pa.timestamp("us"),
-            ),
-        }
-    )
-    pq.write_table(t, str(tmp / "lineitem.parquet"))
-
-
-def _write_purchase_graph(tmp, cust_supp_edges):
-    orders, lineitem = [], []
-    for i, (c, s) in enumerate(sorted(set(cust_supp_edges)), start=1):
-        orders.append((i, c, "F", 1.0, "2024-01-01T00:00:00", "X"))
-        lineitem.append((i, 1, s, 1, 1.0, 1.0, "2024-01-01T00:00:00"))
-    _write_orders(tmp, orders)
-    _write_lineitem(tmp, lineitem)
-
-
-def _write_embeddings(tmp, rows):
-    t = pa.table(
-        {
-            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
-            "label": pa.array([r[2] for r in rows], pa.int32()),
-        }
-    )
-    pq.write_table(t, str(tmp / "embeddings.parquet"))
-
-
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
+from tests import planted
 
 
 # --- connected components: both registered names, one planted answer -------------
-
-
 def test_cc_flood_and_star_agree_on_planted_clusters(spark, tmp_path):
     docs = (
         [(i, "alpha beta gamma delta epsilon", "en", "s") for i in (3, 5, 9)]
         + [(i, "zeta eta theta iota kappa", "en", "s") for i in (2, 8)]
     )
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     assign = {r["doc_id"]: r["cluster_id"]
-              for r in _run(spark, "dedup_cluster_assign", tmp_path)}
+              for r in planted.run(spark, "dedup_cluster_assign", tmp_path)}
     star = {r["doc_id"]: r["cluster_id"]
-            for r in _run(spark, "dedup_cluster_assign_star", tmp_path)}
+            for r in planted.run(spark, "dedup_cluster_assign_star", tmp_path)}
     expected = {3: 3, 5: 3, 9: 3, 2: 2, 8: 2}  # min doc_id per cluster
     assert assign == expected
     assert star == expected
 
 
 # --- token-window exact dedup -----------------------------------------------------
-
-
 def test_token_window_exact_planted_spans(spark, tmp_path):
     W = 8
     copied = " ".join(f"c{i}" for i in range(12))      # 12 tokens
@@ -159,9 +47,9 @@ def test_token_window_exact_planted_spans(spark, tmp_path):
         (3, f"{unique_a} {copied}", "en", "s"),         # 6 unique + 12 copied
         (4, "totally fresh words never repeated anywhere at all", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     rows = {r["doc_id"]: r for r in
-            _run(spark, "dedup_token_window_exact", tmp_path)}
+            planted.run(spark, "dedup_token_window_exact", tmp_path)}
 
     def windows(tokens):
         return [tuple(tokens[i: i + W]) for i in range(max(len(tokens) - W + 1, 0))] or []
@@ -193,15 +81,13 @@ def test_token_window_exact_planted_spans(spark, tmp_path):
 
 
 # --- content-defined chunking -------------------------------------------------------
-
-
 def test_cdc_chunks_cut_points_hashlib(spark, tmp_path):
     MOD = 8
 
     def chunks(tokens):
         out, cur = [], [tokens[0]]
         for prev, tok in zip(tokens, tokens[1:]):
-            if int(_md5(f"{prev}|{tok}")[:8], 16) % MOD == 0:
+            if int(planted.md5(f"{prev}|{tok}")[:8], 16) % MOD == 0:
                 out.append(" ".join(cur))
                 cur = [tok]
             else:
@@ -216,8 +102,8 @@ def test_cdc_chunks_cut_points_hashlib(spark, tmp_path):
         (2, textA, "en", "srcA"),   # exact copy: every chunk globally dup
         (3, textB, "en", "srcB"),   # unique
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["source"]: r for r in _run(spark, "dedup_cdc_chunks", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["source"]: r for r in planted.run(spark, "dedup_cdc_chunks", tmp_path)}
 
     ca, cb = chunks(textA.split()), chunks(textB.split())
     a = rows["srcA"]
@@ -232,17 +118,15 @@ def test_cdc_chunks_cut_points_hashlib(spark, tmp_path):
 
 
 # --- k-core ---------------------------------------------------------------------------
-
-
 def test_kcore_planted_complete_bipartite(spark, tmp_path):
     # K(10,10): every node has degree 10 -> survives the k=10 peel;
     # a pendant pair and a degree-9 customer are peeled away.
     edges = [(c, s) for c in range(1, 11) for s in range(1, 11)]
     edges += [(11, 11)]                       # pendant pair: degrees 1
     edges += [(12, s) for s in range(1, 10)]  # degree 9 -> peeled
-    _write_purchase_graph(tmp_path, edges)
+    planted.purchase_graph(tmp_path, edges)
     out = {(r["node_type"], r["node_key"]): r["core_degree"]
-           for r in _run(spark, "graph_kcore_membership", tmp_path)}
+           for r in planted.run(spark, "graph_kcore_membership", tmp_path)}
 
     # sequential peeling on the doubled-id encoding
     adj: dict[int, set] = {}
@@ -269,8 +153,6 @@ def test_kcore_planted_complete_bipartite(spark, tmp_path):
 
 
 # --- sessionized funnel -----------------------------------------------------------------
-
-
 def test_sessionized_funnel_strict_order_within_session(spark, tmp_path):
     t0 = dt.datetime.fromisoformat("2024-05-01T00:00:00")
     h = lambda hours: (t0 + dt.timedelta(hours=hours)).isoformat()  # noqa: E731
@@ -285,8 +167,8 @@ def test_sessionized_funnel_strict_order_within_session(spark, tmp_path):
         # user 3: session with no view at all
         (8, h(0), 3, "purchase", 1.0),
     ]
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "events_sessionized_funnel", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "events_sessionized_funnel", tmp_path)
     # sessions: u1 x2, u2 x1, u3 x1 = 4
     assert r["n_sessions"] == 4
     assert r["n_reached_view"] == 3         # u1 s1, u1 s2, u2
@@ -296,8 +178,6 @@ def test_sessionized_funnel_strict_order_within_session(spark, tmp_path):
 
 
 # --- UDF surfaces ------------------------------------------------------------------------
-
-
 def test_udaf_weighted_value_planted_weights(spark, tmp_path):
     rows = [
         (1, "2024-01-01T10:00:00", 1, "view", 2.00, _json.dumps({"k": 3})),
@@ -305,8 +185,8 @@ def test_udaf_weighted_value_planted_weights(spark, tmp_path):
         (3, "2024-01-01T10:00:00", 3, "view", 99.00, "{}"),          # k=0
         (4, "2024-01-01T10:00:00", 4, "click", 5.00, _json.dumps({"k": 0})),
     ]
-    _write_events(tmp_path, rows)
-    out = {r["event_type"]: r for r in _run(spark, "udaf_weighted_value", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["event_type"]: r for r in planted.run(spark, "udaf_weighted_value", tmp_path)}
     v = out["view"]
     # weighted mean = (200*3 + 1000*1 + 9900*0) / (100 * 4) = 4.00
     assert abs(v["weighted_value"] - (200 * 3 + 1000) / (100.0 * 4)) < 1e-12
@@ -322,8 +202,8 @@ def test_udtf_token_positions_sample_and_positions(spark, tmp_path):
         (40, "hello world", "en", "s"),
         (7, "never sampled", "en", "s"),   # doc_id % 20 != 0
     ]
-    _write_documents(tmp_path, docs)
-    out = _run(spark, "udtf_token_positions", tmp_path)
+    planted.write(tmp_path, "documents", docs)
+    out = planted.run(spark, "udtf_token_positions", tmp_path)
     rows = {(r["doc_id"], r["pos"]): r for r in out}
     assert set(r["doc_id"] for r in out) == {20, 40}
     assert rows[(20, 0)]["token"] == "a" and rows[(20, 2)]["token"] == "b"
@@ -339,9 +219,9 @@ def test_grouped_pandas_robust_outliers_median_mad(spark, tmp_path):
         rows.append((eid, "2024-01-01T10:00:00", 1, "view", v)); eid += 1
     for v in (1.0, 2.0, 3.0, 4.0):          # user 2: even-count interpolation
         rows.append((eid, "2024-01-01T10:00:00", 2, "view", v)); eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r["user_id"]: r for r in
-           _run(spark, "grouped_pandas_robust_outliers", tmp_path)}
+           planted.run(spark, "grouped_pandas_robust_outliers", tmp_path)}
     u1 = out[1]
     assert u1["median_value"] == 1.0 and u1["mad"] == 0.0
     assert u1["n_outliers"] == 1 and u1["n_values"] == 5
@@ -352,8 +232,6 @@ def test_grouped_pandas_robust_outliers_median_mad(spark, tmp_path):
 
 
 # --- DTW -----------------------------------------------------------------------------------
-
-
 def test_dtw_banded_dp_sequential(spark, tmp_path):
     # weekly revenue curves: type b = type a shifted by one week —
     # exactly the alignment DTW absorbs and lockstep metrics cannot
@@ -367,8 +245,8 @@ def test_dtw_banded_dp_sequential(spark, tmp_path):
             rows.append((eid, f"{day.isoformat()}T10:00:00", 1, tname,
                          float(dollars)))
             eid += 1
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "timeseries_dtw_weekly_similarity", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "timeseries_dtw_weekly_similarity", tmp_path)
 
     n, band = 16, 4
     big = float("inf")
@@ -399,14 +277,12 @@ def test_dtw_banded_dp_sequential(spark, tmp_path):
 
 
 # --- Haar energy ------------------------------------------------------------------------------
-
-
 def test_haar_energy_pairwise_cascade(spark, tmp_path):
     daily = [3, 7, 1, 1, 10, 2, 5, 5]  # dollars over 8 consecutive days
     rows = [(i, f"2024-01-{i + 1:02d}T10:00:00", 1, "view", float(v))
             for i, v in enumerate(daily)]
-    _write_events(tmp_path, rows)
-    out = {r["level"]: r for r in _run(spark, "events_haar_energy", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["level"]: r for r in planted.run(spark, "events_haar_energy", tmp_path)}
 
     x = [v * 100 for v in daily]
     for level in (1, 2, 3):
@@ -419,8 +295,6 @@ def test_haar_energy_pairwise_cascade(spark, tmp_path):
 
 
 # --- Z-order layout ----------------------------------------------------------------------------
-
-
 def test_zorder_layout_morton_recomputation(spark, tmp_path):
     # 128 orders over a 2D grid of (custkey, day) values
     orders = []
@@ -432,8 +306,8 @@ def test_zorder_layout_morton_recomputation(spark, tmp_path):
             day = base + dt.timedelta(days=dy * 37)
             orders.append((ok, cx * 11, "F", 1.0,
                            f"{day.isoformat()}T00:00:00", "X"))
-    _write_orders(tmp_path, orders)
-    rows = {r["bucket"]: r for r in _run(spark, "zorder_layout_stats", tmp_path)}
+    planted.write(tmp_path, "orders", orders)
+    rows = {r["bucket"]: r for r in planted.run(spark, "zorder_layout_stats", tmp_path)}
 
     def morton(x, y):
         z = 0
@@ -465,9 +339,7 @@ def test_zorder_layout_morton_recomputation(spark, tmp_path):
 
 
 # --- winnowing ----------------------------------------------------------------------------------
-
-
-def _winnow_fps(text: str) -> set:
+def _winnow_fps_python(text: str) -> set:
     """Schleimer/Wilkerson/Aiken selection exactly as shipped: 3-gram
     md5[:10] keys + position-descending tiebreak, window 4."""
     toks = [t for t in text.split(" ") if t != ""]
@@ -475,7 +347,7 @@ def _winnow_fps(text: str) -> set:
     keys = {}
     for gpos in range(1, ng + 1):
         g = " ".join(toks[gpos - 1: gpos + 2])
-        keys[gpos] = _md5(g)[:10] + str(9999999 - gpos).zfill(7)
+        keys[gpos] = planted.md5(g)[:10] + str(9999999 - gpos).zfill(7)
     fps = set()
     hi = max(1, ng - 3)
     for s in range(1, hi + 1):
@@ -492,9 +364,9 @@ def test_winnowing_selection_and_guarantee(spark, tmp_path):
         (2, f"{shared} completely different tail words", "en", "s"),
         (3, "disjoint content with no overlap at all whatsoever", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    out = _run(spark, "text_winnowing_fingerprints", tmp_path)
-    fps = {d: _winnow_fps(t) for d, t, _, _ in docs}
+    planted.write(tmp_path, "documents", docs)
+    out = planted.run(spark, "text_winnowing_fingerprints", tmp_path)
+    fps = {d: _winnow_fps_python(t) for d, t, _, _ in docs}
     shared_12 = len(fps[1] & fps[2])
     # the winnowing guarantee: a >= 6-token shared run shares >= 1 fp;
     # 12 shared tokens give several
@@ -508,8 +380,6 @@ def test_winnowing_selection_and_guarantee(spark, tmp_path):
 
 
 # --- random projection recall ----------------------------------------------------------------
-
-
 def test_random_projection_recall_recomputed(spark, tmp_path):
     import math
     import struct as _s
@@ -527,9 +397,9 @@ def test_random_projection_recall_recomputed(spark, tmp_path):
         return [f32((h[i] - 127.5) / 128.0) for i in range(64)]
 
     vecs = [(i, vec(i), 0) for i in range(24)]
-    _write_embeddings(tmp_path, vecs)
+    planted.write(tmp_path, "embeddings", vecs)
     out = {r["query_id"]: r for r in
-           _run(spark, "embedding_random_projection", tmp_path)}
+           planted.run(spark, "embedding_random_projection", tmp_path)}
 
     planes = hyperplane_signs(num_planes=16, dim=64)
     data = {vid: v for vid, v, _ in vecs}
@@ -561,8 +431,6 @@ def test_random_projection_recall_recomputed(spark, tmp_path):
 
 
 # --- hydrated semantic search -------------------------------------------------------------------
-
-
 def test_semantic_search_hydration_consistency(spark, tmp_path):
     import math
 
@@ -573,13 +441,10 @@ def test_semantic_search_hydration_consistency(spark, tmp_path):
         return [x / n for x in v]
 
     vecs = [(i, unit(i), 0) for i in range(16)]
-    _write_embeddings(tmp_path, vecs)
-    _write_documents(
-        tmp_path,
-        [(i, f"document number {i} body", "en", f"src{i % 3}")
-         for i in range(16)],
-    )
-    out = _run(spark, "semantic_search_hydrated", tmp_path)
+    planted.write(tmp_path, "embeddings", vecs)
+    planted.write(tmp_path, "documents", [(i, f"document number {i} body", "en", f"src{i % 3}")
+         for i in range(16)])
+    out = planted.run(spark, "semantic_search_hydrated", tmp_path)
     assert out, "LSH probe returned nothing on the planted corpus"
     for r in out:
         # hydration joined the RIGHT document row
@@ -595,16 +460,14 @@ def test_semantic_search_hydration_consistency(spark, tmp_path):
 
 
 # --- multimodal decode kernels --------------------------------------------------------------------
-
-
 def test_arrow_digest_hashlib(spark, tmp_path):
     docs = [
         (1, "plain ascii payload", "en", "s"),
         (2, "bytes with ünïcödé", "en", "s"),   # multibyte UTF-8
         (3, "", "en", "s"),                     # empty payload
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "multimodal_arrow_digest", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "multimodal_arrow_digest", tmp_path)}
     for d, text, _, _ in docs:
         raw = text.encode("utf-8")
         assert rows[d]["n_bytes"] == len(raw), d
@@ -619,9 +482,9 @@ def test_pcm_window_energy_struct_unpack(spark, tmp_path):
         (2, "xyz", "en", "s"),              # 3 bytes -> 1 sample
         (3, "", "en", "s"),                 # empty
     ]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     rows = {r["doc_id"]: r for r in
-            _run(spark, "multimodal_pcm_window_energy", tmp_path)}
+            planted.run(spark, "multimodal_pcm_window_energy", tmp_path)}
     for d, text, _, _ in docs:
         raw = text.encode("utf-8")
         n = len(raw) // 2
@@ -643,8 +506,8 @@ def test_corpus_shuffle_interleave_round_robin(spark, tmp_path):
     within each source and the (round, source, doc_id) global
     interleave are recomputed with hashlib + plain sorts."""
     docs = [(i, f"text {i}", "en", f"src{i % 3}") for i in range(1, 16)]
-    _write_documents(tmp_path, docs)
-    out = {r["doc_id"]: r for r in _run(spark, "corpus_shuffle_interleave", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    out = {r["doc_id"]: r for r in planted.run(spark, "corpus_shuffle_interleave", tmp_path)}
 
     by_source: dict[str, list] = {}
     for d, _, _, src in docs:
@@ -652,13 +515,13 @@ def test_corpus_shuffle_interleave_round_robin(spark, tmp_path):
     pos = {}
     for src, ids in by_source.items():
         for p, d in enumerate(
-            sorted(ids, key=lambda d: _md5(f"shuffle:{d}")), start=1
+            sorted(ids, key=lambda d: planted.md5(f"shuffle:{d}")), start=1
         ):
             pos[d] = p
     global_order = sorted(pos, key=lambda d: (pos[d], out[d]["source"], d))
     for gp, d in enumerate(global_order, start=1):
         r = out[d]
-        assert r["shuffle_key"] == _md5(f"shuffle:{d}"), d
+        assert r["shuffle_key"] == planted.md5(f"shuffle:{d}"), d
         assert r["pos_in_source"] == pos[d], d
         assert r["global_pos"] == gp, d
     # round-robin property: the first |sources| global positions are
@@ -673,9 +536,9 @@ def test_personalized_pagerank_integer_grid_sequential(spark, tmp_path):
     3 iterations, seeds = customer nodes 2..8 — recomputed in plain
     Python dicts and compared rank-for-rank."""
     edges = [(1, 1), (2, 1), (3, 2), (4, 2), (5, 3), (1, 2), (6, 3)]
-    _write_purchase_graph(tmp_path, edges)
+    planted.purchase_graph(tmp_path, edges)
     out = {r["rank"]: r for r in
-           _run(spark, "graph_personalized_pagerank", tmp_path)}
+           planted.run(spark, "graph_personalized_pagerank", tmp_path)}
 
     SCALE = 10**12
     adj: dict[int, set] = {}

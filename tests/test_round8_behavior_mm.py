@@ -12,115 +12,18 @@ maintenance, and Hamilton largest-remainder apportionment.
 
 from __future__ import annotations
 
-import datetime as dt
 import hashlib
 import math
 import struct
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-# --- fixture builders ---------------------------------------------------------
-
-
-def _write_documents(tmp, rows):
-    t = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(t, str(tmp / "documents.parquet"))
-
-
-def _write_events(tmp, rows):
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array(["{}" for _ in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _write_orders(tmp, rows):
-    t = pa.table(
-        {
-            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
-            "o_totalprice": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "o_orderdate": pa.array(
-                [dt.datetime.fromisoformat(r[4]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "o_orderpriority": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "orders.parquet"))
-
-
-def _write_lineitem(tmp, rows):
-    t = pa.table(
-        {
-            "l_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "l_partkey": pa.array([r[1] for r in rows], pa.int64()),
-            "l_suppkey": pa.array([r[2] for r in rows], pa.int64()),
-            "l_linenumber": pa.array([r[3] for r in rows], pa.int32()),
-            "l_quantity": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "l_extendedprice": pa.array(
-                [float(r[5]) for r in rows], pa.float64()
-            ),
-            "l_discount": pa.array([0.0] * len(rows), pa.float64()),
-            "l_tax": pa.array([0.0] * len(rows), pa.float64()),
-            "l_returnflag": pa.array(["N"] * len(rows), pa.string()),
-            "l_linestatus": pa.array(["O"] * len(rows), pa.string()),
-            "l_shipdate": pa.array(
-                [dt.datetime.fromisoformat(r[6]) for r in rows],
-                pa.timestamp("us"),
-            ),
-        }
-    )
-    pq.write_table(t, str(tmp / "lineitem.parquet"))
-
-
-def _write_purchase_graph(tmp, cust_supp_edges):
-    orders, lineitem = [], []
-    for i, (c, s) in enumerate(sorted(set(cust_supp_edges)), start=1):
-        orders.append((i, c, "F", 1.0, "2024-01-01T00:00:00", "X"))
-        lineitem.append((i, 1, s, 1, 1.0, 1.0, "2024-01-01T00:00:00"))
-    _write_orders(tmp, orders)
-    _write_lineitem(tmp, lineitem)
-
-
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
+from tests import planted
 
 
 # --- multimodal decode stages ----------------------------------------------------
-
-
 def test_image_decode_md5_seeded_metadata(spark, tmp_path):
     docs = [(1, "an image payload", "en", "s"), (2, "另一个 payload", "en", "s")]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "multimodal_image_decode", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "multimodal_image_decode", tmp_path)}
     for d, text, _, _ in docs:
         raw = text.encode("utf-8")
         h = hashlib.md5(raw).digest()
@@ -134,9 +37,9 @@ def test_image_decode_md5_seeded_metadata(spark, tmp_path):
 
 def test_frame_sample_every_fourth_chunk(spark, tmp_path):
     text = "x" * 270  # 270 bytes -> ceil(270/32) = 9 chunks -> frames 0,4,8
-    _write_documents(tmp_path, [(1, text, "en", "s")])
+    planted.write(tmp_path, "documents", [(1, text, "en", "s")])
     rows = {r["frame_idx"]: r["frame_hex"]
-            for r in _run(spark, "multimodal_frame_sample", tmp_path)}
+            for r in planted.run(spark, "multimodal_frame_sample", tmp_path)}
     raw = text.encode("utf-8")
     expected = {}
     n_chunks = -(-len(raw) // 32)
@@ -149,8 +52,8 @@ def test_frame_sample_every_fourth_chunk(spark, tmp_path):
 
 def test_resize_digest_cycled_payload(spark, tmp_path):
     docs = [(1, "tile me", "en", "s"), (2, "y" * 5000, "en", "s")]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "multimodal_resize_digest", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "multimodal_resize_digest", tmp_path)}
     for d, text, _, _ in docs:
         raw = text.encode("utf-8")
         resized = (raw * (4096 // len(raw) + 1))[:4096]
@@ -168,8 +71,8 @@ def test_audio_vad_segments_islands(spark, tmp_path):
     quiet = "\x01" * 32   # 16 samples of tiny amplitude
     loud = "zz" * 16      # 16 samples of large amplitude
     text = quiet + loud + loud + quiet + loud  # pattern: Q L L Q L
-    _write_documents(tmp_path, [(1, text, "en", "s")])
-    (r,) = _run(spark, "multimodal_audio_vad_segments", tmp_path)
+    planted.write(tmp_path, "documents", [(1, text, "en", "s")])
+    (r,) = planted.run(spark, "multimodal_audio_vad_segments", tmp_path)
 
     raw = text.encode("utf-8")
     n = len(raw) // 2
@@ -193,8 +96,6 @@ def test_audio_vad_segments_islands(spark, tmp_path):
 
 
 # --- snapshot / changelog state ----------------------------------------------------
-
-
 def test_snapshot_diff_latest_wins_versions(spark, tmp_path):
     rows = [
         # user 1: latest at version A is event 1; version B adds event 2
@@ -208,8 +109,8 @@ def test_snapshot_diff_latest_wins_versions(spark, tmp_path):
         (5, "2024-01-10T00:00:00", 4, "view", 0.50),
         (6, "2024-01-01T00:00:00", 4, "view", 0.25),
     ]
-    _write_events(tmp_path, rows)
-    out = {r["user_id"]: r for r in _run(spark, "snapshot_diff_audit", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["user_id"]: r for r in planted.run(spark, "snapshot_diff_audit", tmp_path)}
     assert out[1]["status"] == "changed"
     assert (out[1]["a_event_id"], out[1]["b_event_id"]) == (1, 2)
     assert out[1]["cents_delta"] == 500 - 100
@@ -230,9 +131,9 @@ def test_cdc_retraction_changelog_equals_snapshot(spark, tmp_path):
         (5, "2024-01-02T00:00:00", 2, "active", 7.00),
         (6, "2024-01-01T00:00:00", 3, "active", 9.00),
     ]
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r["current_state"]: r for r in
-           _run(spark, "cdc_retraction_aggregate", tmp_path)}
+           planted.run(spark, "cdc_retraction_aggregate", tmp_path)}
     # sequential state maintenance
     state: dict[int, tuple] = {}
     for _, _, u, grp, v in rows:
@@ -252,8 +153,6 @@ def test_cdc_retraction_changelog_equals_snapshot(spark, tmp_path):
 
 
 # --- exact-integer Pearson similarity ------------------------------------------------
-
-
 def test_timeseries_similarity_exact_pearson(spark, tmp_path):
     # query user 1; user 10 perfectly correlated on shared days, user 11
     # anti-correlated, user 12 shares too few days (< 3) -> excluded
@@ -270,8 +169,8 @@ def test_timeseries_similarity_exact_pearson(spark, tmp_path):
         for d, v in sv.items():
             rows.append((eid, day(d), u, "view", v))
             eid += 1
-    _write_events(tmp_path, rows)
-    out = [r for r in _run(spark, "timeseries_similarity_topk", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    out = [r for r in planted.run(spark, "timeseries_similarity_topk", tmp_path)
            if r["query_id"] == 1]
     out.sort(key=lambda r: r["rank"])
     assert [r["user_id"] for r in out] == [10, 11]
@@ -282,14 +181,12 @@ def test_timeseries_similarity_exact_pearson(spark, tmp_path):
 
 
 # --- deterministic walks ----------------------------------------------------------------
-
-
 def test_deterministic_walks_argmin_md5(spark, tmp_path):
     # small purchase graph; walkers start at customers 1..50 that exist
     edges = [(1, 1), (1, 2), (2, 1), (2, 3), (3, 2), (3, 3)]
-    _write_purchase_graph(tmp_path, edges)
+    planted.purchase_graph(tmp_path, edges)
     out = {(r["end_type"], r["end_key"]): r["n_walkers"]
-           for r in _run(spark, "graph_deterministic_walks", tmp_path)}
+           for r in planted.run(spark, "graph_deterministic_walks", tmp_path)}
 
     adj: dict[int, list] = {}
     for c, s in edges:
@@ -302,7 +199,7 @@ def test_deterministic_walks_argmin_md5(spark, tmp_path):
             node = walkers[w]
             walkers[w] = min(
                 sorted(set(adj[node])),
-                key=lambda dst: (_md5(f"{node}|{step}|{dst}"), dst),
+                key=lambda dst: (planted.md5(f"{node}|{step}|{dst}"), dst),
             )
     census: dict[tuple, int] = {}
     for node in walkers.values():
@@ -313,8 +210,6 @@ def test_deterministic_walks_argmin_md5(spark, tmp_path):
 
 
 # --- contrastive sampling ------------------------------------------------------------------
-
-
 def test_contrastive_pairs_planted_positives_and_negs(spark, tmp_path):
     # dense 0..5 doc-id space (negative sampling indexes it directly);
     # docs 0 and 1 identical -> the only positive pair
@@ -326,8 +221,8 @@ def test_contrastive_pairs_planted_positives_and_negs(spark, tmp_path):
         (4, "fourth unrelated text content", "en", "s"),
         (5, "fifth standalone body of words", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    out = _run(spark, "contrastive_pair_sample", tmp_path)
+    planted.write(tmp_path, "documents", docs)
+    out = planted.run(spark, "contrastive_pair_sample", tmp_path)
     pos = [(r["anchor_id"], r["other_id"]) for r in out if r["label"] == "pos"]
     assert pos == [(0, 1)]
     negs = {(r["anchor_id"], r["trial"]): r["other_id"]
@@ -335,7 +230,7 @@ def test_contrastive_pairs_planted_positives_and_negs(spark, tmp_path):
     n = len(docs)
     for d in range(n):
         for trial in range(3):
-            neg_id = int(_md5(f"neg:{d}:{trial}")[:8], 16) % n
+            neg_id = int(planted.md5(f"neg:{d}:{trial}")[:8], 16) % n
             if neg_id == d or {d, neg_id} == {0, 1}:
                 assert (d, trial) not in negs
             else:
@@ -343,20 +238,18 @@ def test_contrastive_pairs_planted_positives_and_negs(spark, tmp_path):
 
 
 # --- corpus mixture planners ------------------------------------------------------------------
-
-
 def test_mixture_rebalance_rates(spark, tmp_path):
     # plant enough docs that the md5 'clean' gate keeps a known subset
     docs = []
     for i in range(60):
         docs.append((i, f"body {i}", "en", "big" if i < 45 else "small"))
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     out = {r["source"]: r for r in
-           _run(spark, "corpus_mixture_rebalance_plan", tmp_path)}
+           planted.run(spark, "corpus_mixture_rebalance_plan", tmp_path)}
 
     kept = {}
     for i, _, _, src in docs:
-        if int(_md5(f"clean:{i}")[:4], 16) % 10 != 0:
+        if int(planted.md5(f"clean:{i}")[:4], 16) % 10 != 0:
             kept[src] = kept.get(src, 0) + 1
     total, nsrc = sum(kept.values()), len(kept)
     for src, k in kept.items():
@@ -380,9 +273,9 @@ def test_temperature_mixture_hamilton_apportionment(spark, tmp_path):
         for _ in range(nd):
             docs.append((i, " ".join(["t"] * tok), "en", src))
             i += 1
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     out = {r["source"]: r for r in
-           _run(spark, "corpus_temperature_mixture_plan", tmp_path)}
+           planted.run(spark, "corpus_temperature_mixture_plan", tmp_path)}
 
     tokens = {src: nd * tok for src, (nd, tok) in sizes.items()}
     w = {src: math.floor(math.sqrt(t)) for src, t in tokens.items()}

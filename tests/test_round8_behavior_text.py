@@ -13,104 +13,19 @@ and the DuckDB oracle.
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import json as _json
 import re
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-# --- fixture builders ---------------------------------------------------------
-
-
-def _write_documents(tmp, rows):
-    """rows: list of (doc_id, text, lang, source). n_chars derived."""
-    t = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(t, str(tmp / "documents.parquet"))
-
-
-def _write_events(tmp, rows):
-    """rows: list of (event_id, ts_iso, user_id, event_type, value)."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array(["{}" for _ in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _write_orders(tmp, rows):
-    """rows: (o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-    o_orderdate_iso, o_orderpriority)."""
-    t = pa.table(
-        {
-            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
-            "o_totalprice": pa.array([float(r[3]) for r in rows], pa.float64()),
-            "o_orderdate": pa.array(
-                [dt.datetime.fromisoformat(r[4]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "o_orderpriority": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "orders.parquet"))
-
-
-def _write_embeddings(tmp, rows):
-    """rows: (vec_id, [floats], label)."""
-    t = pa.table(
-        {
-            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-            "embedding": pa.array(
-                [r[1] for r in rows], pa.list_(pa.float32())
-            ),
-            "label": pa.array([r[2] for r in rows], pa.int32()),
-        }
-    )
-    pq.write_table(t, str(tmp / "embeddings.parquet"))
-
-
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
+from tests import planted
 
 
 # --- text statistics -----------------------------------------------------------
-
-
 def test_token_stats_hand_counts(spark, tmp_path):
-    _write_documents(
-        tmp_path,
-        [
+    planted.write(tmp_path, "documents", [
             (1, "the cat sat", "en", "s"),
             (2, "a1 b2, c-d", "en", "s"),
-        ],
-    )
-    rows = {r["doc_id"]: r for r in _run(spark, "text_token_stats", tmp_path)}
+        ])
+    rows = {r["doc_id"]: r for r in planted.run(spark, "text_token_stats", tmp_path)}
     # doc 1: 3 whitespace tokens, words [the, cat, sat]
     assert rows[1]["n_tokens"] == 3 and rows[1]["n_words"] == 3
     assert rows[1]["n_chars_measured"] == len("the cat sat")
@@ -129,15 +44,15 @@ def test_langid_precedence_and_signals(spark, tmp_path):
         (6, "xyz qqq zzz", "en", "s"),        # no signal -> unknown
         (7, "the el", "en", "s"),             # tie en=1 es=1 -> en (precedence)
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "text_langid_heuristic", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "text_langid_heuristic", tmp_path)}
     expect = {1: "en", 2: "es", 3: "de", 4: "fr", 5: "zh", 6: "unknown", 7: "en"}
     got = {d: rows[d]["predicted_lang"] for d in expect}
     assert got == expect
 
     # confusion matrix over the same fixture, recomputed by hand
     conf = {(r["actual_lang"], r["predicted_lang"]): r
-            for r in _run(spark, "text_langid_confusion_matrix", tmp_path)}
+            for r in planted.run(spark, "text_langid_confusion_matrix", tmp_path)}
     # actual 'en' docs: 1->en, 6->unknown, 7->en  => n_actual=3
     assert conf[("en", "en")]["n_docs"] == 2
     assert conf[("en", "unknown")]["n_docs"] == 1
@@ -150,8 +65,8 @@ def test_langid_precedence_and_signals(spark, tmp_path):
 
 def test_quality_score_formula(spark, tmp_path):
     text = "the cat of the hat. great!"
-    _write_documents(tmp_path, [(1, text, "en", "s")])
-    (r,) = _run(spark, "text_quality_score", tmp_path)
+    planted.write(tmp_path, "documents", [(1, text, "en", "s")])
+    (r,) = planted.run(spark, "text_quality_score", tmp_path)
     toks = text.split(" ")
     n_tokens = len(toks)
     n_stop = sum(1 for t in toks if t in ("the", "a", "of", "and", "to"))
@@ -173,9 +88,9 @@ def test_length_histogram_buckets_and_tail_cap(spark, tmp_path):
         (3, " ".join(["w"] * 50), "en", "s"),    # bucket 1
         (4, " ".join(["w"] * 700), "en", "s"),   # 14 -> capped at 9
     ]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     rows = {(r["lang"], r["bucket"]): r
-            for r in _run(spark, "text_length_histogram", tmp_path)}
+            for r in planted.run(spark, "text_length_histogram", tmp_path)}
     assert rows[("en", 0)]["n_docs"] == 2
     assert rows[("en", 0)]["total_tokens"] == 59
     assert rows[("en", 0)]["bucket_lo"] == 0
@@ -196,8 +111,8 @@ def test_ngram_topk_counts_and_tiebreak(spark, tmp_path):
         (5, "a b c", "en", "s"),     # gram:  a b c
         (6, "b c d", "en", "s"),     # gram:  b c d
     ]
-    _write_documents(tmp_path, docs)
-    rows = sorted(_run(spark, "text_ngram_topk", tmp_path),
+    planted.write(tmp_path, "documents", docs)
+    rows = sorted(planted.run(spark, "text_ngram_topk", tmp_path),
                   key=lambda r: (-r["n"], r["gram"]))
     got = [(r["gram"], r["n"]) for r in rows]
     assert got == [("x y z", 3), ("a b c", 2), ("b c d", 2)]
@@ -209,8 +124,8 @@ def test_token_packing_running_offset(spark, tmp_path):
     sizes = {1: 1000, 2: 1000, 3: 100, 4: 2048, 5: 1}
     docs = [(d, " ".join(["t"] * n), "en", "srcA") for d, n in sizes.items()]
     docs.append((9, " ".join(["t"] * 5000), "en", "srcB"))  # own partition
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "text_token_packing", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "text_token_packing", tmp_path)}
     cum = 0
     for d in sorted(sizes):
         assert rows[d]["pack_id"] == cum // 2048, d
@@ -225,9 +140,9 @@ def test_benchmark_contamination_fractions(spark, tmp_path):
         (3, "w1 w2 w3 zz", "en", "src2"),       # half: {w1 w2 w3} hits
         (4, "q1 q2 q3 q4", "en", "src2"),       # clean: 0/2
     ]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     rows = {r["doc_id"]: r for r in
-            _run(spark, "text_benchmark_contamination", tmp_path)}
+            planted.run(spark, "text_benchmark_contamination", tmp_path)}
     assert set(rows) == {2, 3, 4}  # benchmark docs never scored
     assert (rows[2]["n_shingles"], rows[2]["n_contaminated"]) == (2, 2)
     assert rows[2]["contamination"] == 1.0
@@ -247,24 +162,24 @@ def test_line_dedup_clean_boilerplate_removal(spark, tmp_path):
         (3, f"{B}", "en", "s"),          # all lines removed
         (4, f"{S} u4 u4 u4", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "text_line_dedup_clean", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "text_line_dedup_clean", tmp_path)}
     assert (rows[1]["n_lines"], rows[1]["n_kept"], rows[1]["n_removed"]) == (2, 1, 1)
-    assert rows[1]["clean_md5"] == _md5("u1 u1 u1")
+    assert rows[1]["clean_md5"] == planted.md5("u1 u1 u1")
     assert (rows[2]["n_lines"], rows[2]["n_kept"]) == (3, 2)
-    assert rows[2]["clean_md5"] == _md5(f"{S} u2 u2 u2")
+    assert rows[2]["clean_md5"] == planted.md5(f"{S} u2 u2 u2")
     assert (rows[3]["n_lines"], rows[3]["n_kept"]) == (1, 0)
-    assert rows[3]["clean_md5"] == _md5("")
+    assert rows[3]["clean_md5"] == planted.md5("")
     assert rows[4]["n_kept"] == 2
 
 
 def test_shard_manifest_sequential_recomputation(spark, tmp_path):
     sizes = {d: 500 + 100 * d for d in range(1, 9)}  # 600..1300 tokens
     docs = [(d, " ".join(["tok"] * n), "en", "s") for d, n in sizes.items()]
-    _write_documents(tmp_path, docs)
-    rows = {r["shard_id"]: r for r in _run(spark, "corpus_shard_manifest", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["shard_id"]: r for r in planted.run(spark, "corpus_shard_manifest", tmp_path)}
 
-    order = sorted(sizes, key=lambda d: (_md5(f"shard:{d}"), d))
+    order = sorted(sizes, key=lambda d: (planted.md5(f"shard:{d}"), d))
     cum = 0
     shards: dict[int, list] = {}
     for d in order:
@@ -286,14 +201,14 @@ def test_shard_manifest_sequential_recomputation(spark, tmp_path):
 def test_quota_per_source_hash_order(spark, tmp_path):
     docs = [(d, f"text {d}", "en", "big") for d in range(1, 51)]
     docs += [(100 + d, f"text {100 + d}", "en", "small") for d in range(10)]
-    _write_documents(tmp_path, docs)
-    out = _run(spark, "sample_quota_per_source", tmp_path)
+    planted.write(tmp_path, "documents", docs)
+    out = planted.run(spark, "sample_quota_per_source", tmp_path)
     by_source: dict[str, list] = {}
     for r in out:
         by_source.setdefault(r["source"], []).append(r)
     big = sorted(by_source["big"], key=lambda r: r["pick_order"])
     assert len(big) == 40  # quota cap
-    expected = sorted(range(1, 51), key=lambda d: (_md5(f"quota:{d}"), d))[:40]
+    expected = sorted(range(1, 51), key=lambda d: (planted.md5(f"quota:{d}"), d))[:40]
     assert [r["doc_id"] for r in big] == expected
     assert [r["pick_order"] for r in big] == list(range(1, 41))
     assert len(by_source["small"]) == 10  # below quota: all picked
@@ -301,11 +216,11 @@ def test_quota_per_source_hash_order(spark, tmp_path):
 
 def test_stratified_sample_hash_threshold(spark, tmp_path):
     docs = [(d, f"text {d}", "en", "s") for d in range(1, 301)]
-    _write_documents(tmp_path, docs)
-    out = {r["doc_id"] for r in _run(spark, "sample_stratified_documents", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    out = {r["doc_id"] for r in planted.run(spark, "sample_stratified_documents", tmp_path)}
     expected = {
         d for d in range(1, 301)
-        if int(_md5(f"sample:{d}")[:8], 16) % 100 < 10
+        if int(planted.md5(f"sample:{d}")[:8], 16) % 100 < 10
     }
     assert out == expected and 0 < len(out) < 300
 
@@ -316,10 +231,10 @@ def test_doc_fingerprint_hashlib_recomputation(spark, tmp_path):
         (2, "hello world", "en", "s"),   # same normalized content
         (3, "different", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "doc_fingerprint", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "doc_fingerprint", tmp_path)}
     for d, text, _, _ in docs:
-        fp = _md5(re.sub(r"\s+", " ", text.strip()).lower())
+        fp = planted.md5(re.sub(r"\s+", " ", text.strip()).lower())
         assert rows[d]["fp"] == fp, d
         assert rows[d]["fp_bucket"] == int(fp[:8], 16)
     assert rows[1]["fp"] == rows[2]["fp"]  # normalization collapses
@@ -330,8 +245,8 @@ def test_multimodal_binary_meta_fields(spark, tmp_path):
         (1, "x" * 255, "en", "png_source"),
         (2, "y" * 256, "en", "mp4"),
     ]
-    _write_documents(tmp_path, docs)
-    rows = {r["doc_id"]: r for r in _run(spark, "multimodal_binary_meta", tmp_path)}
+    planted.write(tmp_path, "documents", docs)
+    rows = {r["doc_id"]: r for r in planted.run(spark, "multimodal_binary_meta", tmp_path)}
     assert rows[1]["n_bytes"] == 255 and rows[1]["size_class"] == "small"
     assert rows[2]["n_bytes"] == 256 and rows[2]["size_class"] == "large"
     assert rows[1]["magic_hex"] == "png_"[:4].encode().hex()
@@ -339,8 +254,6 @@ def test_multimodal_binary_meta_fields(spark, tmp_path):
 
 
 # --- dedup / graph --------------------------------------------------------------
-
-
 def test_exact_dedup_planted_copies(spark, tmp_path):
     docs = [
         (5, "same text", "en", "s"),
@@ -348,9 +261,9 @@ def test_exact_dedup_planted_copies(spark, tmp_path):
         (9, "same text", "en", "s"),
         (7, "unique", "en", "s"),
     ]
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     rows = {r["keep_id"]: r["n_copies"]
-            for r in _run(spark, "dedup_exact_documents", tmp_path)}
+            for r in planted.run(spark, "dedup_exact_documents", tmp_path)}
     assert rows == {3: 3, 7: 1}
 
 
@@ -362,8 +275,8 @@ def test_ngram_jaccard_hand_overlap(spark, tmp_path):
         (30, "p q r s", "en", "s"),   # disjoint
         (11, "a b c d", "en", "s"),   # excluded by the sample predicate
     ]
-    _write_documents(tmp_path, docs)
-    out = _run(spark, "dedup_ngram_jaccard", tmp_path)
+    planted.write(tmp_path, "documents", docs)
+    out = planted.run(spark, "dedup_ngram_jaccard", tmp_path)
     assert len(out) == 1
     r = out[0]
     assert (r["doc_a"], r["doc_b"], r["n_inter"]) == (10, 20, 1)
@@ -378,9 +291,9 @@ def test_cluster_size_report_planted_clusters(spark, tmp_path):
         + [(i, "zeta eta theta iota kappa", "en", "s") for i in (4, 5)]
         + [(6, "lonely unique document text here", "en", "s")]
     )
-    _write_documents(tmp_path, docs)
+    planted.write(tmp_path, "documents", docs)
     rows = {r["cluster_size"]: r
-            for r in _run(spark, "dedup_cluster_size_report", tmp_path)}
+            for r in planted.run(spark, "dedup_cluster_size_report", tmp_path)}
     assert rows[3]["n_clusters"] == 1 and rows[3]["n_docs"] == 3
     assert rows[3]["n_removable"] == 2
     assert rows[2]["n_clusters"] == 1 and rows[2]["n_removable"] == 1
@@ -392,8 +305,8 @@ def test_triangle_enumerate_planted_clique(spark, tmp_path):
         [(i, "alpha beta gamma delta epsilon", "en", "s") for i in (1, 2, 3)]
         + [(i, "zeta eta theta iota kappa", "en", "s") for i in (8, 9)]  # edge, no triangle
     )
-    _write_documents(tmp_path, docs)
-    out = _run(spark, "graph_triangle_enumerate", tmp_path)
+    planted.write(tmp_path, "documents", docs)
+    out = planted.run(spark, "graph_triangle_enumerate", tmp_path)
     assert [(r["doc_x"], r["doc_y"], r["doc_z"]) for r in out] == [(1, 2, 3)]
 
 
@@ -409,8 +322,8 @@ def test_count_min_overestimate_axiom(spark, tmp_path):
     for u in range(2, 22):
         rows.append((eid, "2024-01-01T11:00:00", u, "view", 1.0))
         eid += 1
-    _write_events(tmp_path, rows)
-    out = {r["user_id"]: r for r in _run(spark, "sketch_count_min", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["user_id"]: r for r in planted.run(spark, "sketch_count_min", tmp_path)}
     true = {"1": 50, **{str(u): 1 for u in range(2, 22)}}
     assert {u: r["true_count"] for u, r in out.items()} == true
     for u, r in out.items():
@@ -420,8 +333,6 @@ def test_count_min_overestimate_axiom(spark, tmp_path):
 
 
 # --- similarity ------------------------------------------------------------------
-
-
 def test_cosine_topk_planted_geometry(spark, tmp_path):
     vecs = [
         (1, [1.0, 0.0, 0.0, 0.0], 0),   # query
@@ -430,8 +341,8 @@ def test_cosine_topk_planted_geometry(spark, tmp_path):
         (12, [0.0, 1.0, 0.0, 0.0], 0),  # orthogonal -> 0
         (13, [-1.0, 0.0, 0.0, 0.0], 0),  # opposite -> -1
     ]
-    _write_embeddings(tmp_path, vecs)
-    out = [r for r in _run(spark, "embedding_cosine_topk", tmp_path)
+    planted.write(tmp_path, "embeddings", vecs)
+    out = [r for r in planted.run(spark, "embedding_cosine_topk", tmp_path)
            if r["query_id"] == 1]
     out.sort(key=lambda r: r["rank"])
     assert [r["neighbor_id"] for r in out] == [10, 11, 12, 13]
@@ -446,9 +357,9 @@ def test_label_centroids_hand_means(spark, tmp_path):
         (2, [3.0, 5.0], 0),
         (3, [10.0, 20.0], 1),
     ]
-    _write_embeddings(tmp_path, vecs)
+    planted.write(tmp_path, "embeddings", vecs)
     rows = {(r["label"], r["dim"]): r
-            for r in _run(spark, "embedding_label_centroids", tmp_path)}
+            for r in planted.run(spark, "embedding_label_centroids", tmp_path)}
     assert rows[(0, 1)]["centroid_v"] == 2.0   # dims are 1-indexed
     assert rows[(0, 2)]["centroid_v"] == 4.0
     assert rows[(1, 1)]["centroid_v"] == 10.0
@@ -462,8 +373,8 @@ def test_vector_hygiene_audit(spark, tmp_path):
         (3, [1.0, 0.0], 1),
         (4, [1.0, 0.0, 0.0], 1),   # ragged: 3 dims in a 2-dim label
     ]
-    _write_embeddings(tmp_path, vecs)
-    rows = {r["label"]: r for r in _run(spark, "embedding_vector_hygiene", tmp_path)}
+    planted.write(tmp_path, "embeddings", vecs)
+    rows = {r["label"]: r for r in planted.run(spark, "embedding_vector_hygiene", tmp_path)}
     assert rows[0]["n_vectors"] == 2
     assert (rows[0]["min_dims"], rows[0]["max_dims"]) == (2, 2)
     assert rows[0]["mean_norm"] == 2.5
@@ -474,9 +385,9 @@ def test_vector_hygiene_audit(spark, tmp_path):
 def test_covariance_stats_perfect_correlation(spark, tmp_path):
     xs = [0.01, 0.02, 0.04]
     vecs = [(i, [x, 2 * x], 0) for i, x in enumerate(xs, start=1)]
-    _write_embeddings(tmp_path, vecs)
+    planted.write(tmp_path, "embeddings", vecs)
     rows = {(r["dim_i"], r["dim_j"]): r
-            for r in _run(spark, "embedding_covariance_stats", tmp_path)}
+            for r in planted.run(spark, "embedding_covariance_stats", tmp_path)}
     Q = 100000000.0
     n = len(xs)
 
@@ -497,8 +408,6 @@ def test_covariance_stats_perfect_correlation(spark, tmp_path):
 
 
 # --- temporal / window batch twins ------------------------------------------------
-
-
 def test_tumbling_daily_window_boundaries(spark, tmp_path):
     rows = [
         (1, "2024-05-01T00:00:00", 1, "view", 1.50),   # inclusive start
@@ -506,9 +415,9 @@ def test_tumbling_daily_window_boundaries(spark, tmp_path):
         (3, "2024-05-02T00:00:00", 3, "view", 4.00),   # next window
         (4, "2024-05-02T12:00:00", 4, "click", 8.00),
     ]
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {(r["win_start"].date().isoformat(), r["event_type"]): r
-           for r in _run(spark, "window_tumbling_daily", tmp_path)}
+           for r in planted.run(spark, "window_tumbling_daily", tmp_path)}
     r = out[("2024-05-01", "view")]
     assert r["n_events"] == 2 and r["sum_value"] == 3.75
     assert (r["win_end"] - r["win_start"]) == dt.timedelta(days=1)
@@ -534,32 +443,26 @@ def test_funnel_stage_ordering(spark, tmp_path):
         # user 6: no view at all -> not in the funnel
         (12, t(1), 6, "purchase", 1.0),
     ]
-    _write_events(tmp_path, rows)
-    out = {r["user_id"]: r["funnel_stage"] for r in _run(spark, "events_funnel", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["user_id"]: r["funnel_stage"] for r in planted.run(spark, "events_funnel", tmp_path)}
     assert out == {1: "purchased", 2: "clicked", 3: "viewed",
                    4: "viewed", 5: "clicked"}
 
 
 def test_asof_join_latest_at_or_before(spark, tmp_path):
-    _write_orders(
-        tmp_path,
-        [
+    planted.write(tmp_path, "orders", [
             (1, 7, "F", 10.00, "2024-01-01T00:00:00", "X"),
             (2, 7, "F", 20.00, "2024-01-05T00:00:00", "X"),
             (3, 7, "F", 5.00, "2024-01-05T00:00:00", "X"),  # same-date tie -> max 20
             (4, 8, "F", 99.00, "2024-06-01T00:00:00", "X"),
-        ],
-    )
-    _write_events(
-        tmp_path,
-        [
+        ])
+    planted.write(tmp_path, "events", [
             (1, "2024-01-03T12:00:00", 7, "view", 1.0),   # -> Jan 1 @ 10
             (2, "2024-01-05T00:00:00", 7, "view", 1.0),   # at-or-before -> Jan 5 @ 20
             (3, "2023-12-01T00:00:00", 7, "view", 1.0),   # before any order -> null
             (4, "2024-01-02T00:00:00", 8, "view", 1.0),   # own orders only -> null
-        ],
-    )
-    rows = {r["event_id"]: r for r in _run(spark, "asof_join_last_order", tmp_path)}
+        ])
+    rows = {r["event_id"]: r for r in planted.run(spark, "asof_join_last_order", tmp_path)}
     assert rows[1]["last_order_date"].date().isoformat() == "2024-01-01"
     assert rows[1]["last_order_price"] == 10.0
     assert rows[2]["last_order_date"].date().isoformat() == "2024-01-05"
@@ -579,8 +482,8 @@ def test_twap_held_value_weights(spark, tmp_path):
         (5, t0.isoformat(), 8, "view", 6.00),
         (6, (t0 + dt.timedelta(seconds=50)).isoformat(), 8, "view", 7.00),
     ]
-    _write_events(tmp_path, rows)
-    out = {r["user_id"]: r for r in _run(spark, "timeseries_twap_per_user", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["user_id"]: r for r in planted.run(spark, "timeseries_twap_per_user", tmp_path)}
     assert out[7]["n_spans"] == 2 and out[7]["total_s"] == 200
     assert abs(out[7]["twap"] - 2.0) < 1e-12     # (100*100 + 300*100)/200/100
     assert out[8]["n_spans"] == 1 and out[8]["total_s"] == 50
@@ -598,8 +501,8 @@ def test_time_to_convert_percentiles(spark, tmp_path):
     # user 5: purchase BEFORE first view -> never converts
     rows.append((eid, t0.isoformat(), 5, "purchase", 1.0)); eid += 1
     rows.append((eid, (t0 + dt.timedelta(seconds=10)).isoformat(), 5, "view", 1.0)); eid += 1
-    _write_events(tmp_path, rows)
-    (r,) = _run(spark, "events_time_to_convert", tmp_path)
+    planted.write(tmp_path, "events", rows)
+    (r,) = planted.run(spark, "events_time_to_convert", tmp_path)
 
     def q_interp(sorted_vals, p):
         h = p * (len(sorted_vals) - 1)
@@ -615,8 +518,6 @@ def test_time_to_convert_percentiles(spark, tmp_path):
 
 
 # --- D-class hardening: ops with mild derived arithmetic get real tests ------
-
-
 def test_interarrival_log2_buckets(spark, tmp_path):
     t0 = dt.datetime.fromisoformat("2024-05-01T00:00:00")
     gaps = [0, 1, 2, 3, 7, 8, 600]  # includes the zero gap and 2^k edges
@@ -625,9 +526,9 @@ def test_interarrival_log2_buckets(spark, tmp_path):
     for i, g in enumerate(gaps, start=1):
         t = t + dt.timedelta(seconds=g)
         rows.append((i, t.isoformat(), 7, "view", 1.0))
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {r["log2_bucket"]: r for r in
-           _run(spark, "events_interarrival_histogram", tmp_path)}
+           planted.run(spark, "events_interarrival_histogram", tmp_path)}
 
     def bucket(g):
         return len(bin(g)[2:]) if g > 0 else 1  # length of binary repr; bin(0)='0'
@@ -664,14 +565,14 @@ def test_yoy_revenue_growth_deltas(spark, tmp_path):
         "c_acctbal": _pa.array([0.0, 0.0], _pa.float64()),
         "c_mktsegment": _pa.array(["SEG", "SEG"], _pa.string()),
     }), str(tmp_path / "customer.parquet"))
-    _write_orders(tmp_path, [
+    planted.write(tmp_path, "orders", [
         (1, 1, "F", 10.00, "1994-06-01T00:00:00", "X"),
         (2, 1, "F", 25.00, "1995-06-01T00:00:00", "X"),
         (3, 1, "F", 15.00, "1996-06-01T00:00:00", "X"),
         (4, 2, "F", 40.00, "1995-06-01T00:00:00", "X"),
     ])
     rows = {(r["nation"], r["yr"]): r for r in
-            _run(spark, "yoy_revenue_growth", tmp_path)}
+            planted.run(spark, "yoy_revenue_growth", tmp_path)}
     a94, a95, a96 = rows[("AAA", 1994)], rows[("AAA", 1995)], rows[("AAA", 1996)]
     assert a94["prev_cents"] is None and a94["delta_cents"] is None
     assert a95["delta_cents"] == 2500 - 1000
@@ -694,9 +595,9 @@ def test_retention_cohort_presence_matrix(spark, tmp_path):
             day = t0 + dt.timedelta(weeks=w, days=2)
             rows.append((eid, f"{day.isoformat()}T09:00:00", u, "view", 1.0))
             eid += 1
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {(r["cohort_week"], r["week_offset"]): r["n_active_users"]
-           for r in _run(spark, "events_retention_cohort", tmp_path)}
+           for r in planted.run(spark, "events_retention_cohort", tmp_path)}
     assert out == {
         ("2024-01-01", 0): 2,   # users 1, 2 active in their cohort week
         ("2024-01-01", 1): 1,   # user 2
@@ -718,9 +619,9 @@ def test_rfm_ntile_arithmetic_uneven_n(spark, tmp_path):
             ok += 1
             orders.append((ok, k, "F", float(k),
                            f"1995-01-{k:02d}T00:00:00", "X"))
-    _write_orders(tmp_path, orders)
+    planted.write(tmp_path, "orders", orders)
     out = {(r["r_score"], r["f_score"], r["m_score"]): r["n_customers"]
-           for r in _run(spark, "rfm_customer_segments", tmp_path)}
+           for r in planted.run(spark, "rfm_customer_segments", tmp_path)}
 
     def ntile4(rank, n):
         big, small = n // 4 + 1, n // 4
@@ -753,8 +654,8 @@ def test_f3_null_pass_three_valued_logic(spark, tmp_path):
         (5, "2024-01-01T00:00:00", 5, "view", 1.0, _json.dumps({"k": "x"})),  # uncastable -> PASS
         (6, "2024-01-01T00:00:00", 6, "view", 1.0, _json.dumps({"k": 0})),    # 0 % 10 == 0 -> drop
     ]
-    _write_events_props(tmp_path, rows)
-    out = {r["event_id"]: r["k_raw"] for r in _run(spark, "f3_null_pass_filter", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["event_id"]: r["k_raw"] for r in planted.run(spark, "f3_null_pass_filter", tmp_path)}
     assert set(out) == {3, 4, 5}
     assert out[3] == 7 and out[4] is None and out[5] is None
 
@@ -770,9 +671,9 @@ def test_d5_first_occurrence_tiebreak(spark, tmp_path):
         (6, "2024-01-01T00:00:00", 1, "click", 1.0),  # other type: own winner
         (7, "2023-12-31T00:00:00", 2, "view", 1.0),   # other user
     ]
-    _write_events(tmp_path, rows)
+    planted.write(tmp_path, "events", rows)
     out = {(r["user_id"], r["event_type"]): r["event_id"]
-           for r in _run(spark, "d5_first_occurrence_dedup", tmp_path)}
+           for r in planted.run(spark, "d5_first_occurrence_dedup", tmp_path)}
     assert out == {(1, "view"): 4, (1, "click"): 6, (2, "view"): 7}
 
 
@@ -785,28 +686,10 @@ def test_cdc_upsert_latest_wins_tiebreak(spark, tmp_path):
         (3, "2024-01-03T00:00:00", 1, "done", 4.00),      # ... higher id WINS
         (4, "2024-01-05T00:00:00", 2, "active", 8.00),
     ]
-    _write_events(tmp_path, rows)
-    out = {r["user_id"]: r for r in _run(spark, "cdc_upsert_compaction", tmp_path)}
+    planted.write(tmp_path, "events", rows)
+    out = {r["user_id"]: r for r in planted.run(spark, "cdc_upsert_compaction", tmp_path)}
     assert out[1]["last_event_type"] == "done"
     assert out[1]["last_value_cents"] == 400
     assert out[1]["n_versions"] == 3
     assert out[1]["last_ts_iso"] == "2024-01-03T00:00:00"
     assert out[2]["n_versions"] == 1
-
-
-def _write_events_props(tmp, rows):
-    """events writer where every row carries an explicit props JSON."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))

@@ -20,39 +20,25 @@ HAVING > 5), 24 orders (LIMIT 20 bites), one 'P'-status pair of orders
 
 from __future__ import annotations
 
-import datetime as dt
-import math
 from collections import defaultdict
 
 import pytest
 
-from tests.test_round9_behavior_tpch import (
-    CUSTOMER,
+from tests import planted
+from tests.planted import (
     CUST_BY_KEY,
+    CUSTOMER,
     LINEITEM,
-    NATION,
     NATION_NAME,
     ORDERS,
-    ORDER_BY_KEY,
     SUPPLIER,
-    _d,
-    _run,
-    _write_world,
 )
 
 
-@pytest.fixture()
-def world(tmp_path):
-    _write_world(tmp_path)
-    return tmp_path
-
-
 # --- join-type matrix -----------------------------------------------------------
-
-
 def test_semi_and_anti_join_partition_customers(spark, world):
-    semi = _run(spark, "semi_join_customers_with_orders", world)
-    anti = _run(spark, "anti_join_customers_without_orders", world)
+    semi = planted.run(spark, "semi_join_customers_with_orders", world)
+    anti = planted.run(spark, "anti_join_customers_without_orders", world)
 
     with_big = {o[1] for o in ORDERS if o[3] > 100000}
     assert {r["c_custkey"] for r in semi} == with_big
@@ -64,7 +50,7 @@ def test_semi_and_anti_join_partition_customers(spark, world):
 
 
 def test_full_outer_nation_balance_planted(spark, world):
-    got = _run(spark, "full_outer_nation_balance", world)
+    got = planted.run(spark, "full_outer_nation_balance", world)
 
     cust_side = defaultdict(lambda: [0.0, 0])
     for c in CUSTOMER:
@@ -94,7 +80,7 @@ def test_full_outer_nation_balance_planted(spark, world):
 
 
 def test_right_outer_supplier_lines_planted(spark, world):
-    got = _run(spark, "right_outer_supplier_lines", world)
+    got = planted.run(spark, "right_outer_supplier_lines", world)
 
     agg = {s[0]: [0, None] for s in SUPPLIER}  # count(col) skips nulls -> 0
     for row in LINEITEM:
@@ -114,21 +100,8 @@ def test_right_outer_supplier_lines_planted(spark, world):
             assert r["sum_price"] == pytest.approx(total)
 
 
-# --- grouping-set trio ----------------------------------------------------------
-
-
-def _order_groups():
-    """(priority, status) -> [n, total_price] over the planted orders."""
-    g = defaultdict(lambda: [0, 0.0])
-    for o in ORDERS:
-        acc = g[(o[5], o[2])]
-        acc[0] += 1
-        acc[1] += o[3]
-    return g
-
-
 def test_rollup_returnflag_status_planted(spark, world):
-    got = _run(spark, "rollup_returnflag_status", world)
+    got = planted.run(spark, "rollup_returnflag_status", world)
 
     expected = defaultdict(lambda: [0, 0.0])
     for row in LINEITEM:
@@ -146,7 +119,7 @@ def test_rollup_returnflag_status_planted(spark, world):
 
 
 def test_cube_priority_status_planted(spark, world):
-    got = _run(spark, "cube_priority_status", world)
+    got = planted.run(spark, "cube_priority_status", world)
 
     expected = defaultdict(lambda: [0, 0.0])
     for o in ORDERS:
@@ -161,7 +134,7 @@ def test_cube_priority_status_planted(spark, world):
 
 
 def test_grouping_sets_priority_status_planted(spark, world):
-    got = _run(spark, "grouping_sets_priority_status", world)
+    got = planted.run(spark, "grouping_sets_priority_status", world)
 
     # grouping_id bitmask: bit (n-1-i) set when column i is aggregated away
     expected = defaultdict(lambda: [0, 0.0])
@@ -181,10 +154,8 @@ def test_grouping_sets_priority_status_planted(spark, world):
 
 
 # --- reshape pair ---------------------------------------------------------------
-
-
 def test_pivot_status_by_priority_planted(spark, world):
-    got = _run(spark, "pivot_status_by_priority", world)
+    got = planted.run(spark, "pivot_status_by_priority", world)
 
     counts = defaultdict(lambda: {"O": 0, "F": 0, "P": 0})
     for o in ORDERS:
@@ -204,7 +175,7 @@ def test_pivot_status_by_priority_planted(spark, world):
 
 
 def test_unpivot_nation_metrics_planted(spark, world):
-    got = _run(spark, "unpivot_nation_metrics", world)
+    got = planted.run(spark, "unpivot_nation_metrics", world)
 
     per_nation = defaultdict(lambda: [0, 0, 0])  # customers, orders, urgent
     orders_by_cust = defaultdict(list)
@@ -229,10 +200,8 @@ def test_unpivot_nation_metrics_planted(spark, world):
 
 
 # --- set ops / sort-limit / having ----------------------------------------------
-
-
 def test_set_ops_customer_segments_planted(spark, world):
-    got = _run(spark, "set_ops_customer_segments", world)
+    got = planted.run(spark, "set_ops_customer_segments", world)
 
     building = {c[0] for c in CUSTOMER if c[4] == "BUILDING"}
     auto = {c[0] for c in CUSTOMER if c[4] == "AUTOMOBILE"}
@@ -244,7 +213,7 @@ def test_set_ops_customer_segments_planted(spark, world):
 
 
 def test_sort_limit_top_orders_planted(spark, world):
-    got = _run(spark, "sort_limit_top_orders", world)
+    got = planted.run(spark, "sort_limit_top_orders", world)
 
     ranked = sorted(ORDERS, key=lambda o: (-o[3], o[0]))[:20]
     assert len(ORDERS) > 20  # the limit actually truncates
@@ -256,7 +225,7 @@ def test_sort_limit_top_orders_planted(spark, world):
 
 
 def test_agg_having_priorities_planted(spark, world):
-    got = _run(spark, "agg_having_priorities", world)
+    got = planted.run(spark, "agg_having_priorities", world)
 
     groups = defaultdict(lambda: [0, 0.0])
     for o in ORDERS:
@@ -273,8 +242,6 @@ def test_agg_having_priorities_planted(spark, world):
 
 
 # --- per-group ranking / running frames ------------------------------------------
-
-
 def _orders_per_customer():
     by_cust = defaultdict(list)
     for o in ORDERS:
@@ -283,7 +250,7 @@ def _orders_per_customer():
 
 
 def test_topk_orders_per_customer_planted(spark, world):
-    got = _run(spark, "topk_orders_per_customer", world)
+    got = planted.run(spark, "topk_orders_per_customer", world)
 
     expected = {}
     for ck, orders in _orders_per_customer().items():
@@ -301,13 +268,13 @@ def test_topk_orders_per_customer_planted(spark, world):
 
 
 def test_window_running_sum_planted(spark, world):
-    got = _run(spark, "window_running_sum", world)
+    got = planted.run(spark, "window_running_sum", world)
 
     expected = {}
     for ck, orders in _orders_per_customer().items():
         run = 0.0
         for seq, o in enumerate(
-            sorted(orders, key=lambda o: (_d(o[4]), o[0])), start=1
+            sorted(orders, key=lambda o: (planted.day(o[4]), o[0])), start=1
         ):
             run += o[3]
             expected[o[0]] = (run, seq)
@@ -319,12 +286,12 @@ def test_window_running_sum_planted(spark, world):
 
 
 def test_window_function_battery_planted(spark, world):
-    got = _run(spark, "window_function_battery", world)
+    got = planted.run(spark, "window_function_battery", world)
 
     cents = lambda p: round(p * 100)  # noqa: E731
     expected = {}
     for ck, orders in _orders_per_customer().items():
-        run = sorted(orders, key=lambda o: (_d(o[4]), o[0]))
+        run = sorted(orders, key=lambda o: (planted.day(o[4]), o[0]))
         n = len(run)
         base, extra = divmod(n, 4)
         for i, o in enumerate(run):
@@ -361,10 +328,8 @@ def test_window_function_battery_planted(spark, world):
 
 
 # --- market basket ---------------------------------------------------------------
-
-
 def test_market_basket_pairs_planted(spark, world):
-    got = _run(spark, "market_basket_pairs", world)
+    got = planted.run(spark, "market_basket_pairs", world)
 
     support = defaultdict(int)
     baskets = defaultdict(set)
@@ -385,8 +350,6 @@ def test_market_basket_pairs_planted(spark, world):
 
 
 # --- ntile distribution sanity (device check, not an engine query) ---------------
-
-
 def test_battery_ntile_matches_floor_distribution():
     """Pin the third implementation's ntile against the ANSI definition
     on a case bigger than the world: 10 rows into 4 buckets = 3/3/2/2."""

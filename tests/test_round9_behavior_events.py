@@ -1,6 +1,22 @@
-"""Behaviour tests for the scalar / function-battery query family
-(plans/queries_scalar.py) over the planted events world
-(tests/planted.py).
+"""Round-9 behavior tests, batch 3: the pipeline scalar/aggregate family
+over a planted events world (COVERAGE.md inventory class D -> B).
+
+Third implementations are plain-Python loops: JSON fields re-extracted
+with the stdlib json module, envelopes rebuilt with json.dumps in
+struct-field order, percentiles by the shared linear-interpolation
+definition (rank = p*(n-1)), the trailing-1h RANGE frame by an explicit
+[t-3600, t] scan including ts ties (frame peers), and the email
+validation regex via Python re — none of it shared with the Spark plans
+or the DuckDB oracles.
+
+The planted events grid covers every branch: allowlisted and rejected
+event types, k values divisible by 10 and 13 (F3's drop set), k = 0
+(E1's division guard), a wrong-typed '{"k": "x"}' payload (valid JSON,
+uncastable field — the row that exposed the round-9 e2 regression where
+from_json PERMISSIVE called it corrupt while the reference's JSON.parse
+semantics say parsed-with-null), missing-k '{}', two event_ids
+divisible by 97 (e2's deterministic manglees), a purchase-free user,
+an error-free user, and a timestamp tie inside one user's RANGE frame.
 """
 
 from __future__ import annotations
@@ -16,35 +32,6 @@ import pytest
 
 from tests import planted
 from tests.planted import EVENTS
-
-
-def test_f3_null_pass_three_valued_logic(spark, tmp_path):
-    """The reference's F3/F4 semantics (index.js:167-184): a record
-    whose flag is ABSENT must PASS the negated filter — SQL's default
-    3VL would silently drop it (NOT(NULL OR ...) = NULL = drop). The
-    planted corpus pins every branch: divisible-by-10 drop,
-    divisible-by-13 drop, other-value pass, null/absent PASS."""
-    rows = [
-        (1, "2024-01-01T00:00:00", 1, "view", 1.0, json.dumps({"k": 20})),   # drop (%10)
-        (2, "2024-01-01T00:00:00", 2, "view", 1.0, json.dumps({"k": 26})),   # drop (%13)
-        (3, "2024-01-01T00:00:00", 3, "view", 1.0, json.dumps({"k": 7})),    # pass
-        (4, "2024-01-01T00:00:00", 4, "view", 1.0, "{}"),                     # absent -> PASS
-        (5, "2024-01-01T00:00:00", 5, "view", 1.0, json.dumps({"k": "x"})),  # uncastable -> PASS
-        (6, "2024-01-01T00:00:00", 6, "view", 1.0, json.dumps({"k": 0})),    # 0 % 10 == 0 -> drop
-    ]
-    planted.write(tmp_path, "events", rows)
-    out = {r["event_id"]: r["k_raw"] for r in planted.run(spark, "f3_null_pass_filter", tmp_path)}
-    assert set(out) == {3, 4, 5}
-    assert out[3] == 7 and out[4] is None and out[5] is None
-
-
-# The pipeline scalar/aggregate family over the planted events world.
-# Third implementations are plain-Python loops: JSON fields
-# re-extracted with the stdlib json module, envelopes rebuilt with
-# json.dumps in struct-field order, percentiles by the shared
-# linear-interpolation definition (rank = p*(n-1)), the trailing-1h
-# RANGE frame by an explicit [t-3600, t] scan including ts ties (frame
-# peers), and the email validation regex via Python re.
 
 
 ALLOWED = {"click", "view", "purchase", "signup"}  # index.js:146-153 allowlist
@@ -182,6 +169,104 @@ def test_e1_error_isolation_planted(spark, events_dir):
     assert zero_k == {5, 7, 8}
 
 
+def test_e2_corrupt_record_routing_planted(spark, events_dir):
+    got = {r["event_id"]: r for r in planted.run(spark, "e2_corrupt_record_routing", events_dir)}
+    for eid, _, uid, _, _, props in EVENTS:
+        r = got[eid]
+        payload = props[:3] if eid % 97 == 0 else props
+        try:
+            json.loads(payload)
+            valid = True
+        except ValueError:
+            valid = False
+        if valid:
+            assert r["disposition"] == "parsed"
+            assert r["k"] == planted.k_of(payload)
+            assert r["corrupt_payload"] is None
+        else:
+            assert r["disposition"] == "corrupt"
+            assert r["k"] is None
+            assert r["corrupt_payload"] == payload
+    # the regression row: valid JSON with an uncastable field is PARSED
+    assert got[7]["disposition"] == "parsed" and got[7]["k"] is None
+    assert {e for e, r in got.items() if r["disposition"] == "corrupt"} == {97, 194}
+
+
+# --- null-safe join ----------------------------------------------------------------
+def test_nullsafe_join_dispositions_planted(spark, events_dir):
+    got = {r["k_disp"]: r for r in planted.run(spark, "nullsafe_join_dispositions", events_dir)}
+    groups = defaultdict(int)
+    for r in EVENTS:
+        k = None if r[3] == "error" else r[3]
+        groups[k if k is not None else "<null>"] += 1
+    assert set(got) == set(groups)
+    for disp, n in groups.items():
+        assert got[disp]["n_rows"] == n
+        assert got[disp]["n_dim"] == n  # the dim side counts the same rows
+        assert got[disp]["n_values"] == n  # value is never NULL here
+    assert got["<null>"]["n_rows"] == 3  # NULL keys matched, not dropped
+
+
+def test_agg_value_percentiles_planted(spark, events_dir):
+    got = {r["event_type"]: r for r in planted.run(spark, "agg_value_percentiles", events_dir)}
+    by_type = defaultdict(list)
+    for r in EVENTS:
+        by_type[r[3]].append(r[4])
+    assert set(got) == set(by_type)
+    for etype, vals in by_type.items():
+        assert got[etype]["p50"] == pytest.approx(planted.quantile_cont(vals, 0.5))
+        assert got[etype]["p90"] == pytest.approx(planted.quantile_cont(vals, 0.9))
+        assert got[etype]["p99"] == pytest.approx(planted.quantile_cont(vals, 0.99))
+        assert got[etype]["n"] == len(vals)
+
+
+def test_agg_exact_percentiles_planted(spark, events_dir):
+    got = planted.run(spark, "agg_exact_percentiles", events_dir)
+    by_type = defaultdict(list)
+    for r in EVENTS:
+        by_type[r[3]].append(r[4])
+    assert [r["event_type"] for r in got] == sorted(by_type)
+    for r in got:
+        vals = by_type[r["event_type"]]
+        for col, p in (("p25", 0.25), ("p50", 0.50), ("p75", 0.75)):
+            assert r[col] == pytest.approx(planted.quantile_cont(vals, p)), (
+                r["event_type"],
+                col,
+            )
+        assert r["n_values"] == len(vals)
+
+
+# --- RANGE-frame moving sum --------------------------------------------------------
+def test_window_range_frame_moving_sum_planted(spark, events_dir):
+    got = planted.run(spark, "window_range_frame_moving_sum", events_dir)
+
+    epoch = lambda s: int(  # noqa: E731
+        dt.datetime.fromisoformat(s).replace(tzinfo=dt.timezone.utc).timestamp()
+    )
+    expected = {}
+    by_user = defaultdict(list)
+    for r in EVENTS:
+        by_user[r[2]].append(r)
+    for uid, rows in by_user.items():
+        for eid, ts, _, _, value, _ in rows:
+            t = epoch(ts)
+            cents = n = 0
+            for _, ts2, _, _, v2, _ in rows:  # peers at equal ts included
+                if t - 3600 <= epoch(ts2) <= t:
+                    cents += round(v2 * 100)
+                    n += 1
+            expected[eid] = (cents, n)
+    assert [r["event_id"] for r in got] == [
+        e for _, e in sorted((r["user_id"], r["event_id"]) for r in got)
+    ]
+    assert len(got) == len(EVENTS)
+    for r in got:
+        cents, n = expected[r["event_id"]]
+        assert (r["trailing_1h_cents"], r["trailing_1h_events"]) == (cents, n), r
+    # planted tie: events 3 and 4 share a timestamp, so each sees the other
+    assert expected[3] == expected[4] and expected[3][1] == 3
+
+
 # --- email validation over a planted customer table --------------------------------
 CUSTOMERS_F8 = [  # (c_custkey, c_name) — keys chosen to hit every CASE branch
     (3, "Cust Three"),  # default: cust.three@corp.example.org (valid, clean)
@@ -258,41 +343,3 @@ def test_p8_array_transform_slice_planted(spark, tmp_path):
         assert got[doc_id]["top_tokens"] == "|".join(t.upper() for t in tokens[:5])
         assert got[doc_id]["n_tokens"] == len(tokens)
     assert got[2]["top_tokens"] == "HELLO||WORLD"
-
-
-# --- map/struct + variant batteries --------------------------------------------------
-def test_map_struct_function_battery_planted(spark, tmp_path):
-    planted.write(tmp_path, "events", EVENTS)
-    got = {r["event_id"]: r for r in planted.run(spark, "map_struct_function_battery", tmp_path)}
-    for eid, _, uid, etype, _, _ in EVENTS:
-        if eid >= 2500:
-            continue
-        r = got[eid]
-        assert r["keys_joined"] == "type,uid"
-        assert r["vals_joined"] == f"{etype},{uid}"
-        assert r["type_val"] == etype
-        assert r["absent_val"] is None
-        assert r["m_size"] == 2
-        assert r["concat_keys"] == "type,uid,extra"
-        assert r["struct_json"] == json.dumps(
-            {"id": eid, "kind": etype}, separators=(",", ":")
-        )
-        assert r["struct_field"] == etype
-
-
-def test_variant_json_shred_planted(spark, tmp_path):
-    planted.write(tmp_path, "events", EVENTS)
-    got = {r["event_id"]: r for r in planted.run(spark, "variant_json_shred", tmp_path)}
-    for eid, _, _, _, _, props in EVENTS:
-        r = got[eid]
-        assert r["parsed_ok"] is True  # every planted props is valid JSON
-        raw = json.loads(props).get("k")
-        if isinstance(raw, int) and not isinstance(raw, bool):
-            assert r["k"] == raw and r["k_kind"] == "BIGINT"
-        elif isinstance(raw, str):
-            # the wrong-typed row: shreds to NULL int + STRING kind
-            # (variant_get used to kill the job here — the round-9 fix)
-            assert r["k"] is None and r["k_kind"] == "STRING"
-        else:
-            assert raw is None and r["k"] is None and r["k_kind"] is None
-    assert got[7]["k_kind"] == "STRING"  # the regression row stays pinned

@@ -26,15 +26,13 @@ import datetime as dt
 import json
 from collections import defaultdict
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from tests.test_round9_behavior_events import EVENTS, _k_of, _write_events
-from tests.test_round9_behavior_tpch import ORDERS, _d, _run, _write_world
+from tests import planted
+from tests.planted import CUSTOMER, EVENTS, ORDERS
+
 
 # --- the disposition world: one row per guard branch -------------------------------
-
 EVENTS_PIPE = [  # (event_id, ts, user_id, event_type, value, props)
     (1, "2024-04-01 10:00:00", 1, "click", 50.0, '{"k": 5}'),  # triggered normal
     (2, "2024-04-01 10:05:00", 1, "click", 120.0, '{"k": 7}'),  # dup of (1, click)
@@ -56,26 +54,8 @@ EVENTS_PIPE = [  # (event_id, ts, user_id, event_type, value, props)
     (16, "2024-04-01 11:15:00", 4, None, 20.0, '{"k": 15}'),  # null change type
 ]
 
+
 ALLOWED = {"click", "view", "purchase", "signup"}
-
-
-def _write_events_pipe(tmp) -> None:
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([r[0] for r in EVENTS_PIPE], pa.int64()),
-                "ts": pa.array(
-                    [dt.datetime.fromisoformat(r[1]) for r in EVENTS_PIPE],
-                    pa.timestamp("us"),
-                ),
-                "user_id": pa.array([r[2] for r in EVENTS_PIPE], pa.int64()),
-                "event_type": pa.array([r[3] for r in EVENTS_PIPE], pa.string()),
-                "value": pa.array([r[4] for r in EVENTS_PIPE], pa.float64()),
-                "props": pa.array([r[5] for r in EVENTS_PIPE], pa.string()),
-            }
-        ),
-        str(tmp / "events.parquet"),
-    )
 
 
 def _disposition_chain():
@@ -83,7 +63,7 @@ def _disposition_chain():
     chain (index.js:146-302): returns {event_id: (action, priority)}."""
     staged = []
     for eid, ts, uid, etype, value, props in EVENTS_PIPE:
-        k = (_k_of(props) if props is not None else None) or 0
+        k = (planted.k_of(props) if props is not None else None) or 0
         type_ok = etype in ALLOWED  # None fails the allowlist
         image_ok = props is not None and value is not None
         already_sent = k % 10 == 0
@@ -122,8 +102,8 @@ def _disposition_chain():
 
 
 def test_pipeline_disposition_ledger_planted(spark, tmp_path):
-    _write_events_pipe(tmp_path)
-    got = {r["event_id"]: r for r in _run(spark, "pipeline_disposition_ledger", tmp_path)}
+    planted.write(tmp_path, "events", EVENTS_PIPE)
+    got = {r["event_id"]: r for r in planted.run(spark, "pipeline_disposition_ledger", tmp_path)}
     expected = _disposition_chain()
     assert set(got) == set(expected)
     for eid, (action, priority) in expected.items():
@@ -147,8 +127,8 @@ def test_pipeline_disposition_ledger_planted(spark, tmp_path):
 
 
 def test_pipeline_disposition_summary_planted(spark, tmp_path):
-    _write_events_pipe(tmp_path)
-    got = {r["action"]: r for r in _run(spark, "pipeline_disposition_summary", tmp_path)}
+    planted.write(tmp_path, "events", EVENTS_PIPE)
+    got = {r["action"]: r for r in planted.run(spark, "pipeline_disposition_summary", tmp_path)}
     expected = _disposition_chain()
     by_action = defaultdict(lambda: [0, None, set()])
     vals = {r[0]: (r[2], r[4]) for r in EVENTS_PIPE}
@@ -171,11 +151,9 @@ def test_pipeline_disposition_summary_planted(spark, tmp_path):
 
 
 # --- CDC old/new diff + state lookup (over the batch-3 events world) ----------------
-
-
 def test_d2_cdc_old_new_diff_planted(spark, tmp_path):
-    _write_events(tmp_path)
-    got = {r["event_id"]: r for r in _run(spark, "d2_cdc_old_new_diff", tmp_path)}
+    planted.write(tmp_path, "events", EVENTS)
+    got = {r["event_id"]: r for r in planted.run(spark, "d2_cdc_old_new_diff", tmp_path)}
 
     by_user = defaultdict(list)
     for r in EVENTS:
@@ -184,11 +162,11 @@ def test_d2_cdc_old_new_diff_planted(spark, tmp_path):
     for rows in by_user.values():
         prev = None
         for r in sorted(rows, key=lambda r: (r[1], r[0])):  # (ts, event_id)
-            k = _k_of(r[5]) or 0
+            k = planted.k_of(r[5]) or 0
             if prev is None:
                 expected[r[0]] = ("INSERT", k, None, None, False)
             else:
-                old_k = _k_of(prev[5]) or 0
+                old_k = planted.k_of(prev[5]) or 0
                 expected[r[0]] = (
                     "MODIFY",
                     k,
@@ -213,8 +191,8 @@ def test_d2_cdc_old_new_diff_planted(spark, tmp_path):
 
 
 def test_d3_state_lookup_routing_planted(spark, tmp_path):
-    _write_events(tmp_path)
-    got = {r["event_id"]: r["action"] for r in _run(spark, "d3_state_lookup_routing", tmp_path)}
+    planted.write(tmp_path, "events", EVENTS)
+    got = {r["event_id"]: r["action"] for r in planted.run(spark, "d3_state_lookup_routing", tmp_path)}
     error_users = {r[2] for r in EVENTS if r[3] == "error"}
     expected = {
         r[0]: "duplicate_prevented" if r[2] in error_users else "proceed"
@@ -226,11 +204,9 @@ def test_d3_state_lookup_routing_planted(spark, tmp_path):
 
 
 # --- wire-format connector (encode -> decode roundtrip) -----------------------------
-
-
 def test_s1_stream_record_parse_planted(spark, tmp_path):
-    _write_events(tmp_path)
-    got = {r["record_id"]: r for r in _run(spark, "s1_stream_record_parse", tmp_path)}
+    planted.write(tmp_path, "events", EVENTS)
+    got = {r["record_id"]: r for r in planted.run(spark, "s1_stream_record_parse", tmp_path)}
 
     expected_ids = {f"evt-{r[0]}" for r in EVENTS if r[3] != "error"}
     assert set(got) == expected_ids
@@ -238,7 +214,7 @@ def test_s1_stream_record_parse_planted(spark, tmp_path):
         if etype == "error":
             continue
         r = got[f"evt-{eid}"]
-        k = _k_of(props) or 0
+        k = planted.k_of(props) or 0
         assert r["event_name"] == ("INSERT" if etype == "purchase" else "MODIFY")
         assert r["event_id_s"] == str(eid)
         assert r["guest_id"] == str(uid)
@@ -259,11 +235,9 @@ def test_s1_stream_record_parse_planted(spark, tmp_path):
 
 
 # --- map/struct + variant batteries --------------------------------------------------
-
-
 def test_map_struct_function_battery_planted(spark, tmp_path):
-    _write_events(tmp_path)
-    got = {r["event_id"]: r for r in _run(spark, "map_struct_function_battery", tmp_path)}
+    planted.write(tmp_path, "events", EVENTS)
+    got = {r["event_id"]: r for r in planted.run(spark, "map_struct_function_battery", tmp_path)}
     for eid, _, uid, etype, _, _ in EVENTS:
         if eid >= 2500:
             continue
@@ -281,8 +255,8 @@ def test_map_struct_function_battery_planted(spark, tmp_path):
 
 
 def test_variant_json_shred_planted(spark, tmp_path):
-    _write_events(tmp_path)
-    got = {r["event_id"]: r for r in _run(spark, "variant_json_shred", tmp_path)}
+    planted.write(tmp_path, "events", EVENTS)
+    got = {r["event_id"]: r for r in planted.run(spark, "variant_json_shred", tmp_path)}
     for eid, _, _, _, _, props in EVENTS:
         r = got[eid]
         assert r["parsed_ok"] is True  # every planted props is valid JSON
@@ -298,51 +272,13 @@ def test_variant_json_shred_planted(spark, tmp_path):
     assert got[7]["k_kind"] == "STRING"  # the regression row stays pinned
 
 
-# --- SQL-dialect surface over the planted TPC-H orders -------------------------------
-
-
-@pytest.fixture()
-def world(tmp_path):
-    _write_world(tmp_path)
-    # sql_parameterized_query / sql_udf_temp_function register views for
-    # EVERY catalog table — stub the non-relational ones
-    _write_events(tmp_path)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([1], pa.int64()),
-                "text": pa.array(["stub"], pa.string()),
-                "lang": pa.array(["en"], pa.string()),
-                "source": pa.array(["s"], pa.string()),
-                "n_chars": pa.array([4], pa.int64()),
-            }
-        ),
-        str(tmp_path / "documents.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([1], pa.int64()),
-                "embedding": pa.array([[0.0]], pa.list_(pa.float32())),
-                "label": pa.array([0], pa.int32()),
-            }
-        ),
-        str(tmp_path / "embeddings.parquet"),
-    )
-    return tmp_path
-
-
-def _cents(price: float) -> int:
-    return round(price * 100)
-
-
 def test_sql_parameterized_query_planted(spark, world):
-    got = _run(spark, "sql_parameterized_query", world)
+    got = planted.run(spark, "sql_parameterized_query", world)
     groups = defaultdict(lambda: [0, 0])
     for o in ORDERS:
-        if _d(o[4]) >= _d("1996-01-01") and o[3] > 1000.0:
+        if planted.day(o[4]) >= planted.day("1996-01-01") and o[3] > 1000.0:
             groups[o[5]][0] += 1
-            groups[o[5]][1] += _cents(o[3])
+            groups[o[5]][1] += planted.cents(o[3])
     assert [(r["o_orderpriority"], r["n_orders"], r["cents"]) for r in got] == [
         (p, n, c) for p, (n, c) in sorted(groups.items())
     ]
@@ -351,10 +287,10 @@ def test_sql_parameterized_query_planted(spark, world):
 
 
 def test_sql_udf_temp_function_planted(spark, world):
-    got = _run(spark, "sql_udf_temp_function", world)
+    got = planted.run(spark, "sql_udf_temp_function", world)
     groups = defaultdict(lambda: [0, 0])
     for o in ORDERS:
-        cents = _cents(o[3])
+        cents = planted.cents(o[3])
         rate = 0 if o[5] in ("1-URGENT", "2-HIGH") else 50
         groups[o[5]][0] += 1
         groups[o[5]][1] += cents - (cents * rate) // 1000  # 5% off non-high
@@ -364,8 +300,8 @@ def test_sql_udf_temp_function_planted(spark, world):
 
 
 def test_sql_lateral_topk_per_customer_planted(spark, world):
-    got = _run(spark, "sql_lateral_topk_per_customer", world)
-    from tests.test_round9_behavior_tpch import CUSTOMER
+    got = planted.run(spark, "sql_lateral_topk_per_customer", world)
+    from tests.planted import CUSTOMER
 
     building = {c[0] for c in CUSTOMER if c[4] == "BUILDING"}
     by_cust = defaultdict(list)
@@ -375,7 +311,7 @@ def test_sql_lateral_topk_per_customer_planted(spark, world):
     expected = set()
     for ck, orders in by_cust.items():
         for o in sorted(orders, key=lambda o: (-o[3], o[0]))[:3]:
-            expected.add((ck, o[0], _cents(o[3])))
+            expected.add((ck, o[0], planted.cents(o[3])))
     assert {(r["c_custkey"], r["o_orderkey"], r["cents"]) for r in got} == expected
     assert len(got) == len(expected)
     # planted: customer 5 has 4 orders, so the per-row LIMIT 3 truncates
@@ -383,12 +319,12 @@ def test_sql_lateral_topk_per_customer_planted(spark, world):
 
 
 def test_sql_pipe_syntax_rollup_planted(spark, world):
-    got = _run(spark, "sql_pipe_syntax_rollup", world)
+    got = planted.run(spark, "sql_pipe_syntax_rollup", world)
     groups = defaultdict(lambda: [0, 0])
     for o in ORDERS:
         if o[5] == "1-URGENT":
             groups[o[2]][0] += 1
-            groups[o[2]][1] += _cents(o[3])
+            groups[o[2]][1] += planted.cents(o[3])
     kept = {s: (n, c) for s, (n, c) in groups.items() if n > 1}
     assert {
         (r["o_orderstatus"], r["n"], r["cents"], r["avg_cents"]) for r in got
@@ -397,7 +333,7 @@ def test_sql_pipe_syntax_rollup_planted(spark, world):
 
 
 def test_sql_api_shared_dialect_planted(spark, world):
-    got = {r["o_orderpriority"]: r for r in _run(spark, "sql_api_shared_dialect", world)}
+    got = {r["o_orderpriority"]: r for r in planted.run(spark, "sql_api_shared_dialect", world)}
     groups = defaultdict(lambda: [0, 0.0, None, None])
     for o in ORDERS:
         if o[2] != "F":
@@ -417,12 +353,12 @@ def test_sql_api_shared_dialect_planted(spark, world):
 
 
 def test_sql_group_by_all_dialect_planted(spark, world):
-    got = _run(spark, "sql_group_by_all_dialect", world)
+    got = planted.run(spark, "sql_group_by_all_dialect", world)
     groups = defaultdict(lambda: [0, 0])
     for o in ORDERS:
         acc = groups[(o[5], o[2])]
         acc[0] += 1
-        acc[1] += _cents(o[3])
+        acc[1] += planted.cents(o[3])
     assert [
         (r["o_orderpriority"], r["o_orderstatus"], r["n_orders"], r["revenue_cents"])
         for r in got
@@ -434,7 +370,7 @@ def test_sql_group_by_all_dialect_planted(spark, world):
 
 def test_sql_scripting_coverage_walk_planted(spark, world):
     conf_before = dict(spark.conf.getAll)
-    got = _run(spark, "sql_scripting_coverage_walk", world)
+    got = planted.run(spark, "sql_scripting_coverage_walk", world)
     # scripting is on by default: the query must not set (or leave
     # behind) any session conf
     assert dict(spark.conf.getAll) == conf_before

@@ -21,34 +21,9 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-
-def _write_events(tmp, rows):
-    """rows: list of (event_id, ts_iso, user_id, event_type, value)."""
-    t = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [dt.datetime.fromisoformat(r[1]) for r in rows],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-            "props": pa.array(["{}" for _ in rows], pa.string()),
-        }
-    )
-    pq.write_table(t, str(tmp / "events.parquet"))
-
-
-def _run_df(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir))
+from tests import planted
 
 
 def _cents(v: float) -> int:
@@ -68,8 +43,14 @@ def _cents(v: float) -> int:
 # The (u1, click) key appears in batch0 twice AND batch2 — suppression
 # must work within a batch and across state, which is the D4 semantics.
 _D0 = "2024-03-01"
+
+
 _D1 = "2024-03-02"
+
+
 _TAIL = "2024-03-04"  # 2024-03-03 is an empty day: no row may appear for it
+
+
 _MAIN_EVENTS = [
     (0, f"{_D0}T01:00:00", 1, "click", 1.25),
     (1, f"{_D0}T01:10:00", 1, "click", 2.50),
@@ -88,7 +69,7 @@ _MAIN_EVENTS = [
 @pytest.fixture(scope="module")
 def main_dir(tmp_path_factory):
     tmp = tmp_path_factory.mktemp("planted_stream")
-    _write_events(tmp, _MAIN_EVENTS)
+    planted.write(tmp, "events", _MAIN_EVENTS)
     return tmp
 
 
@@ -99,7 +80,7 @@ def test_streaming_dedup_watermark_planted(spark, main_dir):
     micro-batches via state (e0 in batch0 vs e6 in batch2)."""
     got = sorted(
         (r.user_id, r.event_type)
-        for r in _run_df(spark, "streaming_dedup_watermark_e2e", main_dir).collect()
+        for r in planted.run(spark, "streaming_dedup_watermark_e2e", main_dir)
     )
     expected_set = sorted({(uid, etype) for _, _, uid, etype, _ in _MAIN_EVENTS})
     assert got == expected_set
@@ -127,7 +108,7 @@ def test_streaming_window_agg_append_emission_planted(spark, main_dir):
         agg[1] += _cents(value)
     got = {
         (r.day, r.event_type): [r.n_events, r.sum_cents]
-        for r in _run_df(spark, "streaming_window_agg_e2e", main_dir).collect()
+        for r in planted.run(spark, "streaming_window_agg_e2e", main_dir)
     }
     assert got == expected
     # fixture strength: both full days emitted, the tail day withheld
@@ -159,9 +140,7 @@ def test_streaming_chained_window_agg_planted(spark, main_dir):
     }
     got = {
         r.day: [r.n_6h_windows, r.n_events, r.sum_cents]
-        for r in _run_df(
-            spark, "streaming_chained_window_agg_e2e", main_dir
-        ).collect()
+        for r in planted.run(spark, "streaming_chained_window_agg_e2e", main_dir)
     }
     assert got == expected
     # fixture strength: the two days have DIFFERENT 6h-window counts,
@@ -186,7 +165,7 @@ def test_streaming_rocksdb_state_planted(spark, main_dir):
         agg[3] = max(agg[3], c)
     got = {
         r.user_id: [r.n_events, r.sum_cents, r.min_cents, r.max_cents]
-        for r in _run_df(spark, "streaming_rocksdb_state_e2e", main_dir).collect()
+        for r in planted.run(spark, "streaming_rocksdb_state_e2e", main_dir)
     }
     assert got == expected
 
@@ -199,8 +178,6 @@ def test_streaming_rocksdb_state_planted(spark, main_dir):
 # the watermark high early: id 126 (chunk 0) at 03-03T12:00 forces
 # chunk-2 drops, id 119 (chunk 1) at 03-04T06:00 forces chunk-3 drops
 # and sets the terminal emission watermark.
-
-
 def _late_chunk(eid: int, n: int = 4) -> int:
     return int(hashlib.md5(f"late:{eid}".encode()).hexdigest()[:8], 16) % n
 
@@ -241,6 +218,8 @@ _LATE_TS = {
     109: "2024-03-04T06:30:00",  # within the open 03-04 window: kept
     114: "2024-03-02T02:00:00",
 }
+
+
 _LATE_EVENTS = [
     (eid, ts, 1 + eid % 5, ("click", "view", "purchase")[eid % 3], 0.25 * (1 + eid % 8))
     for eid, ts in sorted(_LATE_TS.items())
@@ -250,7 +229,7 @@ _LATE_EVENTS = [
 @pytest.fixture(scope="module")
 def late_dir(tmp_path_factory):
     tmp = tmp_path_factory.mktemp("planted_late")
-    _write_events(tmp, _LATE_EVENTS)
+    planted.write(tmp, "events", _LATE_EVENTS)
     return tmp
 
 
@@ -297,9 +276,7 @@ def test_streaming_late_data_audit_planted(spark, late_dir):
 
     got = {
         r.day: [r.n_events, r.sum_cents]
-        for r in _run_df(
-            spark, "streaming_late_data_audit_e2e", late_dir
-        ).collect()
+        for r in planted.run(spark, "streaming_late_data_audit_e2e", late_dir)
     }
     assert got == expected
 
@@ -328,7 +305,7 @@ def test_streaming_sessionize_planted(spark, main_dir):
             expected[(uid, eid)] = (session_no, in_session)
     got = {
         (r.user_id, r.event_id): (r.session_no, r.event_in_session)
-        for r in _run_df(spark, "streaming_sessionize_e2e", main_dir).collect()
+        for r in planted.run(spark, "streaming_sessionize_e2e", main_dir)
     }
     assert got == expected
     # fixture strength: u1 has 4 distinct sessions (01:00+01:10 merge,
@@ -359,7 +336,7 @@ def test_streaming_static_enrich_planted(spark, main_dir):
     }
     got = {
         r.event_id: (r.user_id, r.event_type, r.first_ts_iso, r.lifetime_events)
-        for r in _run_df(spark, "streaming_static_enrich_e2e", main_dir).collect()
+        for r in planted.run(spark, "streaming_static_enrich_e2e", main_dir)
     }
     assert got == expected
 
@@ -375,9 +352,7 @@ def test_streaming_state_introspection_planted(spark, main_dir):
         agg[1] += _cents(value)
     got = {
         r.user_id: [r.n_events, r.sum_cents]
-        for r in _run_df(
-            spark, "streaming_state_introspection", main_dir
-        ).collect()
+        for r in planted.run(spark, "streaming_state_introspection", main_dir)
     }
     assert got == expected
 
@@ -403,7 +378,7 @@ _JOIN_EVENTS = [
 @pytest.fixture(scope="module")
 def join_dir(tmp_path_factory):
     tmp = tmp_path_factory.mktemp("planted_join")
-    _write_events(tmp, _JOIN_EVENTS)
+    planted.write(tmp, "events", _JOIN_EVENTS)
     return tmp
 
 
@@ -441,7 +416,7 @@ def test_streaming_outer_join_planted(spark, join_dir):
             expected.add((puid, pid, None, pts, None))
     got = {
         (r.user_id, r.purchase_id, r.click_id, r.purchase_ts, r.click_ts)
-        for r in _run_df(spark, "streaming_outer_join_e2e", join_dir).collect()
+        for r in planted.run(spark, "streaming_outer_join_e2e", join_dir)
     }
     assert got == expected
     # fixture strength: at least one multi-match, one null-pad, one

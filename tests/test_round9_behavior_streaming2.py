@@ -27,17 +27,16 @@ import hashlib
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tests.test_round9_behavior_events import EVENTS, _write_events
-from tests.test_round9_behavior_tpch import _run
+from tests import planted
+from tests.planted import EVENTS
+
 
 # --- stream-stream interval join ----------------------------------------------------
-
-
 def test_streaming_stream_join_e2e_batch_twin(spark, tmp_path):
-    _write_events(tmp_path)
+    planted.write(tmp_path, "events", EVENTS)
     got = {
         (r["purchase_id"], r["click_id"]): r
-        for r in _run(spark, "streaming_stream_join_e2e", tmp_path)
+        for r in planted.run(spark, "streaming_stream_join_e2e", tmp_path)
     }
 
     ts = {r[0]: dt.datetime.fromisoformat(r[1]) for r in EVENTS}
@@ -61,7 +60,6 @@ def test_streaming_stream_join_e2e_batch_twin(spark, tmp_path):
 
 
 # --- arrival-order LSH near-dup: full third MinHash implementation -------------------
-
 _P = 4294967311  # smallest prime > 2^32 (operators/dedup.py spec)
 
 
@@ -112,7 +110,7 @@ def test_streaming_neardup_arrival_e2e_batch_twin(spark, tmp_path):
     )
     got = {
         r["doc_id"]: r["is_neardup"]
-        for r in _run(spark, "streaming_neardup_arrival_e2e", tmp_path)
+        for r in planted.run(spark, "streaming_neardup_arrival_e2e", tmp_path)
     }
 
     # arrival rule: flagged iff some band bucket's first occupant has a

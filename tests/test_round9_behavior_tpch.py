@@ -25,223 +25,27 @@ from __future__ import annotations
 import datetime as dt
 from collections import defaultdict
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-# --- the planted world ----------------------------------------------------------
-
-REGION = [(0, "ASIA"), (1, "EUROPE")]
-
-NATION = [  # (n_nationkey, n_name, n_regionkey)
-    (1, "NATION_1", 0),
-    (2, "NATION_2", 0),
-    (3, "NATION_3", 0),
-    (4, "NATION_4", 1),
-    (5, "NATION_5", 1),  # suppliers only -> full-outer right-only row
-    (6, "NATION_6", 1),  # customers only -> full-outer left-only row
-]
-
-SUPPLIER = [  # (s_suppkey, s_name, s_nationkey, s_acctbal)
-    (1, "Supp#1", 1, 100.0),
-    (2, "Supp#2", 2, 50.0),
-    (3, "Supp#3", 3, 75.0),
-    (13, "Supp#13", 4, 5.0),  # suppkey % 13 == 0 -> q16 NOT IN exclusion
-    (5, "Supp#5", 1, 50.0),  # acctbal ties Supp#2 -> q2 suppkey tiebreak
-    (6, "Supp#6", 5, 20.0),  # nation with no customers; ships nothing
-]
-
-PART = [  # (p_partkey, p_name, p_brand, p_type, p_size, p_retailprice)
-    (1, "small red widget", "Brand#1", "STANDARD", 5, 100.0),
-    (2, "large blue gear", "Brand#9", "PROMO POLISHED", 9, 110.0),
-    (3, "medium red cog", "Brand#20", "STANDARD", 13, 120.0),
-    (4, "small green bolt", "Brand#2", "ECONOMY BRUSHED", 2, 90.0),
-    (5, "tiny yellow nut", "Brand#9", "STANDARD", 9, 95.0),
-]
-
-CUSTOMER = [  # (c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment)
-    (1, "Cust#1", 1, 500.0, "BUILDING"),
-    (2, "Cust#2", 2, 9000.0, "AUTOMOBILE"),
-    (3, "Cust#3", 3, -50.0, "BUILDING"),  # negative -> out of q22 threshold avg
-    (4, "Cust#4", 4, 7000.0, "MACHINERY"),
-    (5, "Cust#5", 1, 6000.0, "BUILDING"),
-    (6, "Cust#6", 6, 100.0, "HOUSEHOLD"),  # nation with no suppliers; no orders
-]
-
-ORDERS = [  # (o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority)
-    (100, 1, "F", 1000.0, "1997-02-10", "1-URGENT"),
-    (101, 2, "F", 500000.0, "1997-03-01", "3-MEDIUM"),  # >480k -> q22 NOT EXISTS
-    (102, 3, "O", 2000.0, "1997-06-15", "2-HIGH"),
-    (103, 1, "F", 3000.0, "1996-05-20", "3-MEDIUM"),
-    (104, 4, "O", 4000.0, "1998-02-01", "1-URGENT"),
-    (105, 2, "F", 6000.0, "1997-09-10", "2-HIGH"),
-    (106, 3, "F", 7000.0, "1995-11-05", "3-MEDIUM"),
-    (107, 1, "F", 8000.0, "1998-02-20", "2-HIGH"),
-    (108, 4, "F", 9000.0, "1997-08-01", "3-MEDIUM"),  # 300 qty -> q18 big order
-    (109, 2, "F", 1500.0, "1996-03-01", "1-URGENT"),
-    (110, 5, "O", 2500.0, "1997-11-20", "2-HIGH"),
-    (111, 3, "O", 3200.0, "1998-03-01", "1-URGENT"),
-    # 1999 block: outside every TPC-H date window; no lineitems. Gives
-    # agg_having a >5 group, makes sort_limit's LIMIT 20 bite (24 orders),
-    # and plants 'P' status rows for the pivot.
-    (120, 4, "O", 100.0, "1999-01-05", "5-LOW"),
-    (121, 4, "O", 200.0, "1999-01-10", "5-LOW"),
-    (122, 4, "O", 300.0, "1999-02-01", "5-LOW"),
-    (123, 4, "O", 400.0, "1999-02-15", "5-LOW"),
-    (124, 4, "O", 500.0, "1999-03-01", "5-LOW"),
-    (125, 4, "O", 600.0, "1999-03-10", "5-LOW"),
-    (126, 5, "O", 700.0, "1999-04-01", "5-LOW"),
-    (127, 5, "O", 800.0, "1999-04-15", "5-LOW"),
-    (128, 1, "O", 900.0, "1999-05-01", "5-LOW"),
-    (129, 2, "O", 1000.0, "1999-05-10", "5-LOW"),
-    (130, 5, "P", 1100.0, "1999-06-01", "4-NOT SPECIFIED"),
-    (131, 3, "P", 1200.0, "1999-06-15", "4-NOT SPECIFIED"),
-]
-
-LINEITEM = [  # (l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
-    #           l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate)
-    (100, 1, 1, 1, 5.0, 1000.0, 0.05, 0.0, "N", "O", "1997-03-01"),
-    (100, 2, 2, 2, 15.0, 2000.0, 0.10, 0.0, "N", "O", "1997-02-20"),
-    (101, 3, 3, 1, 25.0, 3000.0, 0.06, 0.0, "R", "F", "1997-04-01"),
-    (101, 1, 5, 2, 30.0, 1500.0, 0.00, 0.0, "N", "F", "1997-03-15"),
-    (102, 4, 13, 1, 10.0, 800.0, 0.05, 0.0, "R", "O", "1997-07-01"),
-    (103, 5, 1, 1, 3.0, 600.0, 0.00, 0.0, "A", "F", "1996-06-01"),
-    (103, 3, 2, 2, 8.0, 900.0, 0.25, 0.0, "N", "F", "1996-07-10"),
-    (104, 2, 3, 1, 12.0, 2500.0, 0.05, 0.0, "N", "O", "1998-03-20"),
-    (105, 2, 1, 1, 7.0, 1200.0, 0.05, 0.0, "N", "F", "1997-09-15"),
-    (105, 1, 5, 2, 1.0, 700.0, 0.00, 0.0, "N", "F", "1997-09-20"),
-    (106, 5, 5, 1, 40.0, 5000.0, 0.10, 0.0, "R", "F", "1995-12-01"),
-    (107, 1, 1, 1, 9.0, 1100.0, 0.05, 0.0, "N", "O", "1998-04-01"),
-    (107, 4, 2, 2, 50.0, 4000.0, 0.00, 0.0, "N", "O", "1998-09-10"),  # > q1 cutoff
-    (108, 5, 3, 1, 150.0, 3000.0, 0.00, 0.0, "N", "F", "1997-08-15"),
-    (108, 3, 3, 2, 150.0, 2000.0, 0.05, 0.0, "N", "F", "1997-08-20"),
-    (109, 1, 1, 1, 4.0, 500.0, 0.00, 0.0, "N", "F", "1996-04-01"),
-    (109, 2, 2, 2, 6.0, 800.0, 0.05, 0.0, "N", "F", "1996-04-01"),  # q21 tie
-    (110, 3, 13, 1, 11.0, 1300.0, 0.05, 0.0, "N", "O", "1997-12-01"),
-    (110, 2, 5, 2, 5.0, 900.0, 0.00, 0.0, "N", "O", "1997-12-05"),
-    (111, 5, 2, 1, 6.0, 2000.0, 0.10, 0.0, "N", "O", "1998-05-01"),
-]
-
-# convenient lookups for the loop implementations
-NATION_NAME = {nk: name for nk, name, _ in NATION}
-NATION_REGION = {nk: rk for nk, _, rk in NATION}
-REGION_NAME = dict(REGION)
-SUPP_NATION = {sk: nk for sk, _, nk, _ in SUPPLIER}
-SUPP_NAME = {sk: name for sk, name, _, _ in SUPPLIER}
-SUPP_BAL = {sk: bal for sk, _, _, bal in SUPPLIER}
-PART_BY_KEY = {p[0]: p for p in PART}
-CUST_BY_KEY = {c[0]: c for c in CUSTOMER}
-ORDER_BY_KEY = {o[0]: o for o in ORDERS}
-
-
-def _d(s: str) -> dt.date:
-    return dt.date.fromisoformat(s)
+from tests import planted
+from tests.planted import (
+    CUST_BY_KEY,
+    CUSTOMER,
+    LINEITEM,
+    NATION_NAME,
+    NATION_REGION,
+    ORDER_BY_KEY,
+    ORDERS,
+    PART_BY_KEY,
+    REGION_NAME,
+    SUPP_BAL,
+    SUPP_NAME,
+    SUPP_NATION,
+)
 
 
 def _rev(price: float, disc: float) -> float:
     return price * (1.0 - disc)
-
-
-def _write_world(tmp) -> None:
-    pq.write_table(
-        pa.table(
-            {
-                "r_regionkey": pa.array([r[0] for r in REGION], pa.int32()),
-                "r_name": pa.array([r[1] for r in REGION], pa.string()),
-            }
-        ),
-        str(tmp / "region.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "n_nationkey": pa.array([n[0] for n in NATION], pa.int32()),
-                "n_name": pa.array([n[1] for n in NATION], pa.string()),
-                "n_regionkey": pa.array([n[2] for n in NATION], pa.int32()),
-            }
-        ),
-        str(tmp / "nation.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "s_suppkey": pa.array([s[0] for s in SUPPLIER], pa.int64()),
-                "s_name": pa.array([s[1] for s in SUPPLIER], pa.string()),
-                "s_nationkey": pa.array([s[2] for s in SUPPLIER], pa.int32()),
-                "s_acctbal": pa.array([s[3] for s in SUPPLIER], pa.float64()),
-            }
-        ),
-        str(tmp / "supplier.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "p_partkey": pa.array([p[0] for p in PART], pa.int64()),
-                "p_name": pa.array([p[1] for p in PART], pa.string()),
-                "p_brand": pa.array([p[2] for p in PART], pa.string()),
-                "p_type": pa.array([p[3] for p in PART], pa.string()),
-                "p_size": pa.array([p[4] for p in PART], pa.int32()),
-                "p_retailprice": pa.array([p[5] for p in PART], pa.float64()),
-            }
-        ),
-        str(tmp / "part.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "c_custkey": pa.array([c[0] for c in CUSTOMER], pa.int64()),
-                "c_name": pa.array([c[1] for c in CUSTOMER], pa.string()),
-                "c_nationkey": pa.array([c[2] for c in CUSTOMER], pa.int32()),
-                "c_acctbal": pa.array([c[3] for c in CUSTOMER], pa.float64()),
-                "c_mktsegment": pa.array([c[4] for c in CUSTOMER], pa.string()),
-            }
-        ),
-        str(tmp / "customer.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "o_orderkey": pa.array([o[0] for o in ORDERS], pa.int64()),
-                "o_custkey": pa.array([o[1] for o in ORDERS], pa.int64()),
-                "o_orderstatus": pa.array([o[2] for o in ORDERS], pa.string()),
-                "o_totalprice": pa.array([o[3] for o in ORDERS], pa.float64()),
-                "o_orderdate": pa.array(
-                    [dt.datetime.fromisoformat(o[4]) for o in ORDERS],
-                    pa.timestamp("us"),
-                ),
-                "o_orderpriority": pa.array([o[5] for o in ORDERS], pa.string()),
-            }
-        ),
-        str(tmp / "orders.parquet"),
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "l_orderkey": pa.array([r[0] for r in LINEITEM], pa.int64()),
-                "l_partkey": pa.array([r[1] for r in LINEITEM], pa.int64()),
-                "l_suppkey": pa.array([r[2] for r in LINEITEM], pa.int64()),
-                "l_linenumber": pa.array([r[3] for r in LINEITEM], pa.int32()),
-                "l_quantity": pa.array([r[4] for r in LINEITEM], pa.float64()),
-                "l_extendedprice": pa.array([r[5] for r in LINEITEM], pa.float64()),
-                "l_discount": pa.array([r[6] for r in LINEITEM], pa.float64()),
-                "l_tax": pa.array([r[7] for r in LINEITEM], pa.float64()),
-                "l_returnflag": pa.array([r[8] for r in LINEITEM], pa.string()),
-                "l_linestatus": pa.array([r[9] for r in LINEITEM], pa.string()),
-                "l_shipdate": pa.array(
-                    [dt.datetime.fromisoformat(r[10]) for r in LINEITEM],
-                    pa.timestamp("us"),
-                ),
-            }
-        ),
-        str(tmp / "lineitem.parquet"),
-    )
-
-
-def _run(spark, name, sf_dir):
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    return registry.REGISTRY[name].fn(spark, str(sf_dir)).collect()
 
 
 def _rows_by(rows, *cols):
@@ -250,15 +54,13 @@ def _rows_by(rows, *cols):
 
 
 # --- q1: pricing summary --------------------------------------------------------
-
-
 def test_q1_pricing_summary_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q1_pricing_summary", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q1_pricing_summary", tmp_path)
 
     expected = defaultdict(lambda: [0.0, 0.0, 0.0, 0])  # qty, base, disc, n
     for row in LINEITEM:
-        if _d(row[10]) <= _d("1998-09-02"):
+        if planted.day(row[10]) <= planted.day("1998-09-02"):
             acc = expected[(row[8], row[9])]
             acc[0] += row[4]
             acc[1] += row[5]
@@ -277,18 +79,16 @@ def test_q1_pricing_summary_planted(spark, tmp_path):
 
 
 # --- q3: shipping priority ------------------------------------------------------
-
-
 def test_q3_shipping_priority_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q3_shipping_priority", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q3_shipping_priority", tmp_path)
 
-    cutoff = _d("1998-03-15")
+    cutoff = planted.day("1998-03-15")
     building = {c[0] for c in CUSTOMER if c[4] == "BUILDING"}
     rev = defaultdict(float)
     for row in LINEITEM:
         o = ORDER_BY_KEY[row[0]]
-        if o[1] in building and _d(o[4]) < cutoff and _d(row[10]) > cutoff:
+        if o[1] in building and planted.day(o[4]) < cutoff and planted.day(row[10]) > cutoff:
             rev[row[0]] += _rev(row[5], row[6])
     ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
     assert [r["o_orderkey"] for r in got] == [k for k, _ in ranked]
@@ -300,21 +100,19 @@ def test_q3_shipping_priority_planted(spark, tmp_path):
 
 
 # --- q4: order priority checking ------------------------------------------------
-
-
 def test_q4_order_priority_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q4_order_priority", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q4_order_priority", tmp_path)
 
     lines_by_order = defaultdict(list)
     for row in LINEITEM:
         lines_by_order[row[0]].append(row)
     counts = defaultdict(int)
     for o in ORDERS:
-        od = _d(o[4])
-        if not (_d("1997-01-01") <= od < _d("1997-04-01")):
+        od = planted.day(o[4])
+        if not (planted.day("1997-01-01") <= od < planted.day("1997-04-01")):
             continue
-        if any(_d(l[10]) > od for l in lines_by_order[o[0]]):
+        if any(planted.day(l[10]) > od for l in lines_by_order[o[0]]):
             counts[o[5]] += 1
     assert [(r["o_orderpriority"], r["order_count"]) for r in got] == sorted(
         counts.items()
@@ -322,11 +120,9 @@ def test_q4_order_priority_planted(spark, tmp_path):
 
 
 # --- q5: region revenue ---------------------------------------------------------
-
-
 def test_q5_region_revenue_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q5_region_revenue", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q5_region_revenue", tmp_path)
 
     rev = defaultdict(float)
     for row in LINEITEM:
@@ -334,7 +130,7 @@ def test_q5_region_revenue_planted(spark, tmp_path):
         c = CUST_BY_KEY[o[1]]
         if REGION_NAME[NATION_REGION[c[2]]] != "ASIA":
             continue
-        if not (_d("1996-01-01") <= _d(o[4]) < _d("1998-01-01")):
+        if not (planted.day("1996-01-01") <= planted.day(o[4]) < planted.day("1998-01-01")):
             continue
         rev[NATION_NAME[c[2]]] += _rev(row[5], row[6])
     ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))
@@ -344,16 +140,14 @@ def test_q5_region_revenue_planted(spark, tmp_path):
 
 
 # --- q6: forecast revenue -------------------------------------------------------
-
-
 def test_q6_forecast_revenue_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q6_forecast_revenue", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q6_forecast_revenue", tmp_path)
 
     revenue, n = 0.0, 0
     for row in LINEITEM:
         if (
-            _d("1997-01-01") <= _d(row[10]) < _d("1998-01-01")
+            planted.day("1997-01-01") <= planted.day(row[10]) < planted.day("1998-01-01")
             and 0.05 <= row[6] <= 0.07
             and row[4] < 24
         ):
@@ -365,11 +159,9 @@ def test_q6_forecast_revenue_planted(spark, tmp_path):
 
 
 # --- q7: volume shipping --------------------------------------------------------
-
-
 def test_q7_volume_shipping_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q7_volume_shipping", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q7_volume_shipping", tmp_path)
 
     rev = defaultdict(float)
     for row in LINEITEM:
@@ -377,7 +169,7 @@ def test_q7_volume_shipping_planted(spark, tmp_path):
         sn = NATION_NAME[SUPP_NATION[row[2]]]
         cn = NATION_NAME[CUST_BY_KEY[o[1]][2]]
         if {sn, cn} == {"NATION_1", "NATION_2"}:
-            rev[(sn, cn, _d(row[10]).year)] += _rev(row[5], row[6])
+            rev[(sn, cn, planted.day(row[10]).year)] += _rev(row[5], row[6])
     assert [(r["supp_nation"], r["cust_nation"], r["l_year"]) for r in got] == sorted(
         rev
     )
@@ -388,11 +180,9 @@ def test_q7_volume_shipping_planted(spark, tmp_path):
 
 
 # --- q8: national market share --------------------------------------------------
-
-
 def test_q8_national_market_share_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q8_national_market_share", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q8_national_market_share", tmp_path)
 
     by_year = defaultdict(lambda: [None, 0.0, 0])  # nation_3 volume, total, n
     for row in LINEITEM:
@@ -403,7 +193,7 @@ def test_q8_national_market_share_planted(spark, tmp_path):
         c = CUST_BY_KEY[o[1]]
         if REGION_NAME[NATION_REGION[c[2]]] != "ASIA":
             continue
-        acc = by_year[_d(o[4]).year]
+        acc = by_year[planted.day(o[4]).year]
         vol = _rev(row[5], row[6])
         if NATION_NAME[SUPP_NATION[row[2]]] == "NATION_3":
             # SQL sum(CASE WHEN ... END) over zero matches is NULL, not 0
@@ -423,11 +213,9 @@ def test_q8_national_market_share_planted(spark, tmp_path):
 
 
 # --- q9: profit by nation/year --------------------------------------------------
-
-
 def test_q9_profit_by_nation_year_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q9_profit_by_nation_year", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q9_profit_by_nation_year", tmp_path)
 
     profit = defaultdict(float)
     for row in LINEITEM:
@@ -435,7 +223,7 @@ def test_q9_profit_by_nation_year_planted(spark, tmp_path):
             continue
         o = ORDER_BY_KEY[row[0]]
         nation = NATION_NAME[SUPP_NATION[row[2]]]
-        profit[(nation, _d(o[4]).year)] += _rev(row[5], row[6])
+        profit[(nation, planted.day(o[4]).year)] += _rev(row[5], row[6])
     assert [(r["nation"], r["o_year"]) for r in got] == sorted(
         profit, key=lambda k: (k[0], -k[1])
     )
@@ -444,18 +232,16 @@ def test_q9_profit_by_nation_year_planted(spark, tmp_path):
 
 
 # --- q10: returned items --------------------------------------------------------
-
-
 def test_q10_returned_items_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q10_returned_items", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q10_returned_items", tmp_path)
 
     rev = defaultdict(float)
     for row in LINEITEM:
         if row[8] != "R":
             continue
         o = ORDER_BY_KEY[row[0]]
-        if _d("1997-01-01") <= _d(o[4]) < _d("1997-07-01"):
+        if planted.day("1997-01-01") <= planted.day(o[4]) < planted.day("1997-07-01"):
             rev[o[1]] += _rev(row[5], row[6])
     ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
     assert [r["c_custkey"] for r in got] == [k for k, _ in ranked]
@@ -469,11 +255,9 @@ def test_q10_returned_items_planted(spark, tmp_path):
 
 
 # --- q11: important balance (partsupp-free adaptation) --------------------------
-
-
 def test_q11_important_balance_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q11_important_balance", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q11_important_balance", tmp_path)
 
     total = sum(SUPP_BAL.values())
     by_nation = defaultdict(float)
@@ -490,16 +274,14 @@ def test_q11_important_balance_planted(spark, tmp_path):
 
 
 # --- q12: ship delay priority (shipmode-free adaptation) -------------------------
-
-
 def test_q12_ship_delay_priority_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q12_ship_delay_priority", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q12_ship_delay_priority", tmp_path)
 
     counts = defaultdict(lambda: [0, 0])  # high, low
     for row in LINEITEM:
         o = ORDER_BY_KEY[row[0]]
-        late = (_d(row[10]) - _d(o[4])).days >= 90
+        late = (planted.day(row[10]) - planted.day(o[4])).days >= 90
         cls = "late" if late else "ontime"
         if o[5] in ("1-URGENT", "2-HIGH"):
             counts[cls][0] += 1
@@ -516,11 +298,9 @@ def test_q12_ship_delay_priority_planted(spark, tmp_path):
 
 
 # --- q13: order-count distribution ----------------------------------------------
-
-
 def test_q13_order_count_distribution_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q13_order_count_distribution", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q13_order_count_distribution", tmp_path)
 
     per_cust = {c[0]: 0 for c in CUSTOMER}  # LEFT JOIN: zero-order custs kept
     for o in ORDERS:
@@ -535,15 +315,13 @@ def test_q13_order_count_distribution_planted(spark, tmp_path):
 
 
 # --- q14: promo revenue ---------------------------------------------------------
-
-
 def test_q14_promo_revenue_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q14_promo_revenue", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q14_promo_revenue", tmp_path)
 
     promo, total, n = 0.0, 0.0, 0
     for row in LINEITEM:
-        if _d("1997-09-01") <= _d(row[10]) < _d("1997-10-01"):
+        if planted.day("1997-09-01") <= planted.day(row[10]) < planted.day("1997-10-01"):
             v = _rev(row[5], row[6])
             if PART_BY_KEY[row[1]][3].startswith("PROMO"):
                 promo += v
@@ -555,15 +333,13 @@ def test_q14_promo_revenue_planted(spark, tmp_path):
 
 
 # --- q15: top supplier ----------------------------------------------------------
-
-
 def test_q15_top_supplier_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q15_top_supplier", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q15_top_supplier", tmp_path)
 
     rev = defaultdict(float)
     for row in LINEITEM:
-        if _d("1997-01-01") <= _d(row[10]) < _d("1997-04-01"):
+        if planted.day("1997-01-01") <= planted.day(row[10]) < planted.day("1997-04-01"):
             rev[row[2]] += _rev(row[5], row[6])
     best = max(rev.values())
     winners = sorted(sk for sk, v in rev.items() if v == pytest.approx(best))
@@ -574,11 +350,9 @@ def test_q15_top_supplier_planted(spark, tmp_path):
 
 
 # --- q17: small-quantity revenue ------------------------------------------------
-
-
 def test_q17_small_quantity_revenue_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q17_small_quantity_revenue", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q17_small_quantity_revenue", tmp_path)
 
     qty = defaultdict(list)
     for row in LINEITEM:
@@ -596,11 +370,9 @@ def test_q17_small_quantity_revenue_planted(spark, tmp_path):
 
 
 # --- q18: large-volume customers ------------------------------------------------
-
-
 def test_q18_large_volume_customer_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q18_large_volume_customer", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q18_large_volume_customer", tmp_path)
 
     order_qty = defaultdict(float)
     for row in LINEITEM:
@@ -620,11 +392,9 @@ def test_q18_large_volume_customer_planted(spark, tmp_path):
 
 
 # --- q19: disjunctive revenue ---------------------------------------------------
-
-
 def test_q19_disjunctive_revenue_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q19_disjunctive_revenue", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q19_disjunctive_revenue", tmp_path)
 
     bands = [("Brand#1", 1, 5, 1, 11), ("Brand#9", 1, 10, 10, 20), ("Brand#20", 1, 15, 20, 30)]
     revenue, n = 0.0, 0
@@ -642,11 +412,9 @@ def test_q19_disjunctive_revenue_planted(spark, tmp_path):
 
 
 # --- q2: min-cost supplier (window-decorrelated adaptation) ----------------------
-
-
 def test_q2_min_cost_supplier_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q2_min_cost_supplier", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q2_min_cost_supplier", tmp_path)
 
     pairs = sorted({(row[1], row[2]) for row in LINEITEM})
     per_part = defaultdict(list)
@@ -671,11 +439,9 @@ def test_q2_min_cost_supplier_planted(spark, tmp_path):
 
 
 # --- q16: supplier variety ------------------------------------------------------
-
-
 def test_q16_supplier_variety_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q16_supplier_variety", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q16_supplier_variety", tmp_path)
 
     sizes = {1, 5, 9, 13, 17, 21, 25, 29}
     variety = defaultdict(set)
@@ -698,11 +464,9 @@ def test_q16_supplier_variety_planted(spark, tmp_path):
 
 
 # --- q20: dominant supplier (availqty-free adaptation) ---------------------------
-
-
 def test_q20_dominant_supplier_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q20_dominant_supplier", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q20_dominant_supplier", tmp_path)
 
     shipped = defaultdict(float)
     for row in LINEITEM:
@@ -725,17 +489,15 @@ def test_q20_dominant_supplier_planted(spark, tmp_path):
 
 
 # --- q21: sole-blocking supplier (commitdate-free adaptation) --------------------
-
-
 def test_q21_last_supplier_wait_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q21_last_supplier_wait", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q21_last_supplier_wait", tmp_path)
 
     last = defaultdict(lambda: defaultdict(lambda: dt.date.min))
     for row in LINEITEM:
         if ORDER_BY_KEY[row[0]][2] != "F":
             continue
-        d = _d(row[10])
+        d = planted.day(row[10])
         if d > last[row[0]][row[2]]:
             last[row[0]][row[2]] = d
     numwait = defaultdict(int)
@@ -754,11 +516,9 @@ def test_q21_last_supplier_wait_planted(spark, tmp_path):
 
 
 # --- q22: idle rich customers ---------------------------------------------------
-
-
 def test_q22_idle_rich_customers_planted(spark, tmp_path):
-    _write_world(tmp_path)
-    got = _run(spark, "q22_idle_rich_customers", tmp_path)
+    planted.write_world(tmp_path)
+    got = planted.run(spark, "q22_idle_rich_customers", tmp_path)
 
     positive = [c[3] for c in CUSTOMER if c[3] > 0]
     threshold = sum(positive) / len(positive)

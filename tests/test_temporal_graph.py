@@ -5,13 +5,9 @@ plan-shape claims for the gap-fill broadcast)."""
 
 from __future__ import annotations
 
-import datetime as dt
-import shutil
-
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans import registry
-from tests import planted
 
 
 def test_gapfill_zero_fills_silent_days(spark, sf_dir):
@@ -170,289 +166,3 @@ def test_recursive_walk_raises_recursion_row_guard(spark, sf_dir):
         assert int(spark.conf.get("spark.sql.cteRecursionRowLimit")) > 10
     finally:
         spark.conf.set("spark.sql.cteRecursionRowLimit", prior)
-
-
-def test_hits_degree_ordering_on_star_graph(spark, sf_dir):
-    """Sanity on the real fixture: the top authority's degree can't be
-    beaten by 8x — HITS follows reinforced degree on a bipartite
-    graph — and scores are on the 1e6 grid with rank 1 = 1e6 (max
-    normalization makes the top node exactly the grid)."""
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    registry._load()
-    rows = registry.REGISTRY["graph_hits_hubs_authorities"].fn(
-        spark, sf_dir
-    ).collect()
-    by_type: dict[str, list] = {}
-    for r in rows:
-        by_type.setdefault(r.node_type, []).append(r)
-    for side in ("hub", "authority"):
-        side_rows = sorted(by_type[side], key=lambda r: r.rank)
-        assert side_rows[0].score_micro == 10**6
-        scores = [r.score_micro for r in side_rows]
-        assert scores == sorted(scores, reverse=True)
-
-
-def test_time_to_convert_percentiles(spark, tmp_path):
-    t0 = dt.datetime.fromisoformat("2024-05-01T00:00:00")
-    gaps = {1: 100, 2: 200, 3: 300, 4: 400}
-    rows = []
-    eid = 0
-    for u, g in gaps.items():
-        rows.append((eid, t0.isoformat(), u, "view", 1.0)); eid += 1
-        rows.append((eid, (t0 + dt.timedelta(seconds=g)).isoformat(), u, "purchase", 1.0)); eid += 1
-    # user 5: purchase BEFORE first view -> never converts
-    rows.append((eid, t0.isoformat(), 5, "purchase", 1.0)); eid += 1
-    rows.append((eid, (t0 + dt.timedelta(seconds=10)).isoformat(), 5, "view", 1.0)); eid += 1
-    planted.write(tmp_path, "events", rows)
-    (r,) = planted.run(spark, "events_time_to_convert", tmp_path)
-
-    def q_interp(sorted_vals, p):
-        h = p * (len(sorted_vals) - 1)
-        lo = int(h)
-        hi = min(lo + 1, len(sorted_vals) - 1)
-        return sorted_vals[lo] + (h - lo) * (sorted_vals[hi] - sorted_vals[lo])
-
-    sv = sorted(gaps.values())
-    assert r["n_converted"] == 4
-    assert (r["min_s"], r["max_s"]) == (100, 400)
-    assert abs(r["p50_s"] - q_interp(sv, 0.5)) < 1e-9
-    assert abs(r["p90_s"] - q_interp(sv, 0.9)) < 1e-9
-
-
-# --- D-class hardening: ops with mild derived arithmetic get real tests ------
-def test_interarrival_log2_buckets(spark, tmp_path):
-    t0 = dt.datetime.fromisoformat("2024-05-01T00:00:00")
-    gaps = [0, 1, 2, 3, 7, 8, 600]  # includes the zero gap and 2^k edges
-    rows = [(0, t0.isoformat(), 7, "view", 1.0)]
-    t = t0
-    for i, g in enumerate(gaps, start=1):
-        t = t + dt.timedelta(seconds=g)
-        rows.append((i, t.isoformat(), 7, "view", 1.0))
-    planted.write(tmp_path, "events", rows)
-    out = {r["log2_bucket"]: r for r in
-           planted.run(spark, "events_interarrival_histogram", tmp_path)}
-
-    def bucket(g):
-        return len(bin(g)[2:]) if g > 0 else 1  # length of binary repr; bin(0)='0'
-
-    expect: dict[int, list] = {}
-    for g in gaps:
-        e = expect.setdefault(bucket(g), [0, 10**9, -1])
-        e[0] += 1
-        e[1] = min(e[1], g)
-        e[2] = max(e[2], g)
-    assert set(out) == set(expect)
-    for b, (n, lo, hi) in expect.items():
-        r = out[b]
-        assert (r["n_gaps"], r["min_gap_s"], r["max_gap_s"]) == (n, lo, hi), b
-    # boundary sanity: gaps 0 and 1 share bucket 1; 2,3 -> 2; 7 -> 3; 8 -> 4
-    assert out[1]["n_gaps"] == 2 and out[2]["n_gaps"] == 2
-    assert out[3]["max_gap_s"] == 7 and out[4]["min_gap_s"] == 8
-
-
-def test_cohort_ltv_hand_rollup(spark, tmp_path):
-    # 2024-01-01 and 2024-01-08 are Mondays (week-truncation anchors)
-    rows = [
-        # user 1: first seen week W0, active W0 and W2
-        (1, "2024-01-02T10:00:00", 1, "purchase", 10.00),
-        (2, "2024-01-16T10:00:00", 1, "purchase", 5.00),
-        # user 2: cohort W0, active W0 only (two events same week)
-        (3, "2024-01-03T10:00:00", 2, "view", 1.00),
-        (4, "2024-01-04T10:00:00", 2, "view", 2.00),
-        # user 3: cohort W1
-        (5, "2024-01-09T10:00:00", 3, "purchase", 8.00),
-    ]
-    planted.write(tmp_path, "events", rows)
-    out = {(r["cohort_week"], r["age_weeks"]): r
-           for r in planted.run(spark, "events_cohort_ltv", tmp_path)}
-    w0 = out[("2024-01-01", 0)]
-    assert w0["n_active_users"] == 2
-    assert w0["revenue_cents"] == 1300          # 10.00 + 1.00 + 2.00
-    assert w0["cum_revenue_cents"] == 1300
-    w0a2 = out[("2024-01-01", 2)]
-    assert w0a2["n_active_users"] == 1 and w0a2["revenue_cents"] == 500
-    assert w0a2["cum_revenue_cents"] == 1800    # lifetime-to-date
-    w1 = out[("2024-01-08", 0)]
-    assert w1["n_active_users"] == 1 and w1["revenue_cents"] == 800
-
-
-# --- k-core ---------------------------------------------------------------------------
-def test_kcore_planted_complete_bipartite(spark, tmp_path):
-    # K(10,10): every node has degree 10 -> survives the k=10 peel;
-    # a pendant pair and a degree-9 customer are peeled away.
-    edges = [(c, s) for c in range(1, 11) for s in range(1, 11)]
-    edges += [(11, 11)]                       # pendant pair: degrees 1
-    edges += [(12, s) for s in range(1, 10)]  # degree 9 -> peeled
-    planted.purchase_graph(tmp_path, edges)
-    out = {(r["node_type"], r["node_key"]): r["core_degree"]
-           for r in planted.run(spark, "graph_kcore_membership", tmp_path)}
-
-    # sequential peeling on the doubled-id encoding
-    adj: dict[int, set] = {}
-    for c, s in edges:
-        u, v = c * 2, s * 2 + 1
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    alive = dict(adj)
-    while True:
-        drop = [n for n, nbrs in alive.items() if len(nbrs) < 10]
-        if not drop:
-            break
-        for n in drop:
-            for nb in alive[n]:
-                alive[nb].discard(n)
-            del alive[n]
-    expected = {
-        ("customer" if n % 2 == 0 else "supplier", n // 2): len(nbrs)
-        for n, nbrs in alive.items()
-    }
-    assert out == expected
-    assert len(out) == 20 and all(d == 10 for d in out.values())
-    assert ("customer", 12) not in out and ("supplier", 11) not in out
-
-
-# --- sessionized funnel -----------------------------------------------------------------
-def test_sessionized_funnel_strict_order_within_session(spark, tmp_path):
-    t0 = dt.datetime.fromisoformat("2024-05-01T00:00:00")
-    h = lambda hours: (t0 + dt.timedelta(hours=hours)).isoformat()  # noqa: E731
-    rows = [
-        # user 1, session 1: full funnel in order
-        (1, h(0), 1, "view", 1.0), (2, h(1), 1, "click", 1.0),
-        (3, h(2), 1, "purchase", 1.0),
-        # user 1, session 2 (>12h later): view then purchase WITHOUT click
-        (4, h(20), 1, "view", 1.0), (5, h(21), 1, "purchase", 1.0),
-        # user 2, one session: click before view -> stalls at view stage
-        (6, h(0), 2, "click", 1.0), (7, h(1), 2, "view", 1.0),
-        # user 3: session with no view at all
-        (8, h(0), 3, "purchase", 1.0),
-    ]
-    planted.write(tmp_path, "events", rows)
-    (r,) = planted.run(spark, "events_sessionized_funnel", tmp_path)
-    # sessions: u1 x2, u2 x1, u3 x1 = 4
-    assert r["n_sessions"] == 4
-    assert r["n_reached_view"] == 3         # u1 s1, u1 s2, u2
-    assert r["n_view_then_click"] == 1      # only u1 s1
-    assert r["n_full_funnel"] == 1
-    assert abs(r["view_to_purchase"] - 1 / 3) < 1e-12
-
-
-def test_personalized_pagerank_integer_grid_sequential(spark, tmp_path):
-    """Sequential RWR on the exact 1e12 integer mass grid: truncating
-    divisions at every step (r//od, 17*contrib//20, teleport//n_seeds),
-    3 iterations, seeds = customer nodes 2..8 — recomputed in plain
-    Python dicts and compared rank-for-rank."""
-    edges = [(1, 1), (2, 1), (3, 2), (4, 2), (5, 3), (1, 2), (6, 3)]
-    planted.purchase_graph(tmp_path, edges)
-    out = {r["rank"]: r for r in
-           planted.run(spark, "graph_personalized_pagerank", tmp_path)}
-
-    SCALE = 10**12
-    adj: dict[int, set] = {}
-    for c, s in edges:
-        u, v = c * 2, s * 2 + 1
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    seeds = [n for n in adj if n % 2 == 0 and n <= 8]
-    ns = len(seeds)
-    rank = {n: (SCALE // ns if n in seeds else 0) for n in adj}
-    od = {n: len(nbrs) for n, nbrs in adj.items()}
-    for _ in range(3):
-        contrib: dict[int, int] = {}
-        for src, nbrs in adj.items():
-            share = rank[src] // od[src]
-            for dst in nbrs:
-                contrib[dst] = contrib.get(dst, 0) + share
-        rank = {
-            n: ((SCALE * 3 // 20) // ns if n in seeds else 0)
-            + (17 * contrib.get(n, 0)) // 20
-            for n in adj
-        }
-    ranked = sorted(((n, r) for n, r in rank.items() if r > 0),
-                    key=lambda kv: (-kv[1], kv[0]))[:20]
-    assert len(out) == len(ranked)
-    for pos, (node, mass) in enumerate(ranked, start=1):
-        r = out[pos]
-        assert r["node_type"] == ("customer" if node % 2 == 0 else "supplier")
-        assert r["node_key"] == node // 2, pos
-        assert r["ppr_micro"] == mass, pos
-        assert r["is_seed"] == (node % 2 == 0 and node <= 8)
-    # recommendation property: some non-seed node carries positive mass
-    assert any(not r["is_seed"] for r in out.values())
-
-
-# --- snapshot / changelog state ----------------------------------------------------
-def test_snapshot_diff_latest_wins_versions(spark, tmp_path):
-    rows = [
-        # user 1: latest at version A is event 1; version B adds event 2
-        (1, "2024-01-01T00:00:00", 1, "view", 1.00),
-        (2, "2024-01-10T00:00:00", 1, "purchase", 5.00),  # after cutoff
-        # user 2: unchanged (only old events)
-        (3, "2024-01-02T00:00:00", 2, "view", 2.00),
-        # user 3: appears only after the cutoff -> added
-        (4, "2024-01-10T00:00:00", 3, "view", 8.00),
-        # user 4 pins max(ts): cutoff = 2024-01-10 - 2d = 2024-01-08
-        (5, "2024-01-10T00:00:00", 4, "view", 0.50),
-        (6, "2024-01-01T00:00:00", 4, "view", 0.25),
-    ]
-    planted.write(tmp_path, "events", rows)
-    out = {r["user_id"]: r for r in planted.run(spark, "snapshot_diff_audit", tmp_path)}
-    assert out[1]["status"] == "changed"
-    assert (out[1]["a_event_id"], out[1]["b_event_id"]) == (1, 2)
-    assert out[1]["cents_delta"] == 500 - 100
-    assert out[2]["status"] == "unchanged" and out[2]["cents_delta"] == 0
-    assert out[3]["status"] == "added"
-    assert out[3]["a_event_id"] is None and out[3]["cents_delta"] == 800
-    assert out[4]["status"] == "changed"    # latest flips 6 -> 5
-
-
-# --- exact-integer Pearson similarity ------------------------------------------------
-def test_timeseries_similarity_exact_pearson(spark, tmp_path):
-    # query user 1; user 10 perfectly correlated on shared days, user 11
-    # anti-correlated, user 12 shares too few days (< 3) -> excluded
-    day = lambda d: f"2024-01-{d:02d}T10:00:00"  # noqa: E731
-    series = {
-        1: {1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0},
-        10: {1: 2.0, 2: 4.0, 3: 6.0, 4: 8.0},    # corr +1
-        11: {1: 4.0, 2: 3.0, 3: 2.0, 4: 1.0},    # corr -1
-        12: {1: 9.0, 2: 9.5},                    # only 2 shared days
-    }
-    rows = []
-    eid = 0
-    for u, sv in series.items():
-        for d, v in sv.items():
-            rows.append((eid, day(d), u, "view", v))
-            eid += 1
-    planted.write(tmp_path, "events", rows)
-    out = [r for r in planted.run(spark, "timeseries_similarity_topk", tmp_path)
-           if r["query_id"] == 1]
-    out.sort(key=lambda r: r["rank"])
-    assert [r["user_id"] for r in out] == [10, 11]
-    assert abs(out[0]["corr"] - 1.0) < 1e-12
-    assert abs(out[1]["corr"] + 1.0) < 1e-12
-    assert out[0]["n_days"] == 4
-    assert all(r["user_id"] != 12 for r in out)
-
-
-# PPR outdeg eager checkpoint: outdeg is not in seeds' lineage, so a
-# lazy localCheckpoint would materialize only inside the first power
-# iteration (paying the groupBy the hoist exists to avoid).
-
-
-def test_ppr_outdeg_checkpoint_is_eager():
-    """Pin the eager outdeg checkpoint textually: seeds' lineage does
-    not touch outdeg, so only eager=True hoists the groupBy out of the
-    first power iteration (r10 ADVICE low item)."""
-    import inspect
-
-    from dynamodb_stream_processor_2_0_spark.plans import (
-        queries_temporal_graph as qtg,
-    )
-
-    src = inspect.getsource(qtg.graph_personalized_pagerank)
-    i = src.index("outdeg = (")
-    block = src[i : i + 250]
-    assert "localCheckpoint(eager=True)" in block, (
-        "outdeg must checkpoint eagerly — it is not in seeds' lineage, "
-        "so a lazy checkpoint defers the groupBy into iteration 1"
-    )

@@ -6,7 +6,7 @@ beyond the Spark/DuckDB twin-formula parity gate:
 - B (behavior): a planted-fixture / axiom test in tests/ references the
   query by name — the expected answer is recomputed in an independent
   third implementation (the device documented in
-  tests/planted.py). Auto-discovered by grep; listed with
+  tests/test_round7_behavior.py). Auto-discovered by grep; listed with
   the test files.
 - D (definitional): the query is a direct transcription of a standard
   declarative specification — TPC-H text, ANSI join/set/window/rollup
