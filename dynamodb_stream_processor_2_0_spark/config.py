@@ -13,13 +13,6 @@ import os
 from dataclasses import dataclass, field
 
 
-def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, default))
-    except ValueError:
-        return default
-
-
 def _env_float(name: str, default: float) -> float:
     try:
         return float(os.environ.get(name, default))
@@ -29,15 +22,14 @@ def _env_float(name: str, default: float) -> float:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Knobs for the disposition pipeline and extension operators.
+    """Knobs for the disposition pipeline.
 
     Mirrors the reference's config surface (index.js:11-23):
     - ``min_value_for_trigger`` ~ MIN_MATCHES_FOR_EMAIL (index.js:18)
     - ``high_priority_threshold`` ~ the totalMatches >= 10 priority rule
       (index.js:563)
-    - ``max_retries`` / ``retry_delay_ms`` ~ index.js:21-22 (stamped into
-      job metadata, not consumed in-engine)
-    - ``top_k_matches`` ~ matchedImages.slice(0, 10) (index.js:529)
+    - ``already_sent_mod`` / ``blocklist_mod``: the D1 already-sent and
+      F10 blocklist key-mod predicates
     """
 
     min_value_for_trigger: float = field(
@@ -48,15 +40,6 @@ class EngineConfig:
     )
     already_sent_mod: int = 10
     blocklist_mod: int = 13
-    top_k_matches: int = field(default_factory=lambda: _env_int("ENGINE_TOP_K", 10))
-    max_retries: int = field(default_factory=lambda: _env_int("ENGINE_MAX_RETRIES", 3))
-    retry_delay_ms: int = field(default_factory=lambda: _env_int("ENGINE_RETRY_DELAY_MS", 1000))
-    dedup_session_gap_minutes: int = 30
-    # MinHash / LSH knobs (extension operators)
-    minhash_num_hashes: int = 12
-    minhash_band_size: int = 3
-    shingle_size: int = 3
-    ann_top_k: int = 5
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -12,19 +12,19 @@ from pyspark.sql import Column, functions as F
 ISO_FORMAT = "yyyy-MM-dd'T'HH:mm:ss"
 
 
-def json_int(col: str | Column, path: str, default: int = 0) -> Column:
+def json_int(col: str | Column, path: str) -> Column:
     """P2/P4: JSON field -> int with default (parseInt(x ?? '0'),
     index.js:367-368). try_cast keeps ANSI mode from failing the task on
     malformed payloads."""
     c = F.col(col) if isinstance(col, str) else col
     extracted = F.get_json_object(c, path)
-    return F.coalesce(extracted.try_cast("int"), F.lit(default))
+    return F.coalesce(extracted.try_cast("int"), F.lit(0))
 
 
-def json_double(col: str | Column, path: str, default: float = 0.0) -> Column:
+def json_double(col: str | Column, path: str) -> Column:
     """P2/P4: JSON field -> double with default (parseFloat, index.js:369-372)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(F.get_json_object(c, path).try_cast("double"), F.lit(default))
+    return F.coalesce(F.get_json_object(c, path).try_cast("double"), F.lit(0.0))
 
 
 def iso_timestamp(col: str | Column) -> Column:
@@ -39,8 +39,3 @@ def dedup_id(key: Column, email_like: Column) -> Column:
     (index.js:572)."""
     return F.concat_ws("-", key, F.lower(email_like))
 
-
-def message_id(prefix: str, *parts: Column) -> Column:
-    """P5 message-id building: `email_{eventId}_{guestId}_{ts}`
-    (index.js:575)."""
-    return F.concat_ws("_", F.lit(prefix), *parts)

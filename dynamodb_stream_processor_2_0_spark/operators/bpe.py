@@ -221,7 +221,7 @@ def _round_cte(r: int) -> str:
         )"""
 
 
-def bpe_oracle_sql(rounds: int = 2, table: str = "documents") -> str:
+def bpe_oracle_sql(rounds: int = 2) -> str:
     ctes = [
         f"""words0 AS (
             SELECT word, CAST(count(*) AS BIGINT) AS freq,
@@ -230,7 +230,7 @@ def bpe_oracle_sql(rounds: int = 2, table: str = "documents") -> str:
                 SELECT unnest(list_filter(
                     regexp_split_to_array(lower(text), '\\s+'),
                     t -> t <> '')) AS word
-                FROM {table}
+                FROM documents
             ) GROUP BY word
         )"""
     ]

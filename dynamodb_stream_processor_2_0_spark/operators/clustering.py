@@ -46,11 +46,11 @@ _DUCK_FOLD = (
 
 
 def with_quant_vec(
-    df: DataFrame, scale: int = 512, vec_col: str = "embedding", out_col: str = "qvec"
+    df: DataFrame, scale: int = 512, vec_col: str = "embedding"
 ) -> DataFrame:
     """Integer-grid quantization: q_i = round(x_i * scale) as BIGINT."""
     return df.withColumn(
-        out_col,
+        "qvec",
         F.transform(
             F.col(vec_col),
             lambda x: F.round(x.cast("double") * F.lit(float(scale))).cast("long"),
@@ -105,8 +105,6 @@ def kmeans_assignments(
     k: int = 8,
     scale: int = 512,
     lloyd_rounds: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic k-means: md5-ranked seeds, ``lloyd_rounds`` update
     rounds, one final assignment. Returns (id, vec, cluster).
@@ -121,7 +119,7 @@ def kmeans_assignments(
     # assignment — materialize once instead of re-quantizing per
     # consumer (a global sort-free analog of the write a clustering
     # pass would stage anyway).
-    q = with_quant_vec(emb.select(id_col, vec_col), scale, vec_col).localCheckpoint()
+    q = with_quant_vec(emb.select("vec_id", "embedding"), scale).localCheckpoint()
     # Vector hygiene before the matmul kernel: ragged batches (a short,
     # empty, or NULL vector mixed into the corpus) turn np.array(...)
     # inhomogeneous and kill the worker; an empty corpus leaves no
@@ -149,14 +147,14 @@ def kmeans_assignments(
     dim = dim_row[0]["d"] if dim_row else None
     if not dim or dim <= 0:
         return (
-            emb.select(id_col, vec_col)
+            emb.select("vec_id", "embedding")
             .withColumn("cluster", F.lit(None).cast("int"))
             .filter(F.lit(False))
         )
     q = q.filter(F.size("qvec") == dim)
     seeds = (
-        q.select(id_col, "qvec", F.md5(F.col(id_col).cast("string")).alias("h"))
-        .orderBy("h", id_col)
+        q.select("vec_id", "qvec", F.md5(F.col("vec_id").cast("string")).alias("h"))
+        .orderBy("h", "vec_id")
         .limit(k)
         .collect()
     )
@@ -180,7 +178,7 @@ def kmeans_assignments(
             (cid, [dims[d] for d in sorted(dims)])
             for cid, dims in sorted(by_cluster.items())
         ]
-    return _assign_batched(q, centroids).select(id_col, vec_col, "cluster")
+    return _assign_batched(q, centroids).select("vec_id", "embedding", "cluster")
 
 
 def semantic_dedup(
@@ -188,8 +186,6 @@ def semantic_dedup(
     target_cluster_size: int = 64,
     scale: int = 512,
     threshold: float = 0.42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup: k-means partition, then near-dup pairs (exact ordered-
     fold cosine >= threshold) only within a cluster; survivorship keeps
@@ -214,9 +210,9 @@ def semantic_dedup(
     # assigned feeds both pair-join sides, the cluster sizes, and the
     # final projection — pin it so the Arrow assignment kernel runs
     # once, not once per consumer.
-    assigned = kmeans_assignments(emb, k, scale, 1, id_col, vec_col).localCheckpoint()
+    assigned = kmeans_assignments(emb, k, scale, 1).localCheckpoint()
     normed = assigned.withColumn(
-        "norm", F.sqrt(F.expr(_COS_FOLD.format(a=vec_col, b=vec_col)))
+        "norm", F.sqrt(F.expr(_COS_FOLD.format(a="embedding", b="embedding")))
     )
     # Salted intra-cluster pairing: the raw join key has only k distinct
     # values, which caps the verify at k-way parallelism (and at 100 TB
@@ -225,18 +221,18 @@ def semantic_dedup(
     # join partitions, replication cost S * |vectors| rows.
     n_salt = 8
     a = normed.select(
-        F.col(id_col).alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("cluster"),
-        F.col(vec_col).alias("vec_a"),
+        F.col("embedding").alias("vec_a"),
         F.col("norm").alias("norm_a"),
         F.explode(F.array(*[F.lit(s) for s in range(n_salt)])).alias("salt"),
     )
     b = normed.select(
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("cluster"),
-        F.col(vec_col).alias("vec_b"),
+        F.col("embedding").alias("vec_b"),
         F.col("norm").alias("norm_b"),
-        F.pmod(F.col(id_col), F.lit(n_salt)).cast("int").alias("salt"),
+        F.pmod(F.col("vec_id"), F.lit(n_salt)).cast("int").alias("salt"),
     )
     pairs = (
         a.join(b, ["cluster", "salt"])
@@ -250,25 +246,25 @@ def semantic_dedup(
         .select("id_a", "id_b")
     )
     partners = pairs.select(
-        F.col("id_a").alias(id_col), F.col("id_b").alias("partner")
+        F.col("id_a").alias("vec_id"), F.col("id_b").alias("partner")
     ).unionByName(
-        pairs.select(F.col("id_b").alias(id_col), F.col("id_a").alias("partner"))
+        pairs.select(F.col("id_b").alias("vec_id"), F.col("id_a").alias("partner"))
     )
-    stats = partners.groupBy(id_col).agg(
+    stats = partners.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("n_near"), F.min("partner").alias("min_partner")
     )
     sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         assigned.join(F.broadcast(sizes), "cluster")
-        .join(stats, id_col, "left")
+        .join(stats, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "cluster",
             "cluster_size",
             F.coalesce("n_near", F.lit(0)).alias("n_near"),
             (
                 F.col("min_partner").isNull()
-                | (F.col("min_partner") > F.col(id_col))
+                | (F.col("min_partner") > F.col("vec_id"))
             ).alias("keep"),
         )
     )
@@ -278,7 +274,6 @@ def semantic_dedup_oracle_sql(
     target_cluster_size: int = 64,
     scale: int = 512,
     threshold: float = 0.42,
-    table: str = "embeddings",
 ) -> str:
     """DuckDB twin: same integer grid, same md5 seeds, same adaptive
     k = max(8, ceil(n/target)), same single Lloyd round, same tie
@@ -289,7 +284,7 @@ def semantic_dedup_oracle_sql(
     )
     k_sql = (
         f"(SELECT greatest(8, CAST(ceil(count(*) / {target_cluster_size}.0) "
-        f"AS BIGINT)) FROM {table})"
+        "AS BIGINT)) FROM embeddings)"
     )
     return f"""
         WITH q AS (
@@ -298,7 +293,7 @@ def semantic_dedup_oracle_sql(
                        x -> CAST(round(CAST(x AS DOUBLE) * {scale}.0) AS BIGINT))
                        AS qvec,
                    md5(CAST(vec_id AS VARCHAR)) AS h
-            FROM {table}
+            FROM embeddings
         ), seeds AS (
             SELECT qvec AS cvec,
                    ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cluster

@@ -78,28 +78,22 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return coeffs
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int,
-    shingle_k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int, shingle_k: int) -> DataFrame:
     """One row per doc with columns h0..h{n-1}: the universal-hash
     minhash min_i((a_i * v + b_i) mod p) over shingle values
     v = uint32(md5(shingle)[:8]). ONE md5 per (doc, shingle) — the
     num_hashes variants are integer multiply-mods, not re-hashes — then
     a single map-side-combinable groupBy."""
-    exploded = df.withColumn("toks", tokens_col(text_col)).select(
-        F.col(id_col), F.explode(shingles_col("toks", shingle_k)).alias("shingle")
+    exploded = df.withColumn("toks", tokens_col()).select(
+        F.col("doc_id"), F.explode(shingles_col("toks", shingle_k)).alias("shingle")
     )
     v = F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("bigint")
-    exploded = exploded.select(F.col(id_col), v.alias("v"))
+    exploded = exploded.select(F.col("doc_id"), v.alias("v"))
     aggs = [
         F.min((F.lit(a) * F.col("v") + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"h{i}")
         for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
     ]
-    return exploded.groupBy(id_col).agg(*aggs)
+    return exploded.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_band_signatures(
@@ -107,14 +101,12 @@ def minhash_band_signatures(
     num_hashes: int = 12,
     band_size: int = 2,
     shingle_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, band, sig) rows: one md5 band signature per document per
     band — the LSH index entries that candidate generation (batch) and
     arrival-time dedup (streaming state) both key on."""
     assert num_hashes % band_size == 0
-    sigs = minhash_signatures(df, num_hashes, shingle_k, id_col, text_col)
+    sigs = minhash_signatures(df, num_hashes, shingle_k)
     n_bands = num_hashes // band_size
     band_sig = [
         F.md5(
@@ -124,9 +116,9 @@ def minhash_band_signatures(
         ).alias(f"b{b}")
         for b in range(n_bands)
     ]
-    banded = sigs.select(F.col(id_col), *band_sig)
+    banded = sigs.select(F.col("doc_id"), *band_sig)
     return banded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
@@ -136,7 +128,7 @@ def minhash_band_signatures(
             )
         ).alias("bs"),
     ).select(
-        F.col(id_col), F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
+        F.col("doc_id"), F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
     )
 
 
@@ -144,7 +136,6 @@ def minhash_bands_oracle_cte(
     num_hashes: int = 12,
     band_size: int = 2,
     shingle_k: int = 3,
-    table: str = "documents",
 ) -> str:
     """CTE chain (toks, sh, sigs, bands) ending in bands(doc_id, band,
     sig) — the SQL twin of minhash_band_signatures."""
@@ -161,7 +152,7 @@ def minhash_bands_oracle_cte(
         for b in range(n_bands)
     )
     return f"""toks AS (
-            SELECT doc_id, string_split(text, ' ') AS toks FROM {table}
+            SELECT doc_id, string_split(text, ' ') AS toks FROM documents
         ), sh AS (
             SELECT doc_id,
                    CAST(concat('0x', substr(md5(shingle), 1, 8)) AS BIGINT) AS v
@@ -184,8 +175,6 @@ def minhash_lsh_candidate_pairs(
     num_hashes: int = 12,
     band_size: int = 2,
     shingle_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """LSH banding: docs sharing any band signature become a candidate
     pair (doc_a < doc_b).
@@ -200,11 +189,11 @@ def minhash_lsh_candidate_pairs(
     pairs — at 100 TB cap bucket size upstream (drop buckets over ~10k
     docs: they're boilerplate shingles, not near-duplicates)."""
     bands_long = minhash_band_signatures(
-        df, num_hashes, band_size, shingle_k, id_col, text_col
+        df, num_hashes, band_size, shingle_k
     )
     buckets = (
         bands_long.groupBy("band", "sig")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
+        .agg(F.sort_array(F.collect_list(F.col("doc_id"))).alias("ids"))
         .filter(F.size("ids") > 1)
     )
     # all (i < j) pairs within a bucket, entirely in whole-stage codegen
@@ -235,12 +224,7 @@ def minhash_lsh_oracle_sql(
     """
 
 
-def simhash(
-    df: DataFrame,
-    bits: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 32) -> DataFrame:
     """SimHash fingerprint: per-token 32-bit hash (first 8 hex chars of
     md5, base-16 decoded), each bit votes +1/-1 weighted by token
     frequency; fingerprint bit b is the sign of the vote sum.
@@ -251,7 +235,7 @@ def simhash(
     per-bit sums are map-side-combinable, so the shuffle carries one
     row of 32 longs per document per map partition at worst.
     """
-    toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens_col()).alias("tok"))
     toks = toks.withColumn(
         "tok_val", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
     )
@@ -263,14 +247,14 @@ def simhash(
         ).alias(f"v{b}")
         for b in range(bits)
     ]
-    votes = toks.groupBy(id_col).agg(*vote_aggs)
+    votes = toks.groupBy("doc_id").agg(*vote_aggs)
     fingerprint = None
     for b in range(bits):
         term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
         fingerprint = term if fingerprint is None else fingerprint + term
-    return votes.select(F.col(id_col), fingerprint.alias("simhash"))
+    return votes.select(F.col("doc_id"), fingerprint.alias("simhash"))
 
 
 def simhash_oracle_sql(bits: int = 32) -> str:
@@ -301,27 +285,25 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     shingle_k: int = 3,
     min_jaccard: float = 0.05,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard via an inverted-index join: only
     pairs sharing at least one shingle are ever generated (the classic
     candidate-verification step after LSH). Jaccard computed as one
     double division of exact integers — deterministic."""
-    sh = df.withColumn("toks", tokens_col(text_col)).select(
-        F.col(id_col), F.explode(shingles_col("toks", shingle_k)).alias("shingle")
+    sh = df.withColumn("toks", tokens_col()).select(
+        F.col("doc_id"), F.explode(shingles_col("toks", shingle_k)).alias("shingle")
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("nb"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -346,9 +328,6 @@ def first_occurrence(
 
 def connected_components(
     pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_rounds: int = 12,
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Cluster assignment for dedup: connected components of the
@@ -379,12 +358,12 @@ def connected_components(
     no session conf is read or written here.
     """
     edges = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).filter(F.col("u") != F.col("v"))
     sym = _symmetric(edges).localCheckpoint(eager=True)
     if sym.count() <= small_graph_threshold:
         return _union_find_labels(pairs.sparkSession, sym)
-    return _star_loop(sym, max_rounds)
+    return _star_loop(sym)
 
 
 def _union_find_labels(spark, sym: DataFrame) -> DataFrame:
@@ -419,7 +398,10 @@ def _symmetric(e: DataFrame) -> DataFrame:
     return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
 
-def _star_loop(sym: DataFrame, max_rounds: int) -> DataFrame:
+_STAR_MAX_ROUNDS = 12
+
+
+def _star_loop(sym: DataFrame) -> DataFrame:
     """The distributed arm of ``connected_components`` over a symmetric
     (u, v) edge relation: alternating large-star / small-star
     contraction. Both star ops only ever link nodes to the MINIMUM of a
@@ -439,7 +421,7 @@ def _star_loop(sym: DataFrame, max_rounds: int) -> DataFrame:
     operation is a min or a set union.
     """
     prev_sig = None
-    for _ in range(max_rounds):
+    for _ in range(_STAR_MAX_ROUNDS):
         # Large-star: every neighbor v > u links to m = min(N(u) + {u}).
         mins = (
             sym.groupBy("u")
@@ -484,7 +466,7 @@ def _star_loop(sym: DataFrame, max_rounds: int) -> DataFrame:
     # Fixpoint verification. The signature above is a heuristic: on a
     # symmetric edge set sum(u) == sum(v), so it degenerates to
     # (count, sum) and a collision could break the loop early; and
-    # exhausting max_rounds would otherwise return non-converged (wrong)
+    # exhausting _STAR_MAX_ROUNDS would otherwise return non-converged (wrong)
     # labels silently. A converged star forest satisfies two local
     # conditions, each one bounded aggregate: (1) every smaller-neighbor
     # of u IS u's minimum m (no node retains two distinct smaller
@@ -507,7 +489,7 @@ def _star_loop(sym: DataFrame, max_rounds: int) -> DataFrame:
     if non_star or non_root:
         raise RuntimeError(
             "star-contraction did not reach a star-forest fixpoint "
-            f"within max_rounds={max_rounds} (or the convergence "
+            f"within {_STAR_MAX_ROUNDS} rounds (or the convergence "
             f"signature collided): {non_star} non-star edges and "
             f"{non_root} non-root labels remain"
         )

@@ -159,7 +159,9 @@ def disposition_summary(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> Da
     )
 
 
-DISPOSITION_SUMMARY_ORACLE_SQL = """
+# The oracle's parsed -> flagged -> ranked -> tagged chain, shared by
+# the summary and the ledger; each appends its own final SELECT.
+_DISPOSITION_ORACLE_CTES = """
 WITH parsed AS (
     SELECT
         event_id, ts, user_id, event_type, value, props,
@@ -173,7 +175,6 @@ WITH parsed AS (
     FROM parsed
 ), ranked AS (
     SELECT *,
-        (type_ok AND image_ok AND NOT already_sent) AS early_pass,
         ROW_NUMBER() OVER (
             PARTITION BY user_id, event_type,
                 (type_ok AND image_ok AND NOT already_sent)
@@ -194,6 +195,9 @@ WITH parsed AS (
         END AS action
     FROM ranked
 )
+"""
+
+DISPOSITION_SUMMARY_ORACLE_SQL = _DISPOSITION_ORACLE_CTES + """\
 SELECT action,
        count(*) AS n_records,
        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
@@ -203,40 +207,7 @@ GROUP BY action
 ORDER BY action
 """
 
-DISPOSITION_LEDGER_ORACLE_SQL = """
-WITH parsed AS (
-    SELECT
-        event_id, ts, user_id, event_type, value, props,
-        COALESCE(TRY_CAST(json_extract_string(props, '$.k') AS INTEGER), 0) AS k
-    FROM events
-), flagged AS (
-    SELECT *,
-        COALESCE(event_type IN ('click','view','purchase','signup'), FALSE) AS type_ok,
-        (props IS NOT NULL AND value IS NOT NULL) AS image_ok,
-        (k % {already_sent_mod} = 0) AS already_sent
-    FROM parsed
-), ranked AS (
-    SELECT *,
-        ROW_NUMBER() OVER (
-            PARTITION BY user_id, event_type,
-                (type_ok AND image_ok AND NOT already_sent)
-            ORDER BY ts, event_id
-        ) AS rn
-    FROM flagged
-), tagged AS (
-    SELECT *,
-        CASE
-            WHEN NOT type_ok THEN 'skipped_change_type'
-            WHEN NOT image_ok THEN 'skipped_missing_image'
-            WHEN already_sent THEN 'skipped_already_sent'
-            WHEN rn > 1 THEN 'duplicate_prevented'
-            WHEN user_id IS NULL THEN 'skipped_invalid'
-            WHEN value < {min_value} THEN 'skipped_below_threshold'
-            WHEN user_id % {blocklist_mod} = 0 THEN 'skipped_blocklisted'
-            ELSE 'email_triggered'
-        END AS action
-    FROM ranked
-)
+DISPOSITION_LEDGER_ORACLE_SQL = _DISPOSITION_ORACLE_CTES + """\
 SELECT event_id, user_id, event_type, action,
        CASE WHEN action = 'email_triggered'
             THEN CASE WHEN value >= {high_priority} THEN 'high' ELSE 'normal' END

@@ -2,51 +2,31 @@
 columns with typed metadata, processed by Arrow-batched ``mapInPandas``
 stages (LLM-pipeline extension).
 
-The decode step itself is STUBBED — image/audio codec libraries are not
-in this environment — behind ``decoder=`` injection: production passes
-a real codec (PIL/ffmpeg wrapper), tests pass the deterministic fake.
-Everything around the stub is real and load-bearing: schemas, the Arrow
-batch path, partition sizing, and the UDF signatures are exactly what a
-100 TB media pipeline needs (binary payloads never shuffle more than
-once; feature extraction is batched per Arrow chunk, not per row).
+The image decode and resize steps are STUBBED — image codec libraries
+are not in this environment — by deterministic fakes derived from the
+payload bytes. Everything around the stub is real and load-bearing:
+schemas, the Arrow batch path, partition sizing, and the UDF signatures
+are exactly what a 100 TB media pipeline needs (binary payloads never
+shuffle more than once; feature extraction is batched per Arrow chunk,
+not per row).
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 
-def _as_bytes(p) -> bytes | None:
-    """NULL-tolerant payload coercion for the Pandas kernels: a NULL
-    media payload stays None (never killing the Python worker with
-    TypeError — tools/hostile_sweep.py nulls world), everything else
-    is normalized to bytes.
-
-    NULL convention (matches the SQL oracles and the arrow-digest
-    kernel): wide-form per-document kernels emit NULL metric columns
-    for a NULL payload (``length(NULL)``/``md5(NULL)`` semantics);
-    long-form explode-style kernels emit zero rows for it (SQL
-    ``explode`` over NULL semantics). An EMPTY payload (b"") is a
-    real value and keeps its zero/empty metrics.
-
-    WORKER-IMPORTABILITY: do NOT reference this from inside a
-    mapInPandas/mapInArrow closure — cloudpickle pickles module-level
-    functions BY REFERENCE, so the Python workers would need this
-    package on their own sys.path, which a driver session launched
-    from another cwd does not guarantee (the same rationale as the
-    nested by-value decoder copies below). Each kernel defines the
-    one-line by-value twin ``_ab`` locally instead; this module-level
-    original stays as the documented convention + driver-side uses."""
-    return None if p is None else bytes(p)
-
-
-# one-line body every kernel copies locally (keep in sync):
+# Each kernel coerces payloads with its own local
 #     _ab = lambda p: None if p is None else bytes(p)
+# so cloudpickle ships it by value: a module-level helper is pickled by
+# reference, and the Python workers cannot import this package. NULL
+# convention (matches the SQL oracles): wide-form per-document kernels
+# emit NULL metric columns for a NULL payload, long-form explode-style
+# kernels emit zero rows for it; an empty payload (b"") is a real value.
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -68,62 +48,40 @@ FRAME_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def fake_image_decode(payload: bytes) -> dict[str, Any]:
-    """Deterministic stand-in decoder: derives plausible metadata and an
-    8-dim feature vector purely from the payload bytes (md5-seeded), so
-    tests exercise the full Arrow plumbing with stable outputs."""
-    h = hashlib.md5(payload).digest()
-    return {
-        "width": 64 + h[0] % 192,
-        "height": 64 + h[1] % 192,
-        "channels": 3,
-        "feature": [round(b / 255.0, 6) for b in h[2:10]],
-    }
-
-
-def decode_image_batch(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    decoder: Callable[[bytes], dict[str, Any]] | None = None,
-) -> DataFrame:
+def decode_image_batch(df: DataFrame) -> DataFrame:
     """Binary payloads -> typed metadata + feature vector via
     ``mapInPandas`` (Arrow batches; one python call per batch, never per
     row).
 
-    ``decoder=None`` uses a nested by-value copy of
-    ``fake_image_decode``: a module-level default would be pickled by
-    reference and the Python workers would need this package on their
-    own sys.path — which the driver's harness (sys.path.insert in the
-    driver process only) does not guarantee. A production codec hook
-    passed explicitly must itself be importable on the workers.
+    ``decoder`` is a deterministic stand-in: it derives plausible
+    metadata and an 8-dim feature vector purely from the payload bytes
+    (md5-seeded), so tests exercise the full Arrow plumbing with stable
+    outputs. It is nested so cloudpickle ships it by value.
     """
-    if decoder is None:
 
-        def decoder(payload: bytes) -> dict[str, Any]:
-            # keep in sync with fake_image_decode (by-value twin)
-            import hashlib as _hl
+    def decoder(payload: bytes) -> dict[str, Any]:
+        import hashlib as _hl
 
-            h = _hl.md5(payload).digest()
-            return {
-                "width": 64 + h[0] % 192,
-                "height": 64 + h[1] % 192,
-                "channels": 3,
-                "feature": [round(b / 255.0, 6) for b in h[2:10]],
-            }
+        h = _hl.md5(payload).digest()
+        return {
+            "width": 64 + h[0] % 192,
+            "height": 64 + h[1] % 192,
+            "channels": 3,
+            "feature": [round(b / 255.0, 6) for b in h[2:10]],
+        }
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         for pdf in batches:
-            raws = [_ab(p) for p in pdf[payload_col]]
+            raws = [_ab(p) for p in pdf["payload"]]
             # NULL payload -> NULL metadata (wide-form convention)
             metas = [None if r is None else decoder(r) for r in raws]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "n_bytes": [None if r is None else len(r) for r in raws],
                     "width": [None if m is None else m["width"] for m in metas],
                     "height": [None if m is None else m["height"] for m in metas],
@@ -143,8 +101,6 @@ def sample_frames(
     df: DataFrame,
     chunk_bytes: int = 32,
     every_nth: int = 4,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Video-style frame sampling: split each payload into fixed-size
     chunks ("frames") and keep every Nth — the partition-preserving
@@ -153,11 +109,11 @@ def sample_frames(
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 raw = _ab(payload)
                 if raw is None:  # NULL payload -> zero frames (long-form)
                     continue
@@ -193,49 +149,28 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def fake_image_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in resizer: (width*height) bytes derived by
-    cycling the payload — stable output size and content so tests can
-    assert the batch shape without a codec library."""
-    if not payload:
-        return bytes(width * height)
-    reps = (width * height) // len(payload) + 1
-    return (payload * reps)[: width * height]
+def resize_images(df: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
+    """Resize stage via ``mapInPandas`` (Arrow batches). ``resizer`` is a
+    deterministic stand-in for a codec resizer: (width*height) bytes
+    derived by cycling the payload — stable output size and content, so
+    tests can assert the batch shape without a codec library. Nested, so
+    cloudpickle ships it by value."""
 
-
-def resize_images(
-    df: DataFrame,
-    width: int = 64,
-    height: int = 64,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize stage via ``mapInPandas`` (Arrow batches). Production
-    injects a real codec resizer (PIL/libvips wrapper); the plumbing —
-    schema, batching, binary transport — is identical either way.
-
-    ``resizer=None`` uses a nested by-value copy of
-    ``fake_image_resize`` (same worker-importability rationale as
-    ``decode_image_batch``)."""
-    if resizer is None:
-
-        def resizer(payload: bytes, w: int, h: int) -> bytes:
-            # keep in sync with fake_image_resize (by-value twin)
-            if not payload:
-                return bytes(w * h)
-            reps = (w * h) // len(payload) + 1
-            return (payload * reps)[: w * h]
+    def resizer(payload: bytes, w: int, h: int) -> bytes:
+        if not payload:
+            return bytes(w * h)
+        reps = (w * h) // len(payload) + 1
+        return (payload * reps)[: w * h]
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "width": [width] * len(pdf),
                     "height": [height] * len(pdf),
                     "resized": [
@@ -245,7 +180,7 @@ def resize_images(
                         None
                         if (raw := _ab(p)) is None
                         else resizer(raw, width, height)
-                        for p in pdf[payload_col]
+                        for p in pdf["payload"]
                     ],
                 }
             )
@@ -259,12 +194,7 @@ PCM_WINDOW_SCHEMA = (
 )
 
 
-def pcm_window_energy(
-    df: DataFrame,
-    window: int = 16,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pcm_window_energy(df: DataFrame, window: int = 16) -> DataFrame:
     """Audio-modality plumbing with a REAL decode (no codec library
     needed): the binary payload is interpreted as little-endian int16
     PCM samples (numpy frombuffer — an actual zero-copy decode, not a
@@ -283,18 +213,18 @@ def pcm_window_energy(
         import numpy as np
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         for pdf in batches:
             out = {
-                "doc_id": pdf[id_col].astype("int64"),
+                "doc_id": pdf["doc_id"].astype("int64"),
                 "n_samples": [],
                 "n_windows": [],
                 "total_energy": [],
                 "peak_window": [],
                 "peak_energy": [],
             }
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 raw = _ab(p)
                 if raw is None:  # NULL payload -> NULL metrics (wide-form)
                     out["n_samples"].append(None)
@@ -324,12 +254,7 @@ def pcm_window_energy(
     return df.mapInPandas(run, PCM_WINDOW_SCHEMA)
 
 
-def pcm_window_energies(
-    df: DataFrame,
-    window: int = 16,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pcm_window_energies(df: DataFrame, window: int = 16) -> DataFrame:
     """Per-WINDOW energy rows (doc_id, w, energy) — the long-form twin
     of pcm_window_energy for downstream operators that need the whole
     energy series (peak picking, landmark fingerprints). Same decode
@@ -341,11 +266,11 @@ def pcm_window_energies(
         import numpy as np
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         for pdf in batches:
             ids, ws, es = [], [], []
-            for did, p in zip(pdf[id_col].astype("int64"), pdf[payload_col]):
+            for did, p in zip(pdf["doc_id"].astype("int64"), pdf["payload"]):
                 raw = _ab(p)
                 if raw is None:  # NULL payload -> zero rows (long-form)
                     continue
@@ -366,7 +291,7 @@ def pcm_window_energies(
     return df.mapInPandas(run, "doc_id long, w long, energy long")
 
 
-def pcm_window_energy_oracle_sql(window: int = 16, table: str = "documents") -> str:
+def pcm_window_energy_oracle_sql(window: int = 16) -> str:
     """Byte-exact SQL twin: hex(encode(text)) exposes the payload bytes
     (UTF-8-multibyte safe); samples are little-endian int16 pairs.
 
@@ -377,7 +302,7 @@ def pcm_window_energy_oracle_sql(window: int = 16, table: str = "documents") -> 
         WITH hexed AS (
             SELECT doc_id, hex(encode(text)) AS h,
                    octet_length(encode(text)) // 2 AS n_samples
-            FROM {table}
+            FROM documents
         ), samples AS (
             SELECT doc_id, u.i AS idx,
                    CAST(('0x' || substr(h, 4 * u.i + 1, 2)) AS BIGINT)
@@ -434,11 +359,7 @@ _SC_BLOCKS = 8
 _SC_CUT_BITS = 2  # Hamming > 2 of 8 signature bits => cut
 
 
-def frame_signatures(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def frame_signatures(df: DataFrame) -> DataFrame:
     """Per-FRAME signature rows (doc_id, frame_idx, sig, intensity) —
     the long-form twin of scene_cut_detect for downstream operators
     that need the whole frame series (shot segmentation, keyframe
@@ -451,11 +372,11 @@ def frame_signatures(
         import numpy as np
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         for pdf in batches:
             ids, idxs, sigs, inten = [], [], [], []
-            for did, p in zip(pdf[id_col].astype("int64"), pdf[payload_col]):
+            for did, p in zip(pdf["doc_id"].astype("int64"), pdf["payload"]):
                 raw = _ab(p)
                 if raw is None:  # NULL payload -> zero rows (long-form)
                     continue
@@ -488,11 +409,7 @@ def frame_signatures(
     )
 
 
-def scene_cut_detect(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def scene_cut_detect(df: DataFrame) -> DataFrame:
     """Video scene-cut detection with a REAL decode (no codec library):
     each payload splits into fixed 32-byte frames (the frame_sample
     convention; a trailing partial frame is dropped), each frame gets
@@ -512,7 +429,7 @@ def scene_cut_detect(
         import numpy as np
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         popcount8 = np.array(
             [bin(x).count("1") for x in range(256)], dtype=np.int64
@@ -520,13 +437,13 @@ def scene_cut_detect(
 
         for pdf in batches:
             out = {
-                "doc_id": pdf[id_col].astype("int64"),
+                "doc_id": pdf["doc_id"].astype("int64"),
                 "n_frames": [],
                 "n_cuts": [],
                 "first_cut_idx": [],
                 "mean_ham_milli": [],
             }
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 raw = _ab(p)
                 if raw is None:  # NULL payload -> NULL metrics (wide-form)
                     out["n_frames"].append(None)
@@ -570,6 +487,9 @@ def scene_cut_detect(
     return df.mapInPandas(run, SCENE_CUT_SCHEMA)
 
 
+# samples per energy window, shared by the VAD kernel and its oracle
+_VAD_WINDOW = 16
+
 VAD_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -582,12 +502,7 @@ VAD_SCHEMA = T.StructType(
 )
 
 
-def audio_vad_segments(
-    df: DataFrame,
-    window: int = 16,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def audio_vad_segments(df: DataFrame) -> DataFrame:
     """Voice-activity segmentation over the PCM energy windows: a
     window is ACTIVE iff its energy strictly beats the payload's mean
     window energy (cross-multiplied: energy * n_windows > total — no
@@ -604,18 +519,18 @@ def audio_vad_segments(
         import numpy as np
         import pandas as pd
 
-        _ab = lambda p: None if p is None else bytes(p)  # by-value twin of _as_bytes
+        _ab = lambda p: None if p is None else bytes(p)
 
         for pdf in batches:
             out = {
-                "doc_id": pdf[id_col].astype("int64"),
+                "doc_id": pdf["doc_id"].astype("int64"),
                 "n_windows": [],
                 "n_active": [],
                 "n_segments": [],
                 "longest_segment": [],
                 "first_active": [],
             }
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 raw = _ab(p)
                 if raw is None:  # NULL payload -> NULL metrics (wide-form)
                     out["n_windows"].append(None)
@@ -629,10 +544,10 @@ def audio_vad_segments(
                     np.int64
                 )
                 sq = s * s
-                n_win = -(-n // window) if n else 0
+                n_win = -(-n // _VAD_WINDOW) if n else 0
                 en = np.array(
                     [
-                        int(sq[w * window : (w + 1) * window].sum())
+                        int(sq[w * _VAD_WINDOW : (w + 1) * _VAD_WINDOW].sum())
                         for w in range(n_win)
                     ],
                     dtype=np.int64,
@@ -669,7 +584,7 @@ def audio_vad_segments(
     return df.mapInPandas(run, VAD_SCHEMA)
 
 
-def audio_vad_oracle_sql(window: int = 16, table: str = "documents") -> str:
+def audio_vad_oracle_sql() -> str:
     """Byte-exact SQL twin of audio_vad_segments: the pcm energy CTEs
     plus gaps-and-islands over the strictly-above-mean windows.
 
@@ -680,7 +595,7 @@ def audio_vad_oracle_sql(window: int = 16, table: str = "documents") -> str:
         WITH hexed AS (
             SELECT doc_id, hex(encode(text)) AS h,
                    octet_length(encode(text)) // 2 AS n_samples
-            FROM {table}
+            FROM documents
         ), samples AS (
             SELECT doc_id, u.i AS idx,
                    CAST(('0x' || substr(h, 4 * u.i + 1, 2)) AS BIGINT)
@@ -692,9 +607,9 @@ def audio_vad_oracle_sql(window: int = 16, table: str = "documents") -> str:
                    CASE WHEN raw >= 32768 THEN raw - 65536 ELSE raw END AS s
             FROM samples
         ), wins AS (
-            SELECT doc_id, idx // {window} AS w,
+            SELECT doc_id, idx // {_VAD_WINDOW} AS w,
                    CAST(sum(s * s) AS BIGINT) AS energy
-            FROM signed GROUP BY doc_id, idx // {window}
+            FROM signed GROUP BY doc_id, idx // {_VAD_WINDOW}
         ), tot AS (
             SELECT doc_id, CAST(sum(energy) AS BIGINT) AS total,
                    CAST(count(*) AS BIGINT) AS nw
@@ -740,7 +655,7 @@ def audio_vad_oracle_sql(window: int = 16, table: str = "documents") -> str:
     """
 
 
-def scene_cut_oracle_sql(table: str = "documents") -> str:
+def scene_cut_oracle_sql() -> str:
     """Byte-exact SQL twin of scene_cut_detect via hex(encode(text)).
 
     NULL convention (matches the kernel, wide-form): NULL payload ->
@@ -752,7 +667,7 @@ def scene_cut_oracle_sql(table: str = "documents") -> str:
         WITH hexed AS (
             SELECT doc_id, hex(encode(text)) AS h,
                    octet_length(encode(text)) // {fb} AS n_frames
-            FROM {table}
+            FROM documents
         ), bytes AS (
             SELECT doc_id, f.j AS frame, b.b AS blk,
                    CAST(('0x' || substr(h,

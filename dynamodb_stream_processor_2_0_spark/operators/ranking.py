@@ -81,7 +81,6 @@ def global_running_sum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "running_sum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append ``out_col`` = inclusive prefix sum of ``value_col`` under
     the total order ``order_cols`` — the distributed scan primitive
@@ -90,14 +89,13 @@ def global_running_sum(
     partition window, broadcast per-partition totals; the locally-
     scanned data is pinned before the offset subtree derives from it
     (same boundary-consistency argument as global_rank)."""
-    return global_running_sums(df, order_cols, [(value_col, out_col)], num_partitions)
+    return global_running_sums(df, order_cols, [(value_col, out_col)])
 
 
 def global_running_sums(
     df: DataFrame,
     order_cols: list[str],
     value_out_cols: list[tuple[str, str]],
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``global_running_sum`` over SEVERAL value columns in ONE pass:
     one range exchange, one per-partition scan, one pinned
@@ -108,7 +106,7 @@ def global_running_sums(
     k sequential exchanges over data already sorted the right way.
     ``value_out_cols`` is ``[(value_col, out_col), ...]``."""
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
     scan = (
         W.partitionBy("_gs_pid")

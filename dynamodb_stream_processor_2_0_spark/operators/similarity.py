@@ -136,21 +136,20 @@ def _fold_unrolled_sql(kind: str, a: str, b: str, dim: int) -> str:
 def with_pair_folds(
     joined: DataFrame,
     specs: list[tuple[str, str, str, str]],
-    dim: int = _FAST_DIM,
 ) -> DataFrame:
     """Append one column per (a, b, out, kind) spec — ONE split for all
     folds (chaining single-fold splits doubles the plan per call: 2^n
     subtrees each re-running the upstream joins). A row takes the fast
-    arm only when EVERY involved array has width ``dim``; otherwise all
+    arm only when EVERY involved array has width ``_FAST_DIM``; otherwise all
     its folds run on the HOF arm, which is correct for any width."""
     cols = sorted({c for (a, b, _o, _k) in specs for c in (a, b)})
     ok = F.lit(True)
     for c in cols:
-        ok = ok & (F.size(F.col(c)) == dim)
+        ok = ok & (F.size(F.col(c)) == _FAST_DIM)
     fast = joined.filter(ok)
     slow = joined.filter(~ok.eqNullSafe(F.lit(True)))
     for a, b, out, kind in specs:
-        fast = fast.withColumn(out, F.expr(_fold_unrolled_sql(kind, a, b, dim)))
+        fast = fast.withColumn(out, F.expr(_fold_unrolled_sql(kind, a, b, _FAST_DIM)))
         slow = slow.withColumn(out, F.expr(_fold_hof_sql(kind, a, b)))
     return fast.unionByName(slow)
 
@@ -161,12 +160,11 @@ def with_pair_fold(
     b: str,
     out: str,
     kind: str = "dot",
-    dim: int = _FAST_DIM,
 ) -> DataFrame:
     """Append ``out`` = elementwise fold of columns ``a``/``b`` with the
-    codegen fast path for width-``dim`` rows and the HOF arm for the
+    codegen fast path for width-``_FAST_DIM`` rows and the HOF arm for the
     rest. ``a``/``b`` must be plain column names on ``joined``."""
-    return with_pair_folds(joined, [(a, b, out, kind)], dim)
+    return with_pair_folds(joined, [(a, b, out, kind)])
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -177,7 +175,6 @@ def cosine_topk(
     candidates: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector (self excluded).
@@ -187,12 +184,12 @@ def cosine_topk(
     are never shuffled by content.
     """
     cand = with_norm(candidates, vec_col).select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.col(vec_col).alias("cand_vec"),
         F.col("norm").alias("cand_norm"),
     )
     qry = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.col(vec_col).alias("query_vec"),
         F.col("norm").alias("query_norm"),
     )
@@ -218,9 +215,7 @@ def cosine_topk(
     )
 
 
-def cosine_topk_oracle_sql(
-    k: int, query_pred: str, table: str = "embeddings"
-) -> str:
+def cosine_topk_oracle_sql(k: int, query_pred: str) -> str:
     dot = (
         "list_reduce(list_transform(list_zip({a}, {b}), "
         "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, v) -> acc + v)"
@@ -231,7 +226,7 @@ def cosine_topk_oracle_sql(
         WITH normed AS (
             SELECT vec_id, embedding,
                    sqrt({dot.format(a="embedding", b="embedding")}) AS norm
-            FROM {table}
+            FROM embeddings
         ), qry AS (
             SELECT vec_id AS query_id, embedding AS query_vec, norm AS query_norm
             FROM normed WHERE {query_pred}
@@ -252,14 +247,13 @@ def cosine_topk_oracle_sql(
 def with_lsh_bucket(
     df: DataFrame,
     planes: list[list[float]],
-    vec_col: str = "embedding",
     out_col: str = "bucket",
 ) -> DataFrame:
     """b-bit sign-LSH bucket code: bit p = [dot(vec, plane_p) > 0]."""
     code = F.lit(0).cast("bigint")
     for p, signs in enumerate(planes):
         arr = "array({})".format(", ".join(f"CAST({s} AS DOUBLE)" for s in signs))
-        bit = (_dot_fold(vec_col, arr) > 0).cast("bigint")
+        bit = (_dot_fold("embedding", arr) > 0).cast("bigint")
         code = code + bit * F.lit(2**p).cast("bigint")
     return df.withColumn(out_col, code)
 
@@ -269,21 +263,19 @@ def lsh_bucket_topk(
     queries: DataFrame,
     planes: list[list[float]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score only same-bucket candidates. Recall is
     tunable via the number of planes (fewer bits -> bigger buckets ->
     higher recall, more work)."""
-    cand = with_lsh_bucket(with_norm(candidates, vec_col), planes, vec_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cand_vec"),
+    cand = with_lsh_bucket(with_norm(candidates), planes).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("cand_vec"),
         F.col("norm").alias("cand_norm"),
         "bucket",
     )
-    qry = with_lsh_bucket(with_norm(queries, vec_col), planes, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
+    qry = with_lsh_bucket(with_norm(queries), planes).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
         F.col("norm").alias("query_norm"),
         F.col("bucket").alias("qbucket"),
     )
@@ -319,16 +311,9 @@ def _dec_v(col: F.Column) -> F.Column:
     return col.cast("double").cast("decimal(12,10)")
 
 
-def ivf_probe_topk(
-    emb: DataFrame,
-    query_pred: F.Column,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-) -> DataFrame:
+def ivf_probe_topk(emb: DataFrame, query_pred: F.Column, k: int = 5) -> DataFrame:
     """IVF (inverted-file) ANN probe: the coarse quantizer is the
-    ``cell_col`` partition (per-cell centroid = decimal-exact mean per
+    ``label`` partition (per-cell centroid = decimal-exact mean per
     dimension); each query is assigned to the cell with the highest
     exact inner product against the centroid (nProbe=1), then scored
     only against that cell's inverted list with the exact cosine.
@@ -339,42 +324,42 @@ def ivf_probe_topk(
     reductions are decimal-exact (order-independent), so results are
     reproducible and oracle-checkable despite the shuffles.
     """
-    longs = emb.select(cell_col, F.posexplode(vec_col).alias("dim", "v"))
-    cent = longs.groupBy(cell_col, "dim").agg(
+    longs = emb.select("label", F.posexplode("embedding").alias("dim", "v"))
+    cent = longs.groupBy("label", "dim").agg(
         (
             F.sum(F.col("v").cast("double").cast("decimal(18,9)")).cast("double")
             / F.count(F.lit(1))
         ).alias("c_v")
     )
     ql = emb.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), F.posexplode(vec_col).alias("dim", "qv")
+        F.col("vec_id").alias("query_id"), F.posexplode("embedding").alias("dim", "qv")
     )
     ip = (
         ql.join(F.broadcast(cent), "dim")
-        .groupBy("query_id", cell_col)
+        .groupBy("query_id", "label")
         .agg(F.sum(_dec_v(F.col("qv")) * F.col("c_v").cast("decimal(12,10)")).alias("ip"))
     )
-    w_cell = Window.partitionBy("query_id").orderBy(F.desc("ip"), cell_col)
+    w_cell = Window.partitionBy("query_id").orderBy(F.desc("ip"), "label")
     assigned = (
         ip.withColumn("rn", F.row_number().over(w_cell))
         .filter(F.col("rn") == 1)
-        .select("query_id", F.col(cell_col).alias("probe_cell"))
+        .select("query_id", F.col("label").alias("probe_cell"))
     )
-    qry = with_norm(emb.filter(query_pred), vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
+    qry = with_norm(emb.filter(query_pred)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
         F.col("norm").alias("query_norm"),
     )
-    cand = with_norm(emb, vec_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col(cell_col),
-        F.col(vec_col).alias("cand_vec"),
+    cand = with_norm(emb).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("label"),
+        F.col("embedding").alias("cand_vec"),
         F.col("norm").alias("cand_norm"),
     )
     probes = F.broadcast(assigned.join(qry, "query_id"))
     scored = cand.join(
         probes,
-        (F.col(cell_col) == F.col("probe_cell")) & (F.col("cand_id") != F.col("query_id")),
+        (F.col("label") == F.col("probe_cell")) & (F.col("cand_id") != F.col("query_id")),
     ).withColumn(
         "cosine",
         _dot_fold("query_vec", "cand_vec") / (F.col("query_norm") * F.col("cand_norm")),
@@ -387,9 +372,7 @@ def ivf_probe_topk(
     )
 
 
-def ivf_probe_topk_oracle_sql(
-    k: int, query_pred: str, table: str = "embeddings"
-) -> str:
+def ivf_probe_topk_oracle_sql(k: int, query_pred: str) -> str:
     dot = (
         "list_reduce(list_transform(list_zip({a}, {b}), "
         "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, v) -> acc + v)"
@@ -398,7 +381,7 @@ def ivf_probe_topk_oracle_sql(
         WITH longs AS (
             SELECT label, generate_subscripts(embedding, 1) AS dim,
                    unnest(embedding) AS v
-            FROM {table}
+            FROM embeddings
         ), cent AS (
             SELECT label, dim,
                    CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(18,9))) AS DOUBLE)
@@ -407,7 +390,7 @@ def ivf_probe_topk_oracle_sql(
         ), ql AS (
             SELECT vec_id AS query_id, generate_subscripts(embedding, 1) AS dim,
                    unnest(embedding) AS qv
-            FROM {table} WHERE {query_pred}
+            FROM embeddings WHERE {query_pred}
         ), ip AS (
             SELECT query_id, label,
                    sum(CAST(CAST(qv AS DOUBLE) AS DECIMAL(12,10))
@@ -424,7 +407,7 @@ def ivf_probe_topk_oracle_sql(
         ), normed AS (
             SELECT vec_id, label, embedding,
                    sqrt({dot.format(a="embedding", b="embedding")}) AS norm
-            FROM {table}
+            FROM embeddings
         ), qn AS (
             SELECT vec_id AS query_id, embedding AS query_vec, norm AS query_norm
             FROM normed WHERE {query_pred}
@@ -449,8 +432,6 @@ def near_dup_pairs(
     planes: list[list[float]],
     band_size: int,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded sign-LSH:
     vectors sharing ANY band's bucket code become candidates (OR over
@@ -468,14 +449,14 @@ def near_dup_pairs(
     # Codes-only projection for candidate generation and a norm-only
     # projection for verification: neither side recomputes the other's
     # folds (the two subtrees appear multiple times in the DAG).
-    coded = df.select(F.col(id_col), F.col(vec_col))
+    coded = df.select(F.col("vec_id"), F.col("embedding"))
     for b in range(n_bands):
         coded = with_lsh_bucket(
-            coded, planes[b * band_size : (b + 1) * band_size], vec_col, f"code{b}"
+            coded, planes[b * band_size : (b + 1) * band_size], out_col=f"code{b}"
         )
-    normed = with_norm(df.select(F.col(id_col), F.col(vec_col)), vec_col)
+    normed = with_norm(df.select(F.col("vec_id"), F.col("embedding")))
     bands_long = coded.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(
             F.array(
                 *[
@@ -484,28 +465,28 @@ def near_dup_pairs(
                 ]
             )
         ).alias("bc"),
-    ).select(F.col(id_col), F.col("bc.band").alias("band"), F.col("bc.code").alias("code"))
+    ).select(F.col("vec_id"), F.col("bc.band").alias("band"), F.col("bc.code").alias("code"))
     cand = (
         bands_long.alias("a")
         .join(
             bands_long.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.code") == F.col("b.code"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
         )
         .distinct()
     )
     va = normed.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("vec_a"),
         F.col("norm").alias("norm_a"),
     )
     vb = normed.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vec_b"),
         F.col("norm").alias("norm_b"),
     )
     return (
@@ -523,7 +504,6 @@ def near_dup_pairs_oracle_sql(
     planes: list[list[float]],
     band_size: int,
     threshold: float,
-    table: str = "embeddings",
 ) -> str:
     dot = (
         "list_reduce(list_transform(list_zip({a}, {b}), "
@@ -547,7 +527,7 @@ def near_dup_pairs_oracle_sql(
             SELECT vec_id, embedding,
                    sqrt({dot.format(a="embedding", b="embedding")}) AS norm,
                    {", ".join(code_cols)}
-            FROM {table}
+            FROM embeddings
         ), bands AS (
             SELECT vec_id, band, code
             FROM coded, LATERAL (VALUES {band_rows}) AS v(band, code)
@@ -568,7 +548,7 @@ def near_dup_pairs_oracle_sql(
 
 
 def lsh_bucket_topk_oracle_sql(
-    planes: list[list[float]], k: int, query_pred: str, table: str = "embeddings"
+    planes: list[list[float]], k: int, query_pred: str
 ) -> str:
     dot = (
         "list_reduce(list_transform(list_zip({a}, {b}), "
@@ -587,7 +567,7 @@ def lsh_bucket_topk_oracle_sql(
             SELECT vec_id, embedding,
                    sqrt({dot.format(a="embedding", b="embedding")}) AS norm,
                    {bucket} AS bucket
-            FROM {table}
+            FROM embeddings
         ), qry AS (
             SELECT vec_id AS query_id, embedding AS query_vec,
                    norm AS query_norm, bucket AS qbucket
@@ -612,8 +592,6 @@ def lsh_multiprobe_topk(
     queries: DataFrame,
     planes: list[list[float]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-probe sign-LSH top-k: each query probes its own bucket AND
     every Hamming-distance-1 bucket (flip one of the b sign bits).
@@ -631,9 +609,9 @@ def lsh_multiprobe_topk(
     broadcast HASH join on bucket = probe (a candidate pairs at most
     once per query: its single bucket matches exactly one probe)."""
     b = len(planes)
-    cand = with_lsh_bucket(with_norm(candidates, vec_col), planes, vec_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cand_vec"),
+    cand = with_lsh_bucket(with_norm(candidates), planes).select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("cand_vec"),
         F.col("norm").alias("cand_norm"),
         "bucket",
     )
@@ -642,10 +620,10 @@ def lsh_multiprobe_topk(
         *[F.expr(f"qbucket ^ {2 ** p}").cast("bigint") for p in range(b)],
     )
     qry = (
-        with_lsh_bucket(with_norm(queries, vec_col), planes, vec_col)
+        with_lsh_bucket(with_norm(queries), planes)
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("query_vec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
             F.col("norm").alias("query_norm"),
             F.col("bucket").alias("qbucket"),
         )
@@ -667,7 +645,7 @@ def lsh_multiprobe_topk(
 
 
 def lsh_multiprobe_topk_oracle_sql(
-    planes: list[list[float]], k: int, query_pred: str, table: str = "embeddings"
+    planes: list[list[float]], k: int, query_pred: str
 ) -> str:
     dot = (
         "list_reduce(list_transform(list_zip({a}, {b}), "
@@ -689,7 +667,7 @@ def lsh_multiprobe_topk_oracle_sql(
             SELECT vec_id, embedding,
                    sqrt({dot.format(a="embedding", b="embedding")}) AS norm,
                    {bucket} AS bucket
-            FROM {table}
+            FROM embeddings
         ), qry AS (
             SELECT query_id, query_vec, query_norm,
                    unnest([{probe_list}]) AS probe
@@ -711,9 +689,7 @@ def lsh_multiprobe_topk_oracle_sql(
     """
 
 
-def with_int8_quant(
-    df: DataFrame, vec_col: str = "embedding", out_col: str = "qvec"
-) -> DataFrame:
+def with_int8_quant(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization: q_i = round(x_i * 127 /
     max|x|).  4x smaller vectors and integer-only scoring downstream —
     the standard memory/bandwidth trade for billion-vector ANN.  The
@@ -721,7 +697,7 @@ def with_int8_quant(
     codes are engine-independent (integer outputs, no float compare at
     the gate)."""
     absmax = F.array_max(
-        F.transform(F.col(vec_col), lambda x: F.abs(x.cast("double")))
+        F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
     )
     df = df.withColumn("_qscale", F.lit(127.0) / F.greatest(absmax, F.lit(1e-30)))
     # Exchange barrier between the scale and the per-element transform:
@@ -732,9 +708,9 @@ def with_int8_quant(
     # breaks the single-file-scan = single-task trap for the array work.
     df = df.repartition(F.col("vec_id") if "vec_id" in df.columns else F.spark_partition_id())
     return df.withColumn(
-        out_col,
+        "qvec",
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x: F.round(x.cast("double") * F.col("_qscale")).cast("int"),
         ),
     ).drop("_qscale")
@@ -752,8 +728,6 @@ def int8_quantized_topk(
     candidates: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k per query by int8-quantized dot product (self excluded).
 
@@ -763,11 +737,11 @@ def int8_quantized_topk(
     the scan-side score for a rerank pipeline — shortlist on cheap int8
     dots, exact-rerank the shortlist (ann_recall_eval measures the same
     trade for LSH)."""
-    cand = with_int8_quant(candidates, vec_col).select(
-        F.col(id_col).alias("cand_id"), F.col("qvec").alias("cand_q")
+    cand = with_int8_quant(candidates).select(
+        F.col("vec_id").alias("cand_id"), F.col("qvec").alias("cand_q")
     )
-    qry = with_int8_quant(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("qvec").alias("query_q")
+    qry = with_int8_quant(queries).select(
+        F.col("vec_id").alias("query_id"), F.col("qvec").alias("query_q")
     )
     scored = cand.join(
         F.broadcast(qry), F.col("cand_id") != F.col("query_id")
@@ -780,9 +754,7 @@ def int8_quantized_topk(
     )
 
 
-def int8_quantized_topk_oracle_sql(
-    k: int, query_pred: str, table: str = "embeddings"
-) -> str:
+def int8_quantized_topk_oracle_sql(k: int, query_pred: str) -> str:
     quant = (
         "list_transform({v}, x -> CAST(round(CAST(x AS DOUBLE) * "
         "(127.0 / greatest(list_max(list_transform({v}, "
@@ -795,7 +767,7 @@ def int8_quantized_topk_oracle_sql(
     return f"""
         WITH coded AS (
             SELECT vec_id, {quant.format(v="embedding")} AS qvec
-            FROM {table}
+            FROM embeddings
         ), qry AS (
             SELECT vec_id AS query_id, qvec AS query_q
             FROM coded WHERE {query_pred}
@@ -812,12 +784,7 @@ def int8_quantized_topk_oracle_sql(
     """
 
 
-def with_random_projection(
-    df: DataFrame,
-    planes: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "pvec",
-) -> DataFrame:
+def with_random_projection(df: DataFrame, planes: list[list[float]]) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction: project onto
     len(planes) md5-derived +-1 directions (Achlioptas' database-
     friendly construction — the same public derivation as the LSH
@@ -829,11 +796,11 @@ def with_random_projection(
     near-dup verify) reads 4x less and the projection itself never
     shuffles."""
     return df.withColumn(
-        out_col,
+        "pvec",
         F.array(
             *[
                 _dot_fold(
-                    vec_col,
+                    "embedding",
                     "array({})".format(
                         ", ".join(f"CAST({s} AS DOUBLE)" for s in signs)
                     ),
@@ -845,7 +812,7 @@ def with_random_projection(
 
 
 def random_projection_recall_oracle_sql(
-    planes: list[list[float]], k: int, query_pred: str, table: str = "embeddings"
+    planes: list[list[float]], k: int, query_pred: str
 ) -> str:
     """Recall@k of projected-space cosine top-k vs exact 64-dim top-k."""
     dot = (
@@ -861,7 +828,7 @@ def random_projection_recall_oracle_sql(
     )
     return f"""
         WITH projected AS (
-            SELECT vec_id, [{proj_terms}] AS pvec FROM {table}
+            SELECT vec_id, [{proj_terms}] AS pvec FROM embeddings
         ), pnormed AS (
             SELECT vec_id, pvec,
                    sqrt({dot.format(a="pvec", b="pvec")}) AS pnorm
@@ -882,7 +849,7 @@ def random_projection_recall_oracle_sql(
         ), rp_r AS (
             SELECT query_id, neighbor_id FROM pranked WHERE rank <= {k}
         ), exact_r AS (
-            {cosine_topk_oracle_sql(k=k, query_pred=query_pred, table=table)}
+            {cosine_topk_oracle_sql(k=k, query_pred=query_pred)}
         )
         SELECT e.query_id,
                count(*) AS n_exact,

@@ -54,7 +54,6 @@ def salted_join(
     on: str,
     entropy_col: str,
     n_salts: int,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-resistant equi-join: the big side is salted, the small side
     replicated once per salt value, and the join key becomes
@@ -65,4 +64,4 @@ def salted_join(
     replicated = small.withColumn(
         SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     ).withColumn(SALT_COL, F.col(SALT_COL).cast("bigint"))
-    return salted_big.join(replicated, [on, SALT_COL], how).drop(SALT_COL)
+    return salted_big.join(replicated, [on, SALT_COL]).drop(SALT_COL)

@@ -442,11 +442,11 @@ def sql_scripting_coverage_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _interleave_sql(x: str, y: str, bits: int = 16) -> str:
+def _interleave_sql(x: str, y: str) -> str:
     """Morton (Z-order) bit interleave: x in even bit positions, y in
     odd — identical << >> & operator semantics in Spark SQL and DuckDB."""
     terms = []
-    for b in range(bits):
+    for b in range(16):
         terms.append(f"((({x} >> {b}) & 1) << {2 * b})")
         terms.append(f"((({y} >> {b}) & 1) << {2 * b + 1})")
     return " + ".join(terms)

@@ -88,7 +88,7 @@ _BFS_DEPTH = 4
 _BFS_SOURCES = (3, 5)
 
 
-def _bfs_oracle_sql(depth: int = _BFS_DEPTH) -> str:
+def _bfs_oracle_sql() -> str:
     seeds = ", ".join(f"({s})" for s in _BFS_SOURCES)
     ctes = [
         _EDGES_SQL.strip(),
@@ -96,7 +96,7 @@ def _bfs_oracle_sql(depth: int = _BFS_DEPTH) -> str:
         f"f0 AS (SELECT CAST(node AS BIGINT) AS node FROM (VALUES {seeds}) t(node))",
         "v0 AS (SELECT node, 0 AS depth FROM f0)",
     ]
-    for i in range(1, depth + 1):
+    for i in range(1, _BFS_DEPTH + 1):
         p = i - 1
         ctes.append(f"""f{i} AS (
             SELECT DISTINCT e.dst AS node
@@ -110,11 +110,11 @@ def _bfs_oracle_sql(depth: int = _BFS_DEPTH) -> str:
         SELECT depth, n_nodes, sum_node_key FROM (
             SELECT depth, count(*) AS n_nodes,
                    CAST(sum(node // 2) AS BIGINT) AS sum_node_key
-            FROM v{depth} GROUP BY depth
+            FROM v{_BFS_DEPTH} GROUP BY depth
             UNION ALL
             SELECT -1 AS depth, count(*) AS n_nodes,
                    CAST(sum(node // 2) AS BIGINT) AS sum_node_key
-            FROM nodes WHERE node NOT IN (SELECT node FROM v{depth})
+            FROM nodes WHERE node NOT IN (SELECT node FROM v{_BFS_DEPTH})
         ) WHERE n_nodes > 0
         ORDER BY depth
     """
@@ -183,12 +183,12 @@ def graph_shortest_path_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LPA_ITERS = 3
 
 
-def _lpa_oracle_sql(iters: int = _LPA_ITERS) -> str:
+def _lpa_oracle_sql() -> str:
     ctes = [
         _EDGES_SQL.strip(),
         "l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _LPA_ITERS + 1):
         p = i - 1
         ctes.append(f"""c{i} AS (
             SELECT e.dst AS node, l.label, count(*) AS cnt
@@ -209,7 +209,7 @@ def _lpa_oracle_sql(iters: int = _LPA_ITERS) -> str:
         SELECT CAST(label AS BIGINT) AS community,
                count(*) AS n_members,
                CAST(sum(node // 2) AS BIGINT) AS sum_member_key
-        FROM l{iters}
+        FROM l{_LPA_ITERS}
         GROUP BY label
         ORDER BY n_members DESC, community ASC
     """
@@ -734,7 +734,7 @@ _WALK_STEPS = 3
 _WALK_STARTS = 50  # customers 1..50 (exist at every SF)
 
 
-def _walk_oracle_sql(steps: int = _WALK_STEPS) -> str:
+def _walk_oracle_sql() -> str:
     ctes = [
         _EDGES_SQL.strip(),
         f"""w0 AS (
@@ -743,7 +743,7 @@ def _walk_oracle_sql(steps: int = _WALK_STEPS) -> str:
             WHERE src % 2 = 0 AND src <= {2 * _WALK_STARTS}
         )""",
     ]
-    for i in range(1, steps + 1):
+    for i in range(1, _WALK_STEPS + 1):
         p = i - 1
         ctes.append(f"""s{i} AS (
             SELECT walker, node FROM (
@@ -764,7 +764,7 @@ def _walk_oracle_sql(steps: int = _WALK_STEPS) -> str:
                    AS end_type,
                CAST(node // 2 AS BIGINT) AS end_key,
                count(*) AS n_walkers
-        FROM w{steps}
+        FROM w{_WALK_STEPS}
         GROUP BY 1, 2
         ORDER BY n_walkers DESC, end_type ASC, end_key ASC
     """

@@ -140,7 +140,7 @@ def source_union_schema_harmonize(
 _HAAR_LEVELS = 3
 
 
-def _haar_oracle_sql(levels: int = _HAAR_LEVELS) -> str:
+def _haar_oracle_sql() -> str:
     ctes = [
         """bounds AS (
             SELECT CAST(min(ts) AS DATE) AS d0, CAST(max(ts) AS DATE) AS d1
@@ -166,7 +166,7 @@ def _haar_oracle_sql(levels: int = _HAAR_LEVELS) -> str:
         )""",
     ]
     arms = []
-    for lv in range(1, levels + 1):
+    for lv in range(1, _HAAR_LEVELS + 1):
         p = lv - 1
         ctes.append(f"""l{lv} AS (
             SELECT event_type, (rn - 1) // 2 + 1 AS rn,

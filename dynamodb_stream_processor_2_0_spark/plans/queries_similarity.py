@@ -2021,7 +2021,7 @@ _KC_D2Q = (
 )
 
 
-def _kcenter_oracle(k: int = _KCENTER_K) -> str:
+def _kcenter_oracle() -> str:
     d2 = _KC_D2Q.format(a="e.embedding", b="c.embedding")
     ctes = [
         "cents1 AS (SELECT vec_id, embedding FROM embeddings"
@@ -2029,7 +2029,7 @@ def _kcenter_oracle(k: int = _KCENTER_K) -> str:
     ]
     rows = ["SELECT 1 AS iteration, (SELECT vec_id FROM cents1)"
             " AS center_vec_id, CAST(NULL AS BIGINT) AS chosen_dist_micro"]
-    for i in range(2, k + 1):
+    for i in range(2, _KCENTER_K + 1):
         p = i - 1
         ctes.append(
             f"mind{p} AS (SELECT e.vec_id, min({d2}) AS dq"
@@ -2051,7 +2051,7 @@ def _kcenter_oracle(k: int = _KCENTER_K) -> str:
         )
     ctes.append(
         f"mindk AS (SELECT e.vec_id, min({d2}) AS dq"
-        f" FROM embeddings e CROSS JOIN cents{k} c GROUP BY e.vec_id)"
+        f" FROM embeddings e CROSS JOIN cents{_KCENTER_K} c GROUP BY e.vec_id)"
     )
     ctes.append("finalr AS (SELECT max(dq) AS fr FROM mindk)")
     u = "\n            UNION ALL\n            ".join(rows)

@@ -474,7 +474,11 @@ def timeseries_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
+# exact BIGINT rank-mass grid shared by both PageRank engines and oracles
+_RANK_SCALE = 10**12
+
+
+def _pagerank_oracle_sql(iters: int = 3) -> str:
     """Unrolled-iteration PageRank oracle (exact BIGINT arithmetic,
     truncating integer division on both engines)."""
     ctes = [
@@ -489,7 +493,7 @@ def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
             GROUP BY n.node
         ), nn AS (SELECT count(*) AS n FROM nodes
         ), r0 AS (
-            SELECT node, CAST({scale} AS BIGINT) // (SELECT n FROM nn) AS rank
+            SELECT node, CAST({_RANK_SCALE} AS BIGINT) // (SELECT n FROM nn) AS rank
             FROM nodes
         )"""
     ]
@@ -506,7 +510,7 @@ def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
             GROUP BY e.dst
         ), r{i} AS (
             SELECT n.node,
-                   ((CAST({scale} AS BIGINT) * 3) // 20) // (SELECT n FROM nn)
+                   ((CAST({_RANK_SCALE} AS BIGINT) * 3) // 20) // (SELECT n FROM nn)
                    + (17 * (COALESCE(c.contrib, 0)
                             + (SELECT dang FROM d{i}) // (SELECT n FROM nn)))
                      // 20 AS rank
@@ -544,7 +548,6 @@ def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank relation, so neither the dangling mass nor the contribution
     divisor needs its own join. localCheckpoint per round keeps the
     lineage flat so iteration i never recomputes iterations 1..i-1."""
-    SCALE = 10**12
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     edges = (
@@ -570,7 +573,7 @@ def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes = nodes.count()
     if n_nodes == 0:
         # empty graph: the fixpoint is the empty ranking, not a driver
-        # ZeroDivisionError on SCALE // n_nodes (tools/hostile_sweep.py)
+        # ZeroDivisionError on _RANK_SCALE // n_nodes (tools/hostile_sweep.py)
         return outdeg.select(
             F.lit("customer").alias("node_type"),
             F.col("node").alias("node_key"),
@@ -582,8 +585,8 @@ def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join + one groupBy(dst) — the r||outdeg join (dangling mass) and
     # the edges||outdeg join (contribution divisor) both disappear
     # (2 joins/iteration hoisted; measured 3.75 s -> 2.8 s at sf0.1).
-    r = outdeg.withColumn("rank", F.lit(SCALE // n_nodes))
-    teleport = ((SCALE * 3) // 20) // n_nodes
+    r = outdeg.withColumn("rank", F.lit(_RANK_SCALE // n_nodes))
+    teleport = ((_RANK_SCALE * 3) // 20) // n_nodes
     for it in range(3):
         # Checkpoint the loop INPUT (not the output): lineage stays
         # flat, but the final iteration remains in the returned plan so
@@ -1193,9 +1196,10 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PPR_SEED_MAX = 8  # customers 1..4 (nodes 2,4,6,8) — exist at every SF
 _PPR_TOPK = 20
+_PPR_ITERS = 3
 
 
-def _ppr_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
+def _ppr_oracle_sql() -> str:
     ctes = [
         f"""edges AS (
             SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
@@ -1215,12 +1219,12 @@ def _ppr_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
         ), r0 AS (
             SELECT n.node,
                    CASE WHEN s.node IS NOT NULL
-                        THEN CAST({scale} AS BIGINT) // (SELECT n FROM ns)
+                        THEN CAST({_RANK_SCALE} AS BIGINT) // (SELECT n FROM ns)
                         ELSE 0 END AS rank
             FROM nodes n LEFT JOIN seeds s ON s.node = n.node
         )"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _PPR_ITERS + 1):
         p = i - 1
         ctes.append(f"""c{i} AS (
             SELECT e.dst AS node, CAST(sum(r.rank // o.od) AS BIGINT)
@@ -1232,7 +1236,7 @@ def _ppr_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
         ), r{i} AS (
             SELECT n.node,
                    CASE WHEN s.node IS NOT NULL
-                        THEN ((CAST({scale} AS BIGINT) * 3) // 20)
+                        THEN ((CAST({_RANK_SCALE} AS BIGINT) * 3) // 20)
                              // (SELECT n FROM ns)
                         ELSE 0 END
                    + (17 * COALESCE(c.contrib, 0)) // 20 AS rank
@@ -1244,7 +1248,7 @@ def _ppr_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
         WITH {', '.join(ctes)}, ranked AS (
             SELECT node, rank,
                    row_number() OVER (ORDER BY rank DESC, node ASC) AS rnk
-            FROM r{iters} WHERE rank > 0
+            FROM r{_PPR_ITERS} WHERE rank > 0
         )
         SELECT CAST(rnk AS INTEGER) AS rank,
                CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
@@ -1282,7 +1286,6 @@ def _ppr_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
 def graph_personalized_pagerank(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    SCALE = 10**12
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     # Same build as queries_graph_ops._undirected_edges and the same
@@ -1355,12 +1358,12 @@ def graph_personalized_pagerank(
             "node",
             "od",
             F.when(
-                F.col("is_seed").isNotNull(), F.lit(SCALE // n_seeds)
+                F.col("is_seed").isNotNull(), F.lit(_RANK_SCALE // n_seeds)
             ).otherwise(0).cast("long").alias("rank"),
         )
     )
-    teleport = ((SCALE * 3) // 20) // n_seeds
-    for it in range(3):
+    teleport = ((_RANK_SCALE * 3) // 20) // n_seeds
+    for it in range(_PPR_ITERS):
         if it:
             r = r.localCheckpoint(eager=False)
         contrib = (

@@ -29,12 +29,12 @@ from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 _ACF_LAGS = 3
 
 
-def _acf_oracle_sql(lags: int = _ACF_LAGS) -> str:
+def _acf_oracle_sql() -> str:
     # DuckDB window-in-aggregate is illegal; build lagged products in a
     # per-lag projection first.
     prods = ",\n               ".join(
         f"y * lag(y, {k}) OVER (PARTITION BY event_type ORDER BY day) AS p{k}"
-        for k in range(1, lags + 1)
+        for k in range(1, _ACF_LAGS + 1)
     )
     arms = "\n        UNION ALL\n".join(
         f"""        SELECT event_type, {k} AS lag,
@@ -42,7 +42,7 @@ def _acf_oracle_sql(lags: int = _ACF_LAGS) -> str:
                CAST(COALESCE(sum(p{k}), 0) AS BIGINT) AS num,
                CAST(sum(y * y) AS BIGINT) AS den
         FROM lagged GROUP BY event_type"""
-        for k in range(1, lags + 1)
+        for k in range(1, _ACF_LAGS + 1)
     )
     return f"""
         WITH bounds AS (
@@ -380,7 +380,7 @@ _MK_SCALE = 10**12
 _MK_ITERS = 3
 
 
-def _markov_oracle_sql(iters: int = _MK_ITERS) -> str:
+def _markov_oracle_sql() -> str:
     ctes = [
         """seq AS (
             SELECT user_id, event_type,
@@ -402,7 +402,7 @@ def _markov_oracle_sql(iters: int = _MK_ITERS) -> str:
             FROM states
         )""",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _MK_ITERS + 1):
         p = i - 1
         ctes.append(f"""contrib{i} AS (
             SELECT c.t AS st, sum((p.mass * c.c) // r.s) AS m
@@ -422,7 +422,7 @@ def _markov_oracle_sql(iters: int = _MK_ITERS) -> str:
     return f"""
         WITH {', '.join(ctes)}
         SELECT st AS event_type, CAST(mass AS BIGINT) AS stationary_micro
-        FROM p{iters}
+        FROM p{_MK_ITERS}
         ORDER BY event_type
     """
 

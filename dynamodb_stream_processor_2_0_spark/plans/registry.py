@@ -116,13 +116,7 @@ def _load() -> None:
     if _loaded:
         return
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # Allow partial builds: a module listed but not yet written
-            # only fails if it's someone else's import error.
-            if mod.rsplit(".", 1)[-1] not in str(exc):
-                raise
+        importlib.import_module(mod)
     # Registration order is module order, even if a caller imported a
     # query module before this first load.
     rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}

@@ -32,9 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # Columns that MAY be written as parquet TIMESTAMP(NANOS) — Spark
 # rejects those by default (PARQUET_TYPE_ILLEGAL when the read is set
 # up); only then we read them as raw nanos (legacy conf) and rebuild a

@@ -95,9 +95,9 @@ def attr_double(image: Column, name: str) -> Column:
     )
 
 
-def decode_records(df: DataFrame, json_col: str = "record_json") -> DataFrame:
+def decode_records(df: DataFrame) -> DataFrame:
     """Wire JSON -> typed stream-record column ``rec``."""
-    return df.withColumn("rec", F.from_json(F.col(json_col), STREAM_RECORD_SCHEMA))
+    return df.withColumn("rec", F.from_json(F.col("record_json"), STREAM_RECORD_SCHEMA))
 
 
 def parse_new_image(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:

@@ -67,19 +67,15 @@ def write_batch(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
     **options: str,
 ) -> None:
     """Write ``df`` to ``path``. ``partition_by`` produces the
     hive-style directory layout that downstream scans partition-prune
-    on; ``max_records_per_file`` bounds object sizes."""
-    writer = df.write.format(fmt).mode(mode)
+    on."""
+    writer = df.write.format(fmt).mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     if fmt == "csv":
         writer = writer.option("header", options.pop("header", "true"))
     for k, v in options.items():

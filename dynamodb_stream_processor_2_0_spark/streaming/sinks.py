@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def envelope(df: DataFrame, msg_type: str = "face_match_email") -> DataFrame:
+def envelope(df: DataFrame) -> DataFrame:
     """Build the S3 message envelope from disposition rows."""
     dedup_id = F.concat_ws(
         "-", F.col("user_id").cast("string"), F.lower(F.col("event_type"))
@@ -25,7 +25,7 @@ def envelope(df: DataFrame, msg_type: str = "face_match_email") -> DataFrame:
             "_", F.lit("email"), F.col("user_id").cast("string"),
             F.col("event_id").cast("string"),
         ).alias("id"),
-        F.lit(msg_type).alias("type"),
+        F.lit("face_match_email").alias("type"),
         F.struct(
             F.col("event_id"), F.col("user_id"), F.col("event_type"), F.col("action")
         ).alias("payload"),
@@ -41,14 +41,14 @@ def envelope(df: DataFrame, msg_type: str = "face_match_email") -> DataFrame:
     )
 
 
-def write_envelopes(out_dir: str, msg_type: str = "face_match_email"):
+def write_envelopes(out_dir: str):
     """foreachBatch writer: drop batch-level dedupId repeats (D5), then
     write the epoch's envelopes to an epoch-keyed path — re-running the
     same epoch overwrites the same directory (idempotent, E2-safe)."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         (
-            envelope(batch_df, msg_type)
+            envelope(batch_df)
             .dropDuplicates(["dedup_id"])
             .write.mode("overwrite")
             .json(f"{out_dir}/epoch={epoch_id}")
@@ -57,13 +57,13 @@ def write_envelopes(out_dir: str, msg_type: str = "face_match_email"):
     return write
 
 
-def observed(df: DataFrame, name: str = "metrics") -> DataFrame:
+def observed(df: DataFrame) -> DataFrame:
     """Attach the reference's four batch counters (index.js:42-49):
     processed, triggered, duplicates, errors. An error is a row carrying
     neither disposition; a record that fails to process fails its
     micro-batch instead, which the restart retries (S7)."""
     return df.observe(
-        name,
+        "metrics",
         F.count(F.lit(1)).alias("records_processed"),
         F.count_if(F.col("action") == "email_triggered").alias("emails_triggered"),
         F.count_if(F.col("action") == "duplicate_prevented").alias(

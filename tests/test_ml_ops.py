@@ -14,7 +14,6 @@ import glob
 import os
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans import registry

@@ -5,7 +5,6 @@ visible in the executed plan, not just asserted in prose."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.plans import registry
 

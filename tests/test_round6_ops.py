@@ -1327,35 +1327,10 @@ def test_pvm_identity_and_hand_case(spark, tmp_path):
     """Hand case: 10 orders at avg 100c -> 20 at avg 150c gives
     volume/rate/joint = 1e6/5e5/5e5 millicents, remainder 0; the
     decomposition identity must hold exactly on every row."""
-    import glob
-    import shutil
-
-    from dynamodb_stream_processor_2_0_spark.plans import registry
-
-    d = str(tmp_path)
-    tmp = str(tmp_path / "pvmw")
-    rows = []
-    k = 0
-    for i in range(10):
-        rows.append((k, 1, "O", 1.00, "1995-01-10", "1-URGENT")); k += 1
-    for i in range(20):
-        rows.append((k, 1, "O", 1.50, "1995-02-10", "1-URGENT")); k += 1
-    spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate string,"
-        " o_orderpriority string",
-    ).selectExpr(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "CAST(o_orderdate AS TIMESTAMP) AS o_orderdate",
-        "o_orderpriority",
-    ).coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.copy(
-        glob.glob(f"{tmp}/part-*.parquet")[0], f"{d}/orders.parquet"
-    )
-    rowsout = registry.get("orders_price_volume_mix").fn(
-        spark, d
-    ).collect()
+    rows = [(k, 1, "O", 1.00, "1995-01-10", "1-URGENT") for k in range(10)]
+    rows += [(k, 1, "O", 1.50, "1995-02-10", "1-URGENT") for k in range(10, 30)]
+    planted.write(tmp_path, "orders", rows)
+    rowsout = planted.run(spark, "orders_price_volume_mix", tmp_path)
     assert len(rowsout) == 1
     r = rowsout[0]
     assert r["delta_millicents"] == 2_000_000

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from dynamodb_stream_processor_2_0_spark.operators.skew import salted_join
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 

@@ -1,7 +1,6 @@
-"""Round-9 behavior tests, batch 5: planted batch-twins for the two
-remaining streaming e2e queries with deterministic shadows
-(COVERAGE.md class S -> B; S drops to the three pure sink/source
-mechanism proofs).
+"""Planted batch twins for queries that plans/queries_streaming_batch.py
+registers: each runs the registered streaming query and recomputes its
+answer with a plain-Python loop.
 
 - streaming_stream_join_e2e: the 1h-lookback purchase<-click interval
   join recomputed as a nested loop over planted events (boundary rows:
